@@ -75,7 +75,6 @@ def build_snapshot(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    checkpoint_dir: str | None = None,
 ) -> dict:
     """Build every staged artifact for the corpus at ``sf_dir`` into
     ``out_dir`` and write the manifest. Returns the manifest dict.
@@ -120,7 +119,6 @@ def build_snapshot(
                 f"{out}/knn_edges",
                 k=KNN_GRAPH_K,
                 cap=KNN_BUCKET_CAP,
-                checkpoint_dir=checkpoint_dir,
             ),
             {"k": KNN_GRAPH_K, "cap": KNN_BUCKET_CAP, "dim": EMB_DIM},
         ),
@@ -131,7 +129,6 @@ def build_snapshot(
                 threshold=NEAR_DUP_COS,
                 dim=EMB_DIM,
                 cap=EMB_BUCKET_CAP,
-                checkpoint_dir=checkpoint_dir,
                 method="lsh_refine",
             ),
             {

@@ -58,6 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.similarity import (
     EMB_DIM,
     _dot,
@@ -186,15 +187,15 @@ def kmeans_assignments(
     # 3.1/3.1/2.3 s with this + the eager assign ckpt, identical pair
     # sets. The ckpt is the staged quantized-embedding artifact a
     # production pipeline persists anyway.
-    q = emb.select(
-        "vec_id", _quantize(F.col("embedding")).alias("qv")
-    ).localCheckpoint(eager=True)
+    q = materialize(
+        emb.select("vec_id", _quantize(F.col("embedding")).alias("qv")), eager=True
+    )
     cents = q.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cluster"), F.col("qv").alias("cv")
     )
     for _ in range(iters):
         # K tiny rows — checkpoint keeps each round's plan flat
-        cents = _update(_assign(q, cents)).localCheckpoint(eager=True)
+        cents = materialize(_update(_assign(q, cents)), eager=True)
     return _assign(q, cents).select(
         "vec_id", F.col("cluster").cast("int").alias("cluster"), "dist_q"
     )
@@ -297,16 +298,16 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1). The checkpoint is 12 bytes/vector — negligible at any
     scale next to re-running k-means."""
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = (
+    assign = materialize(
         kmeans_assignments(spark, sf_dir)
-        .select("vec_id", "cluster")
+        .select("vec_id", "cluster"),
         # eager (r13, measured): the pair stage consumes assign three
         # ways (both id-only join sides + the broadcast(sizes) future in
         # _subsplit); materializing the 12-byte/vector table up front
         # beat the lazy mark on every interleaved A/B rep at sf0.1
         # (see kmeans_assignments). Construction-time cost is one Lloyd
         # run — paid once per build, memoized by the plan-test cache.
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     return _semdedup_pairs(emb, assign)
 
@@ -410,15 +411,15 @@ def _recursive_subsplit(
                 ),
             )
         )
-        cur = (
+        cur = materialize(
             cur.join(F.broadcast(seeds), ["cluster", "sub"])
             .select(
                 "vec_id",
                 "cluster",
                 F.concat_ws("/", F.col("sub"), best["sc"].cast("string")).alias("sub"),
                 "qv",
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return cur.select("vec_id", "cluster", "sub")
 
@@ -540,15 +541,15 @@ def pipeline_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (the leakage_safe_split lesson); the prune itself is an
     id-only distinct + flag join (8-byte keys), and the report is one
     small groupBy — nothing new shuffles at corpus width."""
-    assign = (
+    assign = materialize(
         kmeans_assignments(spark, sf_dir)
-        .select("vec_id", "cluster")
+        .select("vec_id", "cluster"),
         # eager (r13, measured — see semdedup_embeddings): three-way
         # consumption (pair-stage join sides + broadcast(sizes)), and
         # the eager pair ckpt below forces the Lloyd run at
         # construction anyway, so eagerness here adds no new
         # construction cost for this query.
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     emb = load_table(spark, sf_dir, "embeddings")
     # The pair stage (within-cluster self-join + full-width cosine) is
@@ -560,7 +561,7 @@ def pipeline_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (≤ cap² per cluster block), and eagerness serializes the
     # materialization so the two downstream broadcast consumers can't
     # race an uncommitted lazy checkpoint into double computation.
-    pairs = _semdedup_pairs(emb, assign).localCheckpoint(eager=True)
+    pairs = materialize(_semdedup_pairs(emb, assign), eager=True)
     dropped = pairs.select(F.col("dup_id").alias("vec_id")).distinct()
     flagged = assign.join(
         dropped.withColumn("is_dropped", F.lit(True)), "vec_id", "left"

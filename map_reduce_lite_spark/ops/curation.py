@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.dedup import EMB_BUCKET_CAP, shingles
 from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
@@ -531,9 +532,7 @@ FROM staged GROUP BY source
 LEAKAGE_SPLIT_CAP = EMB_BUCKET_CAP
 
 
-def leakage_safe_split(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
-) -> DataFrame:
+def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test routing that routes whole near-dup CLUSTERS, not
     documents, so no LSH-DETECTED near-duplicate pair ever straddles a
     split boundary.
@@ -597,34 +596,32 @@ def leakage_safe_split(
     is iterative join+agg on ids; the routing itself is stateless hash
     math. The audit join carries (8-byte id, split) pairs only. The
     pair set feeds BOTH the components iteration and the crossing
-    audit, so it is materialized exactly once via an eager
-    localCheckpoint — without it the LSH band join + cosine verify
-    (the most expensive stage here) would execute twice."""
+    audit, so it is materialized exactly once, eagerly — without it
+    the LSH band join + cosine verify (the most expensive stage here)
+    would execute twice."""
     from map_reduce_lite_spark.ops.dedup import (
         embedding_near_dup_pairs,
         lsh_band_table,
         refine_star_only_ids,
     )
-    from map_reduce_lite_spark.ops.graph import _checkpointer, connected_components
+    from map_reduce_lite_spark.ops.graph import connected_components
     from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
     # one banding for BOTH the pair stage and the coverage metric —
     # projected + checkpointed once (r12)
-    bands = lsh_band_table(emb, dim=EMB_DIM, checkpoint_dir=checkpoint_dir)
-    pairs = _checkpointer(emb, checkpoint_dir)(
+    bands = lsh_band_table(emb, dim=EMB_DIM)
+    pairs = materialize(
         embedding_near_dup_pairs(
             emb,
             method="lsh_refine",
             dim=EMB_DIM,
             cap=LEAKAGE_SPLIT_CAP,
-            checkpoint_dir=checkpoint_dir,
             bands=bands,
-        ).select("keep_id", "dup_id")
+        ).select("keep_id", "dup_id"),
+        eager=True,
     )
-    comp = connected_components(
-        pairs, src="keep_id", dst="dup_id", checkpoint_dir=checkpoint_dir
-    )
+    comp = connected_components(pairs, src="keep_id", dst="dup_id")
     assigned = (
         emb.select("vec_id")
         .join(comp, F.col("vec_id") == F.col("node"), "left")
@@ -646,7 +643,7 @@ def leakage_safe_split(
     # The routing table is (vec_id, cluster, split) — the very artifact
     # a production split pipeline persists — so checkpointing it is
     # scale-safe by definition; lazy, so the first action materializes.
-    routed = _checkpointer(emb, checkpoint_dir)(
+    routed = materialize(
         assigned.select("vec_id", "cluster", split.alias("split")), eager=False
     )
     crossing = (
@@ -668,7 +665,6 @@ def leakage_safe_split(
                 emb,
                 dim=EMB_DIM,
                 cap=LEAKAGE_SPLIT_CAP,
-                checkpoint_dir=checkpoint_dir,
                 bands=bands,
             ),
             "vec_id",
@@ -993,7 +989,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice("arr", 2, m),
         lambda a, b: F.concat_ws("|", F.lit("b"), a, b),
     )
-    feats = (
+    feats = materialize(
         docs.select(
             "doc_id", "is_t", F.explode(F.concat(unifeats, bigfeats)).alias("feat")
         )
@@ -1001,14 +997,14 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "is_t",
             F.pmod(md5_60bit(F.col("feat")), F.lit(DSIR_BUCKETS)).alias("bucket"),
-        )
+        ),
         # Two consumers (model agg + per-doc scoring join) and Catalyst
         # does not dedupe common subtrees, so without this the tokenize
         # + lag-window stream executes once per consumer. The
         # checkpoint is (doc_id, is_t, bucket) — ~20 B/feature, far
         # smaller than the text it derives from; at scale this is the
         # featurized intermediate you would persist anyway.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     model = feats.groupBy("bucket").agg(
         F.sum("is_t").alias("c_t"), F.count(F.lit(1)).alias("c_r")
@@ -1112,21 +1108,21 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     order. All bucket math is exact integers ((3·c_prev) div n)."""
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
-    toks = (
+    toks = materialize(
         d.repartition(fanout, "doc_id")
         .select(
             "doc_id",
             "lang",
             F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("term"),
         )
-        .filter(F.length("term") > 0)
+        .filter(F.length("term") > 0),
         # two consumers: the vocabulary agg and the scoring join
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     cnt = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     n = cnt.agg(F.sum("c").alias("nn"))
     nll = -F.log(F.col("c").cast("double") / F.col("nn").cast("double"))
-    per_doc = (
+    per_doc = materialize(
         toks.join(cnt, "term")
         .crossJoin(F.broadcast(n))
         .groupBy("doc_id", "lang")
@@ -1140,9 +1136,9 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("nll_e6"),
-        )
+        ),
         # two consumers: the value histogram and the bucket join-back
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     vals = per_doc.groupBy("lang", "nll_e6").agg(F.count(F.lit(1)).alias("cnt"))
     n_lang = per_doc.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -396,15 +397,9 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     bands: int = MINHASH_BANDS,
     rows: int = MINHASH_ROWS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: equal band signature in ≥ 1 of ``bands``
     bands of ``rows`` min-hashes each (k = bands × rows total hashes).
-
-    ``checkpoint_dir`` (r11): switches the signature-table
-    materialization from localCheckpoint (dies with an executor) to
-    reliable checkpoint() on a shared-FS path — the cluster posture
-    every SF-proportional materialization in the repo now carries.
 
     Candidate probability for a pair with Jaccard J is 1-(1-J^rows)^bands
     — pick (bands, rows) for the corpus: the module default (8×4) is the
@@ -412,14 +407,12 @@ def minhash_lsh_pairs(
     (16×8) is the production setting with recall ≥ 0.9 at J ≥ 0.8
     (property-tested). Only band-signature equi-joins — candidate work is
     quadratic only within a colliding bucket, never corpus-wide."""
-    from map_reduce_lite_spark.ops.graph import _checkpointer
-
     banded = minhash_band_sigs(docs, id_col, text_col, bands, rows)
     # materialize ONCE before the self-join: the shingle + k-minhash
     # aggregation above is the dominant cost, and Spark plans each join
     # side independently (no ReusedExchange here) — without this the
     # whole signature pipeline runs twice (measured ~2x cold, ~15% warm)
-    banded = _checkpointer(docs, checkpoint_dir)(banded)
+    banded = materialize(banded, eager=True)
     a, b = banded.alias("a"), banded.alias("b")
     pairs = a.join(
         b,
@@ -586,13 +579,10 @@ SIMHASH_BUCKET_CAP = 4096
 def simhash_pairs(
     docs: DataFrame,
     cap: int = SIMHASH_BUCKET_CAP,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs with simhash Hamming distance ≤ 3, found via a
     4×15-bit band join (a pair within distance 3 must agree exactly on
-    ≥ 1 band), bucket-capped (see SIMHASH_BUCKET_CAP).
-    ``checkpoint_dir``: reliable checkpoint() for the band table
-    instead of executor-local storage (r11 cluster posture)."""
+    ≥ 1 band), bucket-capped (see SIMHASH_BUCKET_CAP)."""
     fps = simhash_fingerprints(docs)
     bands = fps.select(
         "doc", "simhash",
@@ -607,9 +597,7 @@ def simhash_pairs(
     # probe and both self-join sides). Pre-cap, AQE exchange reuse made
     # a checkpoint a wash (A/B 2.62 vs 2.58 s at sf0.1); with the probe
     # it is what keeps the 60-SUM fingerprint agg single-execution.
-    from map_reduce_lite_spark.ops.graph import _checkpointer
-
-    bands = _checkpointer(docs, checkpoint_dir)(bands)
+    bands = materialize(bands, eager=True)
     # Sizing probe: one scalar job over the materialized band table
     # (4 rows/doc). When every (band, chunk) bucket is under the cap —
     # the common case on natural corpora, and the driver fixtures —
@@ -738,28 +726,25 @@ def lsh_band_table(
     dim: int | None = None,
     n_planes: int = 16,
     n_bands: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Materialized (bid, band_id, band_hash) banding of ``corpus`` —
     the shared first stage of every embedding-LSH consumer. Extracted
     (r12) so a job needing the table more than once (the pair stage +
     the star-only coverage metric in leakage_safe_split) projects and
-    checkpoints it exactly once; ``checkpoint_dir`` switches the
-    materialization from localCheckpoint to reliable checkpoint(), as
-    everywhere."""
-    from map_reduce_lite_spark.ops.graph import _checkpointer
+    checkpoints it exactly once."""
     from map_reduce_lite_spark.ops.similarity import _hyperplanes, lsh_band_hashes
 
     if dim is None:
         dim = corpus.select(F.size(vec_col).alias("d")).first()[0]
     planes = _hyperplanes(dim, n_planes)
-    return _checkpointer(corpus, checkpoint_dir)(
+    return materialize(
         corpus.select(
             F.col(id_col).alias("bid"),
             F.posexplode(lsh_band_hashes(vec_col, planes, n_bands)).alias(
                 "band_id", "band_hash"
             ),
-        )
+        ),
+        eager=True,
     )
 
 
@@ -893,7 +878,6 @@ def refine_star_only_ids(
     n_bands: int = 4,
     dim: int | None = None,
     cap: int = EMB_BUCKET_CAP,
-    checkpoint_dir: str | None = None,
     bands: DataFrame | None = None,
 ) -> DataFrame:
     """IDs whose candidate coverage under adaptive re-banding is
@@ -936,9 +920,8 @@ def refine_star_only_ids(
         if dim is None:
             return empty
     if bands is None:
-        bands = lsh_band_table(
-            corpus, id_col, vec_col, dim, n_planes, n_bands, checkpoint_dir
-        )  # materialized once: reused by the probe and both joins below
+        # materialized once: reused by the probe and both joins below
+        bands = lsh_band_table(corpus, id_col, vec_col, dim, n_planes, n_bands)
     sizes = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("n"))
     max_bucket = sizes.agg(F.max("n")).first()[0]
     if max_bucket is None or max_bucket <= cap:
@@ -988,7 +971,6 @@ def embedding_near_dup_pairs(
     n_bands: int = 4,
     dim: int | None = None,
     cap: int = EMB_BUCKET_CAP,
-    checkpoint_dir: str | None = None,
     bands: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ ``threshold``.
@@ -1000,11 +982,6 @@ def embedding_near_dup_pairs(
     Callers passing it are responsible for it being the SAME banding
     (mrl band hashes over ``vec_col``) — build it with
     ``lsh_band_table``.
-
-    ``checkpoint_dir`` (r10): switches the band-table materialization
-    from localCheckpoint (dies with an executor) to reliable
-    checkpoint() on a shared-FS path — the same option
-    connected_components and knn_topk_edges carry.
 
     ``method="exact"`` scores the full triangular self-join — the oracle
     path, quadratic in corpus size, fine for verification corpora.
@@ -1066,12 +1043,11 @@ def embedding_near_dup_pairs(
             # band join + pair dedup on IDS ONLY (8-byte shuffle keys),
             # then join the vectors back for scoring — shuffling 64-float
             # vectors through the ×n_bands explode and the dedup would
-            # cost ~64× the bytes for nothing
-            bands = lsh_band_table(
-                corpus, id_col, vec_col, dim, n_planes, n_bands, checkpoint_dir
-            )  # hyperplane projections run once, not once per self-join
-            # side (ids + band hashes only — tiny); the materialized
-            # table also feeds the cap's sizing probe
+            # cost ~64× the bytes for nothing. Hyperplane projections run
+            # once, not once per self-join side (ids + band hashes only —
+            # tiny); the materialized table also feeds the cap's sizing
+            # probe
+            bands = lsh_band_table(corpus, id_col, vec_col, dim, n_planes, n_bands)
         max_bucket = (
             bands.groupBy("band_id", "band_hash")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -1128,7 +1104,6 @@ def build_near_dup_pairs(
     vec_col: str = "embedding",
     dim: int | None = None,
     cap: int = EMB_BUCKET_CAP,
-    checkpoint_dir: str | None = None,
     method: str = "lsh",
 ) -> DataFrame:
     """STAGE the LSH-verified near-dup pair set as a parquet artifact
@@ -1158,7 +1133,6 @@ def build_near_dup_pairs(
         vec_col=vec_col,
         dim=dim,
         cap=cap,
-        checkpoint_dir=checkpoint_dir,
     ).write.mode("overwrite").parquet(path)
     return corpus.sparkSession.read.parquet(path)
 

@@ -10,8 +10,8 @@ Scale shape: each iteration is one join + one aggregation, both
 shuffling on node id (the partitioning is reused across iterations);
 iterations needed = graph diameter, and near-dup graphs are shallow
 (clusters are cliques-ish). The driver loop only checks a converged
-COUNT per iteration — no data ever collects. Lineage is truncated with
-localCheckpoint every few rounds so plans don't grow unboundedly.
+COUNT per iteration — no data ever collects. Lineage is truncated
+(``lineage.materialize``) every round so plans don't grow unboundedly.
 GraphFrames/Pregel is the off-the-shelf alternative; this formulation
 needs nothing beyond DataFrames. The DuckDB oracle replays the result
 with a recursive transitive-closure CTE — feasible because component
@@ -20,141 +20,15 @@ labels (min reachable id) are iteration-order independent.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, Window, functions as F
 
+from map_reduce_lite_spark.lineage import _HardBarrier, materialize
 
-def _checkpointer(
-    df_sample: DataFrame, checkpoint_dir: str | None
-) -> Callable[[DataFrame], DataFrame]:
-    """Lineage-truncation strategy for iterative loops.
-
-    ``localCheckpoint`` (default) materializes to executor block storage
-    — fast, but NON-RESILIENT: on a real cluster losing one executor
-    mid-loop kills the job because truncated lineage can't be recomputed.
-    Passing ``checkpoint_dir`` (an HDFS/S3 path in production) switches
-    to reliable ``checkpoint()`` — the 100×-scale answer for long
-    iterative jobs where executor loss is routine.
-
-    ``eager=False`` marks the frame for truncation WITHOUT spending a
-    job on it — the very next action that touches it (e.g. the loop's
-    convergence count) materializes and truncates as a side effect.
-    One job per round instead of two: driver-side per-action overhead
-    is the dominant cost of iterative ops on small state (the r10
-    dedup_cluster_sizes attribution — per-action cost varies ~4× with
-    JVM C2 warmth, so halving actions halves the cold-driver tax)."""
-    if checkpoint_dir is None:
-        return lambda df, eager=True: df.localCheckpoint(eager=eager)
-    sc = df_sample.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    return lambda df, eager=True: df.checkpoint(eager=eager)
-
-
-class _HardBarrier:
-    """Parquet write+read lineage barrier for iterative loops, with a
-    leak-free lifecycle (r10 — previously every ``connected_components``
-    call mkdtemp'd a directory even when the barrier never fired, and
-    barrier files were never deleted, accumulating across a 176-query
-    bench and any long-lived driver):
-
-    - the barrier directory is created LAZILY on the first actual
-      barrier write — the common converge-in-<8-rounds call touches
-      the filesystem zero times;
-    - each barrier write deletes the PREVIOUS barrier file (safe: the
-      new parquet fully materializes the state before the delete, and
-      the only frames alive across rounds are the checkpointed inputs
-      and the new file's scan);
-    - ``finalize`` re-materializes the final frame off the last file
-      (via the caller's checkpointer, so a reliable-``checkpoint``
-      caller keeps cluster resilience) and then removes the whole
-      barrier directory; ``abort`` removes it on the error path.
-
-    Deletion goes through the Hadoop FileSystem API so a production
-    ``checkpoint_dir`` on HDFS/S3 cleans up the same way a local temp
-    dir does (Python's shutil can't reach scheme'd paths)."""
-
-    def __init__(self, spark, checkpoint_dir: str | None, prefix: str):
-        self._spark = spark
-        self._checkpoint_dir = checkpoint_dir
-        self._prefix = prefix
-        self._root: str | None = None
-        self._last_path: str | None = None
-
-    def _ensure_root(self) -> str:
-        if self._root is None:
-            import uuid
-
-            ns = uuid.uuid4().hex  # concurrent callers must not collide
-            if self._checkpoint_dir is not None:
-                self._root = f"{self._checkpoint_dir.rstrip('/')}/{self._prefix}_{ns}"
-            else:
-                import tempfile
-
-                self._root = tempfile.mkdtemp(prefix=f"{self._prefix}_")
-        return self._root
-
-    def _rm(self, path: str) -> None:
-        # best-effort: never fail the query over cleanup
-        try:
-            jvm = self._spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(
-                self._spark._jsc.hadoopConfiguration()
-            )
-            fs.delete(hpath, True)
-        except Exception:
-            pass
-
-    def barrier(self, df: DataFrame, tag: str) -> DataFrame:
-        """Write ``df`` to parquet, return a fresh scan of it, and drop
-        the previous barrier file."""
-        path = f"{self._ensure_root()}/{tag}"
-        df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
-        if self._last_path is not None:
-            self._rm(self._last_path)
-        self._last_path = path
-        return out
-
-    def finalize(
-        self, df: DataFrame, ckpt: Callable[[DataFrame], DataFrame]
-    ) -> DataFrame:
-        """Detach ``df`` from the last barrier file (if any barrier ever
-        fired) and remove all barrier storage. If the detaching
-        materialization itself fails, the barrier subtree is still
-        removed before the exception propagates — the frame is dead
-        either way, and the error path must not reintroduce the
-        accumulation leak this class exists to prevent."""
-        if self._root is None:
-            return df  # barrier never fired: nothing on disk
-        try:
-            df = ckpt(df)  # eager: materializes off the parquet scan
-        except BaseException:
-            self.abort()
-            raise
-        self._rm(self._root)
-        self._root = None
-        self._last_path = None
-        return df
-
-    def abort(self) -> None:
-        """Error-path cleanup: remove barrier storage unconditionally."""
-        if self._root is not None:
-            self._rm(self._root)
-            self._root = None
-            self._last_path = None
-
-
-# Star rounds folded into one convergence action. 2 was prototyped
-# (the r12 verdict's round-batching ask) and MEASURED SLOWER at sf0.1:
-# halving the action count saves ~0.1-0.2 s/action, but batch-of-2
-# parity overshoots convergence by up to 2 rounds and the confirm
-# round adds one more (observed 5 → 7 rounds; interleaved A/B old vs
-# batched: the extra rounds' exchanges cost more than the saved
-# actions on every clean draw). Kept parameterized; 1 = check every
-# round, the round-count-minimal protocol.
-CC_ROUNDS_PER_CHECK = 1
+# Truncation cadence of the iterative loops (see the connected_components
+# and pagerank docstrings for the measurements behind each number).
+CC_HARD_BARRIER_EVERY = 8
+PR_CHECKPOINT_EVERY = 20
+PR_HARD_BARRIER_EVERY = 80
 
 
 def connected_components(
@@ -162,10 +36,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 1,
-    checkpoint_dir: str | None = None,
-    hard_barrier_every: int = 8,
-    rounds_per_check: int = CC_ROUNDS_PER_CHECK,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component = min
     node id reachable. Undirected: both directions are considered.
@@ -204,19 +74,18 @@ def connected_components(
     alternating bound, 50 rounds covers graphs astronomically larger
     than any real corpus.
 
-    CHECKPOINT EVERY ROUND (checkpoint_every=1, r7): the convergence
-    check is an action, so each round's edge set is materialized —
-    otherwise every round re-executes the whole chain. HARD PARQUET
-    BARRIER every ``hard_barrier_every`` rounds (r9): localCheckpoint
+    CHECKPOINT EVERY ROUND (r7): the convergence check is an action,
+    so each round's edge set is materialized — otherwise every round
+    re-executes the whole chain. HARD PARQUET BARRIER every
+    CC_HARD_BARRIER_EVERY rounds (r9): localCheckpoint
     truncates the visible plan but a generation-linked driver-side
     cost still leaks through checkpoint boundaries in Spark 4.1 when
     the checkpointed frame feeds multiple self-join references
     (measured: per-round wall time doubling from ~round 18, 0.4 s →
     70 s, with the Spark jobs themselves at ~45 ms); a parquet
     write+read every 8 rounds gives a truly fresh scan lineage and
-    flat per-round cost. Barrier files go under ``checkpoint_dir``
-    when given (shared-FS on a real cluster), else a driver-temp dir;
-    lifecycle is ``_HardBarrier``'s.
+    flat per-round cost. Barrier placement and lifecycle are
+    ``_HardBarrier``'s (map_reduce_lite_spark/lineage.py).
 
     SINGLE UPSTREAM EXECUTION (r12 optimization): the caller's edge
     plan (for the dedup family: the whole LSH band join + cosine
@@ -231,15 +100,14 @@ def connected_components(
     # reset the diagnostic at entry so a call that fails before its
     # first round can't leave a previous call's stale value behind
     connected_components.last_rounds = 0
-    hb = _HardBarrier(edges.sparkSession, checkpoint_dir, "mrl_cc_barrier")
-    ckpt = _checkpointer(edges, checkpoint_dir)
+    hb = _HardBarrier(edges.sparkSession, "mrl_cc_barrier")
     # ONE execution of the upstream plan; 16-byte rows (ids only).
     # eager=False (r13): the loop's initial fingerprint action
     # materializes base AND e in one job instead of paying a separate
     # up-front job for base (guide §1.2 — fewer driver actions; the
     # only pre-loop consumer of base is e, and nodes is consumed by the
     # final labeling join, long after the loop materialized base).
-    base = ckpt(
+    base = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), eager=False
     )
     # node universe BEFORE dropping self-loops: a node with only a
@@ -251,16 +119,13 @@ def connected_components(
         .distinct()
     )
     # lazy mark: the loop's first convergence action materializes it
-    e = ckpt(base.filter(F.col("a") != F.col("b")).distinct(), eager=False)
+    e = materialize(base.filter(F.col("a") != F.col("b")).distinct(), eager=False)
     try:
-        stars = _cc_loop(
-            e, ckpt, hb, max_iter, checkpoint_every, hard_barrier_every,
-            rounds_per_check,
-        )
+        stars = _cc_loop(e, hb, max_iter)
     except BaseException:
         hb.abort()
         raise
-    stars = hb.finalize(stars, ckpt)
+    stars = hb.finalize(stars)
     # star forest -> labels; roots and isolated nodes label themselves.
     # min() is defensive: at the checked fixpoint each child has one root
     comp = stars.groupBy(F.col("a").alias("node")).agg(
@@ -323,9 +188,9 @@ def _cc_one_round(e: DataFrame) -> DataFrame:
 # bit_xor(xxhash64) digests (the second keyed with an extra literal, a
 # different 64-bit hash of the same row). Equal sets ⇒ equal
 # certificates with certainty; different sets collide only if BOTH
-# 64-bit xors collide simultaneously (~2^-128) — and a collision can
-# only DELAY convergence by forcing the confirm round to disagree
-# later, never return a non-fixpoint (see the _cc_loop protocol).
+# 64-bit xors collide simultaneously (~2^-128 per round). _cc_loop
+# trusts every match as a fixpoint, so such a collision WOULD return a
+# non-fixpoint star forest (wrong labels) — accepted at that odds.
 # bit_xor, not sum: ANSI mode (Spark 4 default) makes long-sum
 # overflow throw; xor cannot overflow.
 _CC_FP_COLS = (
@@ -339,70 +204,37 @@ def _cc_fingerprint(df: DataFrame) -> tuple:
     return tuple(df.agg(*[F.expr(c) for c in _CC_FP_COLS]).first())
 
 
-def _cc_loop(
-    e: DataFrame,
-    ckpt: Callable[[DataFrame], DataFrame],
-    hb: _HardBarrier,
-    max_iter: int,
-    checkpoint_every: int,
-    hard_barrier_every: int,
-    rounds_per_check: int = CC_ROUNDS_PER_CHECK,
-) -> DataFrame:
+def _cc_loop(e: DataFrame, hb: _HardBarrier, max_iter: int) -> DataFrame:
     """The alternating-star iteration of ``connected_components`` —
     split out so the barrier lifecycle (try/abort/finalize) reads
     linearly. ``e`` is the deduplicated self-loop-free edge set; the
     loop rewrites it until small_star(large_star(e)) == e (a star
     forest), then returns it.
 
-    r13 (the r12 verdict's ask #3):
+    r13 (the r12 verdict's ask #3): the r12 exact-symdiff confirm (an
+    O(|edges|) shuffle of the full edge set at the final round) is
+    replaced by the second independent fingerprint inside the SAME
+    1-row-per-partition agg (see _CC_FP_COLS) — zero extra jobs,
+    certificate strength 2^-128. The count component keeps set-size
+    changes exact. Batching several star rounds under one convergence
+    action was prototyped and MEASURED SLOWER at sf0.1 (batch-of-2
+    parity overshoots convergence by up to 2 rounds and needs a confirm
+    round: observed 5 → 7 rounds, and the extra rounds' exchanges cost
+    more than the saved actions on every interleaved A/B draw), so
+    every round is checked.
 
-    - The r12 exact-symdiff confirm (an O(|edges|) shuffle of the full
-      edge set at the final round) is replaced by the second
-      independent fingerprint inside the SAME 1-row-per-partition agg
-      (see _CC_FP_COLS) — zero extra jobs, certificate strength
-      2^-128. The count component keeps set-size changes exact.
-    - ROUND BATCHING machinery (``rounds_per_check`` star rounds stack
-      lazily under ONE convergence action) exists but DEFAULTS TO 1 —
-      batching 2 was measured slower (see CC_ROUNDS_PER_CHECK). Under
-      batching k>1, a fingerprint match across the batch only
-      schedules a SINGLE confirm round; convergence is declared
-      exactly when two states ONE round apart carry equal
-      certificates, i.e. f(x) == x directly — a batch match is never
-      trusted as a fixpoint by itself.
-
-    The convergence action still materializes the lazily-checkpointed
-    batch-end edge set, so lineage stays truncated batch to batch;
-    ``checkpoint_every`` keeps its meaning as a round-granularity lower
-    bound (a mark can only take effect where an action exists, i.e. at
-    batch ends)."""
+    Each round's edge set is marked lazily; the convergence action
+    materializes it, so lineage stays truncated round to round."""
     prev_fp = _cc_fingerprint(e)
-    it = 0
-    confirm = False  # a batch fingerprint matched; certify with 1 round
-    # the confirm round may run past max_iter: it certifies a fixpoint
-    # the batch already reached WITHIN the budget, it does no new work
-    while it < max_iter or confirm:
-        n_rounds = 1 if confirm else min(rounds_per_check, max_iter - it)
-        small = e
-        for _ in range(n_rounds):
-            small = _cc_one_round(small)
-        it += n_rounds
-        if any(
-            (it - k) % checkpoint_every == 0 for k in range(n_rounds)
-        ) or it >= max_iter:
-            small = ckpt(small, eager=False)
-        fp = _cc_fingerprint(small)
+    for it in range(1, max_iter + 1):
+        e_next = materialize(_cc_one_round(e), eager=False)
+        fp = _cc_fingerprint(e_next)
         connected_components.last_rounds = it
         if fp == prev_fp:
-            if n_rounds == 1:
-                return small  # f(x) == x under the dual certificate
-            confirm = True
-        else:
-            confirm = False
+            return e_next  # f(x) == x under the dual certificate
         prev_fp = fp
-        e = small
-        if hard_barrier_every and any(
-            (it - k) % hard_barrier_every == 0 for k in range(n_rounds)
-        ):
+        e = e_next
+        if it % CC_HARD_BARRIER_EVERY == 0:
             # fresh scan lineage: see the hard-barrier note in the docstring
             e = hb.barrier(e, f"r{it}")
     raise RuntimeError(
@@ -418,9 +250,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 20,
-    hard_barrier_every: int = 80,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -440,9 +269,9 @@ def pagerank(
 
     Lineage bounding (r10): ``iterations`` is a caller parameter, so
     the loop carries the same truncation machinery as
-    connected_components (``ckpt`` every ``checkpoint_every`` rounds +
-    the leak-free ``_HardBarrier`` parquet rewrite every
-    ``hard_barrier_every``) — but with deliberately COARSE defaults,
+    connected_components (``materialize`` every PR_CHECKPOINT_EVERY
+    rounds + the leak-free ``_HardBarrier`` parquet rewrite every
+    PR_HARD_BARRIER_EVERY) — but with deliberately COARSE cadences,
     because the measurement came out differently here (SCALE.md r10):
     each round references the previous ranks table exactly ONCE, so
     the lazy plan grows LINEARLY, not exponentially like cc's
@@ -450,21 +279,22 @@ def pagerank(
     6k-node percolation slice (30/60/100/200 rounds → 2.6/4.4/7.3/
     21.2 s, ~0.07 s/round marginal, no blow-up), and on KB-scale
     state every eager truncation costs MORE (a driver action + a
-    materialization) than the re-analysis it saves. The defaults are
+    materialization) than the re-analysis it saves. The cadences are
     therefore a CLUSTER posture, not a local-speed one: a bounded
     recompute window after executor loss (20 rounds max, vs replaying
     the whole run) and a bounded plan for the 1000-iteration caller.
     At the registered iterations=3 nothing fires and the loop is
     bit-identical to the plain form (pinned by test)."""
-    ckpt = _checkpointer(edges, checkpoint_dir)
-    hb = _HardBarrier(edges.sparkSession, checkpoint_dir, "mrl_pr_barrier")
-    e = ckpt(
-        edges.select(F.col(src).alias("esrc"), F.col(dst).alias("edst")).distinct()
+    hb = _HardBarrier(edges.sparkSession, "mrl_pr_barrier")
+    e = materialize(
+        edges.select(F.col(src).alias("esrc"), F.col(dst).alias("edst")).distinct(),
+        eager=True,
     )  # reused every iteration; truncate lineage once
-    nodes = ckpt(
+    nodes = materialize(
         e.select(F.col("esrc").alias("node"))
         .union(e.select(F.col("edst").alias("node")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     outdeg = e.groupBy("esrc").agg(F.count(F.lit(1)).alias("d"))
     ranks = nodes.withColumn("pr", F.lit(1.0))
@@ -488,18 +318,14 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
                 ).alias("pr"),
             )
-            if (it + 1) % checkpoint_every == 0 and it != iterations - 1:
-                ranks = ckpt(ranks)
-            if (
-                hard_barrier_every
-                and (it + 1) % hard_barrier_every == 0
-                and it != iterations - 1
-            ):
+            if (it + 1) % PR_CHECKPOINT_EVERY == 0 and it != iterations - 1:
+                ranks = materialize(ranks, eager=True)
+            if (it + 1) % PR_HARD_BARRIER_EVERY == 0 and it != iterations - 1:
                 ranks = hb.barrier(ranks, f"r{it + 1}")
     except BaseException:
         hb.abort()
         raise
-    return hb.finalize(ranks, ckpt)
+    return hb.finalize(ranks)
 
 
 def dedup_survivors(pairs: DataFrame, all_ids: DataFrame, id_col: str) -> DataFrame:
@@ -649,7 +475,6 @@ def orient_edges(und: DataFrame) -> DataFrame:
 def triangle_parts(
     spark,
     sf_dir: str,
-    checkpoint_dir: str | None = None,
     edges: DataFrame | None = None,
 ) -> DataFrame:
     """Top parts by triangle participation in the supported co-purchase
@@ -684,13 +509,12 @@ def triangle_parts(
         )
         edges = copurchase_edges(li)
     oriented = orient_edges(edges.select("u", "v"))
-    # SF-proportional materialization: reliable checkpoint when a
-    # shared-FS dir is given (r11 cluster posture), local otherwise.
-    # eager=False (r12): the triangle enumeration is ONE action; a lazy
-    # mark lets that action materialize the oriented list on first use
+    # SF-proportional materialization (reliable under a session
+    # checkpoint dir — see lineage.py). eager=False (r12): the triangle
+    # enumeration is ONE action; a lazy mark lets that action materialize the oriented list on first use
     # and share it across all three join references, instead of paying
     # a separate up-front job (guide §1.2 — fewer driver actions).
-    oriented = _checkpointer(oriented, checkpoint_dir)(oriented, eager=False)
+    oriented = materialize(oriented, eager=False)
     # merge-join hint: the edge list is a borderline-broadcastable few
     # tens of MB at test scale, and AQE happily broadcasts it — building
     # a per-task hash map of the WHOLE graph, which OOMs a modest driver
@@ -751,7 +575,6 @@ LPA_ROUNDS = 3
 def label_propagation_parts(
     spark,
     sf_dir: str,
-    checkpoint_dir: str | None = None,
     edges: DataFrame | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over the
@@ -782,14 +605,13 @@ def label_propagation_parts(
         )
         edges = copurchase_edges(li)
     fwd = edges.select("u", "v")
-    ckpt = _checkpointer(fwd, checkpoint_dir)
     # eager=False throughout (r12): LPA_ROUNDS is a constant and the
     # query has exactly ONE terminal action, so lazy checkpoint marks
     # keep lineage truncated (each round's plan starts from the
     # previous round's LogicalRDD) while folding what used to be
     # 1 + LPA_ROUNDS separate materialization jobs into the terminal
     # action — the r10 per-action driver-cost lesson applied here.
-    e = ckpt(
+    e = materialize(
         fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         eager=False,
     )
@@ -813,7 +635,7 @@ def label_propagation_parts(
         # A/B at sf0.1: wall flat (old 5.9-7.0 s, new 5.6-6.7 s warm),
         # identical communities every rep; the win is the removed
         # per-round sort, which grows with degree at corpus scale.
-        labels = ckpt(
+        labels = materialize(
             counts.groupBy("node")
             .agg(
                 F.max(
@@ -870,7 +692,6 @@ KCORE_ROUNDS = 6   # fixed peel rounds (oracle-replayable unrolling)
 def kcore_parts(
     spark,
     sf_dir: str,
-    checkpoint_dir: str | None = None,
     edges: DataFrame | None = None,
 ) -> DataFrame:
     """Bounded k-core peeling over the supported co-purchase part graph
@@ -897,13 +718,12 @@ def kcore_parts(
         )
         edges = copurchase_edges(li)
     fwd = edges.select("u", "v")
-    ckpt = _checkpointer(fwd, checkpoint_dir)
     # eager=False throughout (r12): fixed KCORE_ROUNDS and one terminal
     # action — lazy checkpoint marks truncate lineage identically but
     # fold 1 + KCORE_ROUNDS materialization jobs into the final action
     # (each round's edge set is still cached on first use and shared by
     # the degree agg + both semi-joins of the next round).
-    e = ckpt(
+    e = materialize(
         fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         eager=False,
     )
@@ -914,7 +734,7 @@ def kcore_parts(
             .filter(F.col("d") >= KCORE_K)
             .select("u")
         )
-        e = ckpt(
+        e = materialize(
             e.join(keep, "u", "left_semi")
             .join(keep.select(F.col("u").alias("v")), "v", "left_semi"),
             eager=False,

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.dedup import SHINGLE_DF_CAP, ngram_jaccard_pairs
 from map_reduce_lite_spark.ops.text import STOPWORDS, _sql_stopword_hits, _stopword_hits
 from map_reduce_lite_spark.registry import Query
@@ -344,9 +345,7 @@ def pipeline_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("status").isin("added", "changed")
     )
     delta = delta_keys.join(cur, "doc_id")
-    flagged = quality_lang_flags(delta, carry=("status",)).localCheckpoint(
-        eager=True
-    )
+    flagged = materialize(quality_lang_flags(delta, carry=("status",)), eager=True)
     gated = flagged.filter("l_ok").select("doc_id", "text")
     standing = minhash_band_sigs(prev)  # production: a stored index table
     dsigs = minhash_band_sigs(gated)

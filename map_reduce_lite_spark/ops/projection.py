@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.registry import Query
 from map_reduce_lite_spark.relational.tables import load_table
 from map_reduce_lite_spark.ops.similarity import (
@@ -612,13 +613,13 @@ def embedding_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id", "m").orderBy(
         F.desc("dot"), F.asc("neighbor_id")
     )
-    topk = (
+    topk = materialize(
         long.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "m", "neighbor_id")
+        .select("query_id", "m", "neighbor_id"),
         # consumed twice (as the per-m candidate sets and as the m=full
         # reference); 32·k tiny rows
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     ref = topk.filter(F.col("m") == EMB_DIM).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
@@ -708,9 +709,9 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     in identical operand order in both engines, so three unrolled CTE
     rounds replay the loadings bit-for-bit."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select("embedding").localCheckpoint(eager=False)
-    nq = q.agg(F.count(F.lit(1)).cast("double").alias("nd")).localCheckpoint(
-        eager=True
+    q = materialize(emb.select("embedding"), eager=False)
+    nq = materialize(
+        q.agg(F.count(F.lit(1)).cast("double").alias("nd")), eager=True
     )
     norm_expr = (
         "transform(warr, w -> w / sqrt(cast(aggregate(warr, "
@@ -754,9 +755,7 @@ def embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # concurrent-consumer race). Interleaved A/B at sf0.1 (4 reps):
         # eager 8.2/5.5/3.4/3.9 s vs lazy 4.6/4.4/4.3/3.3 s, identical
         # loadings on every rep.
-        vdf = packed.select(F.expr(norm_expr).alias("v")).localCheckpoint(
-            eager=False
-        )
+        vdf = materialize(packed.select(F.expr(norm_expr).alias("v")), eager=False)
     return vdf.select(F.posexplode("v").alias("pos", "loading")).select(
         (F.col("pos") + 1).cast("int").alias("dim"),
         F.floor(F.col("loading") * 1e9).cast("long").alias("loading_e9"),
@@ -844,10 +843,10 @@ def embedding_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos",
         F.expr("cast(cast(x as double) as decimal(27,12))").alias("t"),
     )
-    per = (
+    per = materialize(
         ex.groupBy("label", "pos")
-        .agg(F.sum("t").alias("s"), F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+        .agg(F.sum("t").alias("s"), F.count(F.lit(1)).alias("n")),
+        eager=False,
     )
     corp_mean = (
         per.groupBy("pos")

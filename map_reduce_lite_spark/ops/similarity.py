@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -451,7 +452,6 @@ def knn_topk_edges(
     emb: DataFrame,
     k: int = KNN_GRAPH_K,
     cap: int = KNN_BUCKET_CAP,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The corpus k-NN edge list (src_id, dst_id, rank, sim_e9): every
     vector's top-``k`` cosine neighbors among its LSH band collisions —
@@ -470,7 +470,7 @@ def knn_topk_edges(
     once id-ordered and emitted in both directions (r12), so every
     node gets its own neighbor list (unlike the dedup pair set, which
     keeps only the id-ordered rows)."""
-    scored = _knn_scored_edges(emb, cap=cap, checkpoint_dir=checkpoint_dir)
+    scored = _knn_scored_edges(emb, cap=cap)
     w = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("dst_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -489,7 +489,6 @@ def build_knn_edges(
     path: str,
     k: int = KNN_GRAPH_K,
     cap: int = KNN_BUCKET_CAP,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """STAGE the k-NN edge list once as a parquet artifact and return
     its scan — the production shape for the k-NN family (r10): the
@@ -506,9 +505,7 @@ def build_knn_edges(
     the edge list inline — required by the driver contract's
     independent (spark, sf_dir) calls); parity between the staged and
     inline forms is pinned by test_knn_staged_edges_parity."""
-    knn_topk_edges(emb, k=k, cap=cap, checkpoint_dir=checkpoint_dir).write.mode(
-        "overwrite"
-    ).parquet(path)
+    knn_topk_edges(emb, k=k, cap=cap).write.mode("overwrite").parquet(path)
     return emb.sparkSession.read.parquet(path)
 
 
@@ -522,16 +519,12 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_scored_edges(
     emb: DataFrame,
     cap: int = KNN_BUCKET_CAP,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(src_id, dst_id, sim) for every directed LSH band collision —
     the shared candidate-scoring stage of the k-NN graph family.
 
-    ``checkpoint_dir`` (r10): the band table is materialized once and
-    reused by the sizing probe and both self-join sides; the default
-    localCheckpoint dies with an executor on a real cluster, so long
-    jobs pass an HDFS/S3 dir to switch to reliable checkpoint() — the
-    same option (and helper) connected_components has.
+    The band table is materialized once and reused by the sizing probe
+    and both self-join sides.
 
     Hot-bucket cap (the simhash_pairs mechanism, ops/dedup.py): when
     any (band_id, band_hash) bucket exceeds ``cap`` members, every
@@ -546,17 +539,15 @@ def _knn_scored_edges(
     driver fixtures), where the plain join is provably identical; the
     SQL oracle replays sizes+salt unconditionally (n_sub=1 → sub=0 is
     an identity), so both branches hash-match it."""
-    from map_reduce_lite_spark.ops.graph import _checkpointer
-
-    ckpt = _checkpointer(emb, checkpoint_dir)
     planes = _hyperplanes(EMB_DIM, LSH_PLANES)
-    bands = ckpt(
+    bands = materialize(
         emb.select(
             "vec_id",
             F.posexplode(lsh_band_hashes("embedding", planes, LSH_N_BANDS)).alias(
                 "band_id", "band_hash"
             ),
-        )
+        ),
+        eager=True,
     )  # probe + both self-join sides reuse it
     max_bucket = (
         bands.groupBy("band_id", "band_hash")
@@ -712,8 +703,8 @@ def nn_descent_from_edges(
     """NN-descent consumer over a PRE-BUILT k-NN edge list (the staged
     ``build_knn_edges`` artifact in production — its cost is then just
     this function's own tail: one K²-bounded self-join + rescore)."""
-    base = edges.select("src_id", "dst_id").localCheckpoint(
-        eager=False
+    base = materialize(
+        edges.select("src_id", "dst_id"), eager=False
     )  # reused by both sides of the NoN join
     non = (
         base.alias("e1")

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -1270,7 +1271,7 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the non-race. The merge_shards 19.3 s pathology came from an
     # UNCACHED interim subtree feeding 8 broadcast futures, a different
     # shape; it was fixed there by removing that ckpt, not by eagerness.
-    sc_ = _jsd_source_token_counts(spark, sf_dir).localCheckpoint(eager=False)
+    sc_ = materialize(_jsd_source_token_counts(spark, sf_dir), eager=False)
     qc = sc_.groupBy("mtok").agg(F.sum("cs").alias("cq"))
     ns = sc_.groupBy("source").agg(F.sum("cs").alias("ns"))
     nq = sc_.agg(F.sum("cs").alias("nq"))

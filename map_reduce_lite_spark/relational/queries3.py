@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.registry import Query, dsum, sql_dsum
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -579,14 +580,14 @@ def rfm_segment_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum(F.col("o_totalprice"), 2).alias("monetary"),
     )
     ref = per_cust.agg(F.max("last_order").alias("ref_date"))
-    dims = (
+    dims = materialize(
         per_cust.crossJoin(F.broadcast(ref))
         .select(
             "o_custkey",
             F.datediff(F.col("ref_date"), F.col("last_order")).alias("r_days"),
             "frequency",
             F.floor(F.col("monetary") / RFM_MONETARY_BIN).cast("long").alias("m_k"),
-        )
+        ),
         # r12: dims is consumed SEVEN times (the join spine plus each
         # _bucket's histogram and total), and every consumer re-ran the
         # orders scan + per-customer agg (78-Exchange, 28-scan plan).
@@ -600,7 +601,7 @@ def rfm_segment_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialization of a lazy localCheckpoint. 7-rep spread at
         # sf0.1: lazy 0.96-1.36 warm, no outlier; eager 1.36-1.95
         # (the extra serialized job). Lazy kept.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
 
     def _bucket(df: DataFrame, col: str, asc: bool) -> DataFrame:
@@ -721,10 +722,10 @@ def assoc_rules_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard is the shared exactness window, not silent truncation)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    baskets = (
+    baskets = materialize(
         li.join(p, li.l_partkey == p.p_partkey)
         .select("l_orderkey", "p_brand")
-        .distinct()
+        .distinct(),
         # r12: consumed four times (both self-join sides, margins, the
         # basket total) and Spark does not share common subtrees — the
         # lineitem⋈part+distinct pipeline executed 6× across the query
@@ -735,7 +736,7 @@ def assoc_rules_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (block-manager partition locking serializes concurrent
         # materialization): lazy 1.71-1.84 warm, eager 1.85-2.55.
         # Lazy kept.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     a, b = baskets.alias("a"), baskets.alias("b")
     pairs = (

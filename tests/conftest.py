@@ -23,6 +23,43 @@ def spark():
     spark.stop()
 
 
+def _unset_ckdir(sc) -> None:
+    # SparkContext has no public unset; assign None to the Scala var
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
+@pytest.fixture
+def reliable_checkpoint(spark, tmp_path):
+    """Context-manager factory: inside ``with reliable_checkpoint() as
+    ckdir:`` the session has a checkpoint dir, so every lineage
+    truncation is a reliable ``checkpoint()`` under ``ckdir``; outside
+    it, the default local path. The dir is unset again on exit and at
+    teardown, so no later test runs in reliable mode by accident."""
+    import contextlib
+
+    sc = spark.sparkContext
+    ckdir = tmp_path / "ck"
+
+    @contextlib.contextmanager
+    def reliable():
+        ckdir.mkdir(exist_ok=True)
+        sc.setCheckpointDir(str(ckdir))
+        try:
+            yield ckdir
+        finally:
+            _unset_ckdir(sc)
+
+    yield reliable
+    _unset_ckdir(sc)
+    assert sc.getCheckpointDir() is None
+
+
+def assert_reliable_written(ckdir) -> None:
+    """Spark writes reliable checkpoints as ``<dir>/<uuid>/rdd-<id>``;
+    a silent fallback to local storage leaves only the empty uuid dir."""
+    assert any(ckdir.rglob("rdd-*")), "reliable checkpoint dir must be written"
+
+
 @pytest.fixture(scope="session")
 def duck():
     """DuckDB connection with the test tables registered as views, the way

@@ -7,7 +7,9 @@ directory on EVERY call — even when the 8-round barrier never fired —
 and never deleted barrier parquet files, accumulating across the
 176-query bench and any long-lived driver. The fix (_HardBarrier) is
 lazy-create / delete-previous / finalize-cleanup; these tests pin each
-leg of that lifecycle plus the error path.
+leg of that lifecycle plus the error path. Barriers fire every
+graph.CC_HARD_BARRIER_EVERY / PR_HARD_BARRIER_EVERY rounds; tests that
+need one to fire on a small graph lower the constant with monkeypatch.
 """
 
 from __future__ import annotations
@@ -15,9 +17,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import assert_reliable_written
 
-def _barrier_leftovers(root) -> list[str]:
-    return [p.name for p in root.iterdir() if p.name.startswith("mrl_")]
+
+def _barrier_leftovers(root) -> list:
+    """Barrier roots anywhere under ``root`` (in reliable mode they sit
+    inside Spark's per-context ``<dir>/<uuid>`` checkpoint subdir)."""
+    return sorted(root.rglob("mrl_*"))
 
 
 # --------------------------------------------------------------------------
@@ -26,7 +32,7 @@ def _barrier_leftovers(root) -> list[str]:
 
 
 def test_cc_no_tempdir_when_barrier_unfired(spark, monkeypatch):
-    """A graph that converges inside hard_barrier_every rounds must not
+    """A graph that converges inside CC_HARD_BARRIER_EVERY rounds must not
     touch the filesystem at all (the pre-r10 code mkdtemp'd per call)."""
     import tempfile
 
@@ -46,38 +52,39 @@ def test_cc_no_tempdir_when_barrier_unfired(spark, monkeypatch):
     assert calls == [], "barrier dir must be created lazily, on first fire only"
 
 
-def test_cc_barrier_files_cleaned_after_fire(spark, tmp_path):
-    """Force the barrier to fire (chain graph, hard_barrier_every=2):
-    the result must survive cleanup — finalize re-materializes off the
-    last parquet file before deleting the whole barrier subtree."""
+def test_cc_barrier_files_cleaned_after_fire(spark, reliable_checkpoint, monkeypatch):
+    """Force the barrier to fire (chain graph, CC_HARD_BARRIER_EVERY=2)
+    in reliable mode, so barrier files go under the checkpoint dir: the
+    result must survive cleanup — finalize re-materializes off the last
+    parquet file before deleting the whole barrier subtree."""
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
 
+    monkeypatch.setattr(graph, "CC_HARD_BARRIER_EVERY", 2)
     n = 40
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["src", "dst"]
     )
-    ckdir = tmp_path / "ck"
-    ckdir.mkdir()
-    out = connected_components(
-        edges,
-        checkpoint_dir=str(ckdir),
-        hard_barrier_every=2,
-    )
-    rows = {r["node"]: r["component"] for r in out.collect()}
+    with reliable_checkpoint() as ckdir:
+        out = connected_components(edges)
+        rows = {r["node"]: r["component"] for r in out.collect()}
     assert rows == {i: 0 for i in range(n + 1)}
     # Spark's own reliable-checkpoint dirs remain (Spark convention,
     # cleaned by spark.cleaner); OUR barrier subtrees must be gone.
     assert connected_components.last_rounds >= 3, "barrier must have fired"
     assert _barrier_leftovers(ckdir) == []
+    assert_reliable_written(ckdir)
 
 
-def test_cc_barrier_tempdir_removed(spark, tmp_path, monkeypatch):
-    """Default (no checkpoint_dir) path: the lazily-created temp dir is
+def test_cc_barrier_tempdir_removed(spark, monkeypatch):
+    """Default (no checkpoint dir) path: the lazily-created temp dir is
     removed once the result is detached."""
     import tempfile
 
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
 
+    monkeypatch.setattr(graph, "CC_HARD_BARRIER_EVERY", 2)
     made = []
     real = tempfile.mkdtemp
 
@@ -88,7 +95,7 @@ def test_cc_barrier_tempdir_removed(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(tempfile, "mkdtemp", recording)
     edges = spark.createDataFrame([(i, i + 1) for i in range(40)], ["src", "dst"])
-    out = connected_components(edges, hard_barrier_every=2)
+    out = connected_components(edges)
     assert out.count() == 41
     import os
 
@@ -97,33 +104,36 @@ def test_cc_barrier_tempdir_removed(spark, tmp_path, monkeypatch):
     assert all(not os.path.exists(d) for d in barrier_dirs)
 
 
-def test_barrier_abort_on_error(spark, tmp_path):
-    """Error path: abort() removes the barrier subtree."""
-    from map_reduce_lite_spark.ops.graph import _HardBarrier
+def test_barrier_abort_on_error(spark, reliable_checkpoint):
+    """Error path: abort() removes the barrier subtree (rooted under the
+    session's checkpoint dir)."""
+    from map_reduce_lite_spark.lineage import _HardBarrier
 
-    hb = _HardBarrier(spark, str(tmp_path), "mrl_test_barrier")
-    df = spark.range(10)
-    df2 = hb.barrier(df, "r1")
-    assert df2.count() == 10
-    assert _barrier_leftovers(tmp_path) != []
-    hb.abort()
-    assert _barrier_leftovers(tmp_path) == []
+    with reliable_checkpoint() as ckdir:
+        hb = _HardBarrier(spark, "mrl_test_barrier")
+        df = spark.range(10)
+        df2 = hb.barrier(df, "r1")
+        assert df2.count() == 10
+        assert _barrier_leftovers(ckdir) != []
+        hb.abort()
+        assert _barrier_leftovers(ckdir) == []
 
 
-def test_barrier_keeps_only_last_file(spark, tmp_path):
+def test_barrier_keeps_only_last_file(spark, reliable_checkpoint):
     """Each barrier write deletes the previous round's file."""
     import os
 
-    from map_reduce_lite_spark.ops.graph import _HardBarrier
+    from map_reduce_lite_spark.lineage import _HardBarrier
 
-    hb = _HardBarrier(spark, str(tmp_path), "mrl_test_barrier")
-    d1 = hb.barrier(spark.range(5), "r1")
-    d2 = hb.barrier(d1, "r2")
-    root = tmp_path / _barrier_leftovers(tmp_path)[0]
-    assert sorted(os.listdir(root)) == ["r2"]
-    d3 = hb.finalize(d2, lambda df, eager=True: df.localCheckpoint(eager=eager))
-    assert d3.count() == 5
-    assert _barrier_leftovers(tmp_path) == []
+    with reliable_checkpoint() as ckdir:
+        hb = _HardBarrier(spark, "mrl_test_barrier")
+        d1 = hb.barrier(spark.range(5), "r1")
+        d2 = hb.barrier(d1, "r2")
+        (root,) = _barrier_leftovers(ckdir)
+        assert sorted(os.listdir(root)) == ["r2"]
+        d3 = hb.finalize(d2)
+        assert d3.count() == 5
+        assert _barrier_leftovers(ckdir) == []
 
 
 # --------------------------------------------------------------------------
@@ -150,50 +160,43 @@ def _numpy_pagerank(edges: list[tuple[int, int]], iterations: int) -> dict[int, 
     return pr
 
 
-def test_pagerank_deep_iterations_bounded(spark, tmp_path):
-    """iterations=12 with hard_barrier_every=4: values match the
-    driver-side replay and no barrier storage survives — the lineage
-    class connected_components root-caused in r9, now bounded here."""
+def test_pagerank_deep_iterations_bounded(spark, reliable_checkpoint, monkeypatch):
+    """iterations=12 with PR_HARD_BARRIER_EVERY=4, in reliable mode:
+    values match the driver-side replay and no barrier storage survives
+    — the lineage class connected_components root-caused in r9, now
+    bounded here."""
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import pagerank
 
+    monkeypatch.setattr(graph, "PR_HARD_BARRIER_EVERY", 4)
     raw = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 1)]
     edges = spark.createDataFrame(raw, ["src", "dst"])
-    ckdir = tmp_path / "ck"
-    ckdir.mkdir()
-    got = {
-        r["node"]: r["pr"]
-        for r in pagerank(
-            edges, iterations=12, checkpoint_dir=str(ckdir), hard_barrier_every=4
-        ).collect()
-    }
+    with reliable_checkpoint() as ckdir:
+        got = {r["node"]: r["pr"] for r in pagerank(edges, iterations=12).collect()}
     want = _numpy_pagerank(raw, 12)
     assert got.keys() == want.keys()
     for n in want:
         assert got[n] == pytest.approx(want[n], rel=1e-9), n
     assert _barrier_leftovers(ckdir) == []
+    assert_reliable_written(ckdir)
 
 
-def test_pagerank_iter3_unchanged_by_truncation(spark):
+def test_pagerank_iter3_unchanged_by_truncation(spark, monkeypatch):
     """The registered query's semantics are invariant to the new
     truncation points (localCheckpoint/parquet round-trip doubles
     exactly): iterations=3 with and without per-round ckpt agree
     bit-for-bit."""
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import pagerank
 
     raw = [(1, 2), (2, 3), (3, 1), (4, 2)]
     edges = spark.createDataFrame(raw, ["src", "dst"])
-    plain = {
-        r["node"]: r["pr"]
-        for r in pagerank(
-            edges, iterations=3, checkpoint_every=10**9, hard_barrier_every=0
-        ).collect()
-    }
-    bounded = {
-        r["node"]: r["pr"]
-        for r in pagerank(
-            edges, iterations=3, checkpoint_every=1, hard_barrier_every=2
-        ).collect()
-    }
+    monkeypatch.setattr(graph, "PR_CHECKPOINT_EVERY", 10**9)
+    monkeypatch.setattr(graph, "PR_HARD_BARRIER_EVERY", 10**9)
+    plain = {r["node"]: r["pr"] for r in pagerank(edges, iterations=3).collect()}
+    monkeypatch.setattr(graph, "PR_CHECKPOINT_EVERY", 1)
+    monkeypatch.setattr(graph, "PR_HARD_BARRIER_EVERY", 2)
+    bounded = {r["node"]: r["pr"] for r in pagerank(edges, iterations=3).collect()}
     assert plain == bounded  # exact float equality, deliberately
 
 
@@ -284,24 +287,20 @@ def test_knn_staged_edges_parity(spark, tmp_path):
     )
 
 
-def test_knn_edges_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches the band-table truncation to reliable
-    checkpoint() (survives executor loss) — mirrors
+def test_knn_edges_reliable_checkpoint(spark, reliable_checkpoint):
+    """A session checkpoint dir switches the band-table truncation to
+    reliable checkpoint() (survives executor loss) — mirrors
     test_connected_components_reliable_checkpoint."""
     from map_reduce_lite_spark.ops.similarity import knn_topk_edges
     from map_reduce_lite_spark.relational.tables import load_table
-    from tests.conftest import SF_SMALL
+    from tests.conftest import SF_SMALL, assert_reliable_written
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    ckdir = tmp_path / "ck"
-    ckdir.mkdir()
     plain = {tuple(r) for r in knn_topk_edges(emb).collect()}
-    ck = {
-        tuple(r)
-        for r in knn_topk_edges(emb, checkpoint_dir=str(ckdir)).collect()
-    }
+    with reliable_checkpoint() as ckdir:
+        ck = {tuple(r) for r in knn_topk_edges(emb).collect()}
     assert plain == ck
-    assert any(ckdir.rglob("*")), "reliable checkpoint dir must be written"
+    assert_reliable_written(ckdir)
 
 
 # --------------------------------------------------------------------------
@@ -382,33 +381,29 @@ def test_ppm_roundtrip_matches_synthesis_rule(spark):
     assert out[50]["ok"] is False and out[50]["width"] is None
 
 
-def test_embedding_pairs_reliable_checkpoint(spark, tmp_path):
-    """embedding_near_dup_pairs' band table honors checkpoint_dir, same
-    contract as knn_topk_edges."""
+def test_embedding_pairs_reliable_checkpoint(spark, reliable_checkpoint):
+    """embedding_near_dup_pairs' band table honors the session
+    checkpoint dir, same contract as knn_topk_edges."""
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
     from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
-    from tests.conftest import SF_SMALL
+    from tests.conftest import SF_SMALL, assert_reliable_written
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    ckdir = tmp_path / "ck"
-    ckdir.mkdir()
-    plain = {
-        tuple(r)
-        for r in embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
-        .select("keep_id", "dup_id")
-        .collect()
-    }
-    ck = {
-        tuple(r)
-        for r in embedding_near_dup_pairs(
-            emb, method="lsh", dim=EMB_DIM, checkpoint_dir=str(ckdir)
-        )
-        .select("keep_id", "dup_id")
-        .collect()
-    }
+
+    def pairs():
+        return {
+            tuple(r)
+            for r in embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+            .select("keep_id", "dup_id")
+            .collect()
+        }
+
+    plain = pairs()
+    with reliable_checkpoint() as ckdir:
+        ck = pairs()
     assert plain == ck
-    assert any(ckdir.rglob("*")), "reliable checkpoint dir must be written"
+    assert_reliable_written(ckdir)
 
 
 def test_near_dup_pairs_staged_parity(spark, tmp_path):

@@ -1,111 +1,71 @@
-"""r11 additions: reliable-checkpoint threading for every remaining
+"""r11 additions: reliable-checkpoint coverage for every remaining
 SF-proportional materialization (the test_knn_edges_reliable_checkpoint
 pattern, one per family), and adaptive re-banding unit coverage beyond
 the mega-bucket corpora in test_capcorpus.py.
 
-Each checkpoint test proves the SAME VALUES come back with
-``checkpoint_dir`` set (reliable checkpoint(), survives executor loss
-on a real cluster) as with the default executor-local localCheckpoint,
-and that the directory was actually written — a silent fallback to
-local storage would pass the value check but fail the rglob."""
+Each checkpoint test proves the SAME VALUES come back with a session
+checkpoint dir set (reliable checkpoint(), survives executor loss on a
+real cluster) as with the default executor-local localCheckpoint, and
+that the directory was actually written — a silent fallback to local
+storage would pass the value check but fail the rdd-* check."""
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, assert_reliable_written
 
 
-def _ckdir(tmp_path):
-    d = tmp_path / "ck"
-    d.mkdir()
-    return d
+def _assert_reliable(reliable_checkpoint, build):
+    """``build()`` returns the same rows in reliable mode as on the
+    default local path, and the checkpoint dir was written."""
+    plain = {tuple(r) for r in build().collect()}
+    with reliable_checkpoint() as ckdir:
+        ck = {tuple(r) for r in build().collect()}
+    assert plain == ck
+    assert_reliable_written(ckdir)
 
 
-def _assert_reliable(ckdir, plain_rows, ck_rows):
-    assert plain_rows == ck_rows
-    assert any(ckdir.rglob("*")), "reliable checkpoint dir must be written"
-
-
-def test_minhash_pairs_reliable_checkpoint(spark, tmp_path):
+def test_minhash_pairs_reliable_checkpoint(spark, reliable_checkpoint):
     from map_reduce_lite_spark.ops.dedup import minhash_lsh_pairs
     from map_reduce_lite_spark.relational.tables import load_table
 
     docs = load_table(spark, SF_SMALL, "documents")
-    ckdir = _ckdir(tmp_path)
-    plain = {tuple(r) for r in minhash_lsh_pairs(docs).collect()}
-    ck = {
-        tuple(r)
-        for r in minhash_lsh_pairs(docs, checkpoint_dir=str(ckdir)).collect()
-    }
-    _assert_reliable(ckdir, plain, ck)
+    _assert_reliable(reliable_checkpoint, lambda: minhash_lsh_pairs(docs))
 
 
-def test_simhash_pairs_reliable_checkpoint(spark, tmp_path):
+def test_simhash_pairs_reliable_checkpoint(spark, reliable_checkpoint):
     from map_reduce_lite_spark.ops.dedup import simhash_pairs
     from map_reduce_lite_spark.relational.tables import load_table
 
     docs = load_table(spark, SF_SMALL, "documents")
-    ckdir = _ckdir(tmp_path)
-    plain = {tuple(r) for r in simhash_pairs(docs).collect()}
-    ck = {
-        tuple(r) for r in simhash_pairs(docs, checkpoint_dir=str(ckdir)).collect()
-    }
-    _assert_reliable(ckdir, plain, ck)
+    _assert_reliable(reliable_checkpoint, lambda: simhash_pairs(docs))
 
 
-def test_leakage_split_reliable_checkpoint(spark, tmp_path):
+def test_leakage_split_reliable_checkpoint(spark, reliable_checkpoint):
     from map_reduce_lite_spark.ops.curation import leakage_safe_split
 
-    ckdir = _ckdir(tmp_path)
-    plain = {tuple(r) for r in leakage_safe_split(spark, SF_SMALL).collect()}
-    ck = {
-        tuple(r)
-        for r in leakage_safe_split(
-            spark, SF_SMALL, checkpoint_dir=str(ckdir)
-        ).collect()
-    }
-    _assert_reliable(ckdir, plain, ck)
+    _assert_reliable(
+        reliable_checkpoint, lambda: leakage_safe_split(spark, SF_SMALL)
+    )
 
 
-def test_triangles_reliable_checkpoint(spark, tmp_path):
+def test_triangles_reliable_checkpoint(spark, reliable_checkpoint):
     from map_reduce_lite_spark.ops.graph import triangle_parts
 
-    ckdir = _ckdir(tmp_path)
-    plain = {tuple(r) for r in triangle_parts(spark, SF_SMALL).collect()}
-    ck = {
-        tuple(r)
-        for r in triangle_parts(
-            spark, SF_SMALL, checkpoint_dir=str(ckdir)
-        ).collect()
-    }
-    _assert_reliable(ckdir, plain, ck)
+    _assert_reliable(reliable_checkpoint, lambda: triangle_parts(spark, SF_SMALL))
 
 
-def test_label_propagation_reliable_checkpoint(spark, tmp_path):
+def test_label_propagation_reliable_checkpoint(spark, reliable_checkpoint):
     from map_reduce_lite_spark.ops.graph import label_propagation_parts
 
-    ckdir = _ckdir(tmp_path)
-    plain = {
-        tuple(r) for r in label_propagation_parts(spark, SF_SMALL).collect()
-    }
-    ck = {
-        tuple(r)
-        for r in label_propagation_parts(
-            spark, SF_SMALL, checkpoint_dir=str(ckdir)
-        ).collect()
-    }
-    _assert_reliable(ckdir, plain, ck)
+    _assert_reliable(
+        reliable_checkpoint, lambda: label_propagation_parts(spark, SF_SMALL)
+    )
 
 
-def test_kcore_reliable_checkpoint(spark, tmp_path):
+def test_kcore_reliable_checkpoint(spark, reliable_checkpoint):
     from map_reduce_lite_spark.ops.graph import kcore_parts
 
-    ckdir = _ckdir(tmp_path)
-    plain = {tuple(r) for r in kcore_parts(spark, SF_SMALL).collect()}
-    ck = {
-        tuple(r)
-        for r in kcore_parts(spark, SF_SMALL, checkpoint_dir=str(ckdir)).collect()
-    }
-    _assert_reliable(ckdir, plain, ck)
+    _assert_reliable(reliable_checkpoint, lambda: kcore_parts(spark, SF_SMALL))
 
 
 def test_lsh_refine_matches_lsh_when_dormant(spark):

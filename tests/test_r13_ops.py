@@ -1,68 +1,15 @@
 """r13 optimization-round internals: the connected-components
-convergence machinery (dual-fingerprint certificate, optional round
-batching with a confirm round) changed — pin that every protocol
-variant returns identical labels and that non-convergence still
-raises."""
+convergence certificate (count + two xxhash64 xors) replaced the exact
+symdiff confirm — pin that it tells sets apart. Non-convergence raising
+is pinned in tests/test_r12_ops.py."""
 
 from __future__ import annotations
 
-import random
-
-import pytest
-
-from map_reduce_lite_spark.ops.graph import (
-    CC_ROUNDS_PER_CHECK,
-    _cc_fingerprint,
-    connected_components,
-)
+from map_reduce_lite_spark.ops.graph import _cc_fingerprint
 
 
 def _edges_df(spark, pairs):
     return spark.createDataFrame(pairs, "u long, v long")
-
-
-def test_cc_rounds_per_check_default_is_one():
-    """Round batching (2 rounds/action) was prototyped for the r12
-    verdict's ask #3 and MEASURED SLOWER (parity overshoot + confirm
-    round beat the saved driver actions) — the default must stay at
-    the round-count-minimal protocol."""
-    assert CC_ROUNDS_PER_CHECK == 1
-
-
-def test_batched_protocol_matches_default_on_multiround_graph(spark):
-    """rounds_per_check=2 exercises the batch-match → single-confirm-
-    round path; labels must be identical to the default protocol on a
-    graph that needs several alternating-star rounds (an id-shuffled
-    path — the adversarial shape from the r12 campaign)."""
-    ids = list(range(300))
-    random.Random(13).shuffle(ids)
-    pairs = [(ids[i], ids[i + 1]) for i in range(299)]
-    base = {
-        (r.node, r.component)
-        for r in connected_components(
-            _edges_df(spark, pairs), src="u", dst="v"
-        ).collect()
-    }
-    batched = {
-        (r.node, r.component)
-        for r in connected_components(
-            _edges_df(spark, pairs), src="u", dst="v", rounds_per_check=2
-        ).collect()
-    }
-    assert base == batched
-    assert {c for _, c in base} == {0}
-
-
-def test_batched_protocol_still_raises_on_nonconvergence(spark):
-    """A fingerprint match across a BATCH is never trusted as a
-    fixpoint: with max_iter too small the batched protocol must raise
-    exactly like the per-round one (silent-cliff contract)."""
-    pairs = [(i, i + 1) for i in range(200)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            _edges_df(spark, pairs), src="u", dst="v", max_iter=2,
-            rounds_per_check=2,
-        ).collect()
 
 
 def test_dual_fingerprint_distinguishes_sets(spark):

@@ -203,23 +203,22 @@ def test_cli_submit_and_workloads(tmp_path, books_dir):
     assert ":: " in body and "the" in body.lower()
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation to reliable
+def test_connected_components_reliable_checkpoint(spark, reliable_checkpoint):
+    """A session checkpoint dir switches lineage truncation to reliable
     checkpoint() — survives executor loss on a real cluster."""
     from map_reduce_lite_spark.ops.graph import connected_components
+    from tests.conftest import assert_reliable_written
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20)], "src long, dst long"
     )
-    ckdir = tmp_path / "ck"
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            edges, checkpoint_every=1, checkpoint_dir=str(ckdir)
-        ).collect()
-    }
+    with reliable_checkpoint() as ckdir:
+        got = {
+            (r["node"], r["component"])
+            for r in connected_components(edges).collect()
+        }
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20)}
-    assert any(ckdir.rglob("*")), "reliable checkpoint dir must be written"
+    assert_reliable_written(ckdir)
 
 
 def test_resize_stub_deterministic(spark):

@@ -114,12 +114,7 @@ def build_snapshot(
     artifacts: dict[str, dict] = {}
     scans = {
         "knn_edges": (
-            build_knn_edges(
-                emb,
-                f"{out}/knn_edges",
-                k=KNN_GRAPH_K,
-                cap=KNN_BUCKET_CAP,
-            ),
+            build_knn_edges(emb, f"{out}/knn_edges", k=KNN_GRAPH_K),
             {"k": KNN_GRAPH_K, "cap": KNN_BUCKET_CAP, "dim": EMB_DIM},
         ),
         "near_dup_pairs": (
@@ -128,7 +123,6 @@ def build_snapshot(
                 f"{out}/near_dup_pairs",
                 threshold=NEAR_DUP_COS,
                 dim=EMB_DIM,
-                cap=EMB_BUCKET_CAP,
                 method="lsh_refine",
             ),
             {

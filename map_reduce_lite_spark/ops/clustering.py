@@ -59,14 +59,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
-from map_reduce_lite_spark.ops.similarity import (
-    EMB_DIM,
-    _dot,
-    _norm,
-    _spread,
-    _sql_cos,
-)
-from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
+from map_reduce_lite_spark.ops.pairs import salted_split
+from map_reduce_lite_spark.ops.similarity import EMB_DIM, _sql_cos, cosine_verify
+from map_reduce_lite_spark.registry import Query, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
 QUANT = 1_000_000.0  # fixed-point scale: q = floor(x * 1e6)
@@ -302,8 +297,8 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_assignments(spark, sf_dir)
         .select("vec_id", "cluster"),
         # eager (r13, measured): the pair stage consumes assign three
-        # ways (both id-only join sides + the broadcast(sizes) future in
-        # _subsplit); materializing the 12-byte/vector table up front
+        # ways (both id-only join sides + the broadcast(sizes) of the
+        # salted split); materializing the 12-byte/vector table up front
         # beat the lazy mark on every interleaved A/B rep at sf0.1
         # (see kmeans_assignments). Construction-time cost is one Lloyd
         # run — paid once per build, memoized by the plan-test cache.
@@ -312,124 +307,7 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _semdedup_pairs(emb, assign)
 
 
-def _subsplit(assign: DataFrame, cap: int) -> DataFrame:
-    """(vec_id, cluster, sub): deterministic hash block within cluster.
-
-    Cluster sizes are a K-row aggregate broadcast back onto the
-    assignment; ``n_sub = ceil(size / cap)`` via exact integer
-    arithmetic and ``sub = md5_60bit(vec_id) % n_sub`` — both
-    bit-identical in DuckDB, so the oracle replays the split. For
-    every cluster under the cap n_sub == 1 and the split is the
-    identity."""
-    sizes = assign.groupBy("cluster").agg(
-        ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap))
-        .cast("long")
-        .alias("n_sub")
-    )
-    return assign.join(F.broadcast(sizes), "cluster").select(
-        "vec_id",
-        "cluster",
-        F.pmod(md5_60bit(F.col("vec_id").cast("string")), F.col("n_sub")).alias(
-            "sub"
-        ),
-    )
-
-
-# Recursive sub-split parameters: each level splits an oversized block
-# into at most BRANCH Voronoi cells, so depth d handles clusters up to
-# cap · BRANCH^d before any block can still exceed the cap.
-SEMDEDUP_SPLIT_BRANCH = 8
-SEMDEDUP_SPLIT_DEPTH = 3
-
-
-def _recursive_subsplit(
-    emb: DataFrame,
-    assign: DataFrame,
-    cap: int,
-    branch: int = SEMDEDUP_SPLIT_BRANCH,
-    depth: int = SEMDEDUP_SPLIT_DEPTH,
-) -> DataFrame:
-    """(vec_id, cluster, sub): GEOMETRY-PRESERVING split of oversized
-    clusters — the recall-lossless alternative the md5 hash split's
-    docstring promises.
-
-    The md5 split is oracle-replayable but recall-blind: a near-dup
-    pair inside an oversized cluster lands in the same block with
-    probability only 1/n_sub. Here each oversized block is instead
-    partitioned into ≤ ``branch`` Voronoi cells around deterministic
-    seeds (its first ``branch`` members by vec_id — the same seeding
-    contract as the top-level k-means), recursively up to ``depth``
-    levels. Near-dup pairs are geometrically tight, so both members
-    fall on the same side of the (distant) seed bisectors and the pair
-    SURVIVES the split — property-tested in
-    tests/test_clustering.py::test_recursive_subsplit_keeps_near_pairs
-    against a forced mega-cluster where the md5 split measurably loses
-    pairs.
-
-    Scale shape per level: block sizes are one groupBy (≤ K·branch^level
-    rows, broadcast back); seeds are a rank-window head capped by the
-    LITERAL ``branch`` first (so Spark's WindowGroupLimit keeps ≤branch
-    rows per block before the exchange) and collect to ≤ branch·dim
-    longs per block; assignment is the same data-driven argmin map
-    stage as the top-level k-means, joined per block. Each level is
-    lazily checkpointed so the lineage stays flat. Deterministic
-    end-to-end (integer distances, lexicographic ties, vec_id seeding) —
-    but not replayed by the DuckDB oracle, hence opt-in: the default
-    stays the md5 split."""
-    q = emb.select("vec_id", _quantize(F.col("embedding")).alias("qv"))
-    cur = assign.join(q, "vec_id").select(
-        "vec_id", "cluster", F.lit("r").alias("sub"), "qv"
-    )
-    from pyspark.sql import Window
-
-    for _ in range(depth):
-        sizes = cur.groupBy("cluster", "sub").agg(
-            F.least(
-                ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap)).cast("long"),
-                F.lit(branch).cast("long"),
-            ).alias("n_sub")
-        )
-        w = Window.partitionBy("cluster", "sub").orderBy("vec_id")
-        sized = cur.join(F.broadcast(sizes), ["cluster", "sub"])
-        seeds = (
-            sized.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= F.lit(branch))   # literal → WindowGroupLimit
-            .filter(F.col("rn") <= F.col("n_sub"))
-            .groupBy("cluster", "sub")
-            .agg(
-                F.collect_list(
-                    F.struct((F.col("rn") - 1).alias("sc"), F.col("qv").alias("cv"))
-                ).alias("carr")
-            )
-        )
-        best = F.array_min(
-            F.transform(
-                F.col("carr"),
-                lambda c: F.struct(
-                    _sqdist(F.col("qv"), c["cv"]).alias("dist_q"),
-                    c["sc"].alias("sc"),
-                ),
-            )
-        )
-        cur = materialize(
-            cur.join(F.broadcast(seeds), ["cluster", "sub"])
-            .select(
-                "vec_id",
-                "cluster",
-                F.concat_ws("/", F.col("sub"), best["sc"].cast("string")).alias("sub"),
-                "qv",
-            ),
-            eager=False,
-        )
-    return cur.select("vec_id", "cluster", "sub")
-
-
-def _semdedup_pairs(
-    emb: DataFrame,
-    assign: DataFrame,
-    cap: int = SEMDEDUP_CLUSTER_CAP,
-    split: str = "hash",
-) -> DataFrame:
+def _semdedup_pairs(emb: DataFrame, assign: DataFrame) -> DataFrame:
     """Within-cluster near-dup pairs, scored at full parallelism.
 
     Two-step shape (the dedup_embedding_lsh lesson, which here also
@@ -439,49 +317,34 @@ def _semdedup_pairs(
     the cosine filter would be pushed INTO the join condition and the
     whole FLOP-dense scoring would run on K tasks (observed: a 4-task
     SortMergeJoin doing every dot product). With 8-byte id rows the
-    K-key join is I/O-trivial; the pairs are then repartitioned to
-    full width and the vectors+norms attach via vec_id equi-joins
-    (AQE broadcasts the vector side when it fits, shuffle-hash
-    otherwise), so the per-pair cosine runs map-side on every core.
-    Shuffle volume: pairs × 24 bytes + corpus vectors once — instead
-    of two vectors riding every candidate pair through the K-key
-    exchange.
+    K-key join is I/O-trivial; the pairs then go through
+    similarity.cosine_verify, which repartitions them to full width
+    and attaches vectors+norms via vec_id equi-joins (AQE broadcasts
+    the vector side when it fits, shuffle-hash otherwise), so the
+    per-pair cosine runs map-side on every core. Shuffle volume:
+    pairs × 24 bytes + corpus vectors once — instead of two vectors
+    riding every candidate pair through the K-key exchange.
 
-    Clusters above ``cap`` are sub-split (see ``_subsplit``) so the
-    candidate stage is O(Σ min(size, cap)·size) instead of
-    O(Σ size²) — one mega-cluster can no longer go quadratic in the
-    corpus. ``split="recursive"`` opts into the geometry-preserving
-    Voronoi sub-split (``_recursive_subsplit``) instead of the
-    oracle-replayable md5 block split."""
-    vecs = emb.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+    Clusters are always sub-split (pairs.salted_split with the plain
+    vec_id as salt, no probe): ``n_sub = ceil(size / cap)`` with cap
+    SEMDEDUP_CLUSTER_CAP read at call time, and
+    ``sub = md5_60bit(vec_id) % n_sub`` — both bit-identical in
+    DuckDB, so the oracle replays the split; n_sub == 1 for every
+    cluster under the cap. The candidate stage is then
+    O(Σ min(size, cap)·size) instead of O(Σ size²) — one mega-cluster
+    can no longer go quadratic in the corpus."""
+    sp = salted_split(
+        assign, ["cluster"], SEMDEDUP_CLUSTER_CAP, F.col("vec_id").cast("string")
     )
-    if split == "recursive":
-        sp = _recursive_subsplit(emb, assign, cap)
-    else:
-        sp = _subsplit(assign, cap)
     a = sp.select(F.col("vec_id").alias("keep_id"), "cluster", "sub")
     b = sp.select(F.col("vec_id").alias("dup_id"), "cluster", "sub")
-    cand = _spread(
+    cand = (
         a.join(b, ["cluster", "sub"])
         .filter(F.col("keep_id") < F.col("dup_id"))
-        .drop("sub"),
-        "keep_id",
+        .drop("sub")
     )
-    va = vecs.select(
-        F.col("vec_id").alias("keep_id"),
-        F.col("embedding").alias("a_vec"),
-        F.col("nrm").alias("a_norm"),
-    )
-    vb = vecs.select(
-        F.col("vec_id").alias("dup_id"),
-        F.col("embedding").alias("b_vec"),
-        F.col("nrm").alias("b_norm"),
-    )
-    pairs = cand.join(va, "keep_id").join(vb, "dup_id")
-    sim = _dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_norm") * F.col("b_norm"))
     return (
-        pairs.select("cluster", "keep_id", "dup_id", sim.alias("sim"))
+        cosine_verify(cand, emb, "keep_id", "dup_id")
         .filter(F.col("sim") >= F.lit(SEMDEDUP_COS))
         .select(
             "cluster",
@@ -493,7 +356,8 @@ def _semdedup_pairs(
 
 
 def _sql_subsplit(cap: int) -> str:
-    """CTE fragments replaying _subsplit: sizes → subbed."""
+    """CTE fragments replaying _semdedup_pairs' salted split: sizes →
+    subbed."""
     return f"""sizes AS (
   SELECT cluster, (COUNT(*) + {cap - 1}) // {cap} AS n_sub
   FROM final GROUP BY cluster

@@ -524,14 +524,6 @@ FROM staged GROUP BY source
 # Leakage-safe (cluster-level) split
 # --------------------------------------------------------------------------
 
-# r11: the safety operator now uses the ADAPTIVE-RE-BANDING cap at the
-# production value — oversized buckets are refined with extra
-# hyperplanes (recall-preserving) instead of either salted (drops
-# pairs, r9) or cap-exempted (r10: size² melt on a near-constant
-# mega-bucket, the classic boilerplate-heavy-crawl shape).
-LEAKAGE_SPLIT_CAP = EMB_BUCKET_CAP
-
-
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test routing that routes whole near-dup CLUSTERS, not
     documents, so no LSH-DETECTED near-duplicate pair ever straddles a
@@ -557,8 +549,8 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     mega-bucket (near-constant embeddings — exactly what boilerplate-
     heavy crawls produce) costing size² candidate pairs. r11 replaces
     the exemption with ADAPTIVE RE-BANDING (method="lsh_refine",
-    dedup._refined_candidate_ids): oversized buckets are refined with
-    per-band extra hyperplanes — recall-preserving, no salt drop — and
+    dedup._refined_candidate_ids): buckets over EMB_BUCKET_CAP are
+    refined with per-band extra hyperplanes — recall-preserving, no salt drop — and
     a sub-bucket that still exceeds the cap (a near-constant core) is
     covered by a star to its min-id representative, preserving the
     verified graph's connectivity at linear instead of quadratic cost.
@@ -613,11 +605,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = lsh_band_table(emb, dim=EMB_DIM)
     pairs = materialize(
         embedding_near_dup_pairs(
-            emb,
-            method="lsh_refine",
-            dim=EMB_DIM,
-            cap=LEAKAGE_SPLIT_CAP,
-            bands=bands,
+            emb, method="lsh_refine", dim=EMB_DIM, bands=bands
         ).select("keep_id", "dup_id"),
         eager=True,
     )
@@ -661,12 +649,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx_per_split = (
         routed.join(
-            refine_star_only_ids(
-                emb,
-                dim=EMB_DIM,
-                cap=LEAKAGE_SPLIT_CAP,
-                bands=bands,
-            ),
+            refine_star_only_ids(emb, dim=EMB_DIM, bands=bands),
             "vec_id",
         )
         .groupBy("split")
@@ -705,8 +688,8 @@ def _leakage_split_sql() -> str:
 
     planes = _hyperplanes(EMB_DIM, LSH_PLANES)
     rplanes = refine_hyperplanes(EMB_DIM)
-    chain = sql_refined_cands_chain(planes, rplanes, LSH_N_BANDS, LEAKAGE_SPLIT_CAP)
-    coverage = sql_refine_coverage_cte(LEAKAGE_SPLIT_CAP)
+    chain = sql_refined_cands_chain(planes, rplanes, LSH_N_BANDS, EMB_BUCKET_CAP)
+    coverage = sql_refine_coverage_cte(EMB_BUCKET_CAP)
     return f"""
 WITH RECURSIVE {chain}
 , {coverage}

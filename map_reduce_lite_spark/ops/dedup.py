@@ -33,6 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
+from map_reduce_lite_spark.ops.pairs import (
+    band_salt,
+    band_self_join,
+    bucket_over_cap,
+    split_hot_buckets,
+)
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -576,13 +582,11 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
 SIMHASH_BUCKET_CAP = 4096
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    cap: int = SIMHASH_BUCKET_CAP,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup pairs with simhash Hamming distance ≤ 3, found via a
     4×15-bit band join (a pair within distance 3 must agree exactly on
-    ≥ 1 band), bucket-capped (see SIMHASH_BUCKET_CAP)."""
+    ≥ 1 band), bucket-capped at SIMHASH_BUCKET_CAP (read at call
+    time)."""
     fps = simhash_fingerprints(docs)
     bands = fps.select(
         "doc", "simhash",
@@ -600,41 +604,12 @@ def simhash_pairs(
     bands = materialize(bands, eager=True)
     # Sizing probe: one scalar job over the materialized band table
     # (4 rows/doc). When every (band, chunk) bucket is under the cap —
-    # the common case on natural corpora, and the driver fixtures —
-    # n_sub would be 1 and sub ≡ 0 everywhere, so the split machinery
-    # (sizes broadcast + salted pmod + wider join key) is provably an
-    # identity: skip it and run the plain band join (A/B at sf0.1:
+    # the common case on natural corpora, and the driver fixtures — the
+    # split is provably an identity and is skipped (A/B at sf0.1:
     # 2.6 s vs 3.2 s warm — the cap is free until a bucket engages it).
-    # Results are bit-identical on both branches by construction.
-    max_bucket = (
-        bands.groupBy("band", "chunk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .first()[0]
+    sp, _ = split_hot_buckets(
+        bands, ["band", "chunk"], SIMHASH_BUCKET_CAP, band_salt("shb", "band", "doc")
     )
-    if max_bucket is not None and max_bucket > cap:
-        # bucket sizes: ≤ 4·32768 rows however big the corpus — broadcast
-        sizes = bands.groupBy("band", "chunk").agg(
-            ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap))
-            .cast("long")
-            .alias("n_sub")
-        )
-        sp = bands.join(F.broadcast(sizes), ["band", "chunk"]).withColumn(
-            "sub",
-            F.pmod(
-                md5_60bit(
-                    F.concat_ws(
-                        "|",
-                        F.lit("shb"),
-                        F.col("band").cast("string"),
-                        F.col("doc").cast("string"),
-                    )
-                ),
-                F.col("n_sub"),
-            ),
-        )
-    else:
-        sp = bands.withColumn("sub", F.lit(0).cast("long"))
     a, b = sp.alias("a"), sp.alias("b")
     cands = (
         a.join(
@@ -717,30 +692,34 @@ NEAR_DUP_COS = 0.40  # demo threshold; corpus max pairwise cosine is ~0.51
 
 
 EMB_BUCKET_CAP = 512  # max members per LSH band bucket before salted split
+_BAND_KEYS = ["band_id", "band_hash"]
 
 
-def lsh_band_table(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    n_planes: int = 16,
-    n_bands: int = 4,
-) -> DataFrame:
-    """Materialized (bid, band_id, band_hash) banding of ``corpus`` —
-    the shared first stage of every embedding-LSH consumer. Extracted
-    (r12) so a job needing the table more than once (the pair stage +
-    the star-only coverage metric in leakage_safe_split) projects and
-    checkpoints it exactly once."""
-    from map_reduce_lite_spark.ops.similarity import _hyperplanes, lsh_band_hashes
+def _embedding_dim(corpus: DataFrame) -> int | None:
+    """Embedding width probe (one Spark job — callers that know the
+    width should pass it); None on an empty corpus."""
+    row = corpus.select(F.size("embedding")).first()
+    return None if row is None else row[0]
 
-    if dim is None:
-        dim = corpus.select(F.size(vec_col).alias("d")).first()[0]
-    planes = _hyperplanes(dim, n_planes)
+
+def lsh_band_table(corpus: DataFrame, dim: int) -> DataFrame:
+    """Materialized (vec_id, band_id, band_hash) banding of ``corpus`` —
+    the shared first stage of every embedding-LSH consumer (the
+    near-dup pairs, the k-NN graph, the star-only coverage metric), so
+    a job needing the table more than once projects and checkpoints it
+    exactly once."""
+    from map_reduce_lite_spark.ops.similarity import (
+        LSH_N_BANDS,
+        LSH_PLANES,
+        _hyperplanes,
+        lsh_band_hashes,
+    )
+
+    planes = _hyperplanes(dim, LSH_PLANES)
     return materialize(
         corpus.select(
-            F.col(id_col).alias("bid"),
-            F.posexplode(lsh_band_hashes(vec_col, planes, n_bands)).alias(
+            "vec_id",
+            F.posexplode(lsh_band_hashes("embedding", planes, LSH_N_BANDS)).alias(
                 "band_id", "band_hash"
             ),
         ),
@@ -748,27 +727,8 @@ def lsh_band_table(
     )
 
 
-def _band_self_join(bands: DataFrame, on: list[str]) -> DataFrame:
-    """Triangular self-join of a band table on its bucket key columns →
-    distinct (keep_id, dup_id) candidate ids. IDS ONLY on the shuffle
-    (8-byte keys); vectors join back after the pair dedup."""
-    return (
-        bands.select(F.col("bid").alias("keep_id"), *on)
-        .join(bands.select(F.col("bid").alias("dup_id"), *on), on)
-        .filter(F.col("keep_id") < F.col("dup_id"))
-        .dropDuplicates(["keep_id", "dup_id"])
-        .select("keep_id", "dup_id")
-    )
-
-
 def _refined_candidate_ids(
-    corpus: DataFrame,
-    bands: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    cap: int,
-    n_bands: int,
+    corpus: DataFrame, bands: DataFrame, dim: int, cap: int
 ) -> DataFrame:
     """ADAPTIVE RE-BANDING (r11): candidate ids when some band bucket
     exceeds ``cap``, replacing the salted split for consumers that must
@@ -793,51 +753,43 @@ def _refined_candidate_ids(
     bands; (b) a barely-above-threshold pair inside a still-oversized
     sub-bucket is detected only via the representative."""
     from map_reduce_lite_spark.ops.similarity import (
+        LSH_N_BANDS,
         lsh_band_hashes,
         refine_hyperplanes,
     )
 
-    sizes = bands.groupBy("band_id", "band_hash").agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    sizes = bands.groupBy(*_BAND_KEYS).agg(F.count(F.lit(1)).alias("n"))
     # one row per (band, hash) — at most n_bands × 2^(planes/band); tiny
-    sized = bands.join(F.broadcast(sizes), ["band_id", "band_hash"])
-    small_pairs = _band_self_join(
-        sized.filter(F.col("n") <= cap).select("bid", "band_id", "band_hash"),
-        on=["band_id", "band_hash"],
+    sized = bands.join(F.broadcast(sizes), _BAND_KEYS)
+    small_pairs = band_self_join(
+        sized.filter(F.col("n") <= cap).select("vec_id", *_BAND_KEYS), _BAND_KEYS
     )
     rplanes = refine_hyperplanes(dim)
     rh_tbl = corpus.select(
-        F.col(id_col).alias("bid"),
-        F.posexplode(lsh_band_hashes(vec_col, rplanes, n_bands)).alias(
+        "vec_id",
+        F.posexplode(lsh_band_hashes("embedding", rplanes, LSH_N_BANDS)).alias(
             "band_id", "rh"
         ),
     )
     big = (
         sized.filter(F.col("n") > cap)
-        .select("bid", "band_id", "band_hash")
-        .join(rh_tbl, ["bid", "band_id"])
+        .select("vec_id", *_BAND_KEYS)
+        .join(rh_tbl, ["vec_id", "band_id"])
     )
-    subsizes = big.groupBy("band_id", "band_hash", "rh").agg(
-        F.count(F.lit(1)).alias("m")
-    )
+    sub_keys = [*_BAND_KEYS, "rh"]
+    subsizes = big.groupBy(*sub_keys).agg(F.count(F.lit(1)).alias("m"))
     # sub-bucket count is data-dependent (up to one per member) — shuffle
     # join, not broadcast
-    bigm = big.join(subsizes, ["band_id", "band_hash", "rh"])
-    sub_small_pairs = _band_self_join(
-        bigm.filter(F.col("m") <= cap).select("bid", "band_id", "band_hash", "rh"),
-        on=["band_id", "band_hash", "rh"],
+    bigm = big.join(subsizes, sub_keys)
+    sub_small_pairs = band_self_join(
+        bigm.filter(F.col("m") <= cap).select("vec_id", *sub_keys), sub_keys
     )
-    sub_big = bigm.filter(F.col("m") > cap).select(
-        "bid", "band_id", "band_hash", "rh"
-    )
-    reps = sub_big.groupBy("band_id", "band_hash", "rh").agg(
-        F.min("bid").alias("rep")
-    )
+    sub_big = bigm.filter(F.col("m") > cap).select("vec_id", *sub_keys)
+    reps = sub_big.groupBy(*sub_keys).agg(F.min("vec_id").alias("rep"))
     star = (
-        sub_big.join(reps, ["band_id", "band_hash", "rh"])
-        .filter(F.col("bid") != F.col("rep"))
-        .select(F.col("rep").alias("keep_id"), F.col("bid").alias("dup_id"))
+        sub_big.join(reps, sub_keys)
+        .filter(F.col("vec_id") != F.col("rep"))
+        .select(F.col("rep").alias("keep_id"), F.col("vec_id").alias("dup_id"))
     )
     # branch 4 (r11): BUCKET-WIDE anchor star — every member of an
     # oversized bucket also pairs with the bucket's min-id member,
@@ -852,15 +804,15 @@ def _refined_candidate_ids(
     # per oversized bucket — broadcastable by construction.
     anchors = (
         sized.filter(F.col("n") > cap)
-        .groupBy("band_id", "band_hash")
-        .agg(F.min("bid").alias("rep"))
+        .groupBy(*_BAND_KEYS)
+        .agg(F.min("vec_id").alias("rep"))
     )
     anchor_star = (
         sized.filter(F.col("n") > cap)
-        .select("bid", "band_id", "band_hash")
-        .join(F.broadcast(anchors), ["band_id", "band_hash"])
-        .filter(F.col("bid") != F.col("rep"))
-        .select(F.col("rep").alias("keep_id"), F.col("bid").alias("dup_id"))
+        .select("vec_id", *_BAND_KEYS)
+        .join(F.broadcast(anchors), _BAND_KEYS)
+        .filter(F.col("vec_id") != F.col("rep"))
+        .select(F.col("rep").alias("keep_id"), F.col("vec_id").alias("dup_id"))
     )
     return (
         small_pairs.unionByName(sub_small_pairs)
@@ -872,19 +824,14 @@ def _refined_candidate_ids(
 
 def refine_star_only_ids(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    n_bands: int = 4,
     dim: int | None = None,
-    cap: int = EMB_BUCKET_CAP,
     bands: DataFrame | None = None,
 ) -> DataFrame:
     """IDs whose candidate coverage under adaptive re-banding is
     STAR-ONLY in every band — i.e. members for whom no band gave an
     exhaustive all-pairs stage (their bucket was oversized in all
-    ``n_bands`` bands AND their refine sub-bucket was still oversized
-    in each), so they are reachable in the detected graph only through
+    bands AND their refine sub-bucket was still oversized in each), so
+    they are reachable in the detected graph only through
     representative/anchor edges (branches 3-4 of
     ``_refined_candidate_ids``).
 
@@ -895,93 +842,77 @@ def refine_star_only_ids(
     only a still-oversized sub-bucket is found only via its
     representative). This function makes the regime observable:
     ``leakage_safe_split`` counts these members per split
-    (``n_approx_members``), zero whenever every bucket fit under the
-    cap — so downstream consumers see exactly when, and for how many
-    vectors, the guarantee weakened from exhaustive to
-    star-approximated.
+    (``n_approx_members``), zero whenever every bucket fit under
+    EMB_BUCKET_CAP (read at call time) — so downstream consumers see
+    exactly when, and for how many vectors, the guarantee weakened from
+    exhaustive to star-approximated.
 
     Cost: one band projection + two count aggregations on 8-byte keys;
-    a sizing probe returns an empty frame without touching the
-    refinement planes when no bucket is oversized (the driver-fixture
-    case — where the metric is provably zero). Callers that already
-    materialized the (bid, band_id, band_hash) table — the pair stage
-    builds an identical one — pass it via ``bands`` so the projection
-    and its checkpoint run ONCE per job, not once per consumer
-    (leakage_safe_split does)."""
+    the sizing probe (pairs.bucket_over_cap) returns an empty frame
+    without touching the refinement planes when no bucket is oversized
+    (the driver-fixture case — where the metric is provably zero), and
+    so does an empty corpus. Callers that already materialized the
+    ``lsh_band_table`` — the pair stage builds an identical one — pass
+    it via ``bands`` so the projection and its checkpoint run ONCE per
+    job, not once per consumer (leakage_safe_split does)."""
     from map_reduce_lite_spark.ops.similarity import (
+        LSH_N_BANDS,
         lsh_band_hashes,
         refine_hyperplanes,
     )
 
-    spark = corpus.sparkSession
-    empty = spark.createDataFrame([], f"{id_col} long")
+    cap = EMB_BUCKET_CAP
+    empty = corpus.sparkSession.createDataFrame([], "vec_id long")
     if dim is None:
-        dim = corpus.select(F.size(vec_col).alias("d")).first()[0]
+        dim = _embedding_dim(corpus)
         if dim is None:
             return empty
     if bands is None:
         # materialized once: reused by the probe and both joins below
-        bands = lsh_band_table(corpus, id_col, vec_col, dim, n_planes, n_bands)
-    sizes = bands.groupBy("band_id", "band_hash").agg(F.count(F.lit(1)).alias("n"))
-    max_bucket = sizes.agg(F.max("n")).first()[0]
-    if max_bucket is None or max_bucket <= cap:
+        bands = lsh_band_table(corpus, dim)
+    if not bucket_over_cap(bands, _BAND_KEYS, cap):
         return empty
-    sized = bands.join(F.broadcast(sizes), ["band_id", "band_hash"])
-    big = sized.filter(F.col("n") > cap).select("bid", "band_id", "band_hash")
+    sizes = bands.groupBy(*_BAND_KEYS).agg(F.count(F.lit(1)).alias("n"))
+    sized = bands.join(F.broadcast(sizes), _BAND_KEYS)
+    big = sized.filter(F.col("n") > cap).select("vec_id", *_BAND_KEYS)
     rplanes = refine_hyperplanes(dim)
-    rh_tbl = (
-        corpus.join(big.select("bid").distinct(), F.col(id_col) == F.col("bid"))
-        .select(
-            F.col(id_col).alias("bid"),
-            F.posexplode(lsh_band_hashes(vec_col, rplanes, n_bands)).alias(
-                "band_id", "rh"
-            ),
-        )
+    rh_tbl = corpus.join(big.select("vec_id").distinct(), "vec_id").select(
+        "vec_id",
+        F.posexplode(lsh_band_hashes("embedding", rplanes, LSH_N_BANDS)).alias(
+            "band_id", "rh"
+        ),
     )
-    bigr = big.join(rh_tbl, ["bid", "band_id"])
-    subsizes = bigr.groupBy("band_id", "band_hash", "rh").agg(
-        F.count(F.lit(1)).alias("m")
-    )
+    bigr = big.join(rh_tbl, ["vec_id", "band_id"])
+    subsizes = bigr.groupBy(*_BAND_KEYS, "rh").agg(F.count(F.lit(1)).alias("m"))
     # a band gives a member EXACT coverage iff its bucket fit under the
     # cap, or its refine sub-bucket did
     exact = (
         sized.filter(F.col("n") <= cap)
-        .select("bid")
+        .select("vec_id")
         .unionByName(
-            bigr.join(subsizes, ["band_id", "band_hash", "rh"])
+            bigr.join(subsizes, [*_BAND_KEYS, "rh"])
             .filter(F.col("m") <= cap)
-            .select("bid")
+            .select("vec_id")
         )
         .distinct()
     )
-    return (
-        corpus.select(F.col(id_col).alias("bid"))
-        .join(exact, "bid", "left_anti")
-        .select(F.col("bid").alias(id_col))
-    )
+    return corpus.select("vec_id").join(exact, "vec_id", "left_anti")
 
 
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = NEAR_DUP_COS,
     method: str = "exact",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    n_bands: int = 4,
     dim: int | None = None,
-    cap: int = EMB_BUCKET_CAP,
     bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine ≥ ``threshold``.
+    """Near-duplicate (keep_id, dup_id, sim_e9) pairs of a
+    (vec_id, embedding) corpus by cosine ≥ ``threshold``.
 
-    ``bands`` (r12): a pre-materialized (bid, band_id, band_hash)
-    table, letting a caller that needs the band table for more than
-    the pair stage (leakage_safe_split also feeds it to
-    refine_star_only_ids) project + checkpoint it exactly once.
-    Callers passing it are responsible for it being the SAME banding
-    (mrl band hashes over ``vec_col``) — build it with
-    ``lsh_band_table``.
+    ``bands`` (r12): a pre-materialized ``lsh_band_table``, letting a
+    caller that needs the band table for more than the pair stage
+    (leakage_safe_split also feeds it to refine_star_only_ids) project
+    + checkpoint it exactly once.
 
     ``method="exact"`` scores the full triangular self-join — the oracle
     path, quadratic in corpus size, fine for verification corpora.
@@ -991,18 +922,17 @@ def embedding_near_dup_pairs(
     hash, pair work is quadratic only within a bucket, and recall vs
     exact is property-tested (tests/test_dedup.py).
 
-    Hot-bucket cap (r9, the simhash_pairs mechanism): on an unclustered
-    corpus, band collisions are a constant fraction of n² — measured
-    66 s at 20k random unit vectors with the pair scoring dominating
-    the whole components family. When any (band_id, band_hash) bucket
-    exceeds ``cap``, oversized buckets are salted-split into
-    ceil(size/cap) sub-buckets and pairs form only within a sub-bucket,
-    bounding per-bucket work at cap² regardless of collision density;
-    a sizing probe skips the machinery entirely when no bucket is
-    oversized (the driver fixtures), where the plain join is provably
-    identical. The SQL twins replay sizes+salt unconditionally
-    (n_sub=1 → sub ≡ 0 identity), so both branches hash-match them;
-    cap-ENGAGED parity is pinned in tests/test_capcorpus.py.
+    Hot-bucket cap (r9): on an unclustered corpus, band collisions are
+    a constant fraction of n² — measured 66 s at 20k random unit
+    vectors with the pair scoring dominating the whole components
+    family. Buckets over EMB_BUCKET_CAP (read at call time) are
+    salted-split by pairs.split_hot_buckets, bounding per-bucket work
+    at cap² regardless of collision density; its probe skips the split
+    entirely when no bucket is oversized (the driver fixtures), where
+    the plain join is provably identical. The SQL twins replay
+    sizes+salt unconditionally (n_sub=1 → sub ≡ 0 identity), so both
+    branches hash-match them; cap-ENGAGED parity is pinned in
+    tests/test_capcorpus.py.
 
     ``method="lsh_refine"`` (r11): same banding, but oversized buckets
     are ADAPTIVELY RE-BANDED instead of salted (see
@@ -1012,33 +942,27 @@ def embedding_near_dup_pairs(
     intra-sub-bucket pair dropped; when no bucket is oversized all
     three lsh variants are the identical plain band join."""
     from map_reduce_lite_spark.ops.similarity import (
-        _dot,
-        _hyperplanes,
-        _norm,
-        lsh_band_hashes,
+        _pair_cos,
+        _spread,
+        _vectors,
+        cosine_verify,
     )
-
-    # norms once per vector; sim = dot/(a_norm*b_norm) matches the
-    # oracle's sqrt(a·a)*sqrt(b·b) operand order → bit-identical
-    a = corpus.select(
-        F.col(id_col).alias("keep_id"),
-        F.col(vec_col).alias("a_vec"),
-        _norm(F.col(vec_col)).alias("a_norm"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("dup_id"),
-        F.col(vec_col).alias("b_vec"),
-        _norm(F.col(vec_col)).alias("b_norm"),
-    )
-    from map_reduce_lite_spark.ops.similarity import _spread
 
     if method == "exact":
         # BNLJ parallelism follows the streamed (left) side's partitions;
         # one parquet split would mean one core for the whole O(n²) scan
-        pairs = _spread(a, "keep_id").join(b, F.col("keep_id") < F.col("dup_id"))
+        scored = (
+            _spread(_vectors(corpus, "keep_id", "a"), "keep_id")
+            .join(_vectors(corpus, "dup_id", "b"), F.col("keep_id") < F.col("dup_id"))
+            .select("keep_id", "dup_id", _pair_cos().alias("sim"))
+        )
     elif method in ("lsh", "lsh_refine"):
         if dim is None:  # probing costs a Spark job — callers should pass it
-            dim = corpus.select(F.size(vec_col).alias("d")).first()[0]
+            dim = _embedding_dim(corpus)
+            if dim is None:
+                return corpus.sparkSession.createDataFrame(
+                    [], "keep_id long, dup_id long, sim_e9 long"
+                )
         if bands is None:
             # band join + pair dedup on IDS ONLY (8-byte shuffle keys),
             # then join the vectors back for scoring — shuffling 64-float
@@ -1047,52 +971,20 @@ def embedding_near_dup_pairs(
             # once, not once per self-join side (ids + band hashes only —
             # tiny); the materialized table also feeds the cap's sizing
             # probe
-            bands = lsh_band_table(corpus, id_col, vec_col, dim, n_planes, n_bands)
-        max_bucket = (
-            bands.groupBy("band_id", "band_hash")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n"))
-            .first()[0]
+            bands = lsh_band_table(corpus, dim)
+        cap = EMB_BUCKET_CAP
+        sp, hot = split_hot_buckets(
+            bands, _BAND_KEYS, cap, band_salt("emb", "band_id", "vec_id")
         )
-        if max_bucket is not None and max_bucket > cap and method == "lsh_refine":
-            ids = _refined_candidate_ids(
-                corpus, bands, id_col, vec_col, dim, cap, n_bands
-            )
-        elif max_bucket is not None and max_bucket > cap:
-            sizes = bands.groupBy("band_id", "band_hash").agg(
-                ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap))
-                .cast("long")
-                .alias("n_sub")
-            )
-            salted = bands.join(
-                F.broadcast(sizes), ["band_id", "band_hash"]
-            ).withColumn(
-                "sub",
-                F.pmod(
-                    md5_60bit(
-                        F.concat_ws(
-                            "|",
-                            F.lit("emb"),
-                            F.col("band_id").cast("string"),
-                            F.col("bid").cast("string"),
-                        )
-                    ),
-                    F.col("n_sub"),
-                ),
-            )
-            ids = _band_self_join(salted, on=["band_id", "band_hash", "sub"])
+        if hot and method == "lsh_refine":
+            ids = _refined_candidate_ids(corpus, bands, dim, cap)
         else:
-            ids = _band_self_join(bands, on=["band_id", "band_hash"])
-        pairs = _spread(ids, "keep_id").join(a, "keep_id").join(b, "dup_id")
+            ids = band_self_join(sp, [*_BAND_KEYS, "sub"])
+        scored = cosine_verify(ids, corpus, "keep_id", "dup_id")
     else:
         raise ValueError(f"unknown method {method!r}")
-    sim = _dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_norm") * F.col("b_norm"))
-    return (
-        pairs.select("keep_id", "dup_id", sim.alias("sim"))
-        .filter(F.col("sim") >= F.lit(threshold))
-        .select(
-            "keep_id", "dup_id", F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9")
-        )
+    return scored.filter(F.col("sim") >= F.lit(threshold)).select(
+        "keep_id", "dup_id", F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9")
     )
 
 
@@ -1100,10 +992,7 @@ def build_near_dup_pairs(
     corpus: DataFrame,
     path: str,
     threshold: float = NEAR_DUP_COS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
-    cap: int = EMB_BUCKET_CAP,
     method: str = "lsh",
 ) -> DataFrame:
     """STAGE the LSH-verified near-dup pair set as a parquet artifact
@@ -1126,13 +1015,7 @@ def build_near_dup_pairs(
     since a salt's dropped pairs would become silent cross-split
     leakage in every downstream consumer of the artifact)."""
     embedding_near_dup_pairs(
-        corpus,
-        threshold=threshold,
-        method=method,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        cap=cap,
+        corpus, threshold=threshold, method=method, dim=dim
     ).write.mode("overwrite").parquet(path)
     return corpus.sparkSession.read.parquet(path)
 

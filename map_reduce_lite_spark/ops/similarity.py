@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
+from map_reduce_lite_spark.ops.pairs import band_salt, band_self_join, split_hot_buckets
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -73,6 +74,36 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _vectors(emb: DataFrame, id_name: str, tag: str) -> DataFrame:
+    """(``id_name``, ``{tag}_vec``, ``{tag}_norm``): one side of a pair
+    verify, with the norm computed once per vector, not once per pair."""
+    return emb.select(
+        F.col("vec_id").alias(id_name),
+        F.col("embedding").alias(f"{tag}_vec"),
+        _norm(F.col("embedding")).alias(f"{tag}_norm"),
+    )
+
+
+def _pair_cos() -> Column:
+    """Cosine of two ``_vectors`` sides: dot/(a_norm*b_norm) matches the
+    oracle's sqrt(a·a)*sqrt(b·b) operand order → bit-identical."""
+    return _dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_norm") * F.col("b_norm"))
+
+
+def cosine_verify(cand: DataFrame, emb: DataFrame, left: str, right: str) -> DataFrame:
+    """The verify stage of every bucketed pair generator: ``cand``'s
+    columns plus the exact cosine ``sim`` of its (``left``, ``right``)
+    id pair. Candidates are id-only rows, so they are spread to full
+    width first (see ``_spread``), then each side's vector and norm
+    attach by an id equi-join and the cosine runs map-side."""
+    return (
+        _spread(cand, left)
+        .join(_vectors(emb, left, "a"), left)
+        .join(_vectors(emb, right, "b"), right)
+        .select(*cand.columns, _pair_cos().alias("sim"))
+    )
 
 
 def brute_force_topk(
@@ -341,12 +372,6 @@ def lsh_band_hashes(vec: str, planes: list[list[float]], n_bands: int) -> Column
     return F.expr("array(" + ", ".join(bands) + ")")
 
 
-# retained single-signature helper (ingest-time partitioning key)
-def lsh_signature(vec: str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature of ``vec`` against fixed hyperplanes, as an int."""
-    return lsh_band_hashes(vec, planes, 1)[0]
-
-
 def ann_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -448,11 +473,7 @@ KNN_GRAPH_K = 5  # neighbors kept per node in the corpus k-NN graph
 KNN_BUCKET_CAP = 512  # max members per LSH band bucket before salted split
 
 
-def knn_topk_edges(
-    emb: DataFrame,
-    k: int = KNN_GRAPH_K,
-    cap: int = KNN_BUCKET_CAP,
-) -> DataFrame:
+def knn_topk_edges(emb: DataFrame, k: int = KNN_GRAPH_K) -> DataFrame:
     """The corpus k-NN edge list (src_id, dst_id, rank, sim_e9): every
     vector's top-``k`` cosine neighbors among its LSH band collisions —
     the ONE artifact the whole k-NN graph family is built from.
@@ -465,12 +486,12 @@ def knn_topk_edges(
     per-node top-K is a rank window over candidate-bounded input. At
     100 TB the band table is written bucket-partitioned at ingest and
     the self-join becomes bucket-local (no corpus shuffle); hot buckets
-    are bounded by the same cap strategy as the simhash band dedup
-    (tests/test_capcorpus.py precedent). Each colliding pair is scored
+    are bounded by KNN_BUCKET_CAP with the salted split of ops/pairs.py
+    (tests/test_capcorpus.py). Each colliding pair is scored
     once id-ordered and emitted in both directions (r12), so every
     node gets its own neighbor list (unlike the dedup pair set, which
     keeps only the id-ordered rows)."""
-    scored = _knn_scored_edges(emb, cap=cap)
+    scored = _knn_scored_edges(emb)
     w = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("dst_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -484,12 +505,7 @@ def knn_topk_edges(
     )
 
 
-def build_knn_edges(
-    emb: DataFrame,
-    path: str,
-    k: int = KNN_GRAPH_K,
-    cap: int = KNN_BUCKET_CAP,
-) -> DataFrame:
+def build_knn_edges(emb: DataFrame, path: str, k: int = KNN_GRAPH_K) -> DataFrame:
     """STAGE the k-NN edge list once as a parquet artifact and return
     its scan — the production shape for the k-NN family (r10): the
     capped band join + cosine scoring is by far the family's dominant
@@ -505,7 +521,7 @@ def build_knn_edges(
     the edge list inline — required by the driver contract's
     independent (spark, sf_dir) calls); parity between the staged and
     inline forms is pinned by test_knn_staged_edges_parity."""
-    knn_topk_edges(emb, k=k, cap=cap).write.mode("overwrite").parquet(path)
+    knn_topk_edges(emb, k=k).write.mode("overwrite").parquet(path)
     return emb.sparkSession.read.parquet(path)
 
 
@@ -516,68 +532,29 @@ def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_topk_edges(load_table(spark, sf_dir, "embeddings"))
 
 
-def _knn_scored_edges(
-    emb: DataFrame,
-    cap: int = KNN_BUCKET_CAP,
-) -> DataFrame:
+def _knn_scored_edges(emb: DataFrame) -> DataFrame:
     """(src_id, dst_id, sim) for every directed LSH band collision —
     the shared candidate-scoring stage of the k-NN graph family.
 
-    The band table is materialized once and reused by the sizing probe
-    and both self-join sides.
+    The band table (dedup.lsh_band_table) is materialized once and
+    reused by the sizing probe and both self-join sides. Buckets over
+    KNN_BUCKET_CAP (read at call time) are salted-split
+    (pairs.split_hot_buckets), bounding the self-join's per-bucket work
+    at cap² however adversarial the corpus's collision density
+    (random/unclustered vectors collide at a constant fraction of n²
+    per band; real corpora cluster, but the bound must not depend on
+    that). Each node still sees ~cap co-bucketed candidates per band —
+    far more than the K=5 it keeps. The SQL oracle replays sizes+salt
+    unconditionally (n_sub=1 → sub=0 is an identity), so the
+    probe-skipped plain join hash-matches it too."""
+    from map_reduce_lite_spark.ops.dedup import _BAND_KEYS, lsh_band_table
 
-    Hot-bucket cap (the simhash_pairs mechanism, ops/dedup.py): when
-    any (band_id, band_hash) bucket exceeds ``cap`` members, every
-    oversized bucket is salted-split into ceil(size/cap) sub-buckets
-    and pairs form only within a sub-bucket — bounding the self-join's
-    per-bucket work at cap² however adversarial the corpus's collision
-    density (random/unclustered vectors collide at a constant fraction
-    of n² per band; real corpora cluster, but the bound must not
-    depend on that). Each node still sees ~cap co-bucketed candidates
-    per band — far more than the K=5 it keeps. A sizing probe skips
-    the split machinery entirely when no bucket is oversized (the
-    driver fixtures), where the plain join is provably identical; the
-    SQL oracle replays sizes+salt unconditionally (n_sub=1 → sub=0 is
-    an identity), so both branches hash-match it."""
-    planes = _hyperplanes(EMB_DIM, LSH_PLANES)
-    bands = materialize(
-        emb.select(
-            "vec_id",
-            F.posexplode(lsh_band_hashes("embedding", planes, LSH_N_BANDS)).alias(
-                "band_id", "band_hash"
-            ),
-        ),
-        eager=True,
-    )  # probe + both self-join sides reuse it
-    max_bucket = (
-        bands.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n"))
-        .first()[0]
+    sp, _ = split_hot_buckets(
+        lsh_band_table(emb, EMB_DIM),
+        _BAND_KEYS,
+        KNN_BUCKET_CAP,
+        band_salt("knb", "band_id", "vec_id"),
     )
-    if max_bucket is not None and max_bucket > cap:
-        # bucket sizes: ≤ n_bands·2^bits rows however big the corpus
-        sizes = bands.groupBy("band_id", "band_hash").agg(
-            ((F.count(F.lit(1)) + F.lit(cap - 1)) / F.lit(cap))
-            .cast("long")
-            .alias("n_sub")
-        )
-        sp = bands.join(F.broadcast(sizes), ["band_id", "band_hash"]).withColumn(
-            "sub",
-            F.pmod(
-                md5_60bit(
-                    F.concat_ws(
-                        "|",
-                        F.lit("knb"),
-                        F.col("band_id").cast("string"),
-                        F.col("vec_id").cast("string"),
-                    )
-                ),
-                F.col("n_sub"),
-            ),
-        )
-    else:
-        sp = bands.withColumn("sub", F.lit(0).cast("long"))
     # r12 (guide §2.3): generate ID-ORDERED pairs (vec_id <), score each
     # undirected pair ONCE, then emit both directions by exploding a
     # 2-struct array — half the rows through the dedup shuffle and half
@@ -586,49 +563,19 @@ def _knn_scored_edges(
     # commutative, the fold order over i is unchanged, and so is
     # a_norm·b_norm), so every directed row carries exactly the value
     # the old plan computed for it.
-    cand = _spread(
-        sp.alias("a")
-        .join(sp.alias("b"), ["band_id", "band_hash", "sub"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("src_id"), F.col("b.vec_id").alias("dst_id")
-        )
-        .dropDuplicates(["src_id", "dst_id"]),
-        "src_id",
-    )
-    vecs_a = emb.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("embedding").alias("a_vec"),
-        _norm(F.col("embedding")).alias("a_norm"),
-    )
-    vecs_b = emb.select(
-        F.col("vec_id").alias("dst_id"),
-        F.col("embedding").alias("b_vec"),
-        _norm(F.col("embedding")).alias("b_norm"),
-    )
-    half = (
-        cand.join(vecs_a, "src_id")
-        .join(vecs_b, "dst_id")
-        .select(
-            "src_id",
-            "dst_id",
-            (
-                _dot(F.col("a_vec"), F.col("b_vec"))
-                / (F.col("a_norm") * F.col("b_norm"))
-            ).alias("sim"),
-        )
-    )
+    cand = band_self_join(sp, [*_BAND_KEYS, "sub"])
+    half = cosine_verify(cand, emb, "keep_id", "dup_id")
     return half.select(
         F.explode(
             F.array(
                 F.struct(
-                    F.col("src_id").alias("src_id"),
-                    F.col("dst_id").alias("dst_id"),
+                    F.col("keep_id").alias("src_id"),
+                    F.col("dup_id").alias("dst_id"),
                     F.col("sim").alias("sim"),
                 ),
                 F.struct(
-                    F.col("dst_id").alias("src_id"),
-                    F.col("src_id").alias("dst_id"),
+                    F.col("dup_id").alias("src_id"),
+                    F.col("keep_id").alias("dst_id"),
                     F.col("sim").alias("sim"),
                 ),
             )
@@ -639,29 +586,7 @@ def _knn_scored_edges(
 def _rescored_topk(emb: DataFrame, cand: DataFrame, k: int) -> DataFrame:
     """Exact-cosine rescore of an id-only candidate edge list, keeping
     each node's top-``k`` — the shared tail of the k-NN graph family."""
-    vecs_a = emb.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("embedding").alias("a_vec"),
-        _norm(F.col("embedding")).alias("a_norm"),
-    )
-    vecs_b = emb.select(
-        F.col("vec_id").alias("dst_id"),
-        F.col("embedding").alias("b_vec"),
-        _norm(F.col("embedding")).alias("b_norm"),
-    )
-    scored = (
-        _spread(cand, "src_id")
-        .join(vecs_a, "src_id")
-        .join(vecs_b, "dst_id")
-        .select(
-            "src_id",
-            "dst_id",
-            (
-                _dot(F.col("a_vec"), F.col("b_vec"))
-                / (F.col("a_norm") * F.col("b_norm"))
-            ).alias("sim"),
-        )
-    )
+    scored = cosine_verify(cand, emb, "src_id", "dst_id")
     w = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("dst_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1028,9 +953,6 @@ FROM (SELECT query_id, neighbor_id, sim,
       FROM scored)
 WHERE rank <= {TOP_K}
 """
-
-
-# (assigned below, after the band-hash SQL helpers are defined)
 
 
 # --------------------------------------------------------------------------

@@ -170,10 +170,11 @@ def test_simhash_default_cap_engaged_digest_parity(spark, simcap_dir):
     assert 0 < srow["n"] < all_pairs
 
 
-def test_simhash_default_cap_engagement_is_semantic(spark, simcap_dir):
+def test_simhash_default_cap_engagement_is_semantic(spark, simcap_dir, monkeypatch):
     """Bucket probe + uncapped comparison: the hot bucket exceeds the
     default cap, and disabling the cap returns the full quadratic pair
     set — so the digest test above ran with the split live."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import (
         simhash_fingerprints,
         simhash_pairs,
@@ -182,7 +183,8 @@ def test_simhash_default_cap_engagement_is_semantic(spark, simcap_dir):
     docs = spark.read.parquet(f"{simcap_dir}/documents.parquet")
     n_fps = simhash_fingerprints(docs).select("simhash").distinct().count()
     assert n_fps == 1  # one fingerprint -> one bucket per band, size 4,100
-    uncapped = simhash_pairs(docs, cap=1 << 30).count()
+    monkeypatch.setattr(dedup, "SIMHASH_BUCKET_CAP", 1 << 30)
+    uncapped = simhash_pairs(docs).count()
     assert uncapped == _SIMHASH_N * (_SIMHASH_N - 1) // 2
 
 
@@ -248,10 +250,11 @@ def test_semdedup_default_cap_engaged_value_parity(spark, semcap_dir):
     assert len(spark_rows) > 0
 
 
-def test_semdedup_default_cap_engagement_is_semantic(spark, semcap_dir):
+def test_semdedup_default_cap_engagement_is_semantic(spark, semcap_dir, monkeypatch):
     """The mega-cluster exceeds the default cap, and the uncapped pair
     set is strictly larger — the parity sweep above ran with the hash
     sub-split live."""
+    from map_reduce_lite_spark.ops import clustering
     from map_reduce_lite_spark.ops.clustering import (
         _semdedup_pairs,
         kmeans_assignments,
@@ -271,7 +274,8 @@ def test_semdedup_default_cap_engagement_is_semantic(spark, semcap_dir):
 
     emb = load_table(spark, str(semcap_dir), "embeddings")
     capped = _semdedup_pairs(emb, assign).count()
-    uncapped = _semdedup_pairs(emb, assign, cap=1 << 30).count()
+    monkeypatch.setattr(clustering, "SEMDEDUP_CLUSTER_CAP", 1 << 30)
+    uncapped = _semdedup_pairs(emb, assign).count()
     assert 0 < capped < uncapped
 
 
@@ -328,10 +332,11 @@ def test_knn_default_cap_engaged_value_parity(spark, knncap_dir):
         ), name
 
 
-def test_knn_default_cap_engagement_is_semantic(spark, knncap_dir):
+def test_knn_default_cap_engagement_is_semantic(spark, knncap_dir, monkeypatch):
     """Every band bucket holds all 520 vectors (> the 512 default), and
     the uncapped candidate set is strictly larger than the capped one —
     the parity sweep above ran with the split live."""
+    from map_reduce_lite_spark.ops import similarity
     from map_reduce_lite_spark.ops.similarity import (
         KNN_BUCKET_CAP,
         _knn_scored_edges,
@@ -340,7 +345,8 @@ def test_knn_default_cap_engagement_is_semantic(spark, knncap_dir):
 
     emb = load_table(spark, str(knncap_dir), "embeddings")
     capped = _knn_scored_edges(emb).count()
-    uncapped = _knn_scored_edges(emb, cap=1 << 30).count()
+    monkeypatch.setattr(similarity, "KNN_BUCKET_CAP", 1 << 30)
+    uncapped = _knn_scored_edges(emb).count()
     assert _KNN_N > KNN_BUCKET_CAP
     assert uncapped == _KNN_N * (_KNN_N - 1)  # one bucket per band, all collide
     assert 0 < capped < uncapped
@@ -364,10 +370,13 @@ def test_embedding_band_default_cap_engaged_value_parity(spark, knncap_dir):
         assert _multiset(spark_rows, cols) == _multiset(duck_rows, cols), name
 
 
-def test_embedding_band_default_cap_engagement_is_semantic(spark, knncap_dir):
+def test_embedding_band_default_cap_engagement_is_semantic(
+    spark, knncap_dir, monkeypatch
+):
     """All 520 vectors share every band bucket (> the 512 default), and
     the uncapped pair set is strictly larger — the parity above ran
     with the split live."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import (
         EMB_BUCKET_CAP,
         embedding_near_dup_pairs,
@@ -377,9 +386,8 @@ def test_embedding_band_default_cap_engagement_is_semantic(spark, knncap_dir):
 
     emb = load_table(spark, str(knncap_dir), "embeddings")
     capped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
-    uncapped = embedding_near_dup_pairs(
-        emb, method="lsh", dim=EMB_DIM, cap=1 << 30
-    ).count()
+    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 1 << 30)
+    uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
     assert _KNN_N > EMB_BUCKET_CAP
     # every pair clears the cosine threshold here (all vectors ~parallel)
     assert uncapped == _KNN_N * (_KNN_N - 1) // 2
@@ -401,7 +409,7 @@ def _component_partition(pairs_df):
 
 
 @pytest.mark.slow
-def test_leakage_split_adaptive_rebanding_on_hot_bucket(spark, knncap_dir):
+def test_leakage_split_adaptive_rebanding_on_hot_bucket(spark, knncap_dir, monkeypatch):
     """r11: leakage_safe_split's pair stage uses ADAPTIVE RE-BANDING —
     on the 520-vector single-bucket corpus (where the SALTED cap
     provably drops pairs, see the engagement test above) the refined
@@ -409,22 +417,21 @@ def test_leakage_split_adaptive_rebanding_on_hot_bucket(spark, knncap_dir):
     component structure identical to the uncapped form, so the whole
     corpus still routes as ONE cluster with zero crossings; the
     registered oracle agrees on the exact values."""
-    from map_reduce_lite_spark.ops.curation import LEAKAGE_SPLIT_CAP
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
     from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, str(knncap_dir), "embeddings")
-    refined = embedding_near_dup_pairs(
-        emb, method="lsh_refine", dim=EMB_DIM, cap=LEAKAGE_SPLIT_CAP
-    )
+    # leakage_safe_split's pair stage: lsh_refine at the default cap
+    refined = embedding_near_dup_pairs(emb, method="lsh_refine", dim=EMB_DIM)
     n_refined = refined.count()
     # engaged AND bounded: fewer candidates than the uncapped clique...
     assert 0 < n_refined < _KNN_N * (_KNN_N - 1) // 2
     # ...with the same component structure (routing-level zero loss)
-    uncapped = embedding_near_dup_pairs(
-        emb, method="lsh", dim=EMB_DIM, cap=1 << 62
-    )
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
+        uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
     assert _component_partition(refined) == _component_partition(uncapped)
 
     sdf, oracle = _run_registered(spark, knncap_dir, "curation_leakage_safe_split")
@@ -478,13 +485,16 @@ def megabucket_dir(tmp_path_factory):
 
 
 @pytest.mark.slow
-def test_leakage_split_megabucket_bounded_and_zero_dropped(spark, megabucket_dir):
+def test_leakage_split_megabucket_bounded_and_zero_dropped(
+    spark, megabucket_dir, monkeypatch
+):
     """The r10 verdict's scale-killer: a near-constant mega-bucket.
     Adaptive re-banding must (a) bound the candidate count — linear
     star, not size² — and (b) drop ZERO detections at the routing
     level: every pair the uncapped form detects is intra-component
     (hence intra-split) under the adaptive form. The registered query
     value-matches its oracle with the star branch live."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
     from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
@@ -494,7 +504,9 @@ def test_leakage_split_megabucket_bounded_and_zero_dropped(spark, megabucket_dir
     n_refined = refined.count()
     # (a) bounded: the star emits size-1 pairs, not size²
     assert n_refined == _MEGA_N - 1
-    uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM, cap=1 << 62)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
+        uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
     assert uncapped.count() == _MEGA_N * (_MEGA_N - 1) // 2
     # (b) zero dropped detections: identical component structure
     assert _component_partition(refined) == _component_partition(uncapped)
@@ -560,11 +572,14 @@ def megamix_dir(tmp_path_factory):
 
 
 @pytest.mark.slow
-def test_leakage_split_megamix_all_branches_zero_dropped(spark, megamix_dir):
+def test_leakage_split_megamix_all_branches_zero_dropped(
+    spark, megamix_dir, monkeypatch
+):
     """All three adaptive branches live in one corpus: the component
     partition still equals BOTH the uncapped-LSH form's and the exact
     quadratic ground truth's, and the registered query value-matches
     its oracle with every detected cluster routed whole."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
     from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
@@ -585,7 +600,9 @@ def test_leakage_split_megamix_all_branches_zero_dropped(spark, megamix_dir):
         }
     )
     assert _component_partition(refined) == want
-    uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM, cap=1 << 62)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
+        uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
     assert _component_partition(uncapped) == want
     exact = embedding_near_dup_pairs(emb, method="exact")
     assert _component_partition(exact) == want

@@ -92,7 +92,7 @@ def test_semdedup_recall_vs_exact(spark):
     assert n_hit / n_exact >= 0.5, f"recall {n_hit}/{n_exact}"
 
 
-def test_cluster_cap_bounds_pairs_and_matches_oracle(spark, duck):
+def test_cluster_cap_bounds_pairs_and_matches_oracle(spark, duck, monkeypatch):
     """SEMDEDUP_CLUSTER_CAP sub-splitting, forced active with a tiny cap:
 
     1. boundedness — every candidate block is a strict subset of its
@@ -101,6 +101,7 @@ def test_cluster_cap_bounds_pairs_and_matches_oracle(spark, duck):
     3. the DuckDB oracle replays the identical split (exact value
        parity at the forced cap, not just at the default where the
        split is the identity)."""
+    from map_reduce_lite_spark.ops import clustering
     from map_reduce_lite_spark.ops.clustering import (
         _semdedup_pairs,
         _semdedup_sql,
@@ -110,8 +111,10 @@ def test_cluster_cap_bounds_pairs_and_matches_oracle(spark, duck):
     cap = 64  # << every cluster size at sf0.001 → split is active
     emb = load_table(spark, SF_SMALL, "embeddings")
     assign = kmeans_assignments(spark, SF_SMALL).select("vec_id", "cluster")
-    capped = _semdedup_pairs(emb, assign, cap=cap)
-    uncapped = _semdedup_pairs(emb, assign, cap=1 << 30)
+    monkeypatch.setattr(clustering, "SEMDEDUP_CLUSTER_CAP", cap)
+    capped = _semdedup_pairs(emb, assign)
+    monkeypatch.setattr(clustering, "SEMDEDUP_CLUSTER_CAP", 1 << 30)
+    uncapped = _semdedup_pairs(emb, assign)
     n_capped, n_uncapped = capped.count(), uncapped.count()
     assert 0 < n_capped < n_uncapped
     # capped pairs ⊂ uncapped pairs (split only ever removes candidates)
@@ -167,41 +170,6 @@ def test_kmeans_plan_k_independent(spark):
     n = load_table(spark, SF_SMALL, "embeddings").count()
     assert out.count() == n
     assert out.select("cluster").distinct().count() <= 64
-
-
-def test_recursive_subsplit_keeps_near_pairs(spark):
-    """The recall property the recursive split exists for: on a forced
-    mega-cluster (every vector in one cluster, cap far below its size)
-    the md5 hash split loses near-dup pairs that straddle blocks, while
-    the Voronoi sub-split keeps EVERY pair the uncapped path finds —
-    near-dup pairs are geometrically tight, so both members land in the
-    same cell. 16 near-orthogonal pair-groups: within-pair cosine
-    ≈ 0.9988 (≥ SEMDEDUP_COS), cross-group cosine 0 (< SEMDEDUP_COS)."""
-    from map_reduce_lite_spark.ops.clustering import _semdedup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
-
-    rows = []
-    for g in range(16):
-        a = [0.0] * EMB_DIM
-        a[2 * g] = 1.0
-        b = [0.0] * EMB_DIM
-        b[2 * g] = 1.0
-        b[2 * g + 1] = 0.05
-        # ids 0..15 = one member per group (so Voronoi seeds spread
-        # across groups), 16..31 = the near-dup partners
-        rows.append((g, a))
-        rows.append((16 + g, b))
-    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    assign = emb.select("vec_id", F.lit(0).alias("cluster"))
-    uncapped = _semdedup_pairs(emb, assign, cap=1 << 30)
-    n_all = uncapped.count()
-    assert n_all == 16
-    hashed = _semdedup_pairs(emb, assign, cap=4)
-    recursive = _semdedup_pairs(emb, assign, cap=4, split="recursive")
-    assert hashed.count() < n_all, "md5 split should lose straddling pairs here"
-    got = {(r.keep_id, r.dup_id) for r in recursive.collect()}
-    want = {(r.keep_id, r.dup_id) for r in uncapped.collect()}
-    assert got == want  # zero recall loss vs the uncapped quadratic
 
 
 def test_kmeans_stable_under_repartition(spark):

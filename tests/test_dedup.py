@@ -142,7 +142,7 @@ def test_simhash_hamming_symmetry(spark):
         assert 0 <= r["hamming"] <= 3
 
 
-def test_simhash_bucket_cap_bounds_and_matches_oracle(spark, duck):
+def test_simhash_bucket_cap_bounds_and_matches_oracle(spark, duck, monkeypatch):
     """SIMHASH_BUCKET_CAP sub-splitting, forced active with a tiny cap:
 
     1. boundedness — every candidate block is a strict subset of its
@@ -155,12 +155,15 @@ def test_simhash_bucket_cap_bounds_and_matches_oracle(spark, duck):
        the forced cap — not just at the default where it is the
        identity.
     """
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import _simhash_sql, simhash_pairs
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     cap = 8  # far below the fixture's hottest bucket → split is active
-    capped = simhash_pairs(docs, cap=cap)
-    uncapped = simhash_pairs(docs, cap=1 << 30)
+    monkeypatch.setattr(dedup, "SIMHASH_BUCKET_CAP", cap)
+    capped = simhash_pairs(docs)
+    monkeypatch.setattr(dedup, "SIMHASH_BUCKET_CAP", 1 << 30)
+    uncapped = simhash_pairs(docs)
     n_capped, n_uncapped = capped.count(), uncapped.count()
     assert 0 < n_capped < n_uncapped
     extra = capped.select("doc1", "doc2").exceptAll(uncapped.select("doc1", "doc2"))
@@ -170,17 +173,17 @@ def test_simhash_bucket_cap_bounds_and_matches_oracle(spark, duck):
     assert got == want
 
 
-def test_simhash_default_cap_does_not_perturb_testdata(spark):
+def test_simhash_default_cap_does_not_perturb_testdata(spark, monkeypatch):
     """Every fixture bucket is far below SIMHASH_BUCKET_CAP, so the
     default capped result equals the uncapped one — the cap only
     engages on pathological bucket skew."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import simhash_pairs
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     capped = {(r.doc1, r.doc2) for r in simhash_pairs(docs).collect()}
-    uncapped = {
-        (r.doc1, r.doc2) for r in simhash_pairs(docs, cap=1 << 30).collect()
-    }
+    monkeypatch.setattr(dedup, "SIMHASH_BUCKET_CAP", 1 << 30)
+    uncapped = {(r.doc1, r.doc2) for r in simhash_pairs(docs).collect()}
     assert capped == uncapped
 
 

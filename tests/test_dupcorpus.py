@@ -143,13 +143,14 @@ def dup_duck(dup_dir):
     return con
 
 
-def test_caps_are_engaged_not_identities(spark, dup_dir):
+def test_caps_are_engaged_not_identities(spark, dup_dir, monkeypatch):
     """Proof the sweep below exercises LIVE caps: the near-constant core
     exceeds every band bucket cap, the salted dedup path drops pairs vs
     uncapped (its documented contract), and the boilerplate shingles
     exceed the df cap."""
     from pyspark.sql import functions as F
 
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import (
         EMB_BUCKET_CAP,
         SHINGLE_DF_CAP,
@@ -161,9 +162,8 @@ def test_caps_are_engaged_not_identities(spark, dup_dir):
 
     emb = load_table(spark, str(dup_dir), "embeddings")
     capped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
-    uncapped = embedding_near_dup_pairs(
-        emb, method="lsh", dim=EMB_DIM, cap=1 << 62
-    ).count()
+    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
+    uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
     assert _CORE_N > EMB_BUCKET_CAP
     assert uncapped >= _CORE_N * (_CORE_N - 1) // 2  # the core clique alone
     assert 0 < capped < uncapped  # salted split live, pairs dropped

@@ -115,6 +115,27 @@ def test_empty_corpus_matches_oracle(spark, empty_duck, empty_dir, name):
     assert _multiset(spark_rows, s_order) == _multiset(duck_rows, d_order), name
 
 
+def test_embedding_lsh_empty_corpus_without_dim(spark, empty_dir):
+    """With no ``dim`` given, the LSH pair stage and the star-only
+    coverage metric probe the embedding width from the data; on an
+    empty corpus the probe finds no row and both return empty frames
+    (previously ``first()[0]`` on ``None`` raised TypeError)."""
+    from map_reduce_lite_spark.ops.dedup import (
+        embedding_near_dup_pairs,
+        refine_star_only_ids,
+    )
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    emb = load_table(spark, empty_dir, "embeddings")
+    for method in ("lsh", "lsh_refine"):
+        pairs = embedding_near_dup_pairs(emb, method=method)
+        assert pairs.columns == ["keep_id", "dup_id", "sim_e9"]
+        assert pairs.count() == 0, method
+    ids = refine_star_only_ids(emb)
+    assert ids.columns == ["vec_id"]
+    assert ids.count() == 0
+
+
 def test_rollup_family_empty_table_divergence(spark, empty_duck, empty_dir):
     """The PINNED engine-semantics divergence (see module doc): Spark
     emits zero rows for the rollup family over an empty relation,

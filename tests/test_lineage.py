@@ -19,12 +19,13 @@ PKG = Path(__file__).resolve().parent.parent / "map_reduce_lite_spark"
 
 def test_truncation_only_in_lineage_module():
     """Every checkpoint goes through ``materialize``: a direct call
-    anywhere else would bypass the session's reliable-checkpoint
-    setting."""
+    anywhere else — the package or the tools that drive it — would
+    bypass the session's reliable-checkpoint setting."""
     pattern = re.compile(r"localCheckpoint\(|\.checkpoint\(|setCheckpointDir\(")
+    sources = sorted(PKG.rglob("*.py")) + sorted((PKG.parent / "tools").glob("*.py"))
     offenders = [
         f"{p.relative_to(PKG.parent)}:{i}"
-        for p in sorted(PKG.rglob("*.py"))
+        for p in sources
         if p != PKG / "lineage.py"
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if pattern.search(line)

@@ -1,0 +1,79 @@
+"""The candidate-pair blocking kernel (map_reduce_lite_spark/ops/pairs.py):
+one sizing probe, one salted hot-bucket split and one id-pair self-join
+shared by the simhash, embedding-LSH, k-NN and SemDeDup pair
+generators."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+from pyspark.sql import functions as F
+
+PKG = Path(__file__).resolve().parent.parent / "map_reduce_lite_spark"
+
+
+def test_salted_split_only_in_pairs_module():
+    """The Spark-side salted split (its ``n_sub`` column) is written once;
+    the SQL twins build ``n_sub`` inside oracle strings, not ``.alias(``."""
+    pattern = re.compile(r'\.alias\("n_sub"\)')
+    offenders = [
+        f"{p.relative_to(PKG.parent)}:{i}"
+        for p in sorted(PKG.rglob("*.py"))
+        if p != PKG / "ops" / "pairs.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert offenders == []
+
+
+def _buckets(spark):
+    # bucket 0 holds 5 ids, bucket 1 holds 2
+    rows = [(i, 0) for i in range(5)] + [(10, 1), (11, 1)]
+    return spark.createDataFrame(rows, "vec_id long, b long")
+
+
+def test_probe_and_split_sizes(spark):
+    from map_reduce_lite_spark.ops.pairs import (
+        bucket_over_cap,
+        salted_split,
+        split_hot_buckets,
+    )
+
+    rows = _buckets(spark)
+    salt = F.col("vec_id").cast("string")
+    assert bucket_over_cap(rows, ["b"], 4)
+    assert not bucket_over_cap(rows, ["b"], 5)
+    assert not bucket_over_cap(rows.limit(0), ["b"], 0)
+
+    # cap 2: bucket 0 → ceil(5/2) = 3 sub-buckets, bucket 1 → 1
+    split = {
+        r.vec_id: (r.n_sub, r.sub)
+        for r in salted_split(rows, ["b"], 2, salt).collect()
+    }
+    assert {v: n for v, (n, _) in split.items()} == {
+        **{i: 3 for i in range(5)}, 10: 1, 11: 1
+    }
+    assert all(0 <= s < n for n, s in split.values())
+    assert split[10][1] == split[11][1] == 0
+
+    same, hot = split_hot_buckets(rows, ["b"], 5, salt)
+    assert not hot
+    assert {r.sub for r in same.collect()} == {0}
+    salted, hot = split_hot_buckets(rows, ["b"], 2, salt)
+    assert hot
+    assert sorted(tuple(r) for r in salted.select("vec_id", "sub").collect()) == sorted(
+        (v, s) for v, (_, s) in split.items()
+    )
+
+
+def test_band_self_join_distinct_ordered_pairs(spark):
+    from map_reduce_lite_spark.ops.pairs import band_self_join
+
+    # ids 1, 2 collide in two bands; 3 only with 1 in band 1
+    rows = spark.createDataFrame(
+        [(1, 0, 7), (2, 0, 7), (1, 1, 8), (2, 1, 8), (3, 1, 8), (4, 1, 9)],
+        "vec_id long, band_id int, band_hash long",
+    )
+    pairs = band_self_join(rows, ["band_id", "band_hash"])
+    assert sorted(tuple(r) for r in pairs.collect()) == [(1, 2), (1, 3), (2, 3)]

@@ -250,7 +250,7 @@ def test_near_dup_pairs_staged_refined_parity(spark, tmp_path):
     assert inline == staged and len(inline) > 0
 
 
-def test_refined_candidates_structural_properties(spark):
+def test_refined_candidates_structural_properties(spark, monkeypatch):
     """Structural contract of adaptive re-banding on RANDOM vectors with
     a tiny forced cap (heavy engagement, no hand-built geometry), using
     threshold=-1 so the output IS the candidate set:
@@ -266,6 +266,7 @@ def test_refined_candidates_structural_properties(spark):
     from the same seeded plane constants."""
     import numpy as np
 
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
     from map_reduce_lite_spark.ops.similarity import (
         EMB_DIM,
@@ -278,16 +279,18 @@ def test_refined_candidates_structural_properties(spark):
 
     cap = 8
     emb = load_table(spark, SF_SMALL, "embeddings")
+    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", cap)
     refined = {
         (r[0], r[1])
         for r in embedding_near_dup_pairs(
-            emb, method="lsh_refine", dim=EMB_DIM, cap=cap, threshold=-1.0
+            emb, method="lsh_refine", dim=EMB_DIM, threshold=-1.0
         ).collect()
     }
+    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
     uncapped = {
         (r[0], r[1])
         for r in embedding_near_dup_pairs(
-            emb, method="lsh", dim=EMB_DIM, cap=1 << 62, threshold=-1.0
+            emb, method="lsh", dim=EMB_DIM, threshold=-1.0
         ).collect()
     }
     assert refined and refined <= uncapped  # (1)

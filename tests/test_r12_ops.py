@@ -136,9 +136,10 @@ def test_refine_star_only_probe_clean_is_empty(spark):
     assert refine_star_only_ids(emb, dim=EMB_DIM).count() == 0
 
 
-def test_refine_star_only_prebuilt_bands_parity(spark):
+def test_refine_star_only_prebuilt_bands_parity(spark, monkeypatch):
     """Passing a pre-materialized band table (the leakage_safe_split
     sharing path) must give the same ids as building inline."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import (
         lsh_band_table,
         refine_star_only_ids,
@@ -148,15 +149,12 @@ def test_refine_star_only_prebuilt_bands_parity(spark):
 
     emb = load_table(spark, SF_SMALL, "embeddings")
     # tiny cap so the machinery engages on the fixture corpus
-    inline = {
-        r.vec_id for r in refine_star_only_ids(emb, dim=EMB_DIM, cap=2).collect()
-    }
+    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 2)
+    inline = {r.vec_id for r in refine_star_only_ids(emb, dim=EMB_DIM).collect()}
     bands = lsh_band_table(emb, dim=EMB_DIM)
     shared = {
         r.vec_id
-        for r in refine_star_only_ids(
-            emb, dim=EMB_DIM, cap=2, bands=bands
-        ).collect()
+        for r in refine_star_only_ids(emb, dim=EMB_DIM, bands=bands).collect()
     }
     assert inline == shared
 

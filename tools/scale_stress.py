@@ -107,6 +107,7 @@ def _run_topologies(kinds: list[str], sizes: list[int]) -> None:
     import math
     import time as _time
 
+    from map_reduce_lite_spark.lineage import materialize
     from map_reduce_lite_spark.ops.graph import (
         connected_components,
         kcore_parts,
@@ -126,7 +127,7 @@ def _run_topologies(kinds: list[str], sizes: list[int]) -> None:
     for kind in kinds:
         rows: dict = {}
         for n in sizes:
-            edges = _topology_edges(spark, kind, n).localCheckpoint(eager=True)
+            edges = materialize(_topology_edges(spark, kind, n), eager=True)
             for op_name, fn in ops.items():
                 fn(edges).count()  # warm
                 gc.collect()
@@ -214,28 +215,33 @@ def main() -> None:
 
     # --- cap engagement at the largest scale -------------------------
     big = dirs[-1]
-    from map_reduce_lite_spark.ops.clustering import (
-        SEMDEDUP_CLUSTER_CAP,
-        _semdedup_pairs,
-        kmeans_assignments,
-    )
+    from map_reduce_lite_spark.lineage import materialize
+    from map_reduce_lite_spark.ops import clustering
     from map_reduce_lite_spark.ops.dedup import SHINGLE_DF_CAP, shingles
     from map_reduce_lite_spark.ops.index import MIN_DF, POSTINGS_CAP
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, big, "embeddings")
-    assign = kmeans_assignments(spark, big).select("vec_id", "cluster") \
-        .localCheckpoint(eager=True)
+    assign = materialize(
+        clustering.kmeans_assignments(spark, big).select("vec_id", "cluster"),
+        eager=True,
+    )
     cluster_sizes = [
         r["n"] for r in assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
     ]
+    default_cap = clustering.SEMDEDUP_CLUSTER_CAP
     caps = {}
-    for cap_name, cap in (("default", SEMDEDUP_CLUSTER_CAP), ("uncapped", 1 << 30)):
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        n_pairs = _semdedup_pairs(emb, assign, cap=cap).count()
-        caps[cap_name] = {"pairs": n_pairs, "sec": round(time.perf_counter() - t0, 3)}
+    try:
+        for cap_name, cap in (("default", default_cap), ("uncapped", 1 << 30)):
+            # _semdedup_pairs reads the cap when it builds the plan
+            clustering.SEMDEDUP_CLUSTER_CAP = cap
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            t0 = time.perf_counter()
+            n_pairs = clustering._semdedup_pairs(emb, assign).count()
+            caps[cap_name] = {"pairs": n_pairs, "sec": round(time.perf_counter() - t0, 3)}
+    finally:
+        clustering.SEMDEDUP_CLUSTER_CAP = default_cap
 
     docs = load_table(spark, big, "documents")
     sh = shingles(docs)
@@ -262,7 +268,7 @@ def main() -> None:
                 "times": times,
                 "exponents": exponents,
                 "semdedup_cap": {
-                    "cap": SEMDEDUP_CLUSTER_CAP,
+                    "cap": default_cap,
                     "cluster_sizes": sorted(cluster_sizes),
                     **caps,
                 },

@@ -114,7 +114,7 @@ def build_snapshot(
     artifacts: dict[str, dict] = {}
     scans = {
         "knn_edges": (
-            build_knn_edges(emb, f"{out}/knn_edges", k=KNN_GRAPH_K),
+            build_knn_edges(emb, f"{out}/knn_edges"),
             {"k": KNN_GRAPH_K, "cap": KNN_BUCKET_CAP, "dim": EMB_DIM},
         ),
         "near_dup_pairs": (

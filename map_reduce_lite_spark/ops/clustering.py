@@ -60,7 +60,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.pairs import salted_split
-from map_reduce_lite_spark.ops.similarity import EMB_DIM, _sql_cos, cosine_verify
+from map_reduce_lite_spark.ops.similarity import (
+    EMB_DIM,
+    _sql_cos,
+    cosine_verify,
+    sim_e9,
+)
 from map_reduce_lite_spark.registry import Query, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -346,12 +351,7 @@ def _semdedup_pairs(emb: DataFrame, assign: DataFrame) -> DataFrame:
     return (
         cosine_verify(cand, emb, "keep_id", "dup_id")
         .filter(F.col("sim") >= F.lit(SEMDEDUP_COS))
-        .select(
-            "cluster",
-            "keep_id",
-            "dup_id",
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
+        .select("cluster", "keep_id", "dup_id", sim_e9())
     )
 
 

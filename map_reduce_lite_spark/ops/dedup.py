@@ -709,21 +709,13 @@ def lsh_band_table(corpus: DataFrame, dim: int) -> DataFrame:
     a job needing the table more than once projects and checkpoints it
     exactly once."""
     from map_reduce_lite_spark.ops.similarity import (
-        LSH_N_BANDS,
         LSH_PLANES,
         _hyperplanes,
-        lsh_band_hashes,
+        lsh_band_rows,
     )
 
-    planes = _hyperplanes(dim, LSH_PLANES)
     return materialize(
-        corpus.select(
-            "vec_id",
-            F.posexplode(lsh_band_hashes("embedding", planes, LSH_N_BANDS)).alias(
-                "band_id", "band_hash"
-            ),
-        ),
-        eager=True,
+        lsh_band_rows(corpus, _hyperplanes(dim, LSH_PLANES)), eager=True
     )
 
 
@@ -753,8 +745,7 @@ def _refined_candidate_ids(
     bands; (b) a barely-above-threshold pair inside a still-oversized
     sub-bucket is detected only via the representative."""
     from map_reduce_lite_spark.ops.similarity import (
-        LSH_N_BANDS,
-        lsh_band_hashes,
+        lsh_band_rows,
         refine_hyperplanes,
     )
 
@@ -764,13 +755,7 @@ def _refined_candidate_ids(
     small_pairs = band_self_join(
         sized.filter(F.col("n") <= cap).select("vec_id", *_BAND_KEYS), _BAND_KEYS
     )
-    rplanes = refine_hyperplanes(dim)
-    rh_tbl = corpus.select(
-        "vec_id",
-        F.posexplode(lsh_band_hashes("embedding", rplanes, LSH_N_BANDS)).alias(
-            "band_id", "rh"
-        ),
-    )
+    rh_tbl = lsh_band_rows(corpus, refine_hyperplanes(dim), "rh")
     big = (
         sized.filter(F.col("n") > cap)
         .select("vec_id", *_BAND_KEYS)
@@ -856,8 +841,7 @@ def refine_star_only_ids(
     it via ``bands`` so the projection and its checkpoint run ONCE per
     job, not once per consumer (leakage_safe_split does)."""
     from map_reduce_lite_spark.ops.similarity import (
-        LSH_N_BANDS,
-        lsh_band_hashes,
+        lsh_band_rows,
         refine_hyperplanes,
     )
 
@@ -875,12 +859,10 @@ def refine_star_only_ids(
     sizes = bands.groupBy(*_BAND_KEYS).agg(F.count(F.lit(1)).alias("n"))
     sized = bands.join(F.broadcast(sizes), _BAND_KEYS)
     big = sized.filter(F.col("n") > cap).select("vec_id", *_BAND_KEYS)
-    rplanes = refine_hyperplanes(dim)
-    rh_tbl = corpus.join(big.select("vec_id").distinct(), "vec_id").select(
-        "vec_id",
-        F.posexplode(lsh_band_hashes("embedding", rplanes, LSH_N_BANDS)).alias(
-            "band_id", "rh"
-        ),
+    rh_tbl = lsh_band_rows(
+        corpus.join(big.select("vec_id").distinct(), "vec_id"),
+        refine_hyperplanes(dim),
+        "rh",
     )
     bigr = big.join(rh_tbl, ["vec_id", "band_id"])
     subsizes = bigr.groupBy(*_BAND_KEYS, "rh").agg(F.count(F.lit(1)).alias("m"))
@@ -946,6 +928,7 @@ def embedding_near_dup_pairs(
         _spread,
         _vectors,
         cosine_verify,
+        sim_e9,
     )
 
     if method == "exact":
@@ -954,7 +937,7 @@ def embedding_near_dup_pairs(
         scored = (
             _spread(_vectors(corpus, "keep_id", "a"), "keep_id")
             .join(_vectors(corpus, "dup_id", "b"), F.col("keep_id") < F.col("dup_id"))
-            .select("keep_id", "dup_id", _pair_cos().alias("sim"))
+            .select("keep_id", "dup_id", _pair_cos("a", "b").alias("sim"))
         )
     elif method in ("lsh", "lsh_refine"):
         if dim is None:  # probing costs a Spark job — callers should pass it
@@ -984,7 +967,7 @@ def embedding_near_dup_pairs(
     else:
         raise ValueError(f"unknown method {method!r}")
     return scored.filter(F.col("sim") >= F.lit(threshold)).select(
-        "keep_id", "dup_id", F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9")
+        "keep_id", "dup_id", sim_e9()
     )
 
 

@@ -44,7 +44,8 @@ from map_reduce_lite_spark.ops.similarity import (
     _dot,
     _spread,
     _sql_cos,
-    _sql_dot,
+    cosine,
+    top_k_by_sim,
 )
 
 RP_DIM = 32
@@ -234,13 +235,7 @@ def similarity_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (
-                _dot(F.col("qp"), F.col("cp"))
-                / (
-                    F.sqrt(_dot(F.col("qp"), F.col("qp")))
-                    * F.sqrt(_dot(F.col("cp"), F.col("cp")))
-                )
-            ).alias("asim"),
+            cosine(F.col("qp"), F.col("cp")).alias("asim"),
         )
     )
     wa = Window.partitionBy("query_id").orderBy(
@@ -262,26 +257,10 @@ def similarity_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("cv"))
-                / (
-                    F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                    * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                )
-            ).alias("sim"),
+            cosine(F.col("qv"), F.col("cv")).alias("sim"),
         )
     )
-    we = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return top_k_by_sim(exact, "query_id", "neighbor_id", TOP_K)
 
 
 def _ann_rerank_sql() -> str:
@@ -878,16 +857,7 @@ def embedding_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lab_mean.crossJoin(F.broadcast(corp_mean)).select(
         F.col("label").cast("int").alias("label"),
         F.col("n_vecs").cast("long").alias("n_vecs"),
-        F.floor(
-            (
-                _dot(F.col("ml"), F.col("mc"))
-                / (
-                    F.sqrt(_dot(F.col("ml"), F.col("ml")))
-                    * F.sqrt(_dot(F.col("mc"), F.col("mc")))
-                )
-            )
-            * 1e9
-        )
+        F.floor(cosine(F.col("ml"), F.col("mc")) * 1e9)
         .cast("long")
         .alias("cos_to_corpus_e9"),
     )

@@ -39,6 +39,8 @@ N_QUERY_VECS = 8  # vec_id < 8 form the query set in the oracle-checked demo
 TOP_K = 5
 
 LSH_PLANES = 16  # random-hyperplane bits for the ANN path
+LSH_N_BANDS = 4
+EMB_DIM = 64  # test-table embedding dimension (pins the oracle's planes)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -73,23 +75,56 @@ def _norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
+    """Cosine of two vector columns, norms computed in place — for
+    operands that are not ``_vectors`` sides (projected vectors, mean
+    vectors); the same expression tree as ``_pair_cos``."""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _vectors(emb: DataFrame, id_name: str, tag: str) -> DataFrame:
-    """(``id_name``, ``{tag}_vec``, ``{tag}_norm``): one side of a pair
-    verify, with the norm computed once per vector, not once per pair."""
+def _vectors(emb: DataFrame, id_name: str, tag: str, *keep: Column) -> DataFrame:
+    """(``id_name``, ``*keep``, ``{tag}_vec``, ``{tag}_norm``): one side of
+    an exact-cosine pair, with the norm computed once per vector, not
+    once per pair. ``keep`` carries other columns of ``emb`` along (a
+    label, a hash to order by)."""
     return emb.select(
         F.col("vec_id").alias(id_name),
+        *keep,
         F.col("embedding").alias(f"{tag}_vec"),
         _norm(F.col("embedding")).alias(f"{tag}_norm"),
     )
 
 
-def _pair_cos() -> Column:
-    """Cosine of two ``_vectors`` sides: dot/(a_norm*b_norm) matches the
-    oracle's sqrt(a·a)*sqrt(b·b) operand order → bit-identical."""
-    return _dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_norm") * F.col("b_norm"))
+def _pair_cos(a: str, b: str) -> Column:
+    """Cosine of the ``a`` and ``b`` ``_vectors`` sides:
+    dot/(a_norm*b_norm) matches the oracle's sqrt(a·a)*sqrt(b·b) operand
+    order → bit-identical."""
+    return _dot(F.col(f"{a}_vec"), F.col(f"{b}_vec")) / (
+        F.col(f"{a}_norm") * F.col(f"{b}_norm")
+    )
+
+
+def sim_e9() -> Column:
+    """``sim`` floor-scaled to an integer — round() can differ by 1 ulp
+    between engines, floor cannot."""
+    return F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9")
+
+
+def top_k_by_sim(scored: DataFrame, by: str, tie: str, k: int) -> DataFrame:
+    """Per-``by`` top-``k`` of ``scored`` by descending ``sim``, ties to
+    the smaller ``tie``: ``scored``'s other columns, then ``rank`` (int)
+    and ``sim_e9``. Ranking runs on the raw (bit-identical) cosine; the
+    row_number filter plans as a WindowGroupLimit, so each partition
+    keeps only k rows per key before the window."""
+    w = Window.partitionBy(by).orderBy(F.desc("sim"), F.asc(tie))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            *[c for c in scored.columns if c != "sim"],
+            F.col("rank").cast("int").alias("rank"),
+            sim_e9(),
+        )
+    )
 
 
 def cosine_verify(cand: DataFrame, emb: DataFrame, left: str, right: str) -> DataFrame:
@@ -102,59 +137,22 @@ def cosine_verify(cand: DataFrame, emb: DataFrame, left: str, right: str) -> Dat
         _spread(cand, left)
         .join(_vectors(emb, left, "a"), left)
         .join(_vectors(emb, right, "b"), right)
-        .select(*cand.columns, _pair_cos().alias("sim"))
+        .select(*cand.columns, _pair_cos("a", "b").alias("sim"))
     )
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = TOP_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k of each query against the corpus.
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-TOP_K of each query against the corpus.
 
     ``queries`` is expected to be small — it is broadcast, making the
     scan embarrassingly parallel with no corpus shuffle."""
-    # norms once per vector, not once per pair: sim = dot/(q_norm*c_norm)
-    # is the same expression tree the oracle evaluates (sqrt(q·q) first),
-    # so precomputing keeps bit-identity while cutting FLOPs ~3×
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
-    c = _spread(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _norm(F.col(vec_col)).alias("c_norm"),
-        ),
-        "neighbor_id",
-    )
     scored = (
-        c.crossJoin(F.broadcast(q))
+        _spread(_vectors(corpus, "neighbor_id", "c"), "neighbor_id")
+        .crossJoin(F.broadcast(_vectors(queries, "query_id", "q")))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("sim"),
-        )
+        .select("query_id", "neighbor_id", _pair_cos("q", "c").alias("sim"))
     )
-    # rank on the raw (bit-identical) cosine; expose it floor-scaled to an
-    # integer — round() can differ by 1 ulp between engines, floor cannot
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return top_k_by_sim(scored, "query_id", "neighbor_id", TOP_K)
 
 
 def similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,48 +173,26 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN candidate pool (similarity_ann_ivf shape) instead of the full
     corpus; the exact pass is the recall oracle for that funnel."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"),
+    q = _vectors(
+        emb.filter(F.col("vec_id") < N_QUERY_VECS),
+        "query_id",
+        "q",
         F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_vec"),
-        _norm(F.col("embedding")).alias("q_norm"),
     )
-    c = _spread(
-        emb.select(
-            F.col("vec_id").alias("neg_id"),
-            F.col("label").alias("neg_label"),
-            F.col("embedding").alias("c_vec"),
-            _norm(F.col("embedding")).alias("c_norm"),
-        ),
-        "neg_id",
-    )
+    c = _vectors(emb, "neg_id", "c", F.col("label").alias("neg_label"))
     scored = (
-        c.crossJoin(F.broadcast(q))
+        _spread(c, "neg_id")
+        .crossJoin(F.broadcast(q))
         .filter(F.col("neg_label") != F.col("q_label"))
         .select(
             "query_id",
             "q_label",
             "neg_id",
             "neg_label",
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("sim"),
+            _pair_cos("q", "c").alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "q_label",
-            "neg_id",
-            "neg_label",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return top_k_by_sim(scored, "query_id", "neg_id", TOP_K)
 
 
 def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,23 +348,36 @@ def lsh_band_hashes(vec: str, planes: list[list[float]], n_bands: int) -> Column
     return F.expr("array(" + ", ".join(bands) + ")")
 
 
+def lsh_band_rows(
+    emb: DataFrame, planes: list[list[float]], hash_name: str = "band_hash"
+) -> DataFrame:
+    """(vec_id, band_id, ``hash_name``): one row per vector per band —
+    ``emb``'s embeddings hashed against ``planes`` in LSH_N_BANDS
+    contiguous bands. The Spark side of every band table: the banding
+    planes key the candidate joins, the refinement planes
+    (``hash_name="rh"``) split oversized buckets."""
+    return emb.select(
+        "vec_id",
+        F.posexplode(lsh_band_hashes("embedding", planes, LSH_N_BANDS)).alias(
+            "band_id", hash_name
+        ),
+    )
+
+
 def ann_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
     k: int = TOP_K,
     n_planes: int = LSH_PLANES,
-    n_bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via banded random-hyperplane LSH.
 
-    ``n_planes`` sign bits split into ``n_bands`` tables of r =
-    n_planes/n_bands bits; a corpus vector is a candidate for a query iff
-    they collide in ANY band — recall 1-(1-p^r)^L for per-bit agreement
-    p = 1 - θ/π. Wider bands (larger r) cut false positives; more bands
-    (larger L) raise recall.
+    ``n_planes`` sign bits split into LSH_N_BANDS tables of r =
+    n_planes/LSH_N_BANDS bits; a corpus vector is a candidate for a
+    query iff they collide in ANY band — recall 1-(1-p^r)^L for per-bit
+    agreement p = 1 - θ/π. Wider bands (larger r) cut false positives;
+    more bands (larger L) raise recall.
 
     At 100 TB: band hashes are computed once at ingest and the corpus is
     written as L bucket tables (or one table partitioned by
@@ -399,20 +388,10 @@ def ann_lsh_topk(
     property-tested vs brute force (tests/test_similarity.py)."""
     planes = _hyperplanes(dim, n_planes)
     # band join + candidate dedup on IDS ONLY; vectors join back after —
-    # the ×n_bands explode and the pair-dedup shuffle then move 8-byte
+    # the ×LSH_N_BANDS explode and the pair-dedup shuffle then move 8-byte
     # keys instead of 64-float arrays
-    c_bands = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode(lsh_band_hashes(vec_col, planes, n_bands)).alias(
-            "band_id", "band_hash"
-        ),
-    )
-    q_bands = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(lsh_band_hashes(vec_col, planes, n_bands)).alias(
-            "band_id", "band_hash"
-        ),
-    )
+    c_bands = lsh_band_rows(corpus, planes).withColumnRenamed("vec_id", "neighbor_id")
+    q_bands = lsh_band_rows(queries, planes).withColumnRenamed("vec_id", "query_id")
     cand = _spread(
         c_bands.join(F.broadcast(q_bands), ["band_id", "band_hash"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -422,40 +401,14 @@ def ann_lsh_topk(
         .select("query_id", "neighbor_id"),
         "neighbor_id",
     )
-    c_vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("c_norm"),
-    )
-    q_vecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
     scored = (
-        cand.join(c_vecs, "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("sim"),
-        )
+        cand.join(_vectors(corpus, "neighbor_id", "c"), "neighbor_id")
+        .join(F.broadcast(_vectors(queries, "query_id", "q")), "query_id")
+        .select("query_id", "neighbor_id", _pair_cos("q", "c").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return top_k_by_sim(scored, "query_id", "neighbor_id", k)
 
 
-EMB_DIM = 64  # test-table embedding dimension (pins the oracle's planes)
-LSH_N_BANDS = 4
 # Adaptive re-banding (r11): hyperplanes used to REFINE an oversized
 # band bucket, chunked per band (REFINE_PLANES / LSH_N_BANDS each) so a
 # pair split by one band's refinement keeps its independent chance in
@@ -469,13 +422,15 @@ def refine_hyperplanes(dim: int) -> list[list[float]]:
     """The refinement plane set — shared by the Spark path and every SQL
     twin so refined sub-bucket membership is bit-identical."""
     return _hyperplanes(dim, REFINE_PLANES, seed=REFINE_SEED)
+
+
 KNN_GRAPH_K = 5  # neighbors kept per node in the corpus k-NN graph
 KNN_BUCKET_CAP = 512  # max members per LSH band bucket before salted split
 
 
-def knn_topk_edges(emb: DataFrame, k: int = KNN_GRAPH_K) -> DataFrame:
+def knn_topk_edges(emb: DataFrame) -> DataFrame:
     """The corpus k-NN edge list (src_id, dst_id, rank, sim_e9): every
-    vector's top-``k`` cosine neighbors among its LSH band collisions —
+    vector's top-KNN_GRAPH_K cosine neighbors among its LSH band collisions —
     the ONE artifact the whole k-NN graph family is built from.
 
     Reuses the certified ``dedup_embedding_lsh`` blocking (banded
@@ -491,21 +446,10 @@ def knn_topk_edges(emb: DataFrame, k: int = KNN_GRAPH_K) -> DataFrame:
     once id-ordered and emitted in both directions (r12), so every
     node gets its own neighbor list (unlike the dedup pair set, which
     keeps only the id-ordered rows)."""
-    scored = _knn_scored_edges(emb)
-    w = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("dst_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "src_id",
-            "dst_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return top_k_by_sim(_knn_scored_edges(emb), "src_id", "dst_id", KNN_GRAPH_K)
 
 
-def build_knn_edges(emb: DataFrame, path: str, k: int = KNN_GRAPH_K) -> DataFrame:
+def build_knn_edges(emb: DataFrame, path: str) -> DataFrame:
     """STAGE the k-NN edge list once as a parquet artifact and return
     its scan — the production shape for the k-NN family (r10): the
     capped band join + cosine scoring is by far the family's dominant
@@ -521,7 +465,7 @@ def build_knn_edges(emb: DataFrame, path: str, k: int = KNN_GRAPH_K) -> DataFram
     the edge list inline — required by the driver contract's
     independent (spark, sf_dir) calls); parity between the staged and
     inline forms is pinned by test_knn_staged_edges_parity."""
-    knn_topk_edges(emb, k=k).write.mode("overwrite").parquet(path)
+    knn_topk_edges(emb).write.mode("overwrite").parquet(path)
     return emb.sparkSession.read.parquet(path)
 
 
@@ -583,23 +527,6 @@ def _knn_scored_edges(emb: DataFrame) -> DataFrame:
     ).select("ed.src_id", "ed.dst_id", "ed.sim")
 
 
-def _rescored_topk(emb: DataFrame, cand: DataFrame, k: int) -> DataFrame:
-    """Exact-cosine rescore of an id-only candidate edge list, keeping
-    each node's top-``k`` — the shared tail of the k-NN graph family."""
-    scored = cosine_verify(cand, emb, "src_id", "dst_id")
-    w = Window.partitionBy("src_id").orderBy(F.desc("sim"), F.asc("dst_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "src_id",
-            "dst_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
-
-
 def similarity_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One NN-descent refinement round over the approximate k-NN graph:
     candidates = each node's current neighbors ∪ its
@@ -622,9 +549,7 @@ def similarity_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nn_descent_from_edges(emb, knn_topk_edges(emb))
 
 
-def nn_descent_from_edges(
-    emb: DataFrame, edges: DataFrame, k: int = KNN_GRAPH_K
-) -> DataFrame:
+def nn_descent_from_edges(emb: DataFrame, edges: DataFrame) -> DataFrame:
     """NN-descent consumer over a PRE-BUILT k-NN edge list (the staged
     ``build_knn_edges`` artifact in production — its cost is then just
     this function's own tail: one K²-bounded self-join + rescore)."""
@@ -640,7 +565,8 @@ def nn_descent_from_edges(
         .filter(F.col("src_id") != F.col("dst_id"))
     )
     cand = base.union(non).dropDuplicates(["src_id", "dst_id"])
-    return _rescored_topk(emb, cand, k)
+    scored = cosine_verify(cand, emb, "src_id", "dst_id")
+    return top_k_by_sim(scored, "src_id", "dst_id", KNN_GRAPH_K)
 
 
 def _knn_edges_cte(cap: int = KNN_BUCKET_CAP) -> str:
@@ -780,7 +706,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
     # 16 planes / 4 bands of 4 bits: ~0.23 false-positive candidate rate
     # for orthogonal pairs, high recall for cosine ≥ 0.3 neighbors
-    return ann_lsh_topk(emb, queries, dim, n_planes=LSH_PLANES, n_bands=LSH_N_BANDS)
+    return ann_lsh_topk(emb, queries, dim)
 
 
 def sql_capped_bands_chain(
@@ -919,8 +845,8 @@ def sql_refine_coverage_cte(cap: int) -> str:
 
 def sql_bands_cte(planes: list[list[float]], n_bands: int) -> str:
     """UNION-ALL body producing (vec_id, band_id, band_hash) — the SQL
-    twin of posexplode(lsh_band_hashes(...)). Plane literals round-trip
-    through repr so every sign bit is bit-identical to the Spark plan."""
+    twin of ``lsh_band_rows``. Plane literals round-trip through repr so
+    every sign bit is bit-identical to the Spark plan."""
     hashes = sql_band_hashes("embedding", planes, n_bands)
     return "\n  UNION ALL\n".join(
         f"  SELECT vec_id, {b} AS band_id, {h} AS band_hash FROM embeddings"
@@ -1018,21 +944,15 @@ def sql_band_hashes(vec_expr: str, planes: list[list[float]], n_bands: int) -> l
 
 
 def ann_ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = TOP_K,
-    stride: int = CENTROID_STRIDE,
-    n_probe: int = N_PROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, queries: DataFrame, stride: int = CENTROID_STRIDE
 ) -> DataFrame:
-    """Approximate top-k via an IVF (inverted-file) coarse quantizer.
+    """Approximate top-TOP_K via an IVF (inverted-file) coarse quantizer.
 
     Every ``stride``-th corpus vector serves as a centroid (a
     deterministic stand-in for offline k-means — the operator's plan is
     identical whatever trained the centroid set). Each corpus vector is
-    assigned to its nearest centroid; a query probes only its ``n_probe``
-    nearest centroids' lists, so the fine cosine pass touches ~n_probe/C
+    assigned to its nearest centroid; a query probes only its N_PROBE
+    nearest centroids' lists, so the fine cosine pass touches ~N_PROBE/C
     of the corpus instead of all of it.
 
     Scale shape (100 TB): centroids are tiny → broadcast; assignment is
@@ -1047,28 +967,18 @@ def ann_ivf_topk(
     costs n·C = n²/stride — the r6 scale-stress measured exponent 1.49
     (superlinear) at the demo default. The standard IVF sizing is
     C ≈ sqrt(n), i.e. ``stride ≈ sqrt(n)``, which balances assignment
-    (n·C) against probe width (n·n_probe/C) and restores sub-linear
+    (n·C) against probe width (n·N_PROBE/C) and restores sub-linear
     measured scaling (SCALE.md r6: 8× faster at 60k vectors, exponent
     0.40). The module default stays the oracle-pinned demo constant;
     callers at scale pass ``stride=int(sqrt(n))``."""
-    cent = corpus.filter((F.col(id_col) % stride) == 0).select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).alias("cent_vec"),
-        _norm(F.col(vec_col)).alias("cent_norm"),
-    )
     # norms once per side (same expression tree as the oracle → bit-identical)
-    csim = _dot(F.col("c_vec"), F.col("cent_vec")) / (F.col("c_norm") * F.col("cent_norm"))
+    cent = _vectors(corpus.filter((F.col("vec_id") % stride) == 0), "cid", "cent")
     assign = (
-        _spread(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("c_vec"),
-                _norm(F.col(vec_col)).alias("c_norm"),
-            ),
-            "neighbor_id",
-        )
+        _spread(_vectors(corpus, "neighbor_id", "c"), "neighbor_id")
         .crossJoin(F.broadcast(cent))
-        .select("neighbor_id", "c_vec", "c_norm", "cid", csim.alias("csim"))
+        .select(
+            "neighbor_id", "c_vec", "c_norm", "cid", _pair_cos("c", "cent").alias("csim")
+        )
         .groupBy("neighbor_id")
         .agg(
             # argmax over (csim, -cid): nearest centroid, smaller cid on ties
@@ -1078,42 +988,25 @@ def ann_ivf_topk(
         )
     )
     assign = _spread(assign, "cid")
-    qsim = _dot(F.col("q_vec"), F.col("cent_vec")) / (F.col("q_norm") * F.col("cent_norm"))
     probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            _norm(F.col(vec_col)).alias("q_norm"),
-        )
+        _vectors(queries, "query_id", "q")
         .crossJoin(F.broadcast(cent))
-        .select("query_id", "q_vec", "q_norm", "cid", qsim.alias("csim"))
+        .select(
+            "query_id", "q_vec", "q_norm", "cid", _pair_cos("q", "cent").alias("csim")
+        )
     )
     wp = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cid"))
     probes = (
         probes.withColumn("prn", F.row_number().over(wp))
-        .filter(F.col("prn") <= n_probe)
+        .filter(F.col("prn") <= N_PROBE)
         .select("query_id", "q_vec", "q_norm", "cid")
     )
     scored = (
         assign.join(F.broadcast(probes), "cid")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("sim"),
-        )
+        .select("query_id", "neighbor_id", _pair_cos("q", "c").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.floor(F.col("sim") * 1e9).cast("long").alias("sim_e9"),
-        )
-    )
+    return top_k_by_sim(scored, "query_id", "neighbor_id", TOP_K)
 
 
 def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1125,7 +1018,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with the PRODUCTION sizing rule executed, not just
     documented: stride = floor(sqrt(n)) so the centroid count C ≈ √n —
-    assignment (n·C) balances probe width (n·n_probe/C) and measured
+    assignment (n·C) balances probe width (n·N_PROBE/C) and measured
     scaling stays sub-linear (SCALE.md r6: exponent 0.40 vs 1.49 at
     the fixed demo stride). The corpus count is one scalar job
     (floor(sqrt(n)) is bit-identical in DuckDB, so the oracle replays
@@ -1211,31 +1104,16 @@ def embedding_ood_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     h = md5_60bit(F.concat(F.lit("oodcb:"), F.col("vec_id").cast("string")))
     cb = (
-        emb.select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("embedding").alias("c_vec"),
-            _norm(F.col("embedding")).alias("c_norm"),
-            h.alias("h"),
-        )
+        _vectors(emb, "cent_id", "c", h.alias("h"))
         .orderBy("h", "cent_id")
         .limit(OOD_CODEBOOK_K)
         .drop("h")
     )
-    e = _spread(
-        emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("e_norm")),
-        "vec_id",
-    )
     scored = (
-        e.crossJoin(F.broadcast(cb))
+        _spread(_vectors(emb, "vec_id", "e"), "vec_id")
+        .crossJoin(F.broadcast(cb))
         .filter(F.col("vec_id") != F.col("cent_id"))
-        .select(
-            "vec_id",
-            "cent_id",
-            (
-                _dot(F.col("embedding"), F.col("c_vec"))
-                / (F.col("e_norm") * F.col("c_norm"))
-            ).alias("sim"),
-        )
+        .select("vec_id", "cent_id", _pair_cos("e", "c").alias("sim"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cent_id"))
     return (

@@ -1,13 +1,16 @@
 """The candidate-pair blocking kernel (map_reduce_lite_spark/ops/pairs.py):
 one sizing probe, one salted hot-bucket split and one id-pair self-join
 shared by the simhash, embedding-LSH, k-NN and SemDeDup pair
-generators."""
+generators — and the one exact-cosine scoring path
+(map_reduce_lite_spark/ops/similarity.py) they all verify through."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 PKG = Path(__file__).resolve().parent.parent / "map_reduce_lite_spark"
@@ -25,6 +28,50 @@ def test_salted_split_only_in_pairs_module():
         if pattern.search(line)
     ]
     assert offenders == []
+
+
+# each Spark-side scoring fragment → the similarity.py helpers allowed to
+# write it out; the SQL twins spell these names inside oracle strings,
+# never as these calls
+_SCORING_OWNERS = [
+    (r"_norm\(F\.col\(", {"_vectors", "cosine"}),
+    (r"F\.sqrt\(_dot\(", {"_norm"}),
+    (r'\.alias\("sim_e9"\)', {"sim_e9"}),
+    (r"posexplode\(lsh_band_hashes\(", {"lsh_band_rows"}),
+]
+
+
+def _innermost_def(tree: ast.AST, line: int) -> str | None:
+    spans = [
+        (n.end_lineno - n.lineno, n.name)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.lineno <= line <= n.end_lineno
+    ]
+    return min(spans)[1] if spans else None
+
+
+@pytest.mark.parametrize(
+    "pattern,owners", _SCORING_OWNERS, ids=[min(o) for _, o in _SCORING_OWNERS]
+)
+def test_exact_cosine_scoring_only_in_its_helper(pattern, owners):
+    """One vector side, one norm, one ``sim_e9`` formatter, one band-row
+    projection: each fragment appears only inside its helper."""
+    owned, offenders = [], []
+    for p in sorted(PKG.rglob("*.py")):
+        text = p.read_text()
+        hits = [
+            i for i, line in enumerate(text.splitlines(), 1) if re.search(pattern, line)
+        ]
+        tree = ast.parse(text) if hits else None
+        for i in hits:
+            where = f"{p.relative_to(PKG.parent)}:{i}"
+            in_owner = p == PKG / "ops" / "similarity.py" and (
+                _innermost_def(tree, i) in owners
+            )
+            (owned if in_owner else offenders).append(where)
+    assert offenders == []
+    assert owned, f"{sorted(owners)} no longer write {pattern}"
 
 
 def _buckets(spark):

@@ -26,7 +26,7 @@ def test_bruteforce_matches_numpy(spark, emb):
     rows = emb.collect()
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
     queries = emb.filter(F.col("vec_id") < 3)
-    got = brute_force_topk(emb, queries, k=TOP_K).collect()
+    got = brute_force_topk(emb, queries).collect()
 
     for qid in range(3):
         q = vecs[qid]
@@ -54,7 +54,7 @@ def test_ann_lsh_recall(spark, emb):
     candidates by construction of cosine)."""
     dim = len(emb.select("embedding").first()[0])
     queries = emb.filter(F.col("vec_id") < 20)
-    exact = brute_force_topk(emb, queries, k=TOP_K).collect()
+    exact = brute_force_topk(emb, queries).collect()
     approx = ann_lsh_topk(emb, queries, dim, k=TOP_K, n_planes=8).collect()
 
     exact_sets = {}
@@ -72,11 +72,16 @@ def test_ann_lsh_recall(spark, emb):
 
 
 def test_ann_lsh_more_planes_fewer_candidates(spark, emb):
+    """Finer buckets → strictly fewer candidates. ``k`` is the corpus
+    size, so the top-k cap never binds and each count is the query's
+    whole candidate set (with a small k both counts saturate at
+    k × n_queries and ``n_planes`` could be ignored unnoticed)."""
     dim = len(emb.select("embedding").first()[0])
+    n = emb.count()
     queries = emb.filter(F.col("vec_id") < 10)
-    few = ann_lsh_topk(emb, queries, dim, k=50, n_planes=4).count()
-    many = ann_lsh_topk(emb, queries, dim, k=50, n_planes=12).count()
-    assert many <= few  # finer buckets → fewer candidates
+    few = ann_lsh_topk(emb, queries, dim, k=n, n_planes=4).count()
+    many = ann_lsh_topk(emb, queries, dim, k=n, n_planes=12).count()
+    assert many < few
 
 
 def test_ann_ivf_recall(spark, emb):
@@ -85,8 +90,8 @@ def test_ann_ivf_recall(spark, emb):
     from map_reduce_lite_spark.ops.similarity import ann_ivf_topk
 
     queries = emb.filter(F.col("vec_id") < 20)
-    exact = brute_force_topk(emb, queries, k=TOP_K).collect()
-    approx = ann_ivf_topk(emb, queries, k=TOP_K).collect()
+    exact = brute_force_topk(emb, queries).collect()
+    approx = ann_ivf_topk(emb, queries).collect()
 
     exact_sets = {}
     for r in exact:
@@ -103,7 +108,7 @@ def test_ann_ivf_every_query_answered(spark, emb):
     from map_reduce_lite_spark.ops.similarity import ann_ivf_topk
 
     queries = emb.filter(F.col("vec_id") < 8)
-    got = ann_ivf_topk(emb, queries, k=TOP_K).collect()
+    got = ann_ivf_topk(emb, queries).collect()
     per_query = {}
     for r in got:
         per_query.setdefault(r["query_id"], []).append(r["rank"])

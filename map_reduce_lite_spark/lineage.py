@@ -18,11 +18,17 @@ Spark's own setting rather than per call:
   reliable ``checkpoint()`` — the materialization survives executor
   loss, the posture for long iterative jobs where that is routine.
 
-``eager=False`` marks a frame for truncation WITHOUT spending a job on
-it — the next action that touches it materializes and truncates as a
-side effect. Driver-side per-action overhead dominates iterative ops on
-small state, so each call site picks eager or lazy by measurement (the
-numbers live in the call-site comments).
+``eager=False`` marks a frame for truncation without an action of its
+own; the next action that touches it materializes and truncates it.
+The mark is not free under adaptive query execution, which the
+engine's session turns on: the shuffle stages below a lazy mark run as
+jobs when the mark is made, inside the builder, and only the rest waits
+for the action (measured at sf0.001 on 4 cores: the
+``graph_label_propagation`` builder runs 16-17 of the query's 19-20
+jobs with AQE on, 2 of 3 with it off; tests/test_lineage.py pins that
+the builder runs jobs). So a lazy mark over a shuffle saves a job only
+where AQE is off, and each call site picks eager or lazy by measurement
+on the session it runs on.
 """
 
 from __future__ import annotations

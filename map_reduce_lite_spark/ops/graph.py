@@ -102,11 +102,11 @@ def connected_components(
     connected_components.last_rounds = 0
     hb = _HardBarrier(edges.sparkSession, "mrl_cc_barrier")
     # ONE execution of the upstream plan; 16-byte rows (ids only).
-    # eager=False (r13): the loop's initial fingerprint action
-    # materializes base AND e in one job instead of paying a separate
-    # up-front job for base (guide §1.2 — fewer driver actions; the
-    # only pre-loop consumer of base is e, and nodes is consumed by the
-    # final labeling join, long after the loop materialized base).
+    # eager=False (r13) was chosen so the loop's first fingerprint
+    # action would materialize base AND e in one job. Under AQE it does
+    # not: the shuffle stages below each lazy mark run as jobs when the
+    # mark is made (lineage.py), so only the last stage waits for that
+    # action.
     base = materialize(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), eager=False
     )
@@ -118,7 +118,8 @@ def connected_components(
         .union(base.select(F.col("b").alias("node")))
         .distinct()
     )
-    # lazy mark: the loop's first convergence action materializes it
+    # lazy mark: its distinct shuffle runs now under AQE (lineage.py);
+    # the loop's first convergence action finishes the checkpoint
     e = materialize(base.filter(F.col("a") != F.col("b")).distinct(), eager=False)
     try:
         stars = _cc_loop(e, hb, max_iter)
@@ -223,8 +224,10 @@ def _cc_loop(e: DataFrame, hb: _HardBarrier, max_iter: int) -> DataFrame:
     more than the saved actions on every interleaved A/B draw), so
     every round is checked.
 
-    Each round's edge set is marked lazily; the convergence action
-    materializes it, so lineage stays truncated round to round."""
+    Each round's edge set is marked lazily, so lineage stays truncated
+    round to round. Under AQE the round's shuffle stages run when the
+    mark is made and the convergence action finishes the checkpoint
+    (lineage.py)."""
     prev_fp = _cc_fingerprint(e)
     for it in range(1, max_iter + 1):
         e_next = materialize(_cc_one_round(e), eager=False)
@@ -510,10 +513,11 @@ def triangle_parts(
         edges = copurchase_edges(li)
     oriented = orient_edges(edges.select("u", "v"))
     # SF-proportional materialization (reliable under a session
-    # checkpoint dir — see lineage.py). eager=False (r12): the triangle
-    # enumeration is ONE action; a lazy mark lets that action materialize the oriented list on first use
-    # and share it across all three join references, instead of paying
-    # a separate up-front job (guide §1.2 — fewer driver actions).
+    # checkpoint dir — see lineage.py). The checkpoint shares the
+    # oriented list across all three join references. eager=False (r12)
+    # was chosen to fold its up-front job into the one enumeration
+    # action; under AQE the shuffle stages below the mark still run as
+    # jobs in the builder (lineage.py).
     oriented = materialize(oriented, eager=False)
     # merge-join hint: the edge list is a borderline-broadcastable few
     # tens of MB at test scale, and AQE happily broadcasts it — building
@@ -605,12 +609,13 @@ def label_propagation_parts(
         )
         edges = copurchase_edges(li)
     fwd = edges.select("u", "v")
-    # eager=False throughout (r12): LPA_ROUNDS is a constant and the
-    # query has exactly ONE terminal action, so lazy checkpoint marks
-    # keep lineage truncated (each round's plan starts from the
-    # previous round's LogicalRDD) while folding what used to be
-    # 1 + LPA_ROUNDS separate materialization jobs into the terminal
-    # action — the r10 per-action driver-cost lesson applied here.
+    # eager=False throughout (r12): lazy checkpoint marks keep lineage
+    # truncated (each round's plan starts from the previous round's
+    # LogicalRDD). They were chosen to fold 1 + LPA_ROUNDS
+    # materialization jobs into the one terminal action, but under AQE
+    # each mark runs its shuffle stages as jobs in the builder
+    # (lineage.py; pinned in tests/test_lineage.py), so the builder,
+    # not the action, pays for the rounds.
     e = materialize(
         fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         eager=False,
@@ -719,10 +724,11 @@ def kcore_parts(
         edges = copurchase_edges(li)
     fwd = edges.select("u", "v")
     # eager=False throughout (r12): fixed KCORE_ROUNDS and one terminal
-    # action — lazy checkpoint marks truncate lineage identically but
-    # fold 1 + KCORE_ROUNDS materialization jobs into the final action
-    # (each round's edge set is still cached on first use and shared by
-    # the degree agg + both semi-joins of the next round).
+    # action. Each round's edge set is checkpointed once and shared by
+    # the degree agg + both semi-joins of the next round. The marks
+    # were chosen to fold 1 + KCORE_ROUNDS materialization jobs into the
+    # final action; under AQE each mark's shuffle stages run as jobs in
+    # the builder instead (lineage.py).
     e = materialize(
         fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         eager=False,

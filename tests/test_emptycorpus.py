@@ -79,6 +79,8 @@ _EMPTY_SUBSET = [
     "dedup_components",            # iterative graph over zero pairs
     "dedup_cluster_sizes",         # components consumer
     "similarity_knn_graph",        # banded ANN over zero vectors
+    "similarity_ann_ivf",          # nearest-centroid kernel, zero centroids
+    "similarity_ann_ivf_scaled",   # stride floor(sqrt(0)) never evaluated
     "text_vocab_coverage",         # the r10 NULL fan-out fix
     "text_fertility_by_lang",      # NULLIF strata
     # router over zero clusters — slow: DuckDB PLANNING of the recursive
@@ -309,6 +311,7 @@ _TIES_SUBSET = [
     "sessionize_events",      # 100 events, one user, one timestamp
     "events_user_paths",      # transition paths under total ts ties
     "heavy_hitters_tokens",   # one token with count 100x
+    "similarity_ann_ivf",     # 100 identical vectors: every cosine ties
 ]
 
 

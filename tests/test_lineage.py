@@ -78,3 +78,24 @@ def test_reliable_checkpoint_matches_local(spark, reliable_checkpoint, module, n
         ck = Counter(tuple(r) for r in build(spark, SF_SMALL).collect())
     assert plain == ck
     assert_reliable_written(ckdir)
+
+
+def test_lazy_marks_run_jobs_in_the_lpa_builder(spark):
+    """A lazy mark is not free under AQE: building
+    ``graph_label_propagation`` (lazy marks only, no action of its own)
+    already runs jobs, because each mark executes the shuffle stages
+    below it when it is made (lineage.py)."""
+    import uuid
+
+    import __spark_entry__ as e
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    sc = spark.sparkContext
+    group = f"lpa-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "graph_label_propagation builder")
+    try:
+        e.queries()["graph_label_propagation"](spark, SF_SMALL)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1

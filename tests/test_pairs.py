@@ -30,25 +30,35 @@ def test_salted_split_only_in_pairs_module():
     assert offenders == []
 
 
-# each Spark-side scoring fragment → the similarity.py helpers allowed to
-# write it out; the SQL twins spell these names inside oracle strings,
-# never as these calls
+# each Spark-side scoring fragment → the similarity.py functions allowed
+# to write it out; the SQL twins spell these names inside oracle strings,
+# never as these calls. The last entry is the numpy twin of ``_dot``
+# (and any numpy dot product, which BLAS would not keep bit-identical):
+# only the nearest-centroid kernel computes cosines in Python.
 _SCORING_OWNERS = [
     (r"_norm\(F\.col\(", {"_vectors", "cosine"}),
     (r"F\.sqrt\(_dot\(", {"_norm"}),
     (r'\.alias\("sim_e9"\)', {"sim_e9"}),
     (r"posexplode\(lsh_band_hashes\(", {"lsh_band_rows"}),
+    (
+        r"\bnp_dot\(|\bnp\.(dot|einsum|inner|matmul|tensordot|vdot)\(",
+        {"nearest_centroid"},
+    ),
 ]
 
 
-def _innermost_def(tree: ast.AST, line: int) -> str | None:
-    spans = [
-        (n.end_lineno - n.lineno, n.name)
-        for n in ast.walk(tree)
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-        and n.lineno <= line <= n.end_lineno
-    ]
-    return min(spans)[1] if spans else None
+def _top_level_def(tree: ast.Module, line: int) -> str | None:
+    """The module-level function whose body holds ``line`` (nested
+    helpers belong to the function that defines them)."""
+    return next(
+        (
+            n.name
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and n.lineno <= line <= n.end_lineno
+        ),
+        None,
+    )
 
 
 @pytest.mark.parametrize(
@@ -56,7 +66,8 @@ def _innermost_def(tree: ast.AST, line: int) -> str | None:
 )
 def test_exact_cosine_scoring_only_in_its_helper(pattern, owners):
     """One vector side, one norm, one ``sim_e9`` formatter, one band-row
-    projection: each fragment appears only inside its helper."""
+    projection, one numpy cosine kernel: each fragment appears only
+    inside its function."""
     owned, offenders = [], []
     for p in sorted(PKG.rglob("*.py")):
         text = p.read_text()
@@ -67,7 +78,7 @@ def test_exact_cosine_scoring_only_in_its_helper(pattern, owners):
         for i in hits:
             where = f"{p.relative_to(PKG.parent)}:{i}"
             in_owner = p == PKG / "ops" / "similarity.py" and (
-                _innermost_def(tree, i) in owners
+                _top_level_def(tree, i) in owners
             )
             (owned if in_owner else offenders).append(where)
     assert offenders == []

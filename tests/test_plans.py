@@ -269,8 +269,10 @@ def test_no_cartesian_product_anywhere(spark):
         "q11_important_parts",  # global-scalar HAVING compare
         "q15_top_supplier",     # max-equality scalar compare
         "q22_idle_rich_customers",  # 1-row global-average scalar compare
-        "similarity_ann_ivf",   # broadcast centroid table (k rows)
-        "similarity_ann_ivf_scaled",  # same shape, sqrt(n)-sized centroids
+        # probe side: the 8-row query set × the centroid table (k rows;
+        # sqrt(n) rows when scaled); corpus assignment is a MapInArrow
+        "similarity_ann_ivf",
+        "similarity_ann_ivf_scaled",
         # coarse stage of the rerank funnel: broadcast QUERY side scores
         # all candidates on projected dims by design (composes with
         # IVF/LSH blocking at scale); the exact stage is equi-joined
@@ -323,6 +325,21 @@ def test_no_cartesian_product_anywhere(spark):
         if "BroadcastNestedLoopJoin" in plan and name not in allowed_bnlj:
             failures.append((name, "BroadcastNestedLoopJoin"))
     assert not failures, failures
+
+
+@pytest.mark.parametrize("name", ["similarity_ann_ivf", "similarity_ann_ivf_scaled"])
+def test_ivf_assignment_is_one_arrow_pass(spark, name):
+    """IVF assignment is one MapInArrow over the corpus (the batched
+    nearest-centroid kernel), not a corpus × centroid nested-loop join;
+    the one BroadcastNestedLoopJoin left is the query × centroid probe.
+    Counted in the executed (final adaptive) plan."""
+    df = _q(spark, name)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, plan
+    assert final.count("MapInArrow") == 1, final
+    assert final.count("BroadcastNestedLoopJoin") == 1, final
 
 
 def test_jsd_vocab_topk_no_full_broadcast(spark):

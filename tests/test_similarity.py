@@ -117,6 +117,141 @@ def test_ann_ivf_every_query_answered(spark, emb):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
+def _jvm_assign(corpus, cent):
+    """The JVM assignment expression ``nearest_centroid`` replaced: every
+    (vector, centroid) ``_pair_cos``, then the argmax over (csim, -cid)."""
+    from map_reduce_lite_spark.ops.similarity import _pair_cos, _vectors
+
+    return (
+        _vectors(corpus, "neighbor_id", "c")
+        .crossJoin(F.broadcast(cent))
+        .select("neighbor_id", "cid", _pair_cos("c", "cent").alias("csim"))
+        .groupBy("neighbor_id")
+        .agg(
+            F.max_by(
+                "cid", F.struct(F.col("csim"), (-F.col("cid")).alias("ncid"))
+            ).alias("cid")
+        )
+    )
+
+
+def _assign_case(name):
+    """(corpus rows, centroid rows) of (id, vector) for one parity case."""
+    rng = np.random.default_rng(sum(map(ord, name)))
+    dim = 16
+
+    def vec():
+        return rng.standard_normal(dim).astype(np.float32).tolist()
+
+    corpus = [(i, vec()) for i in range(300)]
+    cent = [(1000 + 7 * j, vec()) for j in range(20)]
+    if name == "duplicate_centroids":
+        # exact ties: three vectors, each the centroid of three cids
+        cent = [(1000 + j, cent[j % 3][1]) for j in range(9)]
+        corpus += [(500 + j, v) for j, (_, v) in enumerate(cent)]
+    elif name == "identical_corpus":
+        corpus = [(i, corpus[0][1]) for i in range(100)]
+        cent = corpus[::10]
+    elif name == "nan_element":
+        corpus[3][1][5] = float("nan")
+        cent[4][1][2] = float("nan")
+    elif name == "null_embedding":
+        corpus[3] = (3, None)
+        cent[4] = (cent[4][0], None)
+    elif name == "null_element":
+        corpus[3][1][5] = None
+        cent[4][1][2] = None
+    elif name == "ragged_length":
+        corpus[3] = (3, corpus[3][1][:-1])
+        corpus[4] = (4, corpus[4][1] + [1.0])
+        cent[4] = (cent[4][0], cent[4][1] + [0.5])
+        corpus.append((900, []))
+    elif name == "single_centroid":
+        cent = cent[:1]
+    elif name == "zero_norm":
+        corpus[3] = (3, [0.0] * dim)
+    return corpus, cent
+
+
+def _assign_frames(spark, name):
+    """(corpus, ``_vectors`` centroid side) frames of one parity case."""
+    from map_reduce_lite_spark.ops.similarity import _vectors
+
+    rows, cent_rows = _assign_case(name)
+    schema = "vec_id long, embedding array<float>"
+    cent = spark.createDataFrame(cent_rows, schema)
+    return spark.createDataFrame(rows, schema), _vectors(cent, "cid", "cent")
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "random",
+        "duplicate_centroids",
+        "identical_corpus",
+        "nan_element",
+        "null_embedding",
+        "null_element",
+        "ragged_length",
+        "single_centroid",
+    ],
+)
+@pytest.mark.parametrize("block", [None, 3])
+def test_nearest_centroid_matches_jvm_argmax(spark, monkeypatch, name, block):
+    """The Arrow-batched kernel assigns every vector to the same centroid
+    as the JVM expression it replaced, edges included, and carries the
+    vector and the bit-identical ``_norm`` along. ``block`` 3 splits the
+    centroids into many blocks, so the running argmax merges ties and
+    NaNs across blocks too."""
+    from map_reduce_lite_spark.ops import similarity
+    from map_reduce_lite_spark.ops.similarity import _vectors, nearest_centroid
+
+    if block:
+        monkeypatch.setattr(similarity, "_CENT_BLOCK", block)
+
+    corpus, cent = _assign_frames(spark, name)
+    want = sorted(tuple(r) for r in _jvm_assign(corpus, cent).collect())
+    got = nearest_centroid(corpus, cent).collect()
+    assert sorted((r["neighbor_id"], r["cid"]) for r in got) == want
+    norms = {
+        r["neighbor_id"]: repr((r["c_vec"], r["c_norm"]))
+        for r in _vectors(corpus, "neighbor_id", "c").collect()
+    }
+    assert {r["neighbor_id"]: repr((r["c_vec"], r["c_norm"])) for r in got} == norms
+
+
+def test_nearest_centroid_zero_norm_division(spark):
+    """A zero-norm vector makes the cosine divide by zero: DIVIDE_BY_ZERO
+    under ANSI mode, as the JVM expression raises; a null cosine (so the
+    smallest cid) with ANSI off."""
+    from pyspark.errors import PySparkException
+
+    from map_reduce_lite_spark.ops.similarity import nearest_centroid
+
+    corpus, cent = _assign_frames(spark, "zero_norm")
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    for build in (_jvm_assign, nearest_centroid):
+        with pytest.raises(PySparkException, match="DIVIDE_BY_ZERO"):
+            build(corpus, cent).collect()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = sorted(tuple(r) for r in _jvm_assign(corpus, cent).collect())
+        got = nearest_centroid(corpus, cent).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+    assert sorted((r["neighbor_id"], r["cid"]) for r in got) == want
+    assert dict(want)[3] == min(r["cid"] for r in cent.collect())
+
+
+def test_nearest_centroid_empty_sides(spark):
+    """No centroids or no vectors: no rows, as the cross join gave."""
+    from map_reduce_lite_spark.ops.similarity import nearest_centroid
+
+    corpus, cent = _assign_frames(spark, "random")
+    assert nearest_centroid(corpus, cent.limit(0)).count() == 0
+    assert nearest_centroid(corpus.limit(0), cent).count() == 0
+
+
 def test_rerank_funnel_recall_and_exactness(spark):
     """The projected-coarse -> exact-rerank funnel: recall@5 vs the
     exact baseline >= 0.8 at the pinned (RP_DIM=32, factor=16) config,

@@ -132,7 +132,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; contaminated-doc detection is a semi-join-shaped groupBy
     on ids only, never on text."""
     d = load_table(spark, sf_dir, "documents")
-    sh = shingles(d, "doc_id", "text")
+    sh = shingles(d)
     bench = F.broadcast(
         sh.join(
             d.filter(F.col("doc_id") % HOLDOUT_MOD == 0).select(

@@ -96,9 +96,9 @@ def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-             k: int = SHINGLE_SIZE) -> DataFrame:
-    """(doc, shingle) — distinct word k-shingles via lead() windows.
+def shingles(df: DataFrame) -> DataFrame:
+    """(doc, shingle) — distinct word SHINGLE_SIZE-shingles of
+    ``(doc_id, text)`` rows via lead() windows.
 
     Cost shape: the only shuffle of full rows is the doc repartition in
     ``_tokens`` (small pre-explode rows); the lead() window then sorts
@@ -106,12 +106,13 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     3× faster than the explode-free transform/element_at array
     formulation (element_at per shingle is slower than codegen'd lead
     over pipelined tokens)."""
-    toks = _tokens(df, id_col, text_col)
+    toks = _tokens(df, "doc_id", "text")
     w = Window.partitionBy("doc").orderBy("pos")
-    parts = [F.col("token")] + [F.lead("token", i).over(w) for i in range(1, k)]
+    nxt = range(1, SHINGLE_SIZE)
+    parts = [F.col("token")] + [F.lead("token", i).over(w) for i in nxt]
     sh = toks.select("doc", F.concat_ws(" ", *parts).alias("shingle"),
-                     *[F.lead("token", i).over(w).alias(f"_t{i}") for i in range(1, k)])
-    sh = sh.filter(F.col(f"_t{k-1}").isNotNull()).select("doc", "shingle")
+                     *[F.lead("token", i).over(w).alias(f"_t{i}") for i in nxt])
+    sh = sh.filter(F.col(f"_t{SHINGLE_SIZE - 1}").isNotNull()).select("doc", "shingle")
     return sh.distinct()
 
 
@@ -141,28 +142,20 @@ GROUP BY 1
 # N-gram Jaccard pair scoring
 # --------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = JACCARD_THRESHOLD,
-    df_cap: int = SHINGLE_DF_CAP,
-) -> DataFrame:
-    """Near-dup pairs with word-3-shingle Jaccard ≥ ``threshold``.
-
-    inverted-index self-join: shuffle by shingle, integer pair counts,
-    jaccard = |∩| / (|A| + |B| - |∩|). Division of identical ints →
-    bit-identical doubles vs the oracle. Shingles in more than
-    ``df_cap`` documents are dropped from the index before the
-    self-join (see SHINGLE_DF_CAP) — set sizes stay uncapped."""
-    sh = shingles(docs, id_col, text_col).cache()
+def _shingle_overlap(docs: DataFrame) -> DataFrame:
+    """(doc1, doc2, n_inter, n1, n2) for every doc pair doc1 < doc2
+    sharing a shingle: |∩| from the DF-capped inverted-index self-join
+    (shuffle by shingle, integer pair counts), n1/n2 the FULL shingle
+    set sizes. Shingles in more than SHINGLE_DF_CAP documents (read at
+    call time) are dropped from the index before the self-join."""
+    sh = shingles(docs).cache()
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
     # posting-list bound: the self-join only ever sees shingles whose
-    # document frequency is ≤ df_cap
+    # document frequency is ≤ the cap
     capped = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= df_cap)
+        .filter(F.col("df") <= SHINGLE_DF_CAP)
         .select("shingle")
         .join(sh, "shingle")
     )
@@ -174,9 +167,20 @@ def ngram_jaccard_pairs(
     )
     sz1 = sizes.select(F.col("doc").alias("doc1"), F.col("n_shingles").alias("n1"))
     sz2 = sizes.select(F.col("doc").alias("doc2"), F.col("n_shingles").alias("n2"))
+    return inter.join(sz1, "doc1").join(sz2, "doc2")
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
+) -> DataFrame:
+    """Near-dup pairs with word-3-shingle Jaccard ≥ ``threshold``.
+
+    jaccard = |∩| / (|A| + |B| - |∩|) over ``_shingle_overlap``'s
+    DF-capped counts. Division of identical ints → bit-identical
+    doubles vs the oracle."""
     jac = F.col("n_inter") / (F.col("n1") + F.col("n2") - F.col("n_inter"))
     return (
-        inter.join(sz1, "doc1").join(sz2, "doc2")
+        _shingle_overlap(docs)
         .select("doc1", "doc2", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
@@ -251,29 +255,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard candidate machinery, it just divides by |A| instead of
     |A∪B|. Division of identical ints → bit-identical doubles vs the
     oracle."""
-    d = load_table(spark, sf_dir, "documents")
-    sh = shingles(d).cache()
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-    capped = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= SHINGLE_DF_CAP)
-        .select("shingle")
-        .join(sh, "shingle")
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(F.col("a.doc").alias("doc1"), F.col("b.doc").alias("doc2"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sz1 = sizes.select(F.col("doc").alias("doc1"), F.col("n_shingles").alias("n1"))
-    sz2 = sizes.select(F.col("doc").alias("doc2"), F.col("n_shingles").alias("n2"))
-    both = inter.join(sz1, "doc1").join(sz2, "doc2")
+    both = _shingle_overlap(load_table(spark, sf_dir, "documents"))
     # r12: the two directed ratios used to be a unionAll of two
     # projections of `both` — and a union does not share its branches'
     # common subtree, so the inverted-index self-join (the expensive
@@ -369,8 +351,6 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = NUM_MINHASHES) -> DataFr
 
 def minhash_band_sigs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bands: int = MINHASH_BANDS,
     rows: int = MINHASH_ROWS,
 ) -> DataFrame:
@@ -380,7 +360,7 @@ def minhash_band_sigs(
     per ingested batch and stored; an incremental refresh band-joins
     the delta's signatures against it instead of re-scanning the
     corpus (see ops/snapshot.py::dedup_incremental_minhash)."""
-    sigs = minhash_signatures(shingles(docs, id_col, text_col), bands * rows)
+    sigs = minhash_signatures(shingles(docs), bands * rows)
     band_structs = F.array(
         *[
             F.struct(
@@ -399,8 +379,6 @@ def minhash_band_sigs(
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bands: int = MINHASH_BANDS,
     rows: int = MINHASH_ROWS,
 ) -> DataFrame:
@@ -413,7 +391,7 @@ def minhash_lsh_pairs(
     (16×8) is the production setting with recall ≥ 0.9 at J ≥ 0.8
     (property-tested). Only band-signature equi-joins — candidate work is
     quadratic only within a colliding bucket, never corpus-wide."""
-    banded = minhash_band_sigs(docs, id_col, text_col, bands, rows)
+    banded = minhash_band_sigs(docs, bands, rows)
     # materialize ONCE before the self-join: the shingle + k-minhash
     # aggregation above is the dominant cost, and Spark plans each join
     # side independently (no ReusedExchange here) — without this the

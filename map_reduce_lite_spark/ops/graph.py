@@ -22,13 +22,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from map_reduce_lite_spark.lineage import _HardBarrier, materialize
+from map_reduce_lite_spark.lineage import materialize
 
-# Truncation cadence of the iterative loops (see the connected_components
-# and pagerank docstrings for the measurements behind each number).
-CC_HARD_BARRIER_EVERY = 8
+# Truncation cadence of pagerank (see its docstring for the measurements).
 PR_CHECKPOINT_EVERY = 20
-PR_HARD_BARRIER_EVERY = 80
 
 
 def connected_components(
@@ -76,16 +73,9 @@ def connected_components(
 
     CHECKPOINT EVERY ROUND (r7): the convergence check is an action,
     so each round's edge set is materialized — otherwise every round
-    re-executes the whole chain. HARD PARQUET BARRIER every
-    CC_HARD_BARRIER_EVERY rounds (r9): localCheckpoint
-    truncates the visible plan but a generation-linked driver-side
-    cost still leaks through checkpoint boundaries in Spark 4.1 when
-    the checkpointed frame feeds multiple self-join references
-    (measured: per-round wall time doubling from ~round 18, 0.4 s →
-    70 s, with the Spark jobs themselves at ~45 ms); a parquet
-    write+read every 8 rounds gives a truly fresh scan lineage and
-    flat per-round cost. Barrier placement and lifecycle are
-    ``_HardBarrier``'s (map_reduce_lite_spark/lineage.py).
+    re-executes the whole chain. No parquet barrier: each round
+    references the previous edge set once, and per-round cost measured
+    flat over 80 forced rounds without one (SCALE.md r9 addendum).
 
     SINGLE UPSTREAM EXECUTION (r12 optimization): the caller's edge
     plan (for the dedup family: the whole LSH band join + cosine
@@ -100,7 +90,6 @@ def connected_components(
     # reset the diagnostic at entry so a call that fails before its
     # first round can't leave a previous call's stale value behind
     connected_components.last_rounds = 0
-    hb = _HardBarrier(edges.sparkSession, "mrl_cc_barrier")
     # ONE execution of the upstream plan; 16-byte rows (ids only).
     # eager=False (r13) was chosen so the loop's first fingerprint
     # action would materialize base AND e in one job. Under AQE it does
@@ -121,12 +110,7 @@ def connected_components(
     # lazy mark: its distinct shuffle runs now under AQE (lineage.py);
     # the loop's first convergence action finishes the checkpoint
     e = materialize(base.filter(F.col("a") != F.col("b")).distinct(), eager=False)
-    try:
-        stars = _cc_loop(e, hb, max_iter)
-    except BaseException:
-        hb.abort()
-        raise
-    stars = hb.finalize(stars)
+    stars = _cc_loop(e, max_iter)
     # star forest -> labels; roots and isolated nodes label themselves.
     # min() is defensive: at the checked fixpoint each child has one root
     comp = stars.groupBy(F.col("a").alias("node")).agg(
@@ -205,10 +189,9 @@ def _cc_fingerprint(df: DataFrame) -> tuple:
     return tuple(df.agg(*[F.expr(c) for c in _CC_FP_COLS]).first())
 
 
-def _cc_loop(e: DataFrame, hb: _HardBarrier, max_iter: int) -> DataFrame:
-    """The alternating-star iteration of ``connected_components`` —
-    split out so the barrier lifecycle (try/abort/finalize) reads
-    linearly. ``e`` is the deduplicated self-loop-free edge set; the
+def _cc_loop(e: DataFrame, max_iter: int) -> DataFrame:
+    """The alternating-star iteration of ``connected_components``.
+    ``e`` is the deduplicated self-loop-free edge set; the
     loop rewrites it until small_star(large_star(e)) == e (a star
     forest), then returns it.
 
@@ -237,9 +220,6 @@ def _cc_loop(e: DataFrame, hb: _HardBarrier, max_iter: int) -> DataFrame:
             return e_next  # f(x) == x under the dual certificate
         prev_fp = fp
         e = e_next
-        if it % CC_HARD_BARRIER_EVERY == 0:
-            # fresh scan lineage: see the hard-barrier note in the docstring
-            e = hb.barrier(e, f"r{it}")
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
         "raising instead of returning partial labels; raise max_iter "
@@ -267,28 +247,27 @@ def pagerank(
     DECIMAL(28,12), and the damping update is arithmetic on identical
     doubles — so a DuckDB oracle can replay the SAME fixed number of
     iterations bit-for-bit (unusual for an iterative algorithm —
-    localCheckpoint and the parquet barrier both round-trip doubles
-    exactly, so truncation points don't perturb the hash).
+    checkpoints round-trip doubles exactly, so truncation points don't
+    perturb the hash).
 
     Lineage bounding (r10): ``iterations`` is a caller parameter, so
-    the loop carries the same truncation machinery as
-    connected_components (``materialize`` every PR_CHECKPOINT_EVERY
-    rounds + the leak-free ``_HardBarrier`` parquet rewrite every
-    PR_HARD_BARRIER_EVERY) — but with deliberately COARSE cadences,
-    because the measurement came out differently here (SCALE.md r10):
+    the loop ``materialize``s every PR_CHECKPOINT_EVERY rounds — a
+    deliberately COARSE cadence, because the measurement came out
+    differently here than for connected_components (SCALE.md r10):
     each round references the previous ranks table exactly ONCE, so
     the lazy plan grows LINEARLY, not exponentially like cc's
     two-self-join shape — measured linear to 200 iterations on the
     6k-node percolation slice (30/60/100/200 rounds → 2.6/4.4/7.3/
     21.2 s, ~0.07 s/round marginal, no blow-up), and on KB-scale
     state every eager truncation costs MORE (a driver action + a
-    materialization) than the re-analysis it saves. The cadences are
+    materialization) than the re-analysis it saves. The cadence is
     therefore a CLUSTER posture, not a local-speed one: a bounded
     recompute window after executor loss (20 rounds max, vs replaying
     the whole run) and a bounded plan for the 1000-iteration caller.
+    No parquet barrier: each round references ``ranks`` once, and 100
+    iterations measured no slower without one (SCALE.md r10 addendum).
     At the registered iterations=3 nothing fires and the loop is
     bit-identical to the plain form (pinned by test)."""
-    hb = _HardBarrier(edges.sparkSession, "mrl_pr_barrier")
     e = materialize(
         edges.select(F.col(src).alias("esrc"), F.col(dst).alias("edst")).distinct(),
         eager=True,
@@ -301,34 +280,28 @@ def pagerank(
     )
     outdeg = e.groupBy("esrc").agg(F.count(F.lit(1)).alias("d"))
     ranks = nodes.withColumn("pr", F.lit(1.0))
-    try:
-        for it in range(iterations):
-            contribs = (
-                e.join(ranks, e.esrc == ranks.node)
-                .join(outdeg, "esrc")
-                .select(
-                    "edst",
-                    (F.col("pr") / F.col("d")).cast("decimal(28,12)").alias("c"),
-                )
+    for it in range(iterations):
+        contribs = (
+            e.join(ranks, e.esrc == ranks.node)
+            .join(outdeg, "esrc")
+            .select(
+                "edst",
+                (F.col("pr") / F.col("d")).cast("decimal(28,12)").alias("c"),
             )
-            mass = contribs.groupBy("edst").agg(
-                F.sum("c").cast("double").alias("mass")
-            )
-            ranks = nodes.join(mass, nodes.node == mass.edst, "left").select(
-                "node",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-                ).alias("pr"),
-            )
-            if (it + 1) % PR_CHECKPOINT_EVERY == 0 and it != iterations - 1:
-                ranks = materialize(ranks, eager=True)
-            if (it + 1) % PR_HARD_BARRIER_EVERY == 0 and it != iterations - 1:
-                ranks = hb.barrier(ranks, f"r{it + 1}")
-    except BaseException:
-        hb.abort()
-        raise
-    return hb.finalize(ranks)
+        )
+        mass = contribs.groupBy("edst").agg(
+            F.sum("c").cast("double").alias("mass")
+        )
+        ranks = nodes.join(mass, nodes.node == mass.edst, "left").select(
+            "node",
+            (
+                F.lit(1.0 - damping)
+                + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
+            ).alias("pr"),
+        )
+        if (it + 1) % PR_CHECKPOINT_EVERY == 0 and it != iterations - 1:
+            ranks = materialize(ranks, eager=True)
+    return ranks
 
 
 def dedup_survivors(pairs: DataFrame, all_ids: DataFrame, id_col: str) -> DataFrame:
@@ -596,11 +569,11 @@ def label_propagation_parts(
     Scale shape: each round is ONE join (edge list against the K-byte
     label table, shuffling on node id — the partitioning is reused
     round to round) + one (node, label) count agg + one per-node
-    argmax window over rows bounded by degree. Rounds are a fixed
-    constant; label tables are localCheckpoint'd so lineage stays
-    flat (the connected-components lesson). The per-node argmax is a
-    hash aggregate (max over (cnt, -lbl) structs — r13), so no sort
-    and no window at any degree distribution."""
+    argmax over rows bounded by degree. Rounds are a fixed
+    constant (LPA_ROUNDS), so the label tables are not cut; only the
+    edge list, which every round reads, is materialized. The per-node
+    argmax is an aggregate (max over (cnt, -lbl) structs — r13), so
+    no window at any degree distribution."""
     from map_reduce_lite_spark.relational.tables import load_table
 
     if edges is None:
@@ -609,13 +582,9 @@ def label_propagation_parts(
         )
         edges = copurchase_edges(li)
     fwd = edges.select("u", "v")
-    # eager=False throughout (r12): lazy checkpoint marks keep lineage
-    # truncated (each round's plan starts from the previous round's
-    # LogicalRDD). They were chosen to fold 1 + LPA_ROUNDS
-    # materialization jobs into the one terminal action, but under AQE
-    # each mark runs its shuffle stages as jobs in the builder
-    # (lineage.py; pinned in tests/test_lineage.py), so the builder,
-    # not the action, pays for the rounds.
+    # the one lineage cut: every round reads the edge list. Lazy, but
+    # under AQE its shuffle stages run as jobs in the builder
+    # (lineage.py; pinned in tests/test_lineage.py).
     e = materialize(
         fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         eager=False,
@@ -633,22 +602,21 @@ def label_propagation_parts(
         # r13: the per-round argmax is max(struct(cnt, -lbl)) — exactly
         # row_number()=1 under (cnt DESC, lbl ASC), since struct order
         # is lexicographic and lbl is unique within a node's rows — but
-        # as a HASH aggregate with map-side partial aggregation instead
-        # of a window: the per-partition sort of the (node, lbl) count
-        # stream is gone and rows collapse to one per node BEFORE the
-        # exchange (guide §2.3 aggregate-before-shuffle). Interleaved
-        # A/B at sf0.1: wall flat (old 5.9-7.0 s, new 5.6-6.7 s warm),
-        # identical communities every rep; the win is the removed
-        # per-round sort, which grows with degree at corpus scale.
-        labels = materialize(
+        # as an aggregate with map-side partial aggregation instead of a
+        # window: rows collapse to one per node BEFORE the exchange
+        # (guide §2.3 aggregate-before-shuffle). Interleaved A/B at
+        # sf0.1: wall flat (old 5.9-7.0 s, new 5.6-6.7 s warm),
+        # identical communities every rep. Spark plans a max over a
+        # struct as a SortAggregate (a struct buffer is not
+        # hash-aggregatable), so each side still sorts by node.
+        labels = (
             counts.groupBy("node")
             .agg(
                 F.max(
                     F.struct(F.col("cnt"), (-F.col("lbl")).alias("neg_lbl"))
                 ).alias("best")
             )
-            .select("node", (-F.col("best.neg_lbl")).alias("lbl")),
-            eager=False,
+            .select("node", (-F.col("best.neg_lbl")).alias("lbl"))
         )
     return (
         labels.groupBy(F.col("lbl").alias("community"))

@@ -93,9 +93,7 @@ def pretrain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = quality_lang_flags(d)
 
     survivors = flagged.filter("l_ok").select("doc_id", "source", "text", "n_tokens")
-    pairs = ngram_jaccard_pairs(
-        survivors, threshold=PIPELINE_JACCARD, df_cap=SHINGLE_DF_CAP
-    )
+    pairs = ngram_jaccard_pairs(survivors, threshold=PIPELINE_JACCARD)
     drops = pairs.select(F.col("doc2").alias("doc_id")).distinct()
     kept = survivors.join(drops, "doc_id", "left_anti")
 

@@ -107,16 +107,15 @@ def test_shingle_df_cap_engaged_value_parity(spark, dfcap_dir):
     assert all(d1 >= 100 for d1, _ in pairs), pairs
 
 
-def test_shingle_df_cap_engagement_is_semantic(spark, dfcap_dir):
+def test_shingle_df_cap_engagement_is_semantic(spark, dfcap_dir, monkeypatch):
     """The same corpus WITHOUT the cap emits the boiler pair — proof the
     capped sweep above exercised a live cap, not an identity."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import ngram_jaccard_pairs
 
+    monkeypatch.setattr(dedup, "SHINGLE_DF_CAP", 10**9)
     docs = spark.read.parquet(f"{dfcap_dir}/documents.parquet")
-    uncapped = {
-        (r.doc1, r.doc2)
-        for r in ngram_jaccard_pairs(docs, df_cap=10**9).collect()
-    }
+    uncapped = {(r.doc1, r.doc2) for r in ngram_jaccard_pairs(docs).collect()}
     assert (200, 201) in uncapped
     assert (100, 101) in uncapped
 

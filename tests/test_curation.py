@@ -123,7 +123,7 @@ def test_contamination_detects_planted_benchmark_copy(spark):
             "doc_id long, text string, source string",
         )
     )
-    sh = shingles(corpus, "doc_id", "text")
+    sh = shingles(corpus)
     bench = (
         sh.join(
             corpus.filter(F.col("doc_id") % HOLDOUT_MOD == 0).select(

@@ -187,11 +187,12 @@ def test_simhash_default_cap_does_not_perturb_testdata(spark, monkeypatch):
     assert capped == uncapped
 
 
-def test_ngram_df_cap_bounds_stop_shingle_blowup(spark):
+def test_ngram_df_cap_bounds_stop_shingle_blowup(spark, monkeypatch):
     """A stop-shingle shared by every document must NOT produce the
     |postings|² candidate explosion: with the DF cap active, documents
     whose only overlap is the ubiquitous boilerplate yield no pairs,
     while genuine near-dups (sharing many RARE shingles) still match."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import ngram_jaccard_pairs
 
     stop = "terms of service apply"  # 4 tokens → 2 shared 3-shingles
@@ -206,7 +207,8 @@ def test_ngram_df_cap_bounds_stop_shingle_blowup(spark):
     rows.append((101, f"{stop} {shared} tail"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    capped = ngram_jaccard_pairs(docs, threshold=0.3, df_cap=5)
+    monkeypatch.setattr(dedup, "SHINGLE_DF_CAP", 5)
+    capped = ngram_jaccard_pairs(docs, threshold=0.3)
     got = {(r["doc1"], r["doc2"]) for r in capped.collect()}
     assert (100, 101) in got, got  # rare-shingle near-dup survives
     # no pair among the 40 boilerplate-only docs (40*39/2 = 780 would
@@ -214,17 +216,18 @@ def test_ngram_df_cap_bounds_stop_shingle_blowup(spark):
     assert all(d1 >= 100 for d1, _ in got), got
 
 
-def test_ngram_df_cap_default_does_not_perturb_testdata(spark, duck):
+def test_ngram_df_cap_default_does_not_perturb_testdata(spark, duck, monkeypatch):
     """At the test SF max shingle DF is 9 < SHINGLE_DF_CAP, so capped
     results equal uncapped — pinning that the cap only removes
     pathological postings, not legitimate matches."""
+    from map_reduce_lite_spark.ops import dedup
     from map_reduce_lite_spark.ops.dedup import ngram_jaccard_pairs
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     capped = {(r["doc1"], r["doc2"]) for r in ngram_jaccard_pairs(docs).collect()}
+    monkeypatch.setattr(dedup, "SHINGLE_DF_CAP", 10**9)
     uncapped = {
-        (r["doc1"], r["doc2"])
-        for r in ngram_jaccard_pairs(docs, df_cap=10**9).collect()
+        (r["doc1"], r["doc2"]) for r in ngram_jaccard_pairs(docs).collect()
     }
     assert capped == uncapped
 

@@ -1,15 +1,13 @@
-"""Round-10 regressions: iterative-loop barrier lifecycle (leak-free),
+"""Round-10 regressions: the graph loops' lineage cuts write no files,
 pagerank lineage bounding, and ANSI-mode div-by-zero guards on
 degenerate corpora.
 
 The barrier-leak shape (r10 ADVICE): connected_components mkdtemp'd a
-directory on EVERY call — even when the 8-round barrier never fired —
-and never deleted barrier parquet files, accumulating across the
-176-query bench and any long-lived driver. The fix (_HardBarrier) is
-lazy-create / delete-previous / finalize-cleanup; these tests pin each
-leg of that lifecycle plus the error path. Barriers fire every
-graph.CC_HARD_BARRIER_EVERY / PR_HARD_BARRIER_EVERY rounds; tests that
-need one to fire on a small graph lower the constant with monkeypatch.
+directory on EVERY call and never deleted its parquet barrier files,
+accumulating across the 176-query bench and any long-lived driver.
+The parquet barrier is gone: ``lineage.materialize`` is the only cut
+in the graph loops, so a long connected_components run touches no
+temp directory and writes no parquet, locally or in reliable mode.
 """
 
 from __future__ import annotations
@@ -20,21 +18,28 @@ from pyspark.sql import functions as F
 from tests.conftest import assert_reliable_written
 
 
-def _barrier_leftovers(root) -> list:
-    """Barrier roots anywhere under ``root`` (in reliable mode they sit
-    inside Spark's per-context ``<dir>/<uuid>`` checkpoint subdir)."""
+def _engine_dirs(root) -> list:
+    """Engine-owned ``mrl_*`` directories anywhere under ``root`` (in
+    reliable mode Spark's own checkpoints sit inside its per-context
+    ``<dir>/<uuid>`` subdir)."""
     return sorted(root.rglob("mrl_*"))
 
 
 # --------------------------------------------------------------------------
-# _HardBarrier lifecycle
+# connected_components lineage cuts
 # --------------------------------------------------------------------------
 
 
-def test_cc_no_tempdir_when_barrier_unfired(spark, monkeypatch):
-    """A graph that converges inside CC_HARD_BARRIER_EVERY rounds must not
-    touch the filesystem at all (the pre-r10 code mkdtemp'd per call)."""
+def test_cc_no_tempdir_when_barrier_unfired(spark, reliable_checkpoint, monkeypatch):
+    """connected_components must not touch the filesystem beyond Spark's
+    own checkpoints (the pre-r10 code mkdtemp'd per call, and later
+    code wrote a parquet barrier every 8 rounds): not on a small graph,
+    and not on an id-shuffled 3000-path that runs more than 8 rounds,
+    locally or under a reliable checkpoint dir."""
+    import random
     import tempfile
+
+    from pyspark.sql import DataFrameWriter
 
     from map_reduce_lite_spark.ops import graph
 
@@ -45,22 +50,47 @@ def test_cc_no_tempdir_when_barrier_unfired(spark, monkeypatch):
         calls.append(k.get("prefix") or (a[0] if a else None))
         return real(*a, **k)
 
+    writes = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *a, **k):
+        writes.append(path)
+        return real_parquet(self, path, *a, **k)
+
     monkeypatch.setattr(tempfile, "mkdtemp", counting)
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
     edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["src", "dst"])
     out = {r["node"]: r["component"] for r in graph.connected_components(edges).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    assert calls == [], "barrier dir must be created lazily, on first fire only"
+    assert calls == [], "connected_components must not create temp dirs"
+
+    depth = 3000
+    ids = list(range(depth + 1))
+    random.Random(7).shuffle(ids)
+    path = spark.createDataFrame(
+        [(ids[i], ids[i + 1]) for i in range(depth)], "src long, dst long"
+    )
+
+    def components_of_path():
+        rows = graph.connected_components(path).collect()
+        assert len(rows) == depth + 1
+        assert {r.component for r in rows} == {0}
+        assert graph.connected_components.last_rounds > 8
+
+    components_of_path()
+    assert calls == [] and writes == []
+    with reliable_checkpoint() as ckdir:
+        components_of_path()
+        assert _engine_dirs(ckdir) == []
+        assert_reliable_written(ckdir)
+    assert calls == [] and writes == []
 
 
-def test_cc_barrier_files_cleaned_after_fire(spark, reliable_checkpoint, monkeypatch):
-    """Force the barrier to fire (chain graph, CC_HARD_BARRIER_EVERY=2)
-    in reliable mode, so barrier files go under the checkpoint dir: the
-    result must survive cleanup — finalize re-materializes off the last
-    parquet file before deleting the whole barrier subtree."""
-    from map_reduce_lite_spark.ops import graph
+def test_cc_reliable_mode_chain(spark, reliable_checkpoint):
+    """A 40-chain in reliable mode: the per-round cuts are reliable
+    checkpoints and the result reads back correctly from them."""
     from map_reduce_lite_spark.ops.graph import connected_components
 
-    monkeypatch.setattr(graph, "CC_HARD_BARRIER_EVERY", 2)
     n = 40
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["src", "dst"]
@@ -69,71 +99,7 @@ def test_cc_barrier_files_cleaned_after_fire(spark, reliable_checkpoint, monkeyp
         out = connected_components(edges)
         rows = {r["node"]: r["component"] for r in out.collect()}
     assert rows == {i: 0 for i in range(n + 1)}
-    # Spark's own reliable-checkpoint dirs remain (Spark convention,
-    # cleaned by spark.cleaner); OUR barrier subtrees must be gone.
-    assert connected_components.last_rounds >= 3, "barrier must have fired"
-    assert _barrier_leftovers(ckdir) == []
     assert_reliable_written(ckdir)
-
-
-def test_cc_barrier_tempdir_removed(spark, monkeypatch):
-    """Default (no checkpoint dir) path: the lazily-created temp dir is
-    removed once the result is detached."""
-    import tempfile
-
-    from map_reduce_lite_spark.ops import graph
-    from map_reduce_lite_spark.ops.graph import connected_components
-
-    monkeypatch.setattr(graph, "CC_HARD_BARRIER_EVERY", 2)
-    made = []
-    real = tempfile.mkdtemp
-
-    def recording(*a, **k):
-        d = real(*a, **k)
-        made.append(d)
-        return d
-
-    monkeypatch.setattr(tempfile, "mkdtemp", recording)
-    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], ["src", "dst"])
-    out = connected_components(edges)
-    assert out.count() == 41
-    import os
-
-    barrier_dirs = [d for d in made if "mrl_cc_barrier" in d]
-    assert barrier_dirs, "barrier must have fired on the 40-chain"
-    assert all(not os.path.exists(d) for d in barrier_dirs)
-
-
-def test_barrier_abort_on_error(spark, reliable_checkpoint):
-    """Error path: abort() removes the barrier subtree (rooted under the
-    session's checkpoint dir)."""
-    from map_reduce_lite_spark.lineage import _HardBarrier
-
-    with reliable_checkpoint() as ckdir:
-        hb = _HardBarrier(spark, "mrl_test_barrier")
-        df = spark.range(10)
-        df2 = hb.barrier(df, "r1")
-        assert df2.count() == 10
-        assert _barrier_leftovers(ckdir) != []
-        hb.abort()
-        assert _barrier_leftovers(ckdir) == []
-
-
-def test_barrier_keeps_only_last_file(spark, reliable_checkpoint):
-    """Each barrier write deletes the previous round's file."""
-    import os
-
-    from map_reduce_lite_spark.lineage import _HardBarrier
-
-    with reliable_checkpoint() as ckdir:
-        hb = _HardBarrier(spark, "mrl_test_barrier")
-        d1 = hb.barrier(spark.range(5), "r1")
-        d2 = hb.barrier(d1, "r2")
-        (root,) = _barrier_leftovers(ckdir)
-        assert sorted(os.listdir(root)) == ["r2"]
-        d3 = hb.finalize(d2)
-        assert d3.count() == 5
-        assert _barrier_leftovers(ckdir) == []
 
 
 # --------------------------------------------------------------------------
@@ -161,14 +127,13 @@ def _numpy_pagerank(edges: list[tuple[int, int]], iterations: int) -> dict[int, 
 
 
 def test_pagerank_deep_iterations_bounded(spark, reliable_checkpoint, monkeypatch):
-    """iterations=12 with PR_HARD_BARRIER_EVERY=4, in reliable mode:
-    values match the driver-side replay and no barrier storage survives
-    — the lineage class connected_components root-caused in r9, now
-    bounded here."""
+    """iterations=12 with PR_CHECKPOINT_EVERY=4, in reliable mode:
+    values match the driver-side replay, reliable cuts were written
+    and no engine-owned directory is left behind."""
     from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import pagerank
 
-    monkeypatch.setattr(graph, "PR_HARD_BARRIER_EVERY", 4)
+    monkeypatch.setattr(graph, "PR_CHECKPOINT_EVERY", 4)
     raw = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 1)]
     edges = spark.createDataFrame(raw, ["src", "dst"])
     with reliable_checkpoint() as ckdir:
@@ -177,14 +142,13 @@ def test_pagerank_deep_iterations_bounded(spark, reliable_checkpoint, monkeypatc
     assert got.keys() == want.keys()
     for n in want:
         assert got[n] == pytest.approx(want[n], rel=1e-9), n
-    assert _barrier_leftovers(ckdir) == []
+    assert _engine_dirs(ckdir) == []
     assert_reliable_written(ckdir)
 
 
 def test_pagerank_iter3_unchanged_by_truncation(spark, monkeypatch):
     """The registered query's semantics are invariant to the new
-    truncation points (localCheckpoint/parquet round-trip doubles
-    exactly): iterations=3 with and without per-round ckpt agree
+    truncation points (checkpoints round-trip doubles exactly): iterations=3 with and without per-round ckpt agree
     bit-for-bit."""
     from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import pagerank
@@ -192,10 +156,8 @@ def test_pagerank_iter3_unchanged_by_truncation(spark, monkeypatch):
     raw = [(1, 2), (2, 3), (3, 1), (4, 2)]
     edges = spark.createDataFrame(raw, ["src", "dst"])
     monkeypatch.setattr(graph, "PR_CHECKPOINT_EVERY", 10**9)
-    monkeypatch.setattr(graph, "PR_HARD_BARRIER_EVERY", 10**9)
     plain = {r["node"]: r["pr"] for r in pagerank(edges, iterations=3).collect()}
     monkeypatch.setattr(graph, "PR_CHECKPOINT_EVERY", 1)
-    monkeypatch.setattr(graph, "PR_HARD_BARRIER_EVERY", 2)
     bounded = {r["node"]: r["pr"] for r in pagerank(edges, iterations=3).collect()}
     assert plain == bounded  # exact float equality, deliberately
 

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, mirroring how a 100 TB vector corpus is actually served:
+Three paths, mirroring how a 100 TB vector corpus is actually served:
 
 - **brute-force top-k** (the exactness baseline): broadcast the query
   set, one narrow pass over the corpus computing cosine, per-query top-k
@@ -14,6 +14,11 @@ Two paths, mirroring how a 100 TB vector corpus is actually served:
   is deterministic; recall vs brute force is property-tested
   (tests/test_similarity.py), and the driver gets a rows-only check —
   banding hash order isn't portable SQL.
+- **IVF ANN** (the coarse-quantizer path): centroids and the query set
+  are pulled to the driver, which ranks each query's probes; one
+  Arrow-batched pass over the corpus assigns, probes and reranks, so
+  the only shuffle carries (query, neighbor, sim) candidates, never
+  corpus vectors (``ivf_scores``).
 
 Cosine determinism vs the DuckDB oracle: both sides cast each float
 element to double, multiply pairwise, and fold left-to-right
@@ -49,8 +54,9 @@ def _dot(a: Column, b: Column) -> Column:
     ``zip_with`` and ``aggregate`` are ``CodegenFallback`` expressions:
     whole-stage codegen runs them through the interpreter, one lambda
     call per element, so the cost is per pair, not per FLOP. Where the
-    pair count is n·C (IVF assignment), ``nearest_centroid`` scores
-    Arrow batches with a numpy twin of this fold instead. The twin is
+    pair count is n·C (IVF assignment), ``ivf_scores`` scores Arrow
+    batches with a numpy twin of this fold instead, and uses the same
+    twin for the IVF probe ranking and rerank. The twin is
     bit-identical because it performs the same IEEE operation sequence:
     each float element widened to double exactly, one rounded multiply
     per element pair, rounded adds left to right from 0.0 — separate
@@ -957,37 +963,50 @@ def sql_band_hashes(vec_expr: str, planes: list[list[float]], n_bands: int) -> l
 _CENT_BLOCK = 128  # centroids scored per step: temporaries stay batch rows × 128 doubles
 
 
-def nearest_centroid(corpus: DataFrame, cent: DataFrame) -> DataFrame:
-    """(``neighbor_id``, ``cid``, ``c_vec``, ``c_norm``): every ``corpus``
-    row (``vec_id``, ``embedding``) with the ``cid`` of its nearest
-    ``cent`` row (``cid``, ``cent_vec``), its own vector and its norm.
+def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFrame:
+    """(``query_id``, ``neighbor_id``, ``cid``, ``sim``): the IVF candidate
+    pairs with their exact cosine. ``corpus``, ``cent`` and ``queries``
+    are embedding rows (``vec_id``, ``embedding``); a centroid's ``cid``
+    is its ``vec_id``, the table's key.
 
-    "Nearest" is the argmax of ``_pair_cos`` under Spark's ordering of
-    ``max_by(cid, struct(csim, -cid))``: NaN above every number, null
-    below, the smaller ``cid`` on ties (±0.0 tie). The cosine's edges are
-    ``_pair_cos``'s: a null vector, a null element or a length mismatch
-    gives a null cosine (``zip_with`` pads with nulls); a zero divisor
-    raises DIVIDE_BY_ZERO under ANSI mode and gives null otherwise. A
-    row whose cosines are all null gets the smallest ``cid``. No rows
-    when ``cent`` is empty; one row per corpus row (``vec_id`` is the
-    table's key).
+    Every corpus row is assigned its nearest centroid (``cid``), every
+    query probes its ``N_PROBE`` nearest centroids, and a row pairs with
+    each query that probes its centroid, ``sim`` being
+    ``_pair_cos("q", "c")`` of the pair. Pairs of a row with itself
+    (``neighbor_id == query_id``) or with a null id are dropped; no rows
+    when ``cent`` is empty.
 
-    Scale shape: the centroid table is pulled to the driver once (the
-    bytes a broadcast would move anyway) and shipped with the task; the
-    corpus streams through one ``mapInArrow`` pass with no shuffle. Each
-    Arrow batch is scored against ``_CENT_BLOCK`` centroids at a time
-    with the numpy twin of ``_dot`` (bit-identical, see there), so the
-    per-batch memory stays bounded as C = √n grows. The kernel runs on
-    the corpus scan's own partitions: an 8-way ``_spread`` in front of
-    it made the 2,000-vector perfbench pass slower in 4 of 4 A/B pairs
-    (median warm-pass CPU 4.88 s vs 3.25 s on 4 vCPUs). The batch
-    function is self-contained (no references to this module), so it
-    pickles by value for executors without the engine on their path."""
+    "Nearest" ranks ``_pair_cos`` in Spark's window order ``csim DESC,
+    cid ASC`` (for one centroid, the ``max_by(cid, struct(csim, -cid))``
+    argmax): NaN above every number, null below, the smaller ``cid`` on
+    ties (±0.0 tie). The cosine's edges are ``_pair_cos``'s: a null
+    vector, a null element or a length mismatch gives a null cosine
+    (``zip_with`` pads with nulls); a zero divisor raises DIVIDE_BY_ZERO
+    from the action under ANSI mode and gives null otherwise.
+
+    Scale shape: the centroid table and the query set are pulled to the
+    driver in one job, so the query set must fit in driver memory. The
+    probes are ranked there and shipped with the task. The corpus
+    streams through one ``mapInArrow`` pass, with no shuffle: each Arrow
+    batch is assigned against ``_CENT_BLOCK`` centroids at a time with
+    the numpy twin of ``_dot`` (bit-identical, see there), so the
+    per-batch memory stays bounded as C = √n grows, then scored against
+    exactly the queries that probe its rows' centroids. Only those
+    candidates leave the pass. The kernel runs on the corpus scan's own
+    partitions: an 8-way ``_spread`` in front of the assignment made the
+    2,000-vector perfbench pass slower in 4 of 4 A/B pairs (median
+    warm-pass CPU 4.88 s vs 3.25 s on 4 vCPUs). The batch function is
+    self-contained (no references to this module), so it pickles by
+    value for executors without the engine on their path."""
     import numpy as np
 
     ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled").lower() == "true"
-    vec_type = corpus.schema["embedding"].dataType.simpleString()
-    block = _CENT_BLOCK
+    block, n_probe = _CENT_BLOCK, N_PROBE
+    div0 = (
+        "[DIVIDE_BY_ZERO] Division by zero: a zero-norm vector in the IVF "
+        'cosine. Set "spark.sql.ansi.enabled" to "false" to get a NULL '
+        "cosine instead. SQLSTATE: 22012"
+    )
 
     def np_dot(a, b):
         # _dot's operation sequence over the last axis, broadcast over
@@ -998,8 +1017,9 @@ def nearest_centroid(corpus: DataFrame, cent: DataFrame) -> DataFrame:
         return acc
 
     def by_length(vecs):
-        # {length: (row indices, rows × length doubles)} of the rows that
-        # have a cosine at all: a non-null list with no null element
+        # ({length: (row indices, rows × length doubles, norms)},
+        # (length, position in its group) per row) of the rows that have a
+        # cosine at all: a non-null list with no null element; -1 elsewhere
         off = vecs.offsets.to_numpy()
         bad = vecs.is_null().to_numpy(zero_copy_only=False)
         vals = vecs.values
@@ -1010,76 +1030,122 @@ def nearest_centroid(corpus: DataFrame, cent: DataFrame) -> DataFrame:
             bad = bad | (seen[off[1:]] != seen[off[:-1]])
         x = vals.to_numpy(zero_copy_only=False).astype(np.float64)
         lens = np.diff(off)
-        out = {}
+        groups, where = {}, np.full((2, len(vecs)), -1)
         for n in np.unique(lens[~bad]):
             rows = np.flatnonzero(~bad & (lens == n))
-            out[int(n)] = (rows, x[off[rows][:, None] + np.arange(n)])
-        return out
+            xs = x[off[rows][:, None] + np.arange(n)]
+            groups[int(n)] = (rows, xs, np.sqrt(np_dot(xs, xs)))
+            where[0, rows], where[1, rows] = n, np.arange(len(rows))
+        return groups, where
 
-    tab = cent.select("cid", "cent_vec").toArrow()
-    order = np.argsort(tab.column("cid").to_numpy(), kind="stable")
-    tab = tab.take(order)
-    cids = tab.column("cid").to_numpy()
-    cgroups = {
-        n: (rows, c, np.sqrt(np_dot(c, c)))
-        for n, (rows, c) in by_length(tab.column("cent_vec").combine_chunks()).items()
-    }
+    def divide(dot, div):
+        # _pair_cos's division and its validity: a zero divisor is
+        # DIVIDE_BY_ZERO under ANSI mode and a null otherwise
+        zero = div == 0
+        if ansi and zero.any():
+            raise ArithmeticError(div0)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return dot / div, ~zero
 
-    def nearest(x, xn, crows, c, cn):
-        # running (tier, value, index) argmax over the centroid blocks;
-        # tier 0 null < 1 number < 2 NaN, first index kept on ties
-        tier = np.zeros(len(x), int)
-        val = np.full(len(x), -np.inf)
-        idx = np.zeros(len(x), np.int64)
+    cols = ["vec_id", "embedding"]
+    tab = (
+        cent.select(F.lit(True).alias("is_cent"), *cols)
+        .unionByName(queries.select(F.lit(False).alias("is_cent"), *cols))
+        .toArrow()
+    )
+    is_cent = tab.column("is_cent").to_numpy(zero_copy_only=False)
+    ctab = tab.filter(is_cent)
+    ctab = ctab.take(np.argsort(ctab.column("vec_id").to_numpy(), kind="stable"))
+    cids = ctab.column("vec_id").to_numpy()
+    cgroups, _ = by_length(ctab.column("embedding").combine_chunks())
+    qtab = tab.filter(~is_cent)
+    qids = qtab.column("vec_id").combine_chunks()
+    qgroups, qwhere = by_length(qtab.column("embedding").combine_chunks())
+
+    def ranked(x, xn, group, n):
+        # each row's n nearest centroid indices (index order is cid order):
+        # NaN (tier 2) above numbers (tier 1) by value, then the smaller
+        # index; null cosines (tier 0) tie, so they fill the slots left
+        # with the smallest indices not ranked yet
+        crows, c, cn = group
+        k = min(n, len(cids))
+        tier = np.full((len(x), k), -1)
+        val = np.zeros((len(x), k))
+        idx = np.zeros((len(x), k), np.int64)
+
+        def keep(t, v, i):
+            o = np.lexsort((i, -v, -t), axis=-1)[:, :k]
+            return [np.take_along_axis(a, o, axis=-1) for a in (t, v, i)]
+
         for s in range(0, len(crows), block):
-            dot = np_dot(x[:, None, :], c[None, s : s + block, :])
-            div = xn[:, None] * cn[None, s : s + block]
-            zero = div == 0
-            if ansi and zero.any():
-                raise ArithmeticError(
-                    "[DIVIDE_BY_ZERO] Division by zero: a zero-norm vector in the "
-                    "nearest-centroid cosine. Set \"spark.sql.ansi.enabled\" to "
-                    "\"false\" to get a NULL cosine instead. SQLSTATE: 22012"
-                )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                q = dot / div
-            t = np.where(zero, 0, np.where(np.isnan(q), 2, 1))
-            bt = t.max(axis=1)
-            bv = np.where(t == 1, q, -np.inf).max(axis=1)
-            hit = (t == bt[:, None]) & ((bt[:, None] != 1) | (q == bv[:, None]))
-            up = (bt > tier) | ((bt == 1) & (tier == 1) & (bv > val))
-            tier = np.where(up, bt, tier)
-            val = np.where(up, bv, val)
-            idx = np.where(up, crows[s + hit.argmax(axis=1)], idx)
-        return idx
-
-    def assign(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if not len(cids):
-                continue
-            vecs = batch.column("embedding")
-            best = np.zeros(batch.num_rows, np.int64)
-            norm = np.zeros(batch.num_rows)
-            has_norm = np.zeros(batch.num_rows, bool)
-            for n, (rows, x) in by_length(vecs).items():
-                xn = np.sqrt(np_dot(x, x))
-                norm[rows], has_norm[rows] = xn, True
-                if n in cgroups:
-                    best[rows] = nearest(x, xn, *cgroups[n])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("vec_id"),
-                    pa.array(cids[best]),
-                    vecs,
-                    pa.array(norm, mask=~has_norm),
-                ],
-                names=["neighbor_id", "cid", "c_vec", "c_norm"],
+            q, ok = divide(
+                np_dot(x[:, None, :], c[None, s : s + block, :]),
+                xn[:, None] * cn[None, s : s + block],
             )
+            t = np.where(ok, np.where(np.isnan(q), 2, 1), -1)
+            tier, val, idx = keep(
+                np.hstack([tier, t]),
+                np.hstack([val, np.where(t == 1, q, 0.0)]),
+                np.hstack([idx, np.broadcast_to(crows[s : s + block], t.shape)]),
+            )
+        m = min(2 * k, len(cids))
+        fill = np.broadcast_to(np.arange(m), (len(x), m))
+        done = np.where(tier >= 0, idx, -1)
+        taken = (fill[:, :, None] == done[:, None, :]).any(axis=2)
+        return keep(
+            np.hstack([tier, np.where(taken, -1, 0)]),
+            np.hstack([val, np.zeros(fill.shape)]),
+            np.hstack([idx, fill]),
+        )[2]
+
+    # probed[centroid index, query index]; a query whose cosines are all
+    # null probes the smallest cids. A zero divisor under ANSI mode is
+    # raised by the action, like the corpus side's, not by this builder.
+    probed = np.zeros((len(cids), len(qids)), bool)
+    probed[:n_probe] = True
+    try:
+        for n, (rows, x, xn) in qgroups.items():
+            if n in cgroups:
+                probed[:, rows] = False
+                probed[ranked(x, xn, cgroups[n], n_probe), rows[:, None]] = True
+    except ArithmeticError:
+        probed = None
+
+    def score(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if probed is None:
+            raise ArithmeticError(div0)
+        if not probed.size:
+            return
+        for batch in batches:
+            groups, where = by_length(batch.column("embedding"))
+            best = np.zeros(batch.num_rows, np.int64)
+            for n, (rows, x, xn) in groups.items():
+                if n in cgroups:
+                    best[rows] = ranked(x, xn, cgroups[n], 1)[:, 0]
+            r, qi = np.nonzero(probed[best])
+            sim, ok = np.zeros(len(r)), np.zeros(len(r), bool)
+            for n, (rows, x, xn) in groups.items():
+                if n in qgroups:
+                    _, qx, qn = qgroups[n]
+                    p = np.flatnonzero((where[0, r] == n) & (qwhere[0, qi] == n))
+                    a, b = where[1, r[p]], qwhere[1, qi[p]]
+                    sim[p], ok[p] = divide(np_dot(qx[b], x[a]), qn[b] * xn[a])
+            out = pa.RecordBatch.from_arrays(
+                [
+                    qids.take(qi),
+                    batch.column("vec_id").take(r),
+                    pa.array(cids[best[r]]),
+                    pa.array(sim, mask=~ok),
+                ],
+                names=["query_id", "neighbor_id", "cid", "sim"],
+            )
+            yield out.filter(pc.not_equal(out.column(0), out.column(1)))
 
     return corpus.select("vec_id", "embedding").mapInArrow(
-        assign, f"neighbor_id long, cid long, c_vec {vec_type}, c_norm double"
+        score, "query_id long, neighbor_id long, cid long, sim double"
     )
 
 
@@ -1092,15 +1158,18 @@ def ann_ivf_topk(
     deterministic stand-in for offline k-means — the operator's plan is
     identical whatever trained the centroid set). Each corpus vector is
     assigned to its nearest centroid; a query probes only its N_PROBE
-    nearest centroids' lists, so the fine cosine pass touches ~N_PROBE/C
-    of the corpus instead of all of it.
+    nearest centroids' lists, so the exact rerank touches ~N_PROBE/C of
+    the corpus instead of all of it.
 
-    Scale shape (100 TB): centroids are tiny → pulled once / broadcast;
-    assignment is ONE narrow Arrow-batched pass (``nearest_centroid``:
-    no shuffle, no ×C row blowup, the n·C cosines as numpy folds rather
-    than interpreted per-pair JVM lambdas); at ingest the corpus is
-    written partitioned by cid, so probing is partition pruning, not a
-    join. The probe side and the rerank stay JVM expressions.
+    Scale shape (100 TB): the centroids and the query set are tiny →
+    pulled to the driver once, where the probes are ranked; assignment,
+    probe and exact rerank are ONE narrow Arrow-batched pass over the
+    corpus (``ivf_scores``: no corpus shuffle, no ×C row blowup, the
+    cosines as numpy folds rather than interpreted per-pair JVM
+    lambdas). The only shuffle is the top-k window's, and it carries the
+    (query, neighbor, sim) candidates, ~n·Q·N_PROBE/C rows of three
+    numbers, not the corpus vectors. At ingest the corpus is written
+    partitioned by cid, so probing is partition pruning, not a scan.
 
     ``stride`` MUST scale with the corpus: with a fixed stride the
     centroid count C = n/stride grows linearly and the assignment pass
@@ -1111,27 +1180,8 @@ def ann_ivf_topk(
     measured scaling (SCALE.md r6: 8× faster at 60k vectors, exponent
     0.40). The module default stays the oracle-pinned demo constant;
     callers at scale pass ``stride=int(sqrt(n))``."""
-    # norms once per side (same expression tree as the oracle → bit-identical)
-    cent = _vectors(corpus.filter((F.col("vec_id") % stride) == 0), "cid", "cent")
-    assign = _spread(nearest_centroid(corpus, cent), "cid")
-    probes = (
-        _vectors(queries, "query_id", "q")
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "query_id", "q_vec", "q_norm", "cid", _pair_cos("q", "cent").alias("csim")
-        )
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cid"))
-    probes = (
-        probes.withColumn("prn", F.row_number().over(wp))
-        .filter(F.col("prn") <= N_PROBE)
-        .select("query_id", "q_vec", "q_norm", "cid")
-    )
-    scored = (
-        assign.join(F.broadcast(probes), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _pair_cos("q", "c").alias("sim"))
-    )
+    cent = corpus.filter((F.col("vec_id") % stride) == 0)
+    scored = ivf_scores(corpus, cent, queries).drop("cid")
     return top_k_by_sim(scored, "query_id", "neighbor_id", TOP_K)
 
 

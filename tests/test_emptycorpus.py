@@ -79,7 +79,7 @@ _EMPTY_SUBSET = [
     "dedup_components",            # iterative graph over zero pairs
     "dedup_cluster_sizes",         # components consumer
     "similarity_knn_graph",        # banded ANN over zero vectors
-    "similarity_ann_ivf",          # nearest-centroid kernel, zero centroids
+    "similarity_ann_ivf",          # fused IVF kernel, zero centroids
     "similarity_ann_ivf_scaled",   # stride floor(sqrt(0)) never evaluated
     "text_vocab_coverage",         # the r10 NULL fan-out fix
     "text_fertility_by_lang",      # NULLIF strata
@@ -207,6 +207,7 @@ _ONE_ROW_SUBSET = [
     "stats_corr_qty_price",   # was: NaN -> ANSI long-cast ArithmeticException
     "similarity_ann_pq",      # was: cb[j] INVALID_ARRAY_INDEX (1-entry codebook)
     "similarity_ann_ivf",     # centroid seeds shorter than K
+    "similarity_ann_ivf_scaled",  # stride floor(sqrt(1)) = 1: one centroid
     "cluster_embeddings_kmeans",
     "text_zipf_slope",        # one rank -> no slope
     "q1_pricing_summary",
@@ -312,6 +313,7 @@ _TIES_SUBSET = [
     "events_user_paths",      # transition paths under total ts ties
     "heavy_hitters_tokens",   # one token with count 100x
     "similarity_ann_ivf",     # 100 identical vectors: every cosine ties
+    "similarity_ann_ivf_scaled",  # the same ties over C = 10 centroids
 ]
 
 

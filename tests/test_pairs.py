@@ -34,7 +34,7 @@ def test_salted_split_only_in_pairs_module():
 # to write it out; the SQL twins spell these names inside oracle strings,
 # never as these calls. The last entry is the numpy twin of ``_dot``
 # (and any numpy dot product, which BLAS would not keep bit-identical):
-# only the nearest-centroid kernel computes cosines in Python.
+# only the fused IVF kernel computes cosines in Python.
 _SCORING_OWNERS = [
     (r"_norm\(F\.col\(", {"_vectors", "cosine"}),
     (r"F\.sqrt\(_dot\(", {"_norm"}),
@@ -42,7 +42,7 @@ _SCORING_OWNERS = [
     (r"posexplode\(lsh_band_hashes\(", {"lsh_band_rows"}),
     (
         r"\bnp_dot\(|\bnp\.(dot|einsum|inner|matmul|tensordot|vdot)\(",
-        {"nearest_centroid"},
+        {"ivf_scores"},
     ),
 ]
 

@@ -269,10 +269,6 @@ def test_no_cartesian_product_anywhere(spark):
         "q11_important_parts",  # global-scalar HAVING compare
         "q15_top_supplier",     # max-equality scalar compare
         "q22_idle_rich_customers",  # 1-row global-average scalar compare
-        # probe side: the 8-row query set × the centroid table (k rows;
-        # sqrt(n) rows when scaled); corpus assignment is a MapInArrow
-        "similarity_ann_ivf",
-        "similarity_ann_ivf_scaled",
         # coarse stage of the rerank funnel: broadcast QUERY side scores
         # all candidates on projected dims by design (composes with
         # IVF/LSH blocking at scale); the exact stage is equi-joined
@@ -328,10 +324,11 @@ def test_no_cartesian_product_anywhere(spark):
 
 
 @pytest.mark.parametrize("name", ["similarity_ann_ivf", "similarity_ann_ivf_scaled"])
-def test_ivf_assignment_is_one_arrow_pass(spark, name):
-    """IVF assignment is one MapInArrow over the corpus (the batched
-    nearest-centroid kernel), not a corpus × centroid nested-loop join;
-    the one BroadcastNestedLoopJoin left is the query × centroid probe.
+def test_ivf_is_one_arrow_pass(spark, name):
+    """IVF assignment, probe and exact rerank are one MapInArrow over the
+    corpus (the fused ``ivf_scores`` kernel; the probes are ranked on the
+    driver): no query × centroid nested-loop join, and no corpus-vector
+    shuffle — the one Exchange is the top-k window's, on ``query_id``.
     Counted in the executed (final adaptive) plan."""
     df = _q(spark, name)
     df.collect()
@@ -339,7 +336,9 @@ def test_ivf_assignment_is_one_arrow_pass(spark, name):
     final = plan.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in final, plan
     assert final.count("MapInArrow") == 1, final
-    assert final.count("BroadcastNestedLoopJoin") == 1, final
+    assert "BroadcastNestedLoopJoin" not in final, final
+    exchanges = [ln for ln in final.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 1 and "hashpartitioning(query_id" in exchanges[0], final
 
 
 def test_jsd_vocab_topk_no_full_broadcast(spark):

@@ -7,7 +7,7 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from map_reduce_lite_spark.ops.similarity import (
     TOP_K,
@@ -118,13 +118,13 @@ def test_ann_ivf_every_query_answered(spark, emb):
 
 
 def _jvm_assign(corpus, cent):
-    """The JVM assignment expression ``nearest_centroid`` replaced: every
+    """The JVM assignment expression the kernel replaced: every
     (vector, centroid) ``_pair_cos``, then the argmax over (csim, -cid)."""
     from map_reduce_lite_spark.ops.similarity import _pair_cos, _vectors
 
     return (
         _vectors(corpus, "neighbor_id", "c")
-        .crossJoin(F.broadcast(cent))
+        .crossJoin(F.broadcast(_vectors(cent, "cid", "cent")))
         .select("neighbor_id", "cid", _pair_cos("c", "cent").alias("csim"))
         .groupBy("neighbor_id")
         .agg(
@@ -133,6 +133,42 @@ def _jvm_assign(corpus, cent):
             ).alias("cid")
         )
     )
+
+
+def _jvm_ivf(corpus, cent, queries):
+    """The JVM IVF plan the kernel replaced: the JVM assignment, the
+    query × centroid probe window, the broadcast probe join and the
+    ``_pair_cos`` rerank, as (query_id, neighbor_id, cid, sim)."""
+    from map_reduce_lite_spark.ops.similarity import N_PROBE, _pair_cos, _vectors
+
+    assign = _jvm_assign(corpus, cent).join(
+        _vectors(corpus, "neighbor_id", "c"), "neighbor_id"
+    )
+    probes = (
+        _vectors(queries, "query_id", "q")
+        .crossJoin(F.broadcast(_vectors(cent, "cid", "cent")))
+        .select(
+            "query_id", "q_vec", "q_norm", "cid", _pair_cos("q", "cent").alias("csim")
+        )
+    )
+    wp = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cid"))
+    probes = (
+        probes.withColumn("prn", F.row_number().over(wp))
+        .filter(F.col("prn") <= N_PROBE)
+        .select("query_id", "q_vec", "q_norm", "cid")
+    )
+    return (
+        assign.join(F.broadcast(probes), "cid")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "cid", _pair_cos("q", "c").alias("sim"))
+    )
+
+
+def _rows(df):
+    """(query_id, neighbor_id, cid, sim) rows in key order, as one repr:
+    equal strings mean equal ids and bit-identical sims (NaN and null
+    included)."""
+    return repr(sorted((tuple(r) for r in df.collect()), key=lambda t: t[:2]))
 
 
 def _assign_case(name):
@@ -173,83 +209,169 @@ def _assign_case(name):
     return corpus, cent
 
 
-def _assign_frames(spark, name):
-    """(corpus, ``_vectors`` centroid side) frames of one parity case."""
-    from map_reduce_lite_spark.ops.similarity import _vectors
+def _query_rows(name, corpus, cent):
+    """The query set of one case: corpus members (so self-pairs must
+    drop), a centroid's own vector and fresh vectors, with one query-side
+    edge on top for the ``*_query`` cases."""
+    rng = np.random.default_rng(7)
+    dim = len(next(v for _, v in corpus if v))
+    rows = [(i, v) for i, v in corpus[:6]] + [(5000, cent[0][1])] + [
+        (5001 + j, rng.standard_normal(dim).astype(np.float32).tolist())
+        for j in range(4)
+    ]
+    fresh = rows[-1][1]
+    if name == "null_query":
+        rows[-1] = (rows[-1][0], None)
+    elif name == "nan_query":
+        fresh[3] = float("nan")
+    elif name == "null_element_query":
+        fresh[3] = None
+    elif name == "ragged_query":
+        rows[-1] = (rows[-1][0], fresh[:-1])
+        rows[-2] = (rows[-2][0], rows[-2][1] + [2.0])
+    elif name == "zero_norm_query":
+        rows[-1] = (rows[-1][0], [0.0] * dim)
+    elif name == "no_queries":
+        rows = []
+    return rows
 
-    rows, cent_rows = _assign_case(name)
-    schema = "vec_id long, embedding array<float>"
-    cent = spark.createDataFrame(cent_rows, schema)
-    return spark.createDataFrame(rows, schema), _vectors(cent, "cid", "cent")
+
+_SCHEMA = "vec_id long, embedding array<float>"
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "random",
-        "duplicate_centroids",
-        "identical_corpus",
-        "nan_element",
-        "null_embedding",
-        "null_element",
-        "ragged_length",
-        "single_centroid",
-    ],
-)
+def _ivf_frames(spark, case, query_case=None):
+    """(corpus, centroid, query) frames of one parity case."""
+    rows, cent_rows = _assign_case(case)
+    queries = _query_rows(query_case or case, rows, cent_rows)
+    return [spark.createDataFrame(r, _SCHEMA) for r in (rows, cent_rows, queries)]
+
+
+_CASES = [
+    "random",
+    "duplicate_centroids",
+    "identical_corpus",
+    "nan_element",
+    "null_embedding",
+    "null_element",
+    "ragged_length",
+    "single_centroid",
+]
+
+
+@pytest.mark.parametrize("name", _CASES)
 @pytest.mark.parametrize("block", [None, 3])
 def test_nearest_centroid_matches_jvm_argmax(spark, monkeypatch, name, block):
-    """The Arrow-batched kernel assigns every vector to the same centroid
-    as the JVM expression it replaced, edges included, and carries the
-    vector and the bit-identical ``_norm`` along. ``block`` 3 splits the
-    centroids into many blocks, so the running argmax merges ties and
-    NaNs across blocks too."""
+    """The fused IVF kernel assigns every vector to the same centroid as
+    the JVM expression it replaced, edges included. With ``N_PROBE`` at
+    the centroid count every query probes every list, so each vector
+    shows up with its ``cid``. ``block`` 3 splits the centroids into many
+    blocks, so the running argmax merges ties and NaNs across blocks
+    too."""
     from map_reduce_lite_spark.ops import similarity
-    from map_reduce_lite_spark.ops.similarity import _vectors, nearest_centroid
+    from map_reduce_lite_spark.ops.similarity import ivf_scores
 
     if block:
         monkeypatch.setattr(similarity, "_CENT_BLOCK", block)
+    corpus, cent, _ = _ivf_frames(spark, name)
+    monkeypatch.setattr(similarity, "N_PROBE", cent.count())
+    queries = spark.createDataFrame([(-1, None)], _SCHEMA)
 
-    corpus, cent = _assign_frames(spark, name)
     want = sorted(tuple(r) for r in _jvm_assign(corpus, cent).collect())
-    got = nearest_centroid(corpus, cent).collect()
+    got = ivf_scores(corpus, cent, queries).collect()
     assert sorted((r["neighbor_id"], r["cid"]) for r in got) == want
-    norms = {
-        r["neighbor_id"]: repr((r["c_vec"], r["c_norm"]))
-        for r in _vectors(corpus, "neighbor_id", "c").collect()
-    }
-    assert {r["neighbor_id"]: repr((r["c_vec"], r["c_norm"])) for r in got} == norms
+
+
+@pytest.mark.parametrize("name", _CASES)
+@pytest.mark.parametrize("block", [None, 3])
+def test_ivf_scores_match_jvm_plan(spark, monkeypatch, name, block):
+    """Assignment, probe and rerank together: the kernel emits the same
+    (query_id, neighbor_id, cid) rows as the JVM plan it replaced, with
+    bit-identical ``sim`` (nulls and NaNs included), and no self-pair."""
+    from map_reduce_lite_spark.ops import similarity
+    from map_reduce_lite_spark.ops.similarity import ivf_scores
+
+    if block:
+        monkeypatch.setattr(similarity, "_CENT_BLOCK", block)
+    corpus, cent, queries = _ivf_frames(spark, name)
+    got = ivf_scores(corpus, cent, queries)
+    assert _rows(got) == _rows(_jvm_ivf(corpus, cent, queries))
+    assert not any(r["query_id"] == r["neighbor_id"] for r in got.collect())
+
+
+@pytest.mark.parametrize(
+    "query_case",
+    ["null_query", "nan_query", "null_element_query", "ragged_query", "no_queries"],
+)
+@pytest.mark.parametrize("block", [None, 3])
+def test_ivf_scores_query_edges(spark, monkeypatch, query_case, block):
+    """Query-side edges rank and score as the JVM window and
+    ``_pair_cos`` do: a null, NaN, null-element or ragged query probes
+    by the same order (NaN first, null last, smaller cid on ties) and
+    gets the same null or NaN sims; no queries, no rows."""
+    from map_reduce_lite_spark.ops import similarity
+    from map_reduce_lite_spark.ops.similarity import ivf_scores
+
+    if block:
+        monkeypatch.setattr(similarity, "_CENT_BLOCK", block)
+    corpus, cent, queries = _ivf_frames(spark, "random", query_case)
+    got = ivf_scores(corpus, cent, queries)
+    assert _rows(got) == _rows(_jvm_ivf(corpus, cent, queries))
+    if query_case == "no_queries":
+        assert got.count() == 0
+
+
+def _check_zero_norm_division(spark, corpus, cent, queries):
+    """DIVIDE_BY_ZERO from the action under ANSI mode, for the JVM plan
+    and the kernel alike; the JVM plan's rows with ANSI off. Returns the
+    JVM assignment with ANSI off."""
+    from pyspark.errors import PySparkException
+
+    from map_reduce_lite_spark.ops.similarity import ivf_scores
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    for build in (_jvm_ivf, ivf_scores):
+        df = build(corpus, cent, queries)
+        with pytest.raises(PySparkException, match="DIVIDE_BY_ZERO"):
+            df.collect()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = _rows(_jvm_ivf(corpus, cent, queries))
+        got = _rows(ivf_scores(corpus, cent, queries))
+        assign = dict(_jvm_assign(corpus, cent).collect())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+    assert got == want
+    return assign
 
 
 def test_nearest_centroid_zero_norm_division(spark):
-    """A zero-norm vector makes the cosine divide by zero: DIVIDE_BY_ZERO
-    under ANSI mode, as the JVM expression raises; a null cosine (so the
-    smallest cid) with ANSI off."""
-    from pyspark.errors import PySparkException
+    """A zero-norm corpus vector makes the assignment and rerank cosines
+    divide by zero: DIVIDE_BY_ZERO under ANSI mode, as the JVM
+    expressions raise; a null cosine (so the smallest cid) with ANSI
+    off."""
+    corpus, cent, queries = _ivf_frames(spark, "zero_norm")
+    assign = _check_zero_norm_division(spark, corpus, cent, queries)
+    assert assign[3] == min(r["vec_id"] for r in cent.collect())
 
-    from map_reduce_lite_spark.ops.similarity import nearest_centroid
 
-    corpus, cent = _assign_frames(spark, "zero_norm")
-    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
-    for build in (_jvm_assign, nearest_centroid):
-        with pytest.raises(PySparkException, match="DIVIDE_BY_ZERO"):
-            build(corpus, cent).collect()
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        want = sorted(tuple(r) for r in _jvm_assign(corpus, cent).collect())
-        got = nearest_centroid(corpus, cent).collect()
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "true")
-    assert sorted((r["neighbor_id"], r["cid"]) for r in got) == want
-    assert dict(want)[3] == min(r["cid"] for r in cent.collect())
+def test_ivf_zero_norm_query_division(spark):
+    """A zero-norm query divides by zero in the probe ranking, which runs
+    on the driver: the error still surfaces from the action, as the JVM
+    probe window raised it; with ANSI off the query probes the smallest
+    cids and scores null."""
+    corpus, cent, queries = _ivf_frames(spark, "random", "zero_norm_query")
+    _check_zero_norm_division(spark, corpus, cent, queries)
 
 
 def test_nearest_centroid_empty_sides(spark):
-    """No centroids or no vectors: no rows, as the cross join gave."""
-    from map_reduce_lite_spark.ops.similarity import nearest_centroid
+    """No centroids, no vectors or no queries: no rows, as the joins
+    gave."""
+    from map_reduce_lite_spark.ops.similarity import ivf_scores
 
-    corpus, cent = _assign_frames(spark, "random")
-    assert nearest_centroid(corpus, cent.limit(0)).count() == 0
-    assert nearest_centroid(corpus.limit(0), cent).count() == 0
+    corpus, cent, queries = _ivf_frames(spark, "random")
+    assert ivf_scores(corpus, cent.limit(0), queries).count() == 0
+    assert ivf_scores(corpus.limit(0), cent, queries).count() == 0
+    assert ivf_scores(corpus, cent, queries.limit(0)).count() == 0
 
 
 def test_rerank_funnel_recall_and_exactness(spark):

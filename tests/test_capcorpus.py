@@ -620,6 +620,69 @@ def test_leakage_split_megamix_all_branches_zero_dropped(
     assert sum(r[4] for r in spark_rows) == 520
 
 
+def test_refine_matches_sql_twin_row_for_row(spark, megamix_dir, monkeypatch):
+    """Adaptive re-banding, Spark against its DuckDB twin, row for row:
+    the candidate set equals ``cands`` of ``sql_refined_cands_chain``
+    and the star-only ids equal ``approx_only`` of
+    ``sql_refine_coverage_cte``, at the same cap. Two cases: the
+    sf0.001 fixture at a forced cap of 8, and the megamix corpus at the
+    default cap. Between them every one of the four branches emits
+    pairs (counted from the SQL side's bucket sizes: a small bucket
+    with two members, a small refine sub-bucket with two, an oversized
+    sub-bucket, an oversized bucket)."""
+    from map_reduce_lite_spark.ops import dedup
+    from map_reduce_lite_spark.ops.dedup import (
+        _refined_candidate_ids,
+        lsh_band_table,
+        refine_star_only_ids,
+    )
+    from map_reduce_lite_spark.ops.similarity import (
+        EMB_DIM,
+        LSH_N_BANDS,
+        LSH_PLANES,
+        _hyperplanes,
+        refine_hyperplanes,
+        sql_refine_coverage_cte,
+        sql_refined_cands_chain,
+    )
+    from map_reduce_lite_spark.relational.tables import load_table
+    from tests.conftest import SF_SMALL
+
+    planes = _hyperplanes(EMB_DIM, LSH_PLANES)
+    rplanes = refine_hyperplanes(EMB_DIM)
+    branches = [0, 0, 0, 0]
+    for sf_dir, cap in ((SF_SMALL, 8), (str(megamix_dir), dedup.EMB_BUCKET_CAP)):
+        monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", cap)
+        emb = load_table(spark, sf_dir, "embeddings")
+        bands = lsh_band_table(emb, EMB_DIM)
+        cands = {
+            tuple(r) for r in _refined_candidate_ids(emb, bands, EMB_DIM, cap).collect()
+        }
+        star_only = {r.vec_id for r in refine_star_only_ids(emb, EMB_DIM, bands).collect()}
+
+        chain = sql_refined_cands_chain(planes, rplanes, LSH_N_BANDS, cap)
+        duck = _duck_for(sf_dir, tables=("embeddings",))
+        duck_cands = duck.execute(
+            f"WITH {chain} SELECT keep_id, dup_id FROM cands"
+        ).fetchall()
+        duck_star_only = duck.execute(
+            f"WITH {chain}, {sql_refine_coverage_cte(cap)} SELECT vec_id FROM approx_only"
+        ).fetchall()
+        counts = duck.execute(
+            f"""WITH {chain} SELECT
+              (SELECT count(*) FROM bsizes WHERE n BETWEEN 2 AND {cap}),
+              (SELECT count(*) FROM subsizes WHERE m BETWEEN 2 AND {cap}),
+              (SELECT count(*) FROM subsizes WHERE m > {cap}),
+              (SELECT count(*) FROM bsizes WHERE n > {cap})"""
+        ).fetchone()
+
+        assert len(duck_cands) == len(set(duck_cands))
+        assert cands == set(duck_cands), sf_dir
+        assert star_only == {r[0] for r in duck_star_only}, sf_dir
+        branches = [b + c for b, c in zip(branches, counts)]
+    assert all(branches), branches
+
+
 def _deep_cone_vectors(n, seed=3, cos_max=0.38):
     """Vectors sharing ALL 16 band-plane signs with the near-constant
     core (→ inside its mega-bucket in every band) yet with

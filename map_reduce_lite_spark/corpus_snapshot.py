@@ -28,7 +28,8 @@ snapshot dir can be any Spark-supported scheme (file://, hdfs://,
 s3a://) — the same connector story as sources/io.py.
 
 The near-dup pair artifact is built with method="lsh_refine" (adaptive
-re-banding, the SAFETY posture): a shared artifact's consumers include
+re-banding, the SAFETY posture, whose candidate branches the
+ops/pairs.py docstring describes): a shared artifact's consumers include
 split routers, and a salted cap's silently-dropped pairs would become
 silent cross-split leakage in every one of them (ops/dedup.py
 build_near_dup_pairs). Throughput consumers that prefer the salted
@@ -90,18 +91,14 @@ def build_snapshot(
     - ``copurchase_edges``: support-gated co-purchase part edges
       (graph.build_copurchase_edges).
     """
-    from map_reduce_lite_spark.ops.dedup import (
-        EMB_BUCKET_CAP,
-        NEAR_DUP_COS,
-        build_near_dup_pairs,
-    )
+    from map_reduce_lite_spark.ops.dedup import NEAR_DUP_COS, build_near_dup_pairs
     from map_reduce_lite_spark.ops.graph import (
         TRIANGLE_MIN_SUPPORT,
         build_copurchase_edges,
     )
     from map_reduce_lite_spark.ops.similarity import (
+        EMB_BUCKET_CAP,
         EMB_DIM,
-        KNN_BUCKET_CAP,
         KNN_GRAPH_K,
         build_knn_edges,
     )
@@ -115,16 +112,10 @@ def build_snapshot(
     scans = {
         "knn_edges": (
             build_knn_edges(emb, f"{out}/knn_edges"),
-            {"k": KNN_GRAPH_K, "cap": KNN_BUCKET_CAP, "dim": EMB_DIM},
+            {"k": KNN_GRAPH_K, "cap": EMB_BUCKET_CAP, "dim": EMB_DIM},
         ),
         "near_dup_pairs": (
-            build_near_dup_pairs(
-                emb,
-                f"{out}/near_dup_pairs",
-                threshold=NEAR_DUP_COS,
-                dim=EMB_DIM,
-                method="lsh_refine",
-            ),
+            build_near_dup_pairs(emb, f"{out}/near_dup_pairs", method="lsh_refine"),
             {
                 "threshold": NEAR_DUP_COS,
                 "cap": EMB_BUCKET_CAP,

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
-from map_reduce_lite_spark.ops.dedup import EMB_BUCKET_CAP, shingles
+from map_reduce_lite_spark.ops.dedup import shingles
 from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -548,34 +548,23 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     by exempting the cap entirely, which left one adversarial
     mega-bucket (near-constant embeddings — exactly what boilerplate-
     heavy crawls produce) costing size² candidate pairs. r11 replaces
-    the exemption with ADAPTIVE RE-BANDING (method="lsh_refine",
-    dedup._refined_candidate_ids): buckets over EMB_BUCKET_CAP are
-    refined with per-band extra hyperplanes — recall-preserving, no salt drop — and
-    a sub-bucket that still exceeds the cap (a near-constant core) is
-    covered by a star to its min-id representative, preserving the
-    verified graph's connectivity at linear instead of quadratic cost.
-    A bucket-wide anchor star (branch 4, r11 — found by measurement)
-    additionally pairs every oversized-bucket member with the bucket's
-    min-id member, catching the boundary regime refinement alone
-    misses: a genuine near-dup of the bucket's dominant direction that
-    disagrees with its refinement planes (pre-fix: a cos-0.48
-    satellite of a 600-member core was detected in ZERO pairs).
+    the exemption with ADAPTIVE RE-BANDING (method="lsh_refine"; its
+    four candidate branches and their recall limits are described in
+    the ops/pairs.py docstring): buckets over EMB_BUCKET_CAP are
+    refined instead of salted, at ≤ cap² plus linear cost per bucket.
     Bounded-cost + zero-dropped-pairs on the mega-bucket corpora, the
     deep-cone salting-vs-rebanding gap (4/15 vs 15/15), and the
     anchor-star boundary catch are pinned in tests/test_capcorpus.py.
-    Residual recall limits, all inherent to sub-quadratic detection:
-    LSH banding itself (a true near-dup pair missed by all bands can
-    still split); a barely-above-threshold pair inside a
-    still-oversized near-constant sub-bucket is detected only via its
-    representative; and a pair of satellites near each OTHER but far
-    from every anchor, sharing no small bucket and no refine
-    sub-bucket, is missed.
+    Beyond those of the refinement, LSH banding itself limits recall: a
+    true near-dup pair missed by all bands can still split, and so can
+    a pair of satellites near each OTHER but far from every anchor,
+    sharing no small bucket and no refine sub-bucket.
 
     Output: (split, n_vecs, n_clusters, n_cross_pairs,
     n_approx_members). ``n_approx_members`` (r12, the r11 ADVICE
     visibility fix): the count of routed vectors whose detection
     coverage was STAR-ONLY in every band (bucket oversized AND refine
-    sub-bucket still oversized everywhere — dedup.refine_star_only_ids)
+    sub-bucket still oversized everywhere — pairs.star_only_ids)
     — i.e. members for whom "zero leakage over the detected graph" is
     star-approximated rather than exhaustive, because a
     satellite-satellite pair among them is detected only via its
@@ -597,16 +586,15 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         refine_star_only_ids,
     )
     from map_reduce_lite_spark.ops.graph import connected_components
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
     # one banding for BOTH the pair stage and the coverage metric —
     # projected + checkpointed once (r12)
-    bands = lsh_band_table(emb, dim=EMB_DIM)
+    bands = lsh_band_table(emb)
     pairs = materialize(
-        embedding_near_dup_pairs(
-            emb, method="lsh_refine", dim=EMB_DIM, bands=bands
-        ).select("keep_id", "dup_id"),
+        embedding_near_dup_pairs(emb, method="lsh_refine", bands=bands).select(
+            "keep_id", "dup_id"
+        ),
         eager=True,
     )
     comp = connected_components(pairs, src="keep_id", dst="dup_id")
@@ -648,10 +636,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_cross"))
     )
     approx_per_split = (
-        routed.join(
-            refine_star_only_ids(emb, dim=EMB_DIM, bands=bands),
-            "vec_id",
-        )
+        routed.join(refine_star_only_ids(emb, bands), "vec_id")
         .groupBy("split")
         .agg(F.count(F.lit(1)).alias("n_approx"))
     )
@@ -676,6 +661,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _leakage_split_sql() -> str:
     from map_reduce_lite_spark.ops.dedup import NEAR_DUP_COS
     from map_reduce_lite_spark.ops.similarity import (
+        EMB_BUCKET_CAP,
         EMB_DIM,
         LSH_N_BANDS,
         LSH_PLANES,

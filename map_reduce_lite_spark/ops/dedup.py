@@ -34,10 +34,14 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.pairs import (
+    BAND_KEYS,
     band_salt,
     band_self_join,
     bucket_over_cap,
+    refine_sizes,
+    refined_pairs,
     split_hot_buckets,
+    star_only_ids,
 )
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
@@ -396,15 +400,10 @@ def minhash_lsh_pairs(
     # aggregation above is the dominant cost, and Spark plans each join
     # side independently (no ReusedExchange here) — without this the
     # whole signature pipeline runs twice (measured ~2x cold, ~15% warm)
-    banded = materialize(banded, eager=True)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.sig") == F.col("b.sig"))
-        & (F.col("a.doc") < F.col("b.doc")),
-    ).select(F.col("a.doc").alias("doc1"), F.col("b.doc").alias("doc2"))
-    return pairs.distinct()
+    banded = materialize(banded.withColumnRenamed("doc", "vec_id"), eager=True)
+    return band_self_join(banded, ["band", "sig"]).select(
+        F.col("keep_id").alias("doc1"), F.col("dup_id").alias("doc2")
+    )
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,134 +668,45 @@ DEDUP_SIMHASH_SQL = _simhash_sql()
 NEAR_DUP_COS = 0.40  # demo threshold; corpus max pairwise cosine is ~0.51
 
 
-EMB_BUCKET_CAP = 512  # max members per LSH band bucket before salted split
-_BAND_KEYS = ["band_id", "band_hash"]
-
-
-def _embedding_dim(corpus: DataFrame) -> int | None:
-    """Embedding width probe (one Spark job — callers that know the
-    width should pass it); None on an empty corpus."""
-    row = corpus.select(F.size("embedding")).first()
-    return None if row is None else row[0]
-
-
-def lsh_band_table(corpus: DataFrame, dim: int) -> DataFrame:
+def lsh_band_table(corpus: DataFrame) -> DataFrame:
     """Materialized (vec_id, band_id, band_hash) banding of ``corpus`` —
     the shared first stage of every embedding-LSH consumer (the
     near-dup pairs, the k-NN graph, the star-only coverage metric), so
     a job needing the table more than once projects and checkpoints it
-    exactly once."""
+    exactly once. Band join and pair dedup then move ids only (8-byte
+    keys); vectors join back for scoring."""
     from map_reduce_lite_spark.ops.similarity import (
+        EMB_DIM,
         LSH_PLANES,
         _hyperplanes,
         lsh_band_rows,
     )
 
     return materialize(
-        lsh_band_rows(corpus, _hyperplanes(dim, LSH_PLANES)), eager=True
+        lsh_band_rows(corpus, _hyperplanes(EMB_DIM, LSH_PLANES)), eager=True
     )
 
 
-def _refined_candidate_ids(
-    corpus: DataFrame, bands: DataFrame, dim: int, cap: int
-) -> DataFrame:
-    """ADAPTIVE RE-BANDING (r11): candidate ids when some band bucket
-    exceeds ``cap``, replacing the salted split for consumers that must
-    not silently drop a detectable pair (leakage_safe_split).
-
-    Oversized (band_id, band_hash) buckets are refined with that band's
-    16 extra hyperplanes (refine_hyperplanes — per-band chunks, so a
-    pair split by one band's refinement keeps its independent chance in
-    the other bands): sub-buckets ≤ cap get exact all-pairs; sub-buckets
-    STILL oversized (members agreeing on all 4+16 plane signs — a
-    near-constant core) emit a star to the min-id representative,
-    (size − 1) candidates instead of size², preserving the verified
-    graph's connectivity (a near-constant core verifies against the
-    representative whenever it verifies against any member, up to the
-    threshold boundary). Per-bucket work is thus ≤ cap² + linear —
-    bounded regardless of collision density — while, unlike salting,
-    no intra-sub-bucket pair is ever dropped. The refinement planes are
-    CONSTANTS (seeded), so membership is bit-identical to the SQL twin
-    (sql_refined_cands_chain). Residual recall limits, both inherent to
-    sub-quadratic detection: (a) pairs inside an oversized bucket that
-    disagree on that band's refinement planes fall back on the other
-    bands; (b) a barely-above-threshold pair inside a still-oversized
-    sub-bucket is detected only via the representative."""
+def _refine_sizes(corpus: DataFrame, bands: DataFrame, cap: int) -> DataFrame:
+    """``pairs.refine_sizes`` of ``bands``, the oversized buckets'
+    members re-hashed against ``refine_hyperplanes``."""
     from map_reduce_lite_spark.ops.similarity import (
+        EMB_DIM,
         lsh_band_rows,
         refine_hyperplanes,
     )
 
-    sizes = bands.groupBy(*_BAND_KEYS).agg(F.count(F.lit(1)).alias("n"))
-    # one row per (band, hash) — at most n_bands × 2^(planes/band); tiny
-    sized = bands.join(F.broadcast(sizes), _BAND_KEYS)
-    small_pairs = band_self_join(
-        sized.filter(F.col("n") <= cap).select("vec_id", *_BAND_KEYS), _BAND_KEYS
-    )
-    rh_tbl = lsh_band_rows(corpus, refine_hyperplanes(dim), "rh")
-    big = (
-        sized.filter(F.col("n") > cap)
-        .select("vec_id", *_BAND_KEYS)
-        .join(rh_tbl, ["vec_id", "band_id"])
-    )
-    sub_keys = [*_BAND_KEYS, "rh"]
-    subsizes = big.groupBy(*sub_keys).agg(F.count(F.lit(1)).alias("m"))
-    # sub-bucket count is data-dependent (up to one per member) — shuffle
-    # join, not broadcast
-    bigm = big.join(subsizes, sub_keys)
-    sub_small_pairs = band_self_join(
-        bigm.filter(F.col("m") <= cap).select("vec_id", *sub_keys), sub_keys
-    )
-    sub_big = bigm.filter(F.col("m") > cap).select("vec_id", *sub_keys)
-    reps = sub_big.groupBy(*sub_keys).agg(F.min("vec_id").alias("rep"))
-    star = (
-        sub_big.join(reps, sub_keys)
-        .filter(F.col("vec_id") != F.col("rep"))
-        .select(F.col("rep").alias("keep_id"), F.col("vec_id").alias("dup_id"))
-    )
-    # branch 4 (r11): BUCKET-WIDE anchor star — every member of an
-    # oversized bucket also pairs with the bucket's min-id member,
-    # regardless of refine sub-bucket. Catches the boundary regime the
-    # refinement alone misses: a member that IS a near-dup of the
-    # bucket's dominant direction (cos ≥ threshold) but disagrees with
-    # its refinement planes lands in a singleton sub-bucket and would
-    # otherwise get no candidate in this band at all (measured: a
-    # cos-0.48 satellite of a 600-member core was detected in ZERO
-    # pairs pre-fix, 600 by the exact oracle). Linear cost (size − 1
-    # candidates per oversized bucket); the anchor table is one row
-    # per oversized bucket — broadcastable by construction.
-    anchors = (
-        sized.filter(F.col("n") > cap)
-        .groupBy(*_BAND_KEYS)
-        .agg(F.min("vec_id").alias("rep"))
-    )
-    anchor_star = (
-        sized.filter(F.col("n") > cap)
-        .select("vec_id", *_BAND_KEYS)
-        .join(F.broadcast(anchors), _BAND_KEYS)
-        .filter(F.col("vec_id") != F.col("rep"))
-        .select(F.col("rep").alias("keep_id"), F.col("vec_id").alias("dup_id"))
-    )
-    return (
-        small_pairs.unionByName(sub_small_pairs)
-        .unionByName(star)
-        .unionByName(anchor_star)
-        .dropDuplicates(["keep_id", "dup_id"])
+    rplanes = refine_hyperplanes(EMB_DIM)
+    return refine_sizes(
+        bands, cap, lambda ids: lsh_band_rows(corpus.join(ids, "vec_id"), rplanes, "rh")
     )
 
 
-def refine_star_only_ids(
-    corpus: DataFrame,
-    dim: int | None = None,
-    bands: DataFrame | None = None,
-) -> DataFrame:
+def refine_star_only_ids(corpus: DataFrame, bands: DataFrame) -> DataFrame:
     """IDs whose candidate coverage under adaptive re-banding is
-    STAR-ONLY in every band — i.e. members for whom no band gave an
-    exhaustive all-pairs stage (their bucket was oversized in all
-    bands AND their refine sub-bucket was still oversized in each), so
-    they are reachable in the detected graph only through
-    representative/anchor edges (branches 3-4 of
-    ``_refined_candidate_ids``).
+    STAR-ONLY in every band (``pairs.star_only_ids``; the branches are
+    described in the ops/pairs.py docstring), given the corpus's
+    ``lsh_band_table``.
 
     r12 (the r11 ADVICE visibility fix): the adaptive path's "zero
     dropped detections" guarantee is computed from its own pair set,
@@ -810,64 +720,25 @@ def refine_star_only_ids(
     exactly when, and for how many vectors, the guarantee weakened from
     exhaustive to star-approximated.
 
-    Cost: one band projection + two count aggregations on 8-byte keys;
-    the sizing probe (pairs.bucket_over_cap) returns an empty frame
-    without touching the refinement planes when no bucket is oversized
-    (the driver-fixture case — where the metric is provably zero), and
-    so does an empty corpus. Callers that already materialized the
-    ``lsh_band_table`` — the pair stage builds an identical one — pass
-    it via ``bands`` so the projection and its checkpoint run ONCE per
-    job, not once per consumer (leakage_safe_split does)."""
-    from map_reduce_lite_spark.ops.similarity import (
-        lsh_band_rows,
-        refine_hyperplanes,
-    )
+    Cost: two count aggregations on 8-byte keys; the sizing probe
+    (pairs.bucket_over_cap) returns an empty frame without touching the
+    refinement planes when no bucket is oversized (the driver-fixture
+    case, where the metric is provably zero, and an empty corpus)."""
+    from map_reduce_lite_spark.ops.similarity import EMB_BUCKET_CAP
 
     cap = EMB_BUCKET_CAP
-    empty = corpus.sparkSession.createDataFrame([], "vec_id long")
-    if dim is None:
-        dim = _embedding_dim(corpus)
-        if dim is None:
-            return empty
-    if bands is None:
-        # materialized once: reused by the probe and both joins below
-        bands = lsh_band_table(corpus, dim)
-    if not bucket_over_cap(bands, _BAND_KEYS, cap):
-        return empty
-    sizes = bands.groupBy(*_BAND_KEYS).agg(F.count(F.lit(1)).alias("n"))
-    sized = bands.join(F.broadcast(sizes), _BAND_KEYS)
-    big = sized.filter(F.col("n") > cap).select("vec_id", *_BAND_KEYS)
-    rh_tbl = lsh_band_rows(
-        corpus.join(big.select("vec_id").distinct(), "vec_id"),
-        refine_hyperplanes(dim),
-        "rh",
-    )
-    bigr = big.join(rh_tbl, ["vec_id", "band_id"])
-    subsizes = bigr.groupBy(*_BAND_KEYS, "rh").agg(F.count(F.lit(1)).alias("m"))
-    # a band gives a member EXACT coverage iff its bucket fit under the
-    # cap, or its refine sub-bucket did
-    exact = (
-        sized.filter(F.col("n") <= cap)
-        .select("vec_id")
-        .unionByName(
-            bigr.join(subsizes, [*_BAND_KEYS, "rh"])
-            .filter(F.col("m") <= cap)
-            .select("vec_id")
-        )
-        .distinct()
-    )
-    return corpus.select("vec_id").join(exact, "vec_id", "left_anti")
+    if not bucket_over_cap(bands, BAND_KEYS, cap):
+        return corpus.sparkSession.createDataFrame([], "vec_id long")
+    return star_only_ids(_refine_sizes(corpus, bands, cap), cap)
 
 
 def embedding_near_dup_pairs(
     corpus: DataFrame,
-    threshold: float = NEAR_DUP_COS,
     method: str = "exact",
-    dim: int | None = None,
     bands: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate (keep_id, dup_id, sim_e9) pairs of a
-    (vec_id, embedding) corpus by cosine ≥ ``threshold``.
+    (vec_id, embedding) corpus by cosine ≥ NEAR_DUP_COS.
 
     ``bands`` (r12): a pre-materialized ``lsh_band_table``, letting a
     caller that needs the band table for more than the pair stage
@@ -895,13 +766,14 @@ def embedding_near_dup_pairs(
     tests/test_capcorpus.py.
 
     ``method="lsh_refine"`` (r11): same banding, but oversized buckets
-    are ADAPTIVELY RE-BANDED instead of salted (see
-    _refined_candidate_ids) — for SAFETY consumers (leakage_safe_split)
-    where a salt's silently-dropped intra-bucket pairs would mean
-    undetected cross-split leakage. Same bounded per-bucket cost, no
+    are ADAPTIVELY RE-BANDED instead of salted (pairs.refined_pairs) —
+    for SAFETY consumers (leakage_safe_split) where a salt's
+    silently-dropped intra-bucket pairs would mean undetected
+    cross-split leakage. Same bounded per-bucket cost, no
     intra-sub-bucket pair dropped; when no bucket is oversized all
     three lsh variants are the identical plain band join."""
     from map_reduce_lite_spark.ops.similarity import (
+        EMB_BUCKET_CAP,
         _pair_cos,
         _spread,
         _vectors,
@@ -918,43 +790,26 @@ def embedding_near_dup_pairs(
             .select("keep_id", "dup_id", _pair_cos("a", "b").alias("sim"))
         )
     elif method in ("lsh", "lsh_refine"):
-        if dim is None:  # probing costs a Spark job — callers should pass it
-            dim = _embedding_dim(corpus)
-            if dim is None:
-                return corpus.sparkSession.createDataFrame(
-                    [], "keep_id long, dup_id long, sim_e9 long"
-                )
         if bands is None:
-            # band join + pair dedup on IDS ONLY (8-byte shuffle keys),
-            # then join the vectors back for scoring — shuffling 64-float
-            # vectors through the ×n_bands explode and the dedup would
-            # cost ~64× the bytes for nothing. Hyperplane projections run
-            # once, not once per self-join side (ids + band hashes only —
-            # tiny); the materialized table also feeds the cap's sizing
-            # probe
-            bands = lsh_band_table(corpus, dim)
+            bands = lsh_band_table(corpus)
         cap = EMB_BUCKET_CAP
         sp, hot = split_hot_buckets(
-            bands, _BAND_KEYS, cap, band_salt("emb", "band_id", "vec_id")
+            bands, BAND_KEYS, cap, band_salt("emb", "band_id", "vec_id")
         )
         if hot and method == "lsh_refine":
-            ids = _refined_candidate_ids(corpus, bands, dim, cap)
+            ids = refined_pairs(_refine_sizes(corpus, bands, cap), cap)
         else:
-            ids = band_self_join(sp, [*_BAND_KEYS, "sub"])
+            ids = band_self_join(sp, [*BAND_KEYS, "sub"])
         scored = cosine_verify(ids, corpus, "keep_id", "dup_id")
     else:
         raise ValueError(f"unknown method {method!r}")
-    return scored.filter(F.col("sim") >= F.lit(threshold)).select(
+    return scored.filter(F.col("sim") >= F.lit(NEAR_DUP_COS)).select(
         "keep_id", "dup_id", sim_e9()
     )
 
 
 def build_near_dup_pairs(
-    corpus: DataFrame,
-    path: str,
-    threshold: float = NEAR_DUP_COS,
-    dim: int | None = None,
-    method: str = "lsh",
+    corpus: DataFrame, path: str, method: str = "lsh"
 ) -> DataFrame:
     """STAGE the LSH-verified near-dup pair set as a parquet artifact
     and return its scan — the production shape for the whole components
@@ -975,9 +830,7 @@ def build_near_dup_pairs(
     artifact feeding leakage_safe_split-style routing should carry,
     since a salt's dropped pairs would become silent cross-split
     leakage in every downstream consumer of the artifact)."""
-    embedding_near_dup_pairs(
-        corpus, threshold=threshold, method=method, dim=dim
-    ).write.mode("overwrite").parquet(path)
+    embedding_near_dup_pairs(corpus, method=method).write.mode("overwrite").parquet(path)
     return corpus.sparkSession.read.parquet(path)
 
 
@@ -1008,14 +861,13 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine verify on colliding pairs only. The exact quadratic query
     above is the verification oracle for recall; THIS is the operator a
     production pipeline runs."""
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+    return embedding_near_dup_pairs(emb, method="lsh")
 
 
 def _embedding_lsh_sql() -> str:
     from map_reduce_lite_spark.ops.similarity import (
+        EMB_BUCKET_CAP,
         EMB_DIM,
         LSH_N_BANDS,
         LSH_PLANES,
@@ -1059,10 +911,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation on Spark; the oracle replays it with a
     recursive transitive-closure CTE over the same LSH pair set."""
     from map_reduce_lite_spark.ops.graph import connected_components
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+    pairs = embedding_near_dup_pairs(emb, method="lsh")
     return connected_components(pairs, src="keep_id", dst="dup_id")
 
 
@@ -1071,6 +922,7 @@ def _components_reach_cte() -> str:
     closure of the LSH-blocked near-dup pair graph. Consumed by the
     components oracle AND the survivors oracle."""
     from map_reduce_lite_spark.ops.similarity import (
+        EMB_BUCKET_CAP,
         EMB_DIM,
         LSH_N_BANDS,
         LSH_PLANES,
@@ -1136,10 +988,9 @@ def dedup_survivors_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazard. Oracle: the same recursive transitive-closure CTE, keeping
     ids that are never a non-minimum member of their component."""
     from map_reduce_lite_spark.ops.graph import dedup_survivors
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+    pairs = embedding_near_dup_pairs(emb, method="lsh")
     return dedup_survivors(pairs, emb.select("vec_id"), "vec_id")
 
 
@@ -1305,10 +1156,9 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     key spaces are ≤ the paired-node count, rows are 8-16 bytes.
     Output is O(max cluster size) rows. Integers end-to-end."""
     from map_reduce_lite_spark.ops.graph import connected_components
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+    pairs = embedding_near_dup_pairs(emb, method="lsh")
     comps = connected_components(pairs, src="keep_id", dst="dup_id")
     sizes = comps.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")

@@ -36,7 +36,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
-from map_reduce_lite_spark.ops.pairs import band_salt, band_self_join, split_hot_buckets
+from map_reduce_lite_spark.ops.pairs import (
+    BAND_KEYS,
+    band_salt,
+    band_self_join,
+    split_hot_buckets,
+)
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -45,6 +50,7 @@ TOP_K = 5
 
 LSH_PLANES = 16  # random-hyperplane bits for the ANN path
 LSH_N_BANDS = 4
+EMB_BUCKET_CAP = 512  # max members per LSH band bucket before a hot-bucket split
 EMB_DIM = 64  # test-table embedding dimension (pins the oracle's planes)
 
 
@@ -381,17 +387,12 @@ def lsh_band_rows(
     )
 
 
-def ann_lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = TOP_K,
-    n_planes: int = LSH_PLANES,
-) -> DataFrame:
-    """Approximate top-k via banded random-hyperplane LSH.
+def ann_lsh_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-TOP_K via banded random-hyperplane LSH over
+    EMB_DIM-wide embeddings (all three read at call time).
 
-    ``n_planes`` sign bits split into LSH_N_BANDS tables of r =
-    n_planes/LSH_N_BANDS bits; a corpus vector is a candidate for a
+    LSH_PLANES sign bits split into LSH_N_BANDS tables of r =
+    LSH_PLANES/LSH_N_BANDS bits; a corpus vector is a candidate for a
     query iff they collide in ANY band — recall 1-(1-p^r)^L for per-bit
     agreement p = 1 - θ/π. Wider bands (larger r) cut false positives;
     more bands (larger L) raise recall.
@@ -403,7 +404,7 @@ def ann_lsh_topk(
     is inline; the per-pair dedup is a shuffle on (query_id, neighbor_id)
     bounded by candidate count, not corpus size. Recall is
     property-tested vs brute force (tests/test_similarity.py)."""
-    planes = _hyperplanes(dim, n_planes)
+    planes = _hyperplanes(EMB_DIM, LSH_PLANES)
     # band join + candidate dedup on IDS ONLY; vectors join back after —
     # the ×LSH_N_BANDS explode and the pair-dedup shuffle then move 8-byte
     # keys instead of 64-float arrays
@@ -423,7 +424,7 @@ def ann_lsh_topk(
         .join(F.broadcast(_vectors(queries, "query_id", "q")), "query_id")
         .select("query_id", "neighbor_id", _pair_cos("q", "c").alias("sim"))
     )
-    return top_k_by_sim(scored, "query_id", "neighbor_id", k)
+    return top_k_by_sim(scored, "query_id", "neighbor_id", TOP_K)
 
 
 # Adaptive re-banding (r11): hyperplanes used to REFINE an oversized
@@ -442,7 +443,6 @@ def refine_hyperplanes(dim: int) -> list[list[float]]:
 
 
 KNN_GRAPH_K = 5  # neighbors kept per node in the corpus k-NN graph
-KNN_BUCKET_CAP = 512  # max members per LSH band bucket before salted split
 
 
 def knn_topk_edges(emb: DataFrame) -> DataFrame:
@@ -458,7 +458,7 @@ def knn_topk_edges(emb: DataFrame) -> DataFrame:
     per-node top-K is a rank window over candidate-bounded input. At
     100 TB the band table is written bucket-partitioned at ingest and
     the self-join becomes bucket-local (no corpus shuffle); hot buckets
-    are bounded by KNN_BUCKET_CAP with the salted split of ops/pairs.py
+    are bounded by EMB_BUCKET_CAP with the salted split of ops/pairs.py
     (tests/test_capcorpus.py). Each colliding pair is scored
     once id-ordered and emitted in both directions (r12), so every
     node gets its own neighbor list (unlike the dedup pair set, which
@@ -499,7 +499,7 @@ def _knn_scored_edges(emb: DataFrame) -> DataFrame:
 
     The band table (dedup.lsh_band_table) is materialized once and
     reused by the sizing probe and both self-join sides. Buckets over
-    KNN_BUCKET_CAP (read at call time) are salted-split
+    EMB_BUCKET_CAP (read at call time) are salted-split
     (pairs.split_hot_buckets), bounding the self-join's per-bucket work
     at cap² however adversarial the corpus's collision density
     (random/unclustered vectors collide at a constant fraction of n²
@@ -508,12 +508,12 @@ def _knn_scored_edges(emb: DataFrame) -> DataFrame:
     far more than the K=5 it keeps. The SQL oracle replays sizes+salt
     unconditionally (n_sub=1 → sub=0 is an identity), so the
     probe-skipped plain join hash-matches it too."""
-    from map_reduce_lite_spark.ops.dedup import _BAND_KEYS, lsh_band_table
+    from map_reduce_lite_spark.ops.dedup import lsh_band_table
 
     sp, _ = split_hot_buckets(
-        lsh_band_table(emb, EMB_DIM),
-        _BAND_KEYS,
-        KNN_BUCKET_CAP,
+        lsh_band_table(emb),
+        BAND_KEYS,
+        EMB_BUCKET_CAP,
         band_salt("knb", "band_id", "vec_id"),
     )
     # r12 (guide §2.3): generate ID-ORDERED pairs (vec_id <), score each
@@ -524,7 +524,7 @@ def _knn_scored_edges(emb: DataFrame) -> DataFrame:
     # commutative, the fold order over i is unchanged, and so is
     # a_norm·b_norm), so every directed row carries exactly the value
     # the old plan computed for it.
-    cand = band_self_join(sp, [*_BAND_KEYS, "sub"])
+    cand = band_self_join(sp, [*BAND_KEYS, "sub"])
     half = cosine_verify(cand, emb, "keep_id", "dup_id")
     return half.select(
         F.explode(
@@ -586,7 +586,7 @@ def nn_descent_from_edges(emb: DataFrame, edges: DataFrame) -> DataFrame:
     return top_k_by_sim(scored, "src_id", "dst_id", KNN_GRAPH_K)
 
 
-def _knn_edges_cte(cap: int = KNN_BUCKET_CAP) -> str:
+def _knn_edges_cte(cap: int = EMB_BUCKET_CAP) -> str:
     """Shared WITH chain ending in ``ranked`` — the exact-cosine-scored,
     per-src ranked LSH band-collision edge list (SQL twin of
     ``_knn_scored_edges`` + the rank window). The hot-bucket salted
@@ -717,13 +717,10 @@ FROM per_node GROUP BY in_degree
 
 def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    # EMB_DIM is pinned by the oracle's plane literals — probing the data
-    # for it (`.first()`) would cost a whole Spark job per query build
-    dim = EMB_DIM
     queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
     # 16 planes / 4 bands of 4 bits: ~0.23 false-positive candidate rate
     # for orthogonal pairs, high recall for cosine ≥ 0.3 neighbors
-    return ann_lsh_topk(emb, queries, dim)
+    return ann_lsh_topk(emb, queries)
 
 
 def sql_capped_bands_chain(
@@ -756,32 +753,12 @@ def sql_refined_cands_chain(
 ) -> str:
     """CTE chain (to place right after WITH) ending in ``cands`` with
     columns (keep_id, dup_id) — the ADAPTIVE-RE-BANDING candidate set,
-    the SQL twin of ``embedding_near_dup_pairs(method="lsh_refine")``.
-
-    Three branches, replayed UNCONDITIONALLY (when no bucket exceeds
-    ``cap`` branches 2–3 are empty and branch 1 is the plain band
-    all-pairs — the identity matching Spark's probe-skipped branch):
-
-    1. buckets ≤ cap: exact all-pairs within (band_id, band_hash);
-    2. oversized buckets: members re-hashed with that band's 16
-       refinement planes; sub-buckets ≤ cap get exact all-pairs within
-       (band_id, band_hash, rh) — recall-preserving refinement, no
-       pair silently dropped by a salt;
-    3. sub-buckets STILL > cap (possible only when members agree on
-       all band + refinement planes, i.e. a near-constant core): a
-       star to the min-id member — (sub-bucket size − 1) candidates
-       instead of size², preserving the verified graph's connectivity
-       (every member links to the representative, and a near-constant
-       core verifies against any of its members iff it verifies
-       against the representative, up to the threshold boundary);
-    4. a BUCKET-WIDE anchor star: every member of an oversized bucket
-       also pairs with the bucket's min-id member regardless of
-       refine sub-bucket — the boundary-regime catch for members that
-       are genuine near-dups of the bucket's dominant direction but
-       disagree with its refinement planes (they land in singleton
-       sub-buckets and branches 2-3 alone would give them no candidate
-       in this band). Linear cost, replayed identically by the Spark
-       path (_refined_candidate_ids branch 4).
+    the SQL twin of ``pairs.refined_pairs`` (``rb`` ⋈ ``subsizes`` is
+    ``pairs.refine_sizes``); the four branches are described once in
+    the ops/pairs.py docstring. Replayed UNCONDITIONALLY: when no
+    bucket exceeds ``cap`` branches 2-4 are empty and branch 1 is the
+    plain band all-pairs, the identity matching Spark's probe-skipped
+    branch.
     """
     rh_exprs = sql_band_hashes("embedding", rplanes, n_bands)
     refh = "\n  UNION ALL\n".join(
@@ -838,7 +815,7 @@ def sql_refined_cands_chain(
 
 def sql_refine_coverage_cte(cap: int) -> str:
     """CTE pair ``coverage`` / ``approx_only`` — the SQL twin of
-    ``dedup.refine_star_only_ids``. MUST be appended after
+    ``pairs.star_only_ids`` (via ``dedup.refine_star_only_ids``). MUST be appended after
     ``sql_refined_cands_chain`` in the same WITH clause: it reads that
     chain's ``rb`` (vec_id, band_id, band_hash, n, rh) and ``subsizes``
     CTEs. A vec has EXACT coverage in a band iff its bucket fit under

@@ -279,10 +279,10 @@ def test_semdedup_default_cap_engagement_is_semantic(spark, semcap_dir, monkeypa
 
 
 # --------------------------------------------------------------------------
-# KNN_BUCKET_CAP — one 520-vector band bucket, full multiset parity
+# EMB_BUCKET_CAP (k-NN graph) — one 520-vector band bucket, full multiset parity
 # --------------------------------------------------------------------------
 
-_KNN_N = 520  # > KNN_BUCKET_CAP 512 -> n_sub = 2 in every band
+_KNN_N = 520  # > EMB_BUCKET_CAP 512 -> n_sub = 2 in every band
 
 
 @pytest.fixture(scope="module")
@@ -337,16 +337,16 @@ def test_knn_default_cap_engagement_is_semantic(spark, knncap_dir, monkeypatch):
     the parity sweep above ran with the split live."""
     from map_reduce_lite_spark.ops import similarity
     from map_reduce_lite_spark.ops.similarity import (
-        KNN_BUCKET_CAP,
+        EMB_BUCKET_CAP,
         _knn_scored_edges,
     )
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, str(knncap_dir), "embeddings")
     capped = _knn_scored_edges(emb).count()
-    monkeypatch.setattr(similarity, "KNN_BUCKET_CAP", 1 << 30)
+    monkeypatch.setattr(similarity, "EMB_BUCKET_CAP", 1 << 30)
     uncapped = _knn_scored_edges(emb).count()
-    assert _KNN_N > KNN_BUCKET_CAP
+    assert _KNN_N > EMB_BUCKET_CAP
     assert uncapped == _KNN_N * (_KNN_N - 1)  # one bucket per band, all collide
     assert 0 < capped < uncapped
 
@@ -375,18 +375,15 @@ def test_embedding_band_default_cap_engagement_is_semantic(
     """All 520 vectors share every band bucket (> the 512 default), and
     the uncapped pair set is strictly larger — the parity above ran
     with the split live."""
-    from map_reduce_lite_spark.ops import dedup
-    from map_reduce_lite_spark.ops.dedup import (
-        EMB_BUCKET_CAP,
-        embedding_near_dup_pairs,
-    )
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.ops import similarity
+    from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
+    from map_reduce_lite_spark.ops.similarity import EMB_BUCKET_CAP
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, str(knncap_dir), "embeddings")
-    capped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
-    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 1 << 30)
-    uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
+    capped = embedding_near_dup_pairs(emb, method="lsh").count()
+    monkeypatch.setattr(similarity, "EMB_BUCKET_CAP", 1 << 30)
+    uncapped = embedding_near_dup_pairs(emb, method="lsh").count()
     assert _KNN_N > EMB_BUCKET_CAP
     # every pair clears the cosine threshold here (all vectors ~parallel)
     assert uncapped == _KNN_N * (_KNN_N - 1) // 2
@@ -416,21 +413,20 @@ def test_leakage_split_adaptive_rebanding_on_hot_bucket(spark, knncap_dir, monke
     component structure identical to the uncapped form, so the whole
     corpus still routes as ONE cluster with zero crossings; the
     registered oracle agrees on the exact values."""
-    from map_reduce_lite_spark.ops import dedup
+    from map_reduce_lite_spark.ops import similarity
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, str(knncap_dir), "embeddings")
     # leakage_safe_split's pair stage: lsh_refine at the default cap
-    refined = embedding_near_dup_pairs(emb, method="lsh_refine", dim=EMB_DIM)
+    refined = embedding_near_dup_pairs(emb, method="lsh_refine")
     n_refined = refined.count()
     # engaged AND bounded: fewer candidates than the uncapped clique...
     assert 0 < n_refined < _KNN_N * (_KNN_N - 1) // 2
     # ...with the same component structure (routing-level zero loss)
     with monkeypatch.context() as m:
-        m.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
-        uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+        m.setattr(similarity, "EMB_BUCKET_CAP", 1 << 62)
+        uncapped = embedding_near_dup_pairs(emb, method="lsh")
     assert _component_partition(refined) == _component_partition(uncapped)
 
     sdf, oracle = _run_registered(spark, knncap_dir, "curation_leakage_safe_split")
@@ -493,19 +489,18 @@ def test_leakage_split_megabucket_bounded_and_zero_dropped(
     level: every pair the uncapped form detects is intra-component
     (hence intra-split) under the adaptive form. The registered query
     value-matches its oracle with the star branch live."""
-    from map_reduce_lite_spark.ops import dedup
+    from map_reduce_lite_spark.ops import similarity
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, str(megabucket_dir), "embeddings")
-    refined = embedding_near_dup_pairs(emb, method="lsh_refine", dim=EMB_DIM)
+    refined = embedding_near_dup_pairs(emb, method="lsh_refine")
     n_refined = refined.count()
     # (a) bounded: the star emits size-1 pairs, not size²
     assert n_refined == _MEGA_N - 1
     with monkeypatch.context() as m:
-        m.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
-        uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+        m.setattr(similarity, "EMB_BUCKET_CAP", 1 << 62)
+        uncapped = embedding_near_dup_pairs(emb, method="lsh")
     assert uncapped.count() == _MEGA_N * (_MEGA_N - 1) // 2
     # (b) zero dropped detections: identical component structure
     assert _component_partition(refined) == _component_partition(uncapped)
@@ -578,14 +573,13 @@ def test_leakage_split_megamix_all_branches_zero_dropped(
     partition still equals BOTH the uncapped-LSH form's and the exact
     quadratic ground truth's, and the registered query value-matches
     its oracle with every detected cluster routed whole."""
-    from map_reduce_lite_spark.ops import dedup
+    from map_reduce_lite_spark.ops import similarity
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     n = 529
     emb = load_table(spark, str(megamix_dir), "embeddings")
-    refined = embedding_near_dup_pairs(emb, method="lsh_refine", dim=EMB_DIM)
+    refined = embedding_near_dup_pairs(emb, method="lsh_refine")
     n_refined = refined.count()
     # star(519) + three intra-cluster cliques(3 each) = 528, far below
     # the uncapped 134,949 — bounded with the satellites still detected
@@ -600,8 +594,8 @@ def test_leakage_split_megamix_all_branches_zero_dropped(
     )
     assert _component_partition(refined) == want
     with monkeypatch.context() as m:
-        m.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
-        uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+        m.setattr(similarity, "EMB_BUCKET_CAP", 1 << 62)
+        uncapped = embedding_near_dup_pairs(emb, method="lsh")
     assert _component_partition(uncapped) == want
     exact = embedding_near_dup_pairs(emb, method="exact")
     assert _component_partition(exact) == want
@@ -630,12 +624,13 @@ def test_refine_matches_sql_twin_row_for_row(spark, megamix_dir, monkeypatch):
     pairs (counted from the SQL side's bucket sizes: a small bucket
     with two members, a small refine sub-bucket with two, an oversized
     sub-bucket, an oversized bucket)."""
-    from map_reduce_lite_spark.ops import dedup
+    from map_reduce_lite_spark.ops import similarity
     from map_reduce_lite_spark.ops.dedup import (
-        _refined_candidate_ids,
+        _refine_sizes,
         lsh_band_table,
         refine_star_only_ids,
     )
+    from map_reduce_lite_spark.ops.pairs import refined_pairs
     from map_reduce_lite_spark.ops.similarity import (
         EMB_DIM,
         LSH_N_BANDS,
@@ -651,14 +646,14 @@ def test_refine_matches_sql_twin_row_for_row(spark, megamix_dir, monkeypatch):
     planes = _hyperplanes(EMB_DIM, LSH_PLANES)
     rplanes = refine_hyperplanes(EMB_DIM)
     branches = [0, 0, 0, 0]
-    for sf_dir, cap in ((SF_SMALL, 8), (str(megamix_dir), dedup.EMB_BUCKET_CAP)):
-        monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", cap)
+    for sf_dir, cap in ((SF_SMALL, 8), (str(megamix_dir), similarity.EMB_BUCKET_CAP)):
+        monkeypatch.setattr(similarity, "EMB_BUCKET_CAP", cap)
         emb = load_table(spark, sf_dir, "embeddings")
-        bands = lsh_band_table(emb, EMB_DIM)
+        bands = lsh_band_table(emb)
         cands = {
-            tuple(r) for r in _refined_candidate_ids(emb, bands, EMB_DIM, cap).collect()
+            tuple(r) for r in refined_pairs(_refine_sizes(emb, bands, cap), cap).collect()
         }
-        star_only = {r.vec_id for r in refine_star_only_ids(emb, EMB_DIM, bands).collect()}
+        star_only = {r.vec_id for r in refine_star_only_ids(emb, bands).collect()}
 
         chain = sql_refined_cands_chain(planes, rplanes, LSH_N_BANDS, cap)
         duck = _duck_for(sf_dir, tables=("embeddings",))
@@ -758,21 +753,18 @@ def test_refined_keeps_deep_cone_pairs_salting_loses(spark, deepcone_dir):
     cross-split leakage; the refined path loses none. Both counts are
     deterministic (seeded geometry, md5 salt)."""
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     planted = [(5200 + 2 * k, 5201 + 2 * k) for k in range(15)]
     emb = load_table(spark, str(deepcone_dir), "embeddings")
     refined = {
         (r[0], r[1])
-        for r in embedding_near_dup_pairs(
-            emb, method="lsh_refine", dim=EMB_DIM
-        ).collect()
+        for r in embedding_near_dup_pairs(emb, method="lsh_refine").collect()
     }
     assert all(p in refined for p in planted), "refined must keep every pair"
     salted = {
         (r[0], r[1])
-        for r in embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).collect()
+        for r in embedding_near_dup_pairs(emb, method="lsh").collect()
     }
     n_salted = sum(1 for p in planted if p in salted)
     # deterministic under the md5 salt; strictly fewer than refined —
@@ -849,9 +841,7 @@ def test_anchor_star_catches_boundary_satellite(spark, tmp_path_factory):
     emb = load_table(spark, str(d), "embeddings")
     refined = {
         (r[0], r[1])
-        for r in embedding_near_dup_pairs(
-            emb, method="lsh_refine", dim=EMB_DIM
-        ).collect()
+        for r in embedding_near_dup_pairs(emb, method="lsh_refine").collect()
     }
     # the anchor pair (bucket rep 0, satellite 600) verifies and is kept
     assert (0, 600) in refined

@@ -193,7 +193,6 @@ def test_leakage_safe_split_zero_cross_doc_level_leaks(spark):
 
     from map_reduce_lite_spark.ops.curation import TRAIN_PCT, VAL_PCT, leakage_safe_split
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.registry import md5_60bit
     from map_reduce_lite_spark.relational.tables import load_table
 
@@ -205,7 +204,7 @@ def test_leakage_safe_split_zero_cross_doc_level_leaks(spark):
     assert sum(r.n_clusters for r in rows) < sum(r.n_vecs for r in rows)
 
     # contrast: naive doc-level routing leaks pairs across splits
-    pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+    pairs = embedding_near_dup_pairs(emb, method="lsh")
     bucket = md5_60bit(F.col("vec_id").cast("string")) % 100
     naive = emb.select(
         "vec_id",

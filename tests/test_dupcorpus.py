@@ -8,7 +8,7 @@ every LSH bucket cap, and one source that is almost entirely
 duplicates. This corpus engages, at their PRODUCTION values and inside
 the REGISTERED queries:
 
-- EMB_BUCKET_CAP / KNN_BUCKET_CAP (600-member near-constant core > 512
+- EMB_BUCKET_CAP (600-member near-constant core > 512
   in every band → salted split live in the throughput dedup/knn
   families);
 - the r11 adaptive re-banding in curation_leakage_safe_split (same
@@ -150,20 +150,19 @@ def test_caps_are_engaged_not_identities(spark, dup_dir, monkeypatch):
     exceed the df cap."""
     from pyspark.sql import functions as F
 
-    from map_reduce_lite_spark.ops import dedup
+    from map_reduce_lite_spark.ops import similarity
     from map_reduce_lite_spark.ops.dedup import (
-        EMB_BUCKET_CAP,
         SHINGLE_DF_CAP,
         embedding_near_dup_pairs,
         shingles,
     )
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.ops.similarity import EMB_BUCKET_CAP
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, str(dup_dir), "embeddings")
-    capped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
-    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
-    uncapped = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).count()
+    capped = embedding_near_dup_pairs(emb, method="lsh").count()
+    monkeypatch.setattr(similarity, "EMB_BUCKET_CAP", 1 << 62)
+    uncapped = embedding_near_dup_pairs(emb, method="lsh").count()
     assert _CORE_N > EMB_BUCKET_CAP
     assert uncapped >= _CORE_N * (_CORE_N - 1) // 2  # the core clique alone
     assert 0 < capped < uncapped  # salted split live, pairs dropped

@@ -117,13 +117,13 @@ def test_empty_corpus_matches_oracle(spark, empty_duck, empty_dir, name):
     assert _multiset(spark_rows, s_order) == _multiset(duck_rows, d_order), name
 
 
-def test_embedding_lsh_empty_corpus_without_dim(spark, empty_dir):
-    """With no ``dim`` given, the LSH pair stage and the star-only
-    coverage metric probe the embedding width from the data; on an
-    empty corpus the probe finds no row and both return empty frames
-    (previously ``first()[0]`` on ``None`` raised TypeError)."""
+def test_embedding_lsh_empty_corpus(spark, empty_dir):
+    """On an empty corpus the LSH pair stage (both methods) and the
+    star-only coverage metric return empty frames with their columns:
+    the band table is empty, so the sizing probe finds no bucket."""
     from map_reduce_lite_spark.ops.dedup import (
         embedding_near_dup_pairs,
+        lsh_band_table,
         refine_star_only_ids,
     )
     from map_reduce_lite_spark.relational.tables import load_table
@@ -133,7 +133,7 @@ def test_embedding_lsh_empty_corpus_without_dim(spark, empty_dir):
         pairs = embedding_near_dup_pairs(emb, method=method)
         assert pairs.columns == ["keep_id", "dup_id", "sim_e9"]
         assert pairs.count() == 0, method
-    ids = refine_star_only_ids(emb)
+    ids = refine_star_only_ids(emb, lsh_band_table(emb))
     assert ids.columns == ["vec_id"]
     assert ids.count() == 0
 

@@ -16,18 +16,33 @@ from pyspark.sql import functions as F
 PKG = Path(__file__).resolve().parent.parent / "map_reduce_lite_spark"
 
 
-def test_salted_split_only_in_pairs_module():
-    """The Spark-side salted split (its ``n_sub`` column) is written once;
-    the SQL twins build ``n_sub`` inside oracle strings, not ``.alias(``."""
-    pattern = re.compile(r'\.alias\("n_sub"\)')
-    offenders = [
+def _written_outside_pairs(pattern: str) -> list[str]:
+    """Package lines outside ops/pairs.py that match ``pattern``."""
+    regex = re.compile(pattern)
+    return [
         f"{p.relative_to(PKG.parent)}:{i}"
         for p in sorted(PKG.rglob("*.py"))
         if p != PKG / "ops" / "pairs.py"
         for i, line in enumerate(p.read_text().splitlines(), 1)
-        if pattern.search(line)
+        if regex.search(line)
     ]
-    assert offenders == []
+
+
+def test_salted_split_only_in_pairs_module():
+    """The Spark-side salted split (its ``n_sub`` column) is written once;
+    the SQL twins build ``n_sub`` inside oracle strings, not ``.alias(``."""
+    assert _written_outside_pairs(r'\.alias\("n_sub"\)') == []
+
+
+def test_refine_policy_only_in_pairs_module():
+    """Adaptive re-banding is written once too: its sub-bucket sizing
+    (a count named ``m``) and its star representative (``rep``) appear
+    only in ops/pairs.py; the SQL twins spell them inside oracle
+    strings."""
+    assert _written_outside_pairs(r'count\(.*\)\.alias\("m"\)') == []
+    assert _written_outside_pairs(r'\.alias\("rep"\)') == []
+    source = (PKG / "ops" / "pairs.py").read_text()
+    assert 'count(F.lit(1)).alias("m")' in source and '.alias("rep")' in source
 
 
 # each Spark-side scoring fragment → the similarity.py functions allowed

@@ -157,11 +157,10 @@ def test_dedup_components_no_quadratic_join(spark):
     is equi-joins on (band_id, band_hash), never a cartesian / BNLJ scan
     of the full corpus (the O(n²) killer at 100 TB)."""
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    pairs = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+    pairs = embedding_near_dup_pairs(emb, method="lsh")
     plan = _plan(pairs)
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan

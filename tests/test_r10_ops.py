@@ -347,7 +347,6 @@ def test_embedding_pairs_reliable_checkpoint(spark, reliable_checkpoint):
     """embedding_near_dup_pairs' band table honors the session
     checkpoint dir, same contract as knn_topk_edges."""
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
     from tests.conftest import SF_SMALL, assert_reliable_written
 
@@ -356,7 +355,7 @@ def test_embedding_pairs_reliable_checkpoint(spark, reliable_checkpoint):
     def pairs():
         return {
             tuple(r)
-            for r in embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+            for r in embedding_near_dup_pairs(emb, method="lsh")
             .select("keep_id", "dup_id")
             .collect()
         }
@@ -379,13 +378,12 @@ def test_near_dup_pairs_staged_parity(spark, tmp_path):
         embedding_near_dup_pairs,
     )
     from map_reduce_lite_spark.ops.graph import connected_components, dedup_survivors
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
     from tests.conftest import SF_SMALL
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    staged = build_near_dup_pairs(emb, str(tmp_path / "pairs"), dim=EMB_DIM)
-    inline = embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM)
+    staged = build_near_dup_pairs(emb, str(tmp_path / "pairs"))
+    inline = embedding_near_dup_pairs(emb, method="lsh")
 
     def ms(df):
         return Counter(tuple(r) for r in df.collect())

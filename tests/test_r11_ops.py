@@ -73,19 +73,13 @@ def test_lsh_refine_matches_lsh_when_dormant(spark):
     three lsh variants are the identical plain band join — the refined
     method must be value-identical to method="lsh"."""
     from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    lsh = {
-        tuple(r)
-        for r in embedding_near_dup_pairs(emb, method="lsh", dim=EMB_DIM).collect()
-    }
+    lsh = {tuple(r) for r in embedding_near_dup_pairs(emb, method="lsh").collect()}
     refined = {
         tuple(r)
-        for r in embedding_near_dup_pairs(
-            emb, method="lsh_refine", dim=EMB_DIM
-        ).collect()
+        for r in embedding_near_dup_pairs(emb, method="lsh_refine").collect()
     }
     assert lsh == refined and len(lsh) > 0
 
@@ -231,29 +225,26 @@ def test_near_dup_pairs_staged_refined_parity(spark, tmp_path):
         build_near_dup_pairs,
         embedding_near_dup_pairs,
     )
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, SF_SMALL, "embeddings")
     inline = Counter(
         tuple(r)
-        for r in embedding_near_dup_pairs(
-            emb, method="lsh_refine", dim=EMB_DIM
-        ).collect()
+        for r in embedding_near_dup_pairs(emb, method="lsh_refine").collect()
     )
     staged = Counter(
         tuple(r)
         for r in build_near_dup_pairs(
-            emb, str(tmp_path / "pairs"), dim=EMB_DIM, method="lsh_refine"
+            emb, str(tmp_path / "pairs"), method="lsh_refine"
         ).collect()
     )
     assert inline == staged and len(inline) > 0
 
 
-def test_refined_candidates_structural_properties(spark, monkeypatch):
+def test_refined_candidates_structural_properties(spark):
     """Structural contract of adaptive re-banding on RANDOM vectors with
-    a tiny forced cap (heavy engagement, no hand-built geometry), using
-    threshold=-1 so the output IS the candidate set:
+    a tiny forced cap (heavy engagement, no hand-built geometry), read
+    straight from the candidate function (no cosine filter):
 
     1. refined candidates ⊆ the uncapped band-collision set (refinement
        never invents a pair);
@@ -266,8 +257,8 @@ def test_refined_candidates_structural_properties(spark, monkeypatch):
     from the same seeded plane constants."""
     import numpy as np
 
-    from map_reduce_lite_spark.ops import dedup
-    from map_reduce_lite_spark.ops.dedup import embedding_near_dup_pairs
+    from map_reduce_lite_spark.ops.dedup import _refine_sizes, lsh_band_table
+    from map_reduce_lite_spark.ops.pairs import BAND_KEYS, band_self_join, refined_pairs
     from map_reduce_lite_spark.ops.similarity import (
         EMB_DIM,
         LSH_N_BANDS,
@@ -279,20 +270,11 @@ def test_refined_candidates_structural_properties(spark, monkeypatch):
 
     cap = 8
     emb = load_table(spark, SF_SMALL, "embeddings")
-    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", cap)
+    bands = lsh_band_table(emb)
     refined = {
-        (r[0], r[1])
-        for r in embedding_near_dup_pairs(
-            emb, method="lsh_refine", dim=EMB_DIM, threshold=-1.0
-        ).collect()
+        tuple(r) for r in refined_pairs(_refine_sizes(emb, bands, cap), cap).collect()
     }
-    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 1 << 62)
-    uncapped = {
-        (r[0], r[1])
-        for r in embedding_near_dup_pairs(
-            emb, method="lsh", dim=EMB_DIM, threshold=-1.0
-        ).collect()
-    }
+    uncapped = {tuple(r) for r in band_self_join(bands, BAND_KEYS).collect()}
     assert refined and refined <= uncapped  # (1)
 
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)

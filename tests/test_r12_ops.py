@@ -128,35 +128,11 @@ def test_ppm_phash_registered_query_groups_and_flags(spark):
 def test_refine_star_only_probe_clean_is_empty(spark):
     """Driver-fixture regime: no bucket oversized → the sizing probe
     short-circuits to an empty frame (metric provably zero)."""
-    from map_reduce_lite_spark.ops.dedup import refine_star_only_ids
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+    from map_reduce_lite_spark.ops.dedup import lsh_band_table, refine_star_only_ids
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, SF_SMALL, "embeddings")
-    assert refine_star_only_ids(emb, dim=EMB_DIM).count() == 0
-
-
-def test_refine_star_only_prebuilt_bands_parity(spark, monkeypatch):
-    """Passing a pre-materialized band table (the leakage_safe_split
-    sharing path) must give the same ids as building inline."""
-    from map_reduce_lite_spark.ops import dedup
-    from map_reduce_lite_spark.ops.dedup import (
-        lsh_band_table,
-        refine_star_only_ids,
-    )
-    from map_reduce_lite_spark.ops.similarity import EMB_DIM
-    from map_reduce_lite_spark.relational.tables import load_table
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    # tiny cap so the machinery engages on the fixture corpus
-    monkeypatch.setattr(dedup, "EMB_BUCKET_CAP", 2)
-    inline = {r.vec_id for r in refine_star_only_ids(emb, dim=EMB_DIM).collect()}
-    bands = lsh_band_table(emb, dim=EMB_DIM)
-    shared = {
-        r.vec_id
-        for r in refine_star_only_ids(emb, dim=EMB_DIM, bands=bands).collect()
-    }
-    assert inline == shared
+    assert refine_star_only_ids(emb, lsh_band_table(emb)).count() == 0
 
 
 # --------------------------------------------------------------------------

@@ -45,17 +45,19 @@ def test_bruteforce_matches_numpy(spark, emb):
             assert abs(sim_e9 / 1e9 - esim) < 1e-6
 
 
-def test_ann_lsh_recall(spark, emb):
+def test_ann_lsh_recall(spark, emb, monkeypatch):
     """LSH-bucket ANN: recall@5 vs brute force for dense buckets.
 
     With 8 hyperplanes on 500 random-ish vectors recall is limited by
     bucket occupancy — assert a sane floor and that every reported
     neighbor shares the query's bucket semantics (subset of brute-force
     candidates by construction of cosine)."""
-    dim = len(emb.select("embedding").first()[0])
+    from map_reduce_lite_spark.ops import similarity
+
     queries = emb.filter(F.col("vec_id") < 20)
     exact = brute_force_topk(emb, queries).collect()
-    approx = ann_lsh_topk(emb, queries, dim, k=TOP_K, n_planes=8).collect()
+    monkeypatch.setattr(similarity, "LSH_PLANES", 8)
+    approx = ann_lsh_topk(emb, queries).collect()
 
     exact_sets = {}
     for r in exact:
@@ -71,16 +73,19 @@ def test_ann_lsh_recall(spark, emb):
     assert hit / total >= 0.2, (hit, total)
 
 
-def test_ann_lsh_more_planes_fewer_candidates(spark, emb):
+def test_ann_lsh_more_planes_fewer_candidates(spark, emb, monkeypatch):
     """Finer buckets → strictly fewer candidates. ``k`` is the corpus
     size, so the top-k cap never binds and each count is the query's
     whole candidate set (with a small k both counts saturate at
     k × n_queries and ``n_planes`` could be ignored unnoticed)."""
-    dim = len(emb.select("embedding").first()[0])
-    n = emb.count()
+    from map_reduce_lite_spark.ops import similarity
+
     queries = emb.filter(F.col("vec_id") < 10)
-    few = ann_lsh_topk(emb, queries, dim, k=n, n_planes=4).count()
-    many = ann_lsh_topk(emb, queries, dim, k=n, n_planes=12).count()
+    monkeypatch.setattr(similarity, "TOP_K", emb.count())
+    monkeypatch.setattr(similarity, "LSH_PLANES", 4)
+    few = ann_lsh_topk(emb, queries).count()
+    monkeypatch.setattr(similarity, "LSH_PLANES", 12)
+    many = ann_lsh_topk(emb, queries).count()
     assert many < few
 
 

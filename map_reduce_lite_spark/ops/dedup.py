@@ -720,7 +720,8 @@ def refine_star_only_ids(corpus: DataFrame, bands: DataFrame) -> DataFrame:
     exactly when, and for how many vectors, the guarantee weakened from
     exhaustive to star-approximated.
 
-    Cost: two count aggregations on 8-byte keys; the sizing probe
+    Cost: count aggregations on 8-byte keys plus the refinement
+    projection of the oversized buckets' members only; the sizing probe
     (pairs.bucket_over_cap) returns an empty frame without touching the
     refinement planes when no bucket is oversized (the driver-fixture
     case, where the metric is provably zero, and an empty corpus)."""

@@ -389,7 +389,8 @@ def lsh_band_rows(
 
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate top-TOP_K via banded random-hyperplane LSH over
-    EMB_DIM-wide embeddings (all three read at call time).
+    EMB_DIM-wide embeddings (TOP_K, EMB_DIM and LSH_PLANES are read at
+    call time).
 
     LSH_PLANES sign bits split into LSH_N_BANDS tables of r =
     LSH_PLANES/LSH_N_BANDS bits; a corpus vector is a candidate for a

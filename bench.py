@@ -3,59 +3,53 @@
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {"q1": sec, ...}, "sf": 0.1}
+  {"metric": "...", "unit": "sec", "queries": {"q1": sec, ...},
+   "layers": {"q1": {"build_s": ..., "jobs": ..., ...}, ...},
+   "retries": [...], "sf": 0.1, "canary": {...}, "value": <total_sec>}
 
 Each query is timed as a full action (count of the result — forces the
-whole plan without driver-side collection of wide rows). A warmup query
-first absorbs JVM/session startup so per-query numbers reflect plan
-execution, not bootstrap.
+whole plan without driver-side collection of wide rows).
 
-Isolation: a 45+-query sweep in ONE JVM accumulates neighbor debt —
+One protocol. A 45+-query sweep in ONE JVM accumulates neighbor debt —
 ContextCleaner backlogs, code-cache and GC pressure from earlier
 queries inflate later ones (measured: dedup_minhash_lsh 2.2 s mid-sweep
-vs 1.2 s in a clean process; GC-settle + min-of-3 shrinks but does not
-eliminate it). The default mode therefore runs BATCHES of queries in
-fresh subprocesses (~11 s session bootstrap per batch, amortized over
-BATCH_SIZE queries) — each batch warms up (TWO untimed passes since
-r10: per-action driver cost drops ~4× with HotSpot C2 warmth and one
-pass left action-heavy iterative queries reading 2-4× their steady
-state depending on batch composition — see the warm-pass comment in
-_time_queries), GC-settles between queries, and reports min-of-2 per
-query. A batch=10
-variant was measured and REJECTED: it saved under a minute end-to-end
-(execution, not bootstrap, dominates) while the alloc-heavy
-similarity family read 2-3× worse at depth 7-10 within a batch — the
-cleaner-debt effect the GC settle only partly controls. batch=6 is
-the protocol r5 calibrated; keep it. Modes:
+vs 1.2 s in a clean process). So queries run in BATCHES of BATCH_SIZE,
+each in a fresh subprocess (~11 s session bootstrap per batch). Batches
+are cut from the md5-hash order of the names (``_assign_batches``), so
+a query's neighbors do not change when the registry is reordered. Each
+batch makes two untimed warm passes over its queries, then times each
+query after a GC settle as the min of 2 runs. A batch=10 variant was
+measured and rejected: it saved under a minute end to end, while the
+alloc-heavy similarity family read 2-3× worse at depth 7-10 within a
+batch. Modes:
 
-  bench.py                 batched isolation (default, batch=6)
-  bench.py --isolate       one process PER QUERY (cleanest numbers,
+  bench.py                 the headline set, batches of BATCH_SIZE
+  bench.py --isolate       one process PER QUERY (batches of one;
                            ~11 s overhead each — local investigation)
-  bench.py --in-process    the old single-JVM sweep
-  bench.py --full          ALL registered queries (not just the
-                           headline set), batched; also writes the
-                           full artifact to BENCH_FULL.json
+  bench.py --full          ALL registered queries; also writes the
+                           payload to BENCH_FULL.json
   bench.py --batch a,b /f  internal: child worker, writes JSON to f
 
-Host-noise self-defense (r7): identical-tree full runs have measured a
-±25% host/VM band (73.1 → 91.2 s across one evening, SCALE.md), and the
-judge-facing artifact was whatever sample the driver happened to draw.
-Every batch now also times a fixed 3-query CANARY right after its warm
-pass AND again after its last query (r9: the trailing reading catches
-contention that arrives MID-batch, which the leading one is blind to);
-the parent retries any batch whose leading canary reads
-> CANARY_TOLERANCE × the RUN MEDIAN leading canary, or whose trailing
-canary reads > CANARY_TOLERANCE × the run median trailing canary, once
-in a fresh subprocess, keeping the attempt with the lower combined
-(leading + trailing) canary, and
-flags the whole run "contaminated": true when the run's median canary
-exceeds CANARY_TOLERANCE × the rolling min-of-run-medians persisted in
-.bench_canary_floor.json (the r6 failure shape: every query uniformly
-1.5-7× for one bad sample). The JSON line carries
-{"canary": {"median_sec", "floor_sec", "ratio", "per_batch",
-"retried_batches", "contaminated"}} so a noisy sample can never
-masquerade as a regression (or an improvement) again.
+``SPARK_GRAFT_BENCH_ONLY=a,b`` narrows any mode to the named queries.
+
+Layers. Each timed run carries a job group of its own, set before the
+clock starts. After a query's two runs, and outside the timed region,
+the child reads Spark's status store (``perfbench/layers.py``) and
+attributes its jobs and stages to the two runs; the ``layers`` entry of
+a query is that of the run whose seconds are reported. ``build_s`` +
+``action_s`` is the reported wall time; ``driver_gap_s`` is the part of
+it with no stage running.
+
+Host noise. Identical-tree full runs have measured a ±25% host/VM band.
+Every batch times a fixed 3-query CANARY right after its warm pass and
+again after its last query (the trailing reading catches contention
+that arrives mid-batch). The parent re-runs, once and in a fresh
+subprocess, any batch whose leading or trailing canary reads more than
+CANARY_TOLERANCE × the run's own median of that reading, and keeps the
+attempt with the lower combined canary; both attempts are listed under
+``retries``. Nothing is stored between runs: the ``canary`` record
+(median, per-batch readings and ``cpus``) is there to compare a run
+with other runs on the same core count, and with nothing else.
 """
 
 from __future__ import annotations
@@ -71,8 +65,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from perfbench import layers  # noqa: E402 — needs the repo on sys.path
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-BATCH_SIZE = int(os.environ.get("SPARK_GRAFT_BENCH_BATCH", "6"))
+BATCH_SIZE = 6
 
 # Fixed canary trio: tiny, stable, plan-diverse (one broadcast join, one
 # 6-group lineitem agg, one token explode+agg). Timed FIRST in every
@@ -84,25 +80,6 @@ BATCH_SIZE = int(os.environ.get("SPARK_GRAFT_BENCH_BATCH", "6"))
 # makes every batch's reading positionally identical.
 CANARY_QUERIES = ["join_nation_region", "q1_pricing_summary", "wc_documents"]
 CANARY_TOLERANCE = 1.3
-# --full re-probes every query at/above this batched reading in ISOLATION
-ISOLATE_THRESHOLD_SEC = 4.0
-# ...plus these, regardless of their batched reading: queries whose
-# round-over-round driver-window deltas were attributed to batch-
-# composition JIT warmth — their isolated rows keep that attribution
-# checkable in every artifact instead of one round's prose.
-# r11 pair: the r9→r10 residuals. r12 trio: the r10→r11 window spikes
-# (dedup_components 3.66→5.21 s, graph_kcore_parts 2.44→3.68 s,
-# embedding_top_pc 3.44→4.69 s — all at/below r10 steady state in the
-# same round's BENCH_FULL; warmth curves in SCALE.md §r12 pin the
-# cold-draw attribution per query).
-ALWAYS_ISOLATE = (
-    "dedup_survivors_docs",
-    "similarity_nn_descent",
-    "dedup_components",
-    "graph_kcore_parts",
-    "embedding_top_pc",
-)
-CANARY_FLOOR_PATH = Path(__file__).resolve().parent / ".bench_canary_floor.json"
 
 # headline set: the reference workloads + the heavy relational shapes +
 # one of each extension family
@@ -216,52 +193,45 @@ BENCH_QUERIES = [
 ]
 
 
-def _time_queries(names: list[str], end_canary: bool = False) -> dict[str, float]:
-    """Run in THIS process: warm pass, then GC-settled min-of-2 per query.
-
-    ``end_canary`` re-times the canary trio AFTER the batch's queries
-    (stored under reserved ``__end__:<name>`` keys) — a diagnostic for
-    contention that arrives mid-batch, which the first-position canary
-    cannot see (r8 observed a heavy query reading 2.6× its isolated
-    value inside a batch whose leading canary was clean). Verdicts
-    (floor, ratio, retry) stay on the first-position reading — the
-    statistic the 81-canary calibration was built on."""
+def _time_queries(names: list[str]) -> dict[str, dict]:
+    """Run in THIS process: warm passes, then per query a GC settle and
+    2 timed runs, each under its own job group. The canary trio is timed
+    again after the batch, under reserved ``__end__:<name>`` keys.
+    Returns ``{"secs": {key: s}, "layers": {key: {metric: value}}}``."""
     from map_reduce_lite_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
     spark = get_spark(app_name="mrl_spark_bench")
+    sc = spark.sparkContext
     queries = entry_mod.queries()
 
     # warmup: touch every table once so file listing/footer reads are warm
     queries["join_nation_region"](spark, SF_DIR).count()
     # then TWO untimed passes over THIS batch's queries: a fresh JVM's
-    # first executions pay JIT/codegen-infrastructure warmup that the
-    # old 45-query single-JVM sweep amortized invisibly — without this,
-    # whichever query opens a batch reads ~2× its steady state (
-    # measured events_gapfill_hourly 0.60 s first-in-batch vs 0.23 s
+    # first executions pay JIT/codegen-infrastructure warmup — without
+    # this, whichever query opens a batch reads ~2× its steady state
+    # (measured events_gapfill_hourly 0.60 s first-in-batch vs 0.23 s
     # mid-sweep). Warm exactly the code paths being timed.
     #
     # Two passes, not one (r10): per-ACTION driver cost (Catalyst
     # analysis + job scheduling) drops ~4× as HotSpot C2 compiles those
     # paths, and reaching steady state takes ~3-4 executions' worth of
     # driver work — measured on dedup_cluster_sizes, the registry's
-    # most action-heavy query (~10 driver actions/execution: sizing
-    # probe + 7 convergence rounds): 13.5 → 8.9 → 5.0 → 3.7 → flat
-    # 3.0-3.5 s across 8 back-to-back executions. One warm pass left
-    # its timed value at the mercy of BATCH COMPOSITION — 3.0 s when
-    # co-batched with its dedup-family siblings (their executions warm
-    # the same driver paths), 8-18 s when co-batched with light
-    # single-action neighbors (BENCH_r09's 16.5 s outlier, reproduced).
-    # Single-action queries hit steady state after one pass either way
-    # (the canary trio reads identically under both protocols), so the
-    # second pass only removes the composition sensitivity the canary
-    # is structurally blind to — it times nothing and biases nothing.
+    # most action-heavy query: 13.5 → 8.9 → 5.0 → 3.7 → flat 3.0-3.5 s
+    # across 8 back-to-back executions. One warm pass left its timed
+    # value at the mercy of BATCH COMPOSITION (3.0 s beside its
+    # dedup-family siblings, 8-18 s beside light single-action
+    # neighbors). Single-action queries hit steady state after one pass
+    # either way, so the second pass only removes that composition
+    # sensitivity — it times nothing and biases nothing.
     for _ in range(2):
         for name in names:
             queries[name](spark, SF_DIR).count()
 
-    timings: dict[str, float] = {}
-    for name in names:
+    secs: dict[str, float] = {}
+    per_query: dict[str, dict] = {}
+    timed = [(n, n) for n in names] + [(f"__end__:{n}", n) for n in CANARY_QUERIES]
+    for key, name in timed:
         # Settle cleaner debt from the PREVIOUS query before timing this
         # one: ContextCleaner frees broadcasts/shuffle state only on JVM
         # GC, and on the pre-sized heap GC won't run on its own — the
@@ -271,30 +241,54 @@ def _time_queries(names: list[str], end_canary: bool = False) -> dict[str, float
         # timed region: each number is the query's steady-state cost,
         # not its neighbors' cleanup.
         gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        best = float("inf")
-        # min of 2 timed runs: the batch warm pass above already
-        # absorbed JIT/codegen warmup, so run 1 is steady-state; the
-        # second run guards against a stray GC hiccup. (3 timed runs
-        # bought nothing measurable after the warm pass and cost ~1
-        # extra minute over the 50-query set.)
-        for _ in range(2):
+        sc._jvm.System.gc()
+        # min of 2 timed runs: the warm passes already absorbed JIT and
+        # codegen warmup, so run 1 is steady-state; the second run
+        # guards against a stray GC hiccup.
+        runs = []
+        for i in range(2):
+            group = f"{key}#{i}"
+            sc.setJobGroup(group, key)
+            epoch = time.time() - time.perf_counter()  # Spark stamps epoch ms
             t0 = time.perf_counter()
-            queries[name](spark, SF_DIR).count()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-    if end_canary:
-        for name in CANARY_QUERIES:
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                queries[name](spark, SF_DIR).count()
-                best = min(best, time.perf_counter() - t0)
-            timings[f"__end__:{name}"] = round(best, 3)
+            df = queries[name](spark, SF_DIR)
+            t_built = time.perf_counter()
+            df.count()
+            t1 = time.perf_counter()
+            runs.append((t1 - t0, layers.QueryWindow(
+                group, key, epoch + t0, epoch + t_built, epoch + t1)))
+        # One read per query, outside the timed region. Spark keeps the
+        # last 1,000 jobs and 1,000 stages and drops the oldest first, so
+        # only a query whose two runs alone pass those limits could lose
+        # a timed job (``_fastest_run`` raises if it did). The listener
+        # bus fills the store asynchronously: drain it first.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs, stages = layers.read_status_store(sc)
+        secs[key], per_query[key] = _fastest_run(runs, jobs, stages)
     spark.stop()
-    return timings
+    return {"secs": secs, "layers": per_query}
+
+
+def _fastest_run(runs: list[tuple], jobs: list[dict], stages: list[dict]) -> tuple[float, dict]:
+    """(seconds, layers) of the fastest of one query's timed runs.
+
+    ``runs`` are ``(seconds, QueryWindow)`` pairs; ``jobs`` and ``stages``
+    are the status store's records, which also hold the warm-pass,
+    canary and earlier queries' jobs. ``perfbench.layers.attribute``
+    gives a run only the jobs that carry its group or, lacking a timed
+    group, were submitted inside its window. Raises if the store no
+    longer holds a job or a stage older than the first run: then Spark's
+    retention may have dropped part of it."""
+    first_ms = runs[0][1].start * 1e3
+    for kind, records in (("job", jobs), ("stage", stages)):
+        if not any(0 < (r.get("submissionTime") or 0) < first_ms for r in records):
+            raise RuntimeError(
+                f"status store holds no {kind} older than {runs[0][1].query_id}; "
+                "its timed jobs may have been dropped"
+            )
+    layers.attribute([w for _, w in runs], jobs, stages)
+    best_secs, best = min(runs, key=lambda r: r[0])
+    return round(best_secs, 3), {m: round(v, 3) for m, v in best.metrics.items()}
 
 
 def _median(xs: list[float]) -> float:
@@ -303,158 +297,42 @@ def _median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
-def _canary_verdict(
-    per_batch: list[float],
-    stored_floor: float | None,
-    per_batch_end: list[float] | None = None,
-) -> tuple[float, float, list[int]]:
-    """Pure decision logic (unit-tested without Spark): given each batch's
-    canary total and the rolling floor from prior runs, return
-    (floor, run_ratio, indices of batches to retry).
+def _retry_batches(per_batch: list[float], per_batch_end: list[float] | None = None) -> list[int]:
+    """Indices of the batches to re-run: those whose leading canary reads
+    more than CANARY_TOLERANCE × the run's median leading canary, or
+    whose trailing canary reads more than CANARY_TOLERANCE × the run's
+    median trailing canary (pure; unit-tested without Spark).
 
-    ``per_batch_end`` (r9): the trailing re-read of the canary trio also
-    feeds the RETRY rule — a batch whose END canary exceeds tolerance ×
-    the run's END-canary median saw contention arrive MID-batch, the
-    case the first-position reading is structurally blind to (r8
-    recorded a 21.8 s dedup_components draw behind a clean leading
-    canary). End canaries run at deeper JIT warmth than first-position
-    ones, so they are compared only against their own run median —
-    floor and contamination ratio stay on the first-position statistic
-    the 81-canary calibration was built on (floor file unchanged).
-
-    Statistics chosen from 81 measured batch canaries across three full
-    sweeps: a single batch's canary jitters ±30-40% around the run
-    median (JIT depth and warm-pass composition, not the host), so the
-    run-level health reading is the MEDIAN of the batch canaries, and
-    the rolling floor is the minimum of run MEDIANS — a min-of-batches
-    floor is an outlier draw that healthy batches then 'fail' against
-    (measured: every one of three back-to-back idle-machine sweeps
-    flagged under the min/floor design). Per-batch retries compare each
-    batch against the RUN's own median (self-normalizing: a
-    protocol-level shift moves the median with it); run-level
-    contamination compares the median against history, catching exactly
-    the r6 failure shape (every query uniformly 1.5-7x for one sample).
-    A uniformly-contaminated run cannot raise the floor because the
-    stored floor wins the min; a run with no history self-calibrates
-    (ratio 1.0) — documented limitation of the first sample."""
-    med = _median(per_batch)
-    floor = med if stored_floor is None else min(med, stored_floor)
-    ratio = med / floor
-    over = {i for i, c in enumerate(per_batch) if c > CANARY_TOLERANCE * med}
-    if per_batch_end:
-        med_end = _median(per_batch_end)
-        over |= {
-            i
-            for i, c in enumerate(per_batch_end)
-            if c > CANARY_TOLERANCE * med_end
-        }
-    return floor, ratio, sorted(over)
-
-
-# The floor AGES (r8): it is the min over the last FLOOR_WINDOW run
-# medians, not the min of all history — one anomalously fast run (VM
-# burst) would otherwise lower the floor permanently and every normal
-# run after it would read "contaminated" with no recovery path short
-# of hand-editing the file. With a rolling window the outlier falls
-# out after FLOOR_WINDOW runs. Manual reset, should it ever be needed:
-# delete .bench_canary_floor.json and the next run self-calibrates.
-#
-# ... AND it is PINNED from below (r13, the r12 verdict's ask #5): on a
-# host that stays noisy for FLOOR_WINDOW runs, the rolling min itself
-# ratchets upward (measured 0.895 → 0.957 → 0.973 across r11→r12 as old
-# fast medians rotated out) and the contamination detector desensitizes
-# itself — the exact failure the floor exists to catch. The committed
-# ``pinned_floor_sec`` is the LONG-HORIZON minimum of clean run medians
-# (0.895, the minimum over every run median recorded in the r11-r12
-# floor-file history); the effective floor is min(rolling window,
-# pin), so a permanently-slow host keeps reading contaminated instead
-# of quietly re-baselining. The pin is a run MEDIAN, not an outlier
-# single batch, so the r8 burst-poisoning argument doesn't apply; if
-# the HARDWARE legitimately changes, re-pin by hand (it is a committed
-# file — the change is visible in review, not silent).
-FLOOR_WINDOW = 10
-
-
-def _load_floor_history() -> list[float]:
-    """Return the stored run-median history (possibly empty)."""
-    try:
-        data = json.loads(CANARY_FLOOR_PATH.read_text())
-        # a floor recorded for a different canary set, SF, or timing
-        # position is meaningless
-        if (
-            data.get("queries") == CANARY_QUERIES
-            and data.get("sf_dir") == SF_DIR
-            and data.get("position") == "first"
-        ):
-            if data.get("stat") == "run-median-rolling":
-                return [float(x) for x in data["medians"]]
-            if data.get("stat") == "run-median":  # pre-r8 single-value file
-                return [float(data["floor_sec"])]
-    except (OSError, ValueError, KeyError):
-        pass
-    return []
-
-
-def _load_pinned_floor() -> float | None:
-    """The committed long-horizon floor pin (see FLOOR_WINDOW note).
-    Validated under the same identity keys as the rolling history —
-    a pin recorded for a different canary set / SF is meaningless."""
-    try:
-        data = json.loads(CANARY_FLOOR_PATH.read_text())
-        if (
-            data.get("queries") == CANARY_QUERIES
-            and data.get("sf_dir") == SF_DIR
-            and data.get("position") == "first"
-            and data.get("pinned_floor_sec") is not None
-        ):
-            return float(data["pinned_floor_sec"])
-    except (OSError, ValueError, KeyError, TypeError):
-        pass
-    return None
-
-
-def _effective_floor() -> float | None:
-    """min(rolling-window history, committed pin) — None only when
-    neither exists (first run ever self-calibrates)."""
-    history = _load_floor_history()
-    cands = ([min(history)] if history else [])
-    pinned = _load_pinned_floor()
-    if pinned is not None:
-        cands.append(pinned)
-    return min(cands) if cands else None
-
-
-def _store_floor_history(medians: list[float]) -> None:
-    medians = medians[-FLOOR_WINDOW:]
-    pinned = _load_pinned_floor()
-    payload = {"queries": CANARY_QUERIES, "sf_dir": SF_DIR,
-               "position": "first", "stat": "run-median-rolling",
-               "medians": [round(m, 3) for m in medians],
-               "floor_sec": round(min(medians), 3)}
-    if pinned is not None:
-        payload["pinned_floor_sec"] = round(pinned, 3)
-    try:
-        CANARY_FLOOR_PATH.write_text(json.dumps(payload) + "\n")
-    except OSError:
-        pass  # read-only checkout: the canary still works within the run
+    The trailing reading catches contention that arrives MID-batch,
+    which the first-position one is blind to (a 21.8 s dedup_components
+    draw was once recorded behind a clean leading canary). Trailing
+    canaries run at deeper JIT warmth than leading ones, so each is
+    compared only with its own run median. The median, not the minimum:
+    81 measured batch canaries over three idle-machine sweeps jittered
+    ±30-40% around the run median from JIT depth and warm-pass
+    composition alone. Comparing with the run's own median reads no
+    stored state, and a host that is uniformly slow for a whole run
+    moves the median with it: such a run is told apart only by its
+    ``canary`` record against runs on the same core count."""
+    over = set()
+    for readings in (per_batch, per_batch_end or []):
+        if readings:
+            med = _median(readings)
+            over |= {i for i, c in enumerate(readings) if c > CANARY_TOLERANCE * med}
+    return sorted(over)
 
 
 def _assign_batches(names: list[str], size: int) -> list[list[str]]:
     """Deterministic batch assignment: STABLE-HASH order, then chunk.
 
-    r12 (the r11 verdict's ask #7): three consecutive rounds of residual
-    window noise (r9 cluster_sizes, r10 survivors/nn_descent, r11
-    components/kcore/top_pc) all traced to BATCH-COMPOSITION shifts —
-    `--full` previously chunked `list(ALL_QUERIES)`, whose order is the
-    evidence-rotation order and therefore changes EVERY round, so each
-    round re-drew every query's warm-pass neighbors and JIT depth.
-    Ordering by md5(name) before chunking makes a query's batch a pure
-    function of the registry CONTENTS: rotation reordering no longer
-    moves anyone, and registry growth shifts only the hash-order suffix
-    after the insertion point (few additions/round now the surface is
-    complete). Round-over-round per-query deltas therefore compare
-    like-for-like; real plan changes stand out from composition drift.
-    md5, not hash(): PYTHONHASHSEED varies per process."""
+    Three consecutive rounds of residual per-query noise traced to
+    BATCH-COMPOSITION shifts: chunking the registry in its own order
+    re-drew every query's warm-pass neighbors and JIT depth whenever
+    that order changed. Ordering by md5(name) before chunking makes a
+    query's batch a pure function of the registry CONTENTS: reordering
+    moves no one, and registry growth shifts only the hash-order suffix
+    after the insertion point. md5, not hash(): PYTHONHASHSEED varies
+    per process."""
     import hashlib
 
     ordered = sorted(
@@ -463,9 +341,9 @@ def _assign_batches(names: list[str], size: int) -> list[list[str]]:
     return [ordered[i : i + size] for i in range(0, len(ordered), size)]
 
 
-def _run_batch(names: list[str]) -> dict[str, float]:
+def _run_batch(names: list[str]) -> dict[str, dict]:
     """Spawn one child worker over ``names`` (+ canaries) and return its
-    timings, including the canary entries."""
+    ``{"secs", "layers"}``, including the canary entries."""
     # canary first (uniform position), then the batch's own queries; a
     # batch member that IS a canary query takes its number from the
     # canary position — same protocol, measured once
@@ -488,7 +366,14 @@ def _run_batch(names: list[str]) -> dict[str, float]:
         return json.loads(Path(f.name).read_text())
 
 
-def _emit(timings: dict[str, float], canary: dict | None = None) -> dict:
+def _canary_sec(result: dict, end: bool = False) -> float:
+    """A batch's leading (or, with ``end``, trailing) canary total."""
+    prefix = "__end__:" if end else ""
+    return sum(result["secs"][prefix + c] for c in CANARY_QUERIES)
+
+
+def _emit(timings: dict[str, float], per_query: dict[str, dict],
+          retries: list[dict], canary: dict) -> dict:
     sf = None
     tail = Path(SF_DIR).name
     if tail.startswith("sf"):
@@ -497,31 +382,39 @@ def _emit(timings: dict[str, float], canary: dict | None = None) -> dict:
         except ValueError:
             pass
     # Key order matters downstream: the driver records only the LAST
-    # 2000 chars of stdout, so the long per-query dict goes FIRST and
-    # the run-level summary (sf, canary verdict, total) goes LAST —
-    # that way the tail always carries the total + canary even when
-    # the queries dict is truncated at the front (r7's artifact lost
-    # the total this way).
+    # 2000 chars of stdout, so the long dicts go FIRST and the run-level
+    # summary (sf, canary, total) goes LAST — the tail always carries
+    # the total and the canary even when the front is cut.
     payload = {
         "metric": "headline query wall time at sf (sum over queries)",
         "unit": "sec",
         "queries": timings,
+        "layers": per_query,
+        "retries": retries,
         "sf": sf,
+        "canary": canary,
+        "value": round(sum(timings.values()), 3),
     }
-    if canary is not None:
-        payload["canary"] = canary
-    payload["value"] = round(sum(timings.values()), 3)
     print(json.dumps(payload))
     return payload
 
 
 def main() -> None:
-    global BENCH_QUERIES
-    full = "--full" in sys.argv[1:]
+    argv = sys.argv[1:]
+    if argv[:1] == ["--batch"]:
+        # child worker: time the listed queries, write JSON to the file
+        names, out_path = argv[1].split(","), argv[2]
+        Path(out_path).write_text(json.dumps(_time_queries(names)))
+        return
+
+    from map_reduce_lite_spark.session import session_sizing
+
+    full = "--full" in argv
+    names = BENCH_QUERIES
     if full:
         import __spark_entry__ as entry_mod
 
-        BENCH_QUERIES = list(entry_mod.ALL_QUERIES)
+        names = list(entry_mod.ALL_QUERIES)
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if only:  # comma-separated subset, for targeted investigation runs
         names = [n.strip() for n in only.split(",") if n.strip()]
@@ -530,53 +423,27 @@ def main() -> None:
         # batch subprocess
         import __spark_entry__ as entry_mod
 
-        known = set(entry_mod.ALL_QUERIES)
-        unknown = [n for n in names if n not in known]
+        unknown = [n for n in names if n not in entry_mod.ALL_QUERIES]
         if unknown:
             raise SystemExit(f"unknown queries in SPARK_GRAFT_BENCH_ONLY: {unknown}")
-        BENCH_QUERIES = names
-    argv = sys.argv[1:]
-    if argv[:1] == ["--batch"]:
-        # child worker: time the listed queries, write JSON to the file
-        names, out_path = argv[1].split(","), argv[2]
-        Path(out_path).write_text(
-            json.dumps(_time_queries(names, end_canary=True))
-        )
-        return
 
-    if "--in-process" in argv:
-        _emit(_time_queries(BENCH_QUERIES))
-        return
-
-    size = 1 if "--isolate" in argv else BATCH_SIZE
-    batches = _assign_batches(BENCH_QUERIES, size)
+    batches = _assign_batches(names, 1 if "--isolate" in argv else BATCH_SIZE)
     results = [_run_batch(b) for b in batches]
-    canaries = [sum(r[c] for c in CANARY_QUERIES) for r in results]
-    ends = [
-        sum(r.get(f"__end__:{c}", 0.0) for c in CANARY_QUERIES) for r in results
-    ]
-
-    history = _load_floor_history()
-    stored_floor = _effective_floor()
-    floor, _, over = _canary_verdict(canaries, stored_floor, ends)
+    canaries = [_canary_sec(r) for r in results]
+    ends = [_canary_sec(r, end=True) for r in results]
     # Retries are ONE-SIDED by design (only too-SLOW batches re-run;
     # keeping the lower-canary attempt is a mild downward bias on
-    # retried batches). Record both attempts' canaries so the bias is
-    # visible in the artifact rather than silent.
-    retried = []
-    for i in over:
-        # one retry per contaminated batch: host/VM contention is
-        # transient (SCALE.md: probes minutes apart span 73→91 s totals);
-        # keep whichever attempt the canaries say was healthier — the
-        # leading AND trailing readings together, since a mid-batch
-        # contention draw shows only in the trailing one
+    # retried batches). Both attempts' canaries are recorded so the bias
+    # is visible in the artifact rather than silent.
+    retries = []
+    for i in _retry_batches(canaries, ends):
+        # one retry per flagged batch: host/VM contention is transient;
+        # keep whichever attempt the leading AND trailing canaries
+        # together say was healthier
         retry = _run_batch(batches[i])
-        retry_canary = sum(retry[c] for c in CANARY_QUERIES)
-        retry_end = sum(
-            retry.get(f"__end__:{c}", 0.0) for c in CANARY_QUERIES
-        )
+        retry_canary, retry_end = _canary_sec(retry), _canary_sec(retry, end=True)
         kept_retry = retry_canary + retry_end < canaries[i] + ends[i]
-        retried.append(
+        retries.append(
             {"batch_head": batches[i][0],
              "first_canary": round(canaries[i], 3),
              "first_end_canary": round(ends[i], 3),
@@ -586,86 +453,25 @@ def main() -> None:
         )
         if kept_retry:
             results[i], canaries[i], ends[i] = retry, retry_canary, retry_end
-    floor, ratio, _ = _canary_verdict(canaries, stored_floor, ends)
-    # Only full-ish runs feed the rolling floor: a scoped
-    # SPARK_GRAFT_BENCH_ONLY / --isolate probe has 1-2 batches, and a
-    # 1-batch "median" is a single draw with the measured ±30-40%
-    # batch jitter — one lucky probe would depress the shared floor
-    # (observed r8: an isolate probe's 1.159 canary entered the file).
-    if len(canaries) >= 3:
-        _store_floor_history(history + [_median(canaries)])
 
     timings: dict[str, float] = {}
+    per_query: dict[str, dict] = {}
     for batch, r in zip(batches, results):
-        timings.update({k: v for k, v in r.items() if k in batch})
+        for name in batch:
+            timings[name], per_query[name] = r["secs"][name], r["layers"][name]
     canary = {
         "queries": CANARY_QUERIES,
+        "cpus": int(session_sizing(os.environ, None, os.cpu_count())[0]),
         "per_batch": [round(c, 3) for c in canaries],
-        # trailing re-read of the same trio: feeds the RETRY rule (vs
-        # the run's own end-canary median) so mid-batch contention
-        # self-heals; floor/ratio verdicts stay on the first-position
-        # reading the calibration was built on
         "per_batch_end": [round(c, 3) for c in ends],
         "median_sec": round(_median(canaries), 3),
-        "floor_sec": round(floor, 3),
-        "ratio": round(ratio, 3),
         "tolerance": CANARY_TOLERANCE,
-        "retried_batches": len(retried),
-        "retries": retried,
-        "contaminated": ratio > CANARY_TOLERANCE,
+        "retried_batches": len(retries),
     }
+    payload = _emit(timings, per_query, retries, canary)
     if full:
-        # r10 (the r8 ask, completed): annotate the expensive class with
-        # ISOLATED probes IN the artifact — every query whose batched
-        # reading is ≥ ISOLATE_THRESHOLD_SEC re-runs alone in a fresh
-        # process, so a reader can separate the query's own cost from
-        # in-batch neighbor effects without hunting through SCALE.md
-        # prose. Probes are canary-guarded against the RUN's
-        # first-position median (same tolerance as batch retries — a
-        # contaminated draw on exactly the number this block exists to
-        # clean must not be published as the isolated truth), and a
-        # probe child dying records an error entry instead of
-        # discarding the completed sweep (the probed class is the
-        # heavy OOM/timeout-prone one).
-        run_median = _median(canaries)
-        isolated = {}
-        probe_list = [
-            (name, t)
-            for name, t in sorted(timings.items(), key=lambda kv: -kv[1])
-            if t >= ISOLATE_THRESHOLD_SEC or name in ALWAYS_ISOLATE
-        ]
-        for name, t in probe_list:
-            try:
-                r = _run_batch([name])
-                probe_canary = sum(r[c] for c in CANARY_QUERIES)
-                probe_retried = False
-                if probe_canary > CANARY_TOLERANCE * run_median:
-                    retry = _run_batch([name])
-                    retry_canary = sum(retry[c] for c in CANARY_QUERIES)
-                    probe_retried = True
-                    if retry_canary < probe_canary:
-                        r, probe_canary = retry, retry_canary
-                isolated[name] = {
-                    "batched_sec": t,
-                    "isolated_sec": r[name],
-                    "canary_sec": round(probe_canary, 3),
-                    "end_canary_sec": round(
-                        sum(r.get(f"__end__:{c}", 0.0) for c in CANARY_QUERIES),
-                        3,
-                    ),
-                    "retried": probe_retried,
-                    "canary_clean": probe_canary
-                    <= CANARY_TOLERANCE * run_median,
-                }
-            except Exception as exc:  # noqa: BLE001 — record, don't abort
-                isolated[name] = {"batched_sec": t, "error": str(exc)[:500]}
-        canary["isolated_threshold_sec"] = ISOLATE_THRESHOLD_SEC
-        payload = _emit(timings, canary)
-        payload["isolated"] = isolated
         out = Path(__file__).resolve().parent / "BENCH_FULL.json"
         out.write_text(json.dumps(payload, indent=1) + "\n")
-    else:
-        _emit(timings, canary)
 
 
 if __name__ == "__main__":

@@ -399,6 +399,17 @@ def copurchase_edges(
     )
 
 
+# The SQL twin of ``copurchase_edges``: the body of the forward edge CTE
+# that every co-purchase graph oracle opens with.
+COPURCHASE_EDGES_SQL = f"""
+  SELECT a.l_partkey AS u, b.l_partkey AS v
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2
+  HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
+"""
+
+
 def build_copurchase_edges(
     li: DataFrame, path: str, min_support: int = TRIANGLE_MIN_SUPPORT
 ) -> DataFrame:
@@ -523,13 +534,7 @@ def triangle_parts(
 
 
 TRIANGLE_SQL = f"""
-WITH e AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-), tri AS (
+WITH e AS ({COPURCHASE_EDGES_SQL}), tri AS (
   SELECT e1.u AS x, e1.v AS y, e2.v AS z
   FROM e e1
   JOIN e e2 ON e1.v = e2.u
@@ -641,13 +646,7 @@ def _lpa_sql() -> str:
 
     rounds = ", ".join(rnd(f"l{i}", f"l{i + 1}") for i in range(LPA_ROUNDS))
     return f"""
-WITH fwd AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-), e AS (
+WITH fwd AS ({COPURCHASE_EDGES_SQL}), e AS (
   SELECT u, v FROM fwd UNION ALL SELECT v, u FROM fwd
 ), l0 AS (
   SELECT DISTINCT u AS node, u AS lbl FROM e
@@ -737,13 +736,7 @@ def _kcore_sql() -> str:
         )
     chain = ", ".join(rounds)
     return f"""
-WITH fwd AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-), e0 AS (
+WITH fwd AS ({COPURCHASE_EDGES_SQL}), e0 AS (
   SELECT u, v FROM fwd UNION ALL SELECT v, u FROM fwd
 ), {chain}
 SELECT u AS part, CAST(COUNT(*) AS BIGINT) AS kcore_degree

@@ -38,7 +38,10 @@ the child reads Spark's status store (``perfbench/layers.py``) and
 attributes its jobs and stages to the two runs; the ``layers`` entry of
 a query is that of the run whose seconds are reported. ``build_s`` +
 ``action_s`` is the reported wall time; ``driver_gap_s`` is the part of
-it with no stage running.
+it with no stage running. ``tree_cpu_s`` is the CPU of the whole process
+tree (this process, the JVM and its Python workers) over that run, read
+just outside its timed region with ``perfbench/run.py``'s ``tree_cpu_s``;
+``executor_cpu_s`` counts JVM task CPU only.
 
 Host noise. Identical-tree full runs have measured a ±25% host/VM band.
 Every batch times a fixed 3-query CANARY right after its warm pass and
@@ -64,8 +67,11 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+# perfbench/run.py imports its sibling modules without a package prefix
+sys.path.append(str(Path(__file__).resolve().parent / "perfbench"))
 
 from perfbench import layers  # noqa: E402 — needs the repo on sys.path
+from run import tree_cpu_s  # noqa: E402 — needs perfbench/ on sys.path
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BATCH_SIZE = 6
@@ -250,13 +256,15 @@ def _time_queries(names: list[str]) -> dict[str, dict]:
             group = f"{key}#{i}"
             sc.setJobGroup(group, key)
             epoch = time.time() - time.perf_counter()  # Spark stamps epoch ms
+            cpu0 = tree_cpu_s(os.getpid())
             t0 = time.perf_counter()
             df = queries[name](spark, SF_DIR)
             t_built = time.perf_counter()
             df.count()
             t1 = time.perf_counter()
+            cpu = tree_cpu_s(os.getpid()) - cpu0
             runs.append((t1 - t0, layers.QueryWindow(
-                group, key, epoch + t0, epoch + t_built, epoch + t1)))
+                group, key, epoch + t0, epoch + t_built, epoch + t1), cpu))
         # One read per query, outside the timed region. Spark keeps the
         # last 1,000 jobs and 1,000 stages and drops the oldest first, so
         # only a query whose two runs alone pass those limits could lose
@@ -272,7 +280,7 @@ def _time_queries(names: list[str]) -> dict[str, dict]:
 def _fastest_run(runs: list[tuple], jobs: list[dict], stages: list[dict]) -> tuple[float, dict]:
     """(seconds, layers) of the fastest of one query's timed runs.
 
-    ``runs`` are ``(seconds, QueryWindow)`` pairs; ``jobs`` and ``stages``
+    ``runs`` are ``(seconds, QueryWindow, tree CPU seconds)``; ``jobs`` and ``stages``
     are the status store's records, which also hold the warm-pass,
     canary and earlier queries' jobs. ``perfbench.layers.attribute``
     gives a run only the jobs that carry its group or, lacking a timed
@@ -286,8 +294,9 @@ def _fastest_run(runs: list[tuple], jobs: list[dict], stages: list[dict]) -> tup
                 f"status store holds no {kind} older than {runs[0][1].query_id}; "
                 "its timed jobs may have been dropped"
             )
-    layers.attribute([w for _, w in runs], jobs, stages)
-    best_secs, best = min(runs, key=lambda r: r[0])
+    layers.attribute([w for _, w, _ in runs], jobs, stages)
+    best_secs, best, cpu = min(runs, key=lambda r: r[0])
+    best.metrics["tree_cpu_s"] = cpu
     return round(best_secs, 3), {m: round(v, 3) for m, v in best.metrics.items()}
 
 

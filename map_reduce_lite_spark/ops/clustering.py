@@ -22,9 +22,10 @@ and oracle-replayable (k-means++ would need a seeded RNG contract).
 
 Scale notes:
 - Assignment: the K centroids are first collapsed to ONE row holding an
-  array of (cluster, centroid) structs, broadcast, and the per-vector
-  argmin is a single ``array_min(transform(...))`` expression — a pure
-  map stage over the corpus. The corpus is NEVER shuffled during
+  array of (cluster, centroid) structs, broadcast; one
+  ``similarity.fold_kernel`` Arrow UDF call scores a vector against all
+  K, and the argmin is ``array_min`` over the scores — a pure map stage
+  over the corpus. The corpus is NEVER shuffled during
   assignment (the earlier crossJoin-fanout + window-argmin shape
   re-shuffled the K×-fanned corpus every Lloyd iteration — at 100 TB
   that is the whole job's cost; the map form eliminates it, same FLOPs
@@ -62,6 +63,7 @@ from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.pairs import salted_split
 from map_reduce_lite_spark.ops.similarity import (
     EMB_DIM,
+    _fold,
     _sql_cos,
     cosine_verify,
     sim_e9,
@@ -96,29 +98,29 @@ def _quantize(vec):
 
 
 def _sqdist(a, b):
-    """Exact integer squared L2 distance between quantized vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    """Exact integer squared L2 distance between quantized vectors
+    (``similarity.fold_kernel``); under ANSI mode a long overflow raises
+    ARITHMETIC_OVERFLOW from the action, as Spark's own arithmetic
+    would."""
+    return _fold("sqdist", a, b)
 
 
 def _assign(q: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest centroid per vector (ties → lowest cluster id).
 
     Map-only over the corpus: centroids collapse to a 1-row
-    (cluster, cv) struct array, broadcast, and the argmin is
+    (cluster, cv) struct array, broadcast, ``fold_kernel`` scores each
+    vector against all of them in one Arrow UDF call, and the argmin is
     ``array_min`` over per-centroid (dist_q, cluster) structs —
     lexicographic struct comparison gives dist-then-lowest-cluster,
     so no window, no shuffle, no row fanout."""
     carr = cents.agg(F.collect_list(F.struct("cluster", "cv")).alias("carr"))
+    dists = _fold("sqdists", F.col("qv"), F.transform("carr", lambda c: c["cv"]))
     best = F.array_min(
         F.transform(
-            F.col("carr"),
-            lambda c: F.struct(
-                _sqdist(F.col("qv"), c["cv"]).alias("dist_q"),
-                c["cluster"].alias("cluster"),
+            dists,
+            lambda d, i: F.struct(
+                d.alias("dist_q"), F.col("carr")[i]["cluster"].alias("cluster")
             ),
         )
     )
@@ -166,10 +168,9 @@ def kmeans_assignments(
     The plan shape is K-INDEPENDENT (pinned by
     tests/test_clustering.py::test_kmeans_plan_k_independent at K=64):
     assignment stays one broadcast of a single row carrying the
-    K×(dim longs) centroid array — the codegen'd argmin expression
-    iterates that array as DATA, so generated-code size does not grow
-    with K (unlike the JL sign-matrix literal, which needed the Janino
-    64 KB pin) — and the update stays one partial-agg SUM over
+    K×(dim longs) centroid array — the kernel UDF and the argmin
+    iterate that array as DATA, so the plan does not grow with K — and
+    the update stays one partial-agg SUM over
     (cluster, pos) plus a K-row re-pack however large K is. The
     1-row broadcast carries K·dim·8 bytes ≈ K·0.5 KB
     at dim 64: K=64 → 33 KB, K=4096 → 2 MB; the posexplode form only

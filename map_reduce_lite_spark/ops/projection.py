@@ -7,7 +7,7 @@ fully value-oracled operators:
 
 - **Random projection** (Johnson–Lindenstrauss): a fixed ±1 Rademacher
   matrix maps 64-dim → RP_DIM-dim. Sign matrix is a driver-side seeded
-  constant folded into the plan as literals (same pattern as the LSH
+  constant shipped with the ``fold_kernel`` UDF (same pattern as the LSH
   hyperplanes in ops/similarity.py) — no RNG in the plan, so the
   projection is reproducible across engines and the DuckDB twin replays
   it term by term. The JL scaling constant 1/sqrt(k) is omitted: it is
@@ -42,7 +42,7 @@ from map_reduce_lite_spark.ops.similarity import (
     N_QUERY_VECS,
     TOP_K,
     _dot,
-    _spread,
+    _fold,
     _sql_cos,
     cosine,
     top_k_by_sim,
@@ -68,22 +68,15 @@ def _signs() -> list[list[float]]:
 
 
 def _project(vec: Column) -> Column:
-    """All RP_DIM projected coordinates in ONE higher-order expression:
-    the sign matrix enters the plan as a single array<array<double>>
-    literal (not 2048 expression nodes — the term-by-term form blows
-    Janino's 64 KB method limit at RP_DIM=32 and drops the stage out of
-    codegen). Each coordinate folds left-to-right, the exact double
-    order the SQL twin replays."""
-    m = F.lit(_signs())
-    dvec = F.transform(vec, lambda x: x.cast("double"))
-    return F.transform(
-        m,
-        lambda row: F.aggregate(
-            F.zip_with(row, dvec, lambda s, x: s * x),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
+    """All RP_DIM projected coordinates of ``vec`` in one Arrow UDF call
+    (``similarity.fold_kernel``): each coordinate is the left-to-right
+    double fold of ``vec`` against one row of the sign matrix, the exact
+    order the SQL twin replays. The matrix travels with the function,
+    not as a plan literal (a 2,048-value ``F.lit`` cost 0.86-0.95 s of
+    driver time per build) and not with each row."""
+    import numpy as np
+
+    return _fold("project", vec, const=np.array(_signs()))
 
 
 def _sql_proj_dim(vec_expr: str, signs_row: list[float]) -> str:
@@ -251,7 +244,7 @@ def similarity_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
     exact = (
-        _spread(cand.select("query_id", "neighbor_id"), "query_id")
+        cand.select("query_id", "neighbor_id")
         .join(F.broadcast(qfull), "query_id")
         .join(cfull, "neighbor_id")
         .select(
@@ -347,10 +340,11 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes — at 100 TB that is the difference between moving the
     embedding matrix and moving 1/32 of it; the exact stage touches
     RERANK_FACTOR×k full vectors per query, independent of corpus
-    size. Here ADC recomputes each codeword sub-distance inline so
-    DuckDB can replay it row by row; production precomputes the
-    per-query M_SUB×K_CODES lookup table (1024 ints, broadcast) and
-    scoring is M_SUB adds per pair. Every distance is an exact int64 —
+    size. Here ADC folds the query against each vector's codeword
+    reconstruction, one ``fold_kernel`` call per pair that DuckDB replays
+    per subspace; production precomputes the per-query M_SUB×K_CODES
+    lookup table (1024 ints, broadcast) and scoring is M_SUB adds per
+    pair. Every distance is an exact int64 —
     no floats anywhere in this operator."""
     from map_reduce_lite_spark.ops.clustering import _quantize, _sqdist
 
@@ -367,50 +361,38 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _sub(vec, m):
         return F.slice(vec, m * D_SUB + 1, D_SUB)
 
-    # the inner argmin scans size(cb) codes, not the K_CODES literal: a
-    # corpus smaller than K_CODES trains a short codebook, and indexing
-    # cb[j] past its end throws INVALID_ARRAY_INDEX under ANSI (found by
-    # the r10 single-row corpus sweep — DuckDB's argmin is naturally
-    # bounded by the seed rows present). On a full corpus size(cb) ==
-    # K_CODES and the plan is value-identical.
-    codes_col = F.transform(
-        F.sequence(F.lit(0), F.lit(M_SUB - 1)),
-        lambda m: F.array_min(
-            F.transform(
-                F.sequence(F.lit(0), F.size(F.col("cb")) - F.lit(1)),
-                lambda j: F.struct(
-                    _sqdist(
-                        F.slice(F.col("qv"), m * D_SUB + 1, D_SUB),
-                        F.slice(F.col("cb")[j], m * D_SUB + 1, D_SUB),
-                    ).alias("d"),
-                    j.alias("j"),
-                ),
-            )
-        )["j"],
-    )
+    # per subspace, the nearest codeword j (ties → the smaller j) among
+    # the size(cb) codes present: a corpus smaller than K_CODES trains a
+    # short codebook, and DuckDB's argmin is bounded by the seed rows
+    # present too. On a full corpus size(cb) == K_CODES.
+    def _code(m):
+        d = _fold("sqdists", _sub(F.col("qv"), m), F.transform("cb", lambda c: _sub(c, m)))
+        return F.array_min(
+            F.transform(d, lambda x, j: F.struct(x.alias("d"), j.alias("j")))
+        )["j"]
+
     codes = qv.crossJoin(F.broadcast(cb)).select(
-        "vec_id", codes_col.alias("codes")
+        "vec_id", F.array(*[_code(m) for m in range(M_SUB)]).alias("codes"), "cb"
     )
+    # ADC: the query against the corpus vector's PQ reconstruction (its
+    # M_SUB codeword slices end to end). Integer addition is exact and
+    # every term is non-negative, so one fold over the reconstruction
+    # equals the sum of the per-subspace folds and overflows when it does.
+    recon = F.flatten(
+        F.transform(
+            F.col("codes"), lambda c, m: F.slice(F.col("cb")[c], m * D_SUB + 1, D_SUB)
+        )
+    )
+    codes = codes.select("vec_id", recon.alias("recon"))
     queries = qv.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(M_SUB - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, m: acc
-        + _sqdist(
-            F.slice(F.col("qq"), m * D_SUB + 1, D_SUB),
-            F.slice(F.col("cb")[F.col("codes")[m]], m * D_SUB + 1, D_SUB),
-        ),
-    )
     pairs = (
-        _spread(codes, "vec_id")
-        .join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .crossJoin(F.broadcast(cb))
+        codes.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            adc.alias("approx_d2"),
+            _sqdist(F.slice("qq", 1, M_SUB * D_SUB), F.col("recon")).alias("approx_d2"),
         )
     )
     wa = Window.partitionBy("query_id").orderBy(
@@ -421,7 +403,7 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nfull = qv.select(F.col("vec_id").alias("neighbor_id"), F.col("qv").alias("nv"))
     exact = (
-        _spread(cand.select("query_id", "neighbor_id"), "query_id")
+        cand.select("query_id", "neighbor_id")
         .join(F.broadcast(queries), "query_id")
         .join(nfull, "neighbor_id")
         .select(
@@ -556,11 +538,8 @@ def embedding_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
-    c = _spread(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
-        ),
-        "neighbor_id",
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
     )
     dots = (
         c.crossJoin(F.broadcast(q))
@@ -745,7 +724,7 @@ def _top_pc_sql() -> str:
     """Three unrolled power-iteration rounds, column-wise (x1..x64 /
     w1..w64 flat columns — the k-means oracle's allocator lesson), with
     the same fold orders: s is a left-associated 64-term double chain
-    (== the zip_with fold from acc 0.0) divided by the exact row count
+    (== ``_dot``'s fold from acc 0.0) divided by the exact row count
     (the overflow guard — the per-dim decimal sums stay bounded by one
     row's magnitude), the per-dim sums and the norm accumulate through
     DECIMAL(27,12) (exact, order-free)."""

@@ -6,8 +6,8 @@ Three paths, mirroring how a 100 TB vector corpus is actually served:
   set, one narrow pass over the corpus computing cosine, per-query top-k
   via window rank. Cost is O(|corpus| × |queries|) FLOPs but only ONE
   scan and ONE small shuffle (corpus × n_queries rows, pruned to top-k
-  by partial TakeOrdered semantics). The pair math is ``_dot``, a JVM
-  expression that Spark interprets per pair (see there).
+  by partial TakeOrdered semantics). The pair math is ``_dot``, one
+  numpy fold per Arrow batch (``fold_kernel``, see there).
 - **LSH-bucketed ANN** (the scale path): random-hyperplane signatures
   bucket the corpus once (write-time at scale); queries probe only their
   bucket. Hyperplanes are seeded and passed as literals, so the operator
@@ -22,16 +22,18 @@ Three paths, mirroring how a 100 TB vector corpus is actually served:
 
 Cosine determinism vs the DuckDB oracle: both sides cast each float
 element to double, multiply pairwise, and fold left-to-right
-(Spark ``aggregate``; DuckDB native ``list_dot_product`` on DOUBLE[] —
-a sequential loop, verified bit-identical to the explicit zip fold and
-chosen over it because the zip form's per-row struct allocations
-fragment the process into vm.max_map_count mappings on wide pair
-joins, see ``_sql_dot``), giving bit-identical doubles; results are
-additionally rounded to 9 decimals before ranking with a vec_id
-tiebreak.
+(``fold_kernel``'s numpy loop; DuckDB native ``list_dot_product`` on
+DOUBLE[] — a sequential loop, verified bit-identical to the explicit
+zip fold and chosen over it because the zip form's per-row struct
+allocations fragment the process into vm.max_map_count mappings on wide
+pair joins, see ``_sql_dot``), giving bit-identical doubles; the
+division stays a Spark expression. Results are floor-scaled to 9
+decimals after ranking on the raw cosine with a vec_id tiebreak.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
@@ -54,43 +56,186 @@ EMB_BUCKET_CAP = 512  # max members per LSH band bucket before a hot-bucket spli
 EMB_DIM = 64  # test-table embedding dimension (pins the oracle's planes)
 
 
+def fold_kernel():
+    """``(by_length, fold, pairwise)``: the engine's one vector fold, in
+    numpy over Arrow list arrays (``_fold``'s UDFs and ``ivf_scores``).
+
+    ``fold(a, b, sq)`` reduces the last axis (leading axes broadcast):
+    double products added left to right from 0.0, one rounded multiply
+    and add per element in separate ufunc calls (no fused multiply-add,
+    no reassociation) — the IEEE sequence of ``_sql_dot``; with ``sq``,
+    the wrapping int64 sum of squared differences (``_sql_sqdist``).
+    ``by_length(vecs, dtype)`` is ``{length: (rows, rows × length
+    array)}`` of the valid rows: non-null lists with no null element.
+    ``pairwise(a, b, sq, ansi)`` folds two list arrays row by row into
+    ``(values, valid)``; a length mismatch is invalid, two empty lists
+    fold to zero. With ``sq`` and ``ansi`` it raises ARITHMETIC_OVERFLOW
+    where Spark's exact long arithmetic would (``overflows``).
+    All of it is local to this function, so it pickles by value: a
+    Python worker runs it without importing this package (0.77 s)."""
+    import numpy as np
+
+    def fold(a, b, sq=False):
+        acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]), a.dtype)
+        # element j of every vector contiguous: one pass per element
+        a, b = (np.ascontiguousarray(np.moveaxis(v, -1, 0)) for v in (a, b))
+        for j in range(len(a)):
+            if sq:
+                d = a[j] - b[j]
+                acc += d * d
+            else:
+                acc += a[j] * b[j]
+        return acc
+
+    def gather(x, off, r, n):
+        # rows r, each of length n, as a rows × n array: a view of the
+        # values when r is every row of the array
+        if len(r) == len(off) - 1:
+            return x[off[0] : off[-1]].reshape(len(r), n)
+        return x[off[r][:, None] + np.arange(n)]
+
+    def rows(vecs, dtype):
+        # (lengths, valid, offsets, values): valid rows are non-null
+        # lists with no null element
+        off = vecs.offsets.to_numpy()
+        ok = ~vecs.is_null().to_numpy(zero_copy_only=False)
+        vals = vecs.values
+        if vals.null_count:
+            seen = np.concatenate(
+                ([0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False)))
+            )
+            ok &= seen[off[1:]] == seen[off[:-1]]
+            vals = vals.fill_null(0)
+        return np.diff(off), ok, off, vals.to_numpy(zero_copy_only=False).astype(dtype)
+
+    def by_length(vecs, dtype=np.float64):
+        lens, ok, off, x = rows(vecs, dtype)
+        groups = {}
+        for n in np.unique(lens[ok]):
+            r = np.flatnonzero(ok & (lens == n))
+            groups[int(n)] = (r, gather(x, off, r, n))
+        return groups
+
+    def overflows(a, b):
+        # Spark's exact long arithmetic on one row pair (Python lists):
+        # zip_with pads with nulls, every non-null square is checked (a
+        # difference that overflows squares past 2^63 too), and the sum
+        # runs up to the first null term
+        n = max(len(a), len(b))
+        t = [
+            None if x is None or y is None else (x - y) ** 2
+            for x, y in zip(a + [None] * (n - len(a)), b + [None] * (n - len(b)))
+        ]
+        head = t[: t.index(None)] if None in t else t
+        return max([v for v in t if v is not None] + [sum(head)]) >= 2**63
+
+    def pairwise(a, b, sq=False, ansi=False):
+        dtype = np.int64 if sq else np.float64
+        la, oka, offa, xa = rows(a, dtype)
+        lb, okb, offb, xb = rows(b, dtype)
+        if sq and ansi and len(a):
+            # below this bound no overflow can occur; above it, replay each
+            # row's exact arithmetic
+            top = max(np.abs(x.astype(np.float64)).max(initial=0.0) for x in (xa, xb))
+            if (2 * top) ** 2 * max(la.max(), lb.max(), 1) >= 2.0**62 and any(
+                x is not None and y is not None and overflows(x, y)
+                for x, y in zip(a.to_pylist(), b.to_pylist())
+            ):
+                raise ArithmeticError(
+                    "[ARITHMETIC_OVERFLOW] long overflow. If necessary set "
+                    '"spark.sql.ansi.enabled" to "false" to bypass this error. '
+                    "SQLSTATE: 22003"
+                )
+        ok = oka & okb & (la == lb)
+        out = np.zeros(len(a), dtype)
+        for n in np.unique(la[ok]):
+            r = np.flatnonzero(ok & (la == n))
+            out[r] = fold(gather(xa, offa, r, n), gather(xb, offb, r, n), sq)
+        return out, ok
+
+    return by_length, fold, pairwise
+
+
+_FOLDS: dict = {}
+
+
+def _fold(kind: str, *cols: Column, const=None) -> Column:
+    """``fold_kernel`` as a scalar Arrow UDF over ``cols``:
+
+    - ``dot(a, b)``: the double dot product of two vectors;
+    - ``sqdist(a, b)``: the long squared L2 distance of two vectors;
+    - ``sqdists(a, m)``: ``sqdist`` of ``a`` and each vector of the
+      array ``m``, as an array (null where ``m`` is null);
+    - ``project(a)``: ``dot`` of ``a`` and each row of the constant
+      matrix ``const``, shipped with the function rather than with each
+      row, as an array (null where ``a`` has no fold of that width).
+
+    A fold without a value is null (see ``fold_kernel``). ``F.arrow_udf``
+    needs an active session, so the UDF is built on first use and kept
+    per application, ANSI mode and constant: building one pickles the
+    kernel (~35 ms of driver time). ANSI mode is read when the plan is
+    built, as Spark binds its own arithmetic then."""
+    spark = SparkSession.active()
+    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
+    matrix = None if const is None else (const.shape, const.tobytes())
+    key = (spark.sparkContext.applicationId, kind, ansi, matrix)
+    if key not in _FOLDS:
+        _FOLDS[key] = _fold_udf(kind, ansi, const)
+    return _FOLDS[key](*cols)
+
+
+def _fold_udf(kind: str, ansi: bool, const):
+    by_length, fold, pairwise = fold_kernel()
+
+    def vector_fold(a, b=None):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if kind == "project":
+            k, n = const.shape
+            vals, ok = np.zeros((len(a), k)), np.zeros(len(a), bool)
+            if n in (groups := by_length(a)):
+                r, x = groups[n]
+                vals[r], ok[r] = fold(x[:, None, :], const[None]), True
+            off = np.arange(len(a) + 1, dtype=np.int32) * k
+            return pa.ListArray.from_arrays(off, vals.ravel(), mask=pa.array(~ok))
+        if kind == "sqdists":
+            per = pc.list_value_length(b).fill_null(0).to_numpy()
+            v, ok = pairwise(
+                a.take(pc.list_parent_indices(b)), pc.list_flatten(b), True, ansi
+            )
+            off = np.concatenate(([0], np.cumsum(per))).astype(np.int32)
+            return pa.ListArray.from_arrays(off, pa.array(v, mask=~ok), mask=b.is_null())
+        v, ok = pairwise(a, b, kind == "sqdist", ansi)
+        return pa.array(v, mask=~ok)
+
+    rtype = {"dot": "double", "sqdist": "bigint", "sqdists": "array<bigint>"}
+    return F.arrow_udf(vector_fold, rtype.get(kind, "array<double>"))
+
+
 def _dot(a: Column, b: Column) -> Column:
-    """Left-to-right double dot product (order matches the SQL oracle).
-
-    ``zip_with`` and ``aggregate`` are ``CodegenFallback`` expressions:
-    whole-stage codegen runs them through the interpreter, one lambda
-    call per element, so the cost is per pair, not per FLOP. Where the
-    pair count is n·C (IVF assignment), ``ivf_scores`` scores Arrow
-    batches with a numpy twin of this fold instead, and uses the same
-    twin for the IVF probe ranking and rerank. The twin is
-    bit-identical because it performs the same IEEE operation sequence:
-    each float element widened to double exactly, one rounded multiply
-    per element pair, rounded adds left to right from 0.0 — separate
-    numpy ufunc calls, so no fused multiply-add and no reassociation.
-    ``sqrt`` and ``/`` are correctly rounded in Java and numpy alike."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _fanout(df: DataFrame) -> int:
-    """Target partition count for FLOP-heavy vector stages."""
-    return max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    """Left-to-right double dot product (order matches the SQL oracle),
+    one ``fold_kernel`` numpy fold per Arrow batch. Cosines divide in
+    Spark, so a zero norm raises DIVIDE_BY_ZERO under ANSI mode."""
+    return _fold("dot", a, b)
 
 
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition before a FLOP-dense stage.
+    """Repartition before a pair-scoring stage whose pair count is not
+    bounded by the query set (``cosine_verify``, the exact self-join).
 
     Candidate-pair rows are tiny (two longs), so AQE coalesces the
-    post-join stream to ~1 partition by byte-size — and then the 64-dim
-    cosine pass runs on one core. Work per row, not bytes per row, is
-    what matters here; an explicit repartition restores full parallelism
-    (measured 7.2s → sub-second on 32 cores at sf0.1). At 100 TB the
-    same holds: keep the scoring stage's partition count sized to the
-    cluster, never to the candidate table's serialized bytes."""
-    return df.repartition(_fanout(df), *[F.col(c) for c in cols])
+    post-join stream to ~1 partition by byte-size, and the kernel stage
+    would run on one core: 2M exact pairs at sf0.1 took 8.5-10 s wall
+    that way against 4.0-4.6 s spread, at equal CPU. The stages scoring
+    a corpus against the small query set do without it: each Python
+    task costs CPU of its own (similarity_ann_pq 11.6-12.2 s of process
+    CPU spread, 7.1-7.8 s not). At 100 TB the same holds: size the
+    scoring stage's partition count to the cluster, never to the
+    candidate table's serialized bytes."""
+    sc = df.sparkSession.sparkContext
+    return df.repartition(max(sc.defaultParallelism, 8), *[F.col(c) for c in cols])
 
 
 def _norm(a: Column) -> Column:
@@ -107,8 +252,9 @@ def cosine(a: Column, b: Column) -> Column:
 def _vectors(emb: DataFrame, id_name: str, tag: str, *keep: Column) -> DataFrame:
     """(``id_name``, ``*keep``, ``{tag}_vec``, ``{tag}_norm``): one side of
     an exact-cosine pair, with the norm computed once per vector, not
-    once per pair. ``keep`` carries other columns of ``emb`` along (a
-    label, a hash to order by)."""
+    once per pair: folding both norms in the pair stage instead made the
+    k-NN family 20-40% dearer in process CPU at sf0.1. ``keep`` carries
+    other columns of ``emb`` along (a label, a hash to order by)."""
     return emb.select(
         F.col("vec_id").alias(id_name),
         *keep,
@@ -170,7 +316,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     ``queries`` is expected to be small — it is broadcast, making the
     scan embarrassingly parallel with no corpus shuffle."""
     scored = (
-        _spread(_vectors(corpus, "neighbor_id", "c"), "neighbor_id")
+        _vectors(corpus, "neighbor_id", "c")
         .crossJoin(F.broadcast(_vectors(queries, "query_id", "q")))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", _pair_cos("q", "c").alias("sim"))
@@ -204,8 +350,7 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = _vectors(emb, "neg_id", "c", F.col("label").alias("neg_label"))
     scored = (
-        _spread(c, "neg_id")
-        .crossJoin(F.broadcast(q))
+        c.crossJoin(F.broadcast(q))
         .filter(F.col("neg_label") != F.col("q_label"))
         .select(
             "query_id",
@@ -323,52 +468,30 @@ def _hyperplanes(dim: int, n_planes: int = LSH_PLANES, seed: int = 42) -> list[l
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def _plane_bit_expr(vec_expr: str, plane: list[float]) -> str:
-    """Sign bit (0/1 int) of ``vec_expr`` against one fixed hyperplane,
-    as a Spark-SQL expression string. The dot is the same
-    aggregate(zip_with(...)) left-fold as ``_dot``; plane literals use
-    repr (exact double round-trip) with a ``D`` suffix."""
-    arr = "array(" + ", ".join(repr(float(w)) + "D" for w in plane) + ")"
-    dot = (
-        f"aggregate(zip_with({vec_expr}, {arr}, "
-        f"(x, p) -> CAST(x AS DOUBLE) * p), 0.0D, (acc, v) -> acc + v)"
-    )
-    return f"(CASE WHEN {dot} > 0.0D THEN 1 ELSE 0 END)"
-
-
 def lsh_band_hashes(vec: str, planes: list[list[float]], n_bands: int) -> Column:
-    """Array of ``n_bands`` band hashes: planes are split contiguously into
-    bands; each band's sign bits pack into one int. Two vectors are
-    candidates iff ANY band hash matches (OR-amplification) — the classic
-    banding construction (Leskovec/Rajaraman/Ullman, MMDS ch.3).
+    """Array of ``n_bands`` band hashes of the vector column ``vec``:
+    planes are split contiguously into bands; each band's sign bits
+    (1 where the vector's dot with the plane is > 0) pack into one int.
+    Two vectors are candidates iff ANY band hash matches
+    (OR-amplification) — the classic banding construction
+    (Leskovec/Rajaraman/Ullman, MMDS ch.3). The dots are one
+    ``_project``-style ``fold_kernel`` call against the plane matrix, so
+    a vector without a fold gets 0 bits, as the SQL twin's CASE does."""
+    import numpy as np
 
-    ``vec`` must be a COLUMN NAME (str): the whole array is built as one
-    SQL string parsed by a single ``F.expr`` — constructing the 16×64
-    plane literals through the Column API costs thousands of py4j round
-    trips (~2s of driver time per query build, measured), the string
-    parse ~none. The resulting Catalyst tree is identical either way.
-    Column objects are rejected rather than round-tripped through the
-    private ``_jc`` bridge (not guaranteed parseable, absent under Spark
-    Connect); select/alias the expression to a name first."""
-    if not isinstance(vec, str):
-        raise TypeError(
-            "lsh_band_hashes requires a column NAME; alias the expression "
-            "to a column first (Column objects can't be safely rendered "
-            "back into SQL text)"
-        )
-    vec_expr = vec
-    bits = [_plane_bit_expr(vec_expr, p) for p in planes]
-    per_band = max(1, len(planes) // n_bands)
-    bands = []
-    for b in range(n_bands):
-        chunk = bits[b * per_band : (b + 1) * per_band]
-        if not chunk:
-            break
-        h = chunk[0]
-        for bit in chunk[1:]:
-            h = f"({h} * 2 + {bit})"
-        bands.append(h)
-    return F.expr("array(" + ", ".join(bands) + ")")
+    dots = _fold("project", F.col(vec), const=np.array(planes, dtype=np.float64))
+    bits = [F.when(dots[i] > 0.0, 1).otherwise(0) for i in range(len(planes))]
+    return F.array(*_pack_bands(bits, n_bands, lambda h, bit: h * 2 + bit))
+
+
+def _pack_bands(bits: list, n_bands: int, pack) -> list:
+    """The bits split contiguously into (at most) ``n_bands`` bands, each
+    folded to one hash with ``pack(h, bit)`` (h = h*2 + bit)."""
+    per = max(1, len(bits) // n_bands)
+    return [
+        functools.reduce(pack, bits[s : s + per])
+        for s in range(0, min(n_bands * per, len(bits)), per)
+    ]
 
 
 def lsh_band_rows(
@@ -411,14 +534,13 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     # keys instead of 64-float arrays
     c_bands = lsh_band_rows(corpus, planes).withColumnRenamed("vec_id", "neighbor_id")
     q_bands = lsh_band_rows(queries, planes).withColumnRenamed("vec_id", "query_id")
-    cand = _spread(
+    cand = (
         c_bands.join(F.broadcast(q_bands), ["band_id", "band_hash"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         # a pair colliding in multiple bands appears once per collision;
         # dedup before scoring so cosine runs once per candidate pair
         .dropDuplicates(["query_id", "neighbor_id"])
-        .select("query_id", "neighbor_id"),
-        "neighbor_id",
+        .select("query_id", "neighbor_id")
     )
     scored = (
         cand.join(_vectors(corpus, "neighbor_id", "c"), "neighbor_id")
@@ -885,8 +1007,8 @@ N_PROBE = 4  # centroid lists each query probes
 
 
 def _sql_dot(a: str, b: str) -> str:
-    """DuckDB dot product, bit-identical to Spark's left-to-right
-    ``aggregate`` fold.
+    """DuckDB dot product, bit-identical to ``fold_kernel``'s
+    left-to-right fold (``_dot``).
 
     Uses native ``list_dot_product`` (a sequential C loop — verified
     element-order-identical to the ``list_sum . list_transform .
@@ -913,8 +1035,9 @@ def _sql_array_lit(vals: list[float]) -> str:
 
 
 def _sql_plane_bit(vec_expr: str, plane: list[float]) -> str:
-    """SQL twin of ``_plane_bit``: same plane literals (repr round-trips
-    doubles exactly), same fold order → identical sign bit."""
+    """SQL twin of one ``lsh_band_hashes`` sign bit: the same plane
+    doubles (repr round-trips them exactly), the same fold order →
+    identical sign bit."""
     dot = (
         f"list_dot_product(CAST({vec_expr} AS DOUBLE[]), {_sql_array_lit(plane)})"
     )
@@ -925,17 +1048,7 @@ def sql_band_hashes(vec_expr: str, planes: list[list[float]], n_bands: int) -> l
     """SQL twin of ``lsh_band_hashes``: one expression per band, bit-packed
     with the same h = h*2 + bit arithmetic."""
     bits = [_sql_plane_bit(vec_expr, p) for p in planes]
-    per_band = max(1, len(planes) // n_bands)
-    out = []
-    for b in range(n_bands):
-        chunk = bits[b * per_band : (b + 1) * per_band]
-        if not chunk:
-            break
-        h = chunk[0]
-        for bit in chunk[1:]:
-            h = f"({h} * 2 + {bit})"
-        out.append(h)
-    return out
+    return _pack_bands(bits, n_bands, lambda h, bit: f"({h} * 2 + {bit})")
 
 
 _CENT_BLOCK = 128  # centroids scored per step: temporaries stay batch rows × 128 doubles
@@ -959,23 +1072,24 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
     argmax): NaN above every number, null below, the smaller ``cid`` on
     ties (±0.0 tie). The cosine's edges are ``_pair_cos``'s: a null
     vector, a null element or a length mismatch gives a null cosine
-    (``zip_with`` pads with nulls); a zero divisor raises DIVIDE_BY_ZERO
-    from the action under ANSI mode and gives null otherwise.
+    (``fold_kernel``); a zero divisor raises DIVIDE_BY_ZERO from the
+    action under ANSI mode and gives null otherwise.
 
     Scale shape: the centroid table and the query set are pulled to the
     driver in one job, so the query set must fit in driver memory. The
     probes are ranked there and shipped with the task. The corpus
     streams through one ``mapInArrow`` pass, with no shuffle: each Arrow
     batch is assigned against ``_CENT_BLOCK`` centroids at a time with
-    the numpy twin of ``_dot`` (bit-identical, see there), so the
+    ``fold_kernel``'s fold, the one ``_dot`` runs, so the
     per-batch memory stays bounded as C = √n grows, then scored against
     exactly the queries that probe its rows' centroids. Only those
     candidates leave the pass. The kernel runs on the corpus scan's own
     partitions: an 8-way ``_spread`` in front of the assignment made the
     2,000-vector perfbench pass slower in 4 of 4 A/B pairs (median
-    warm-pass CPU 4.88 s vs 3.25 s on 4 vCPUs). The batch function is
-    self-contained (no references to this module), so it pickles by
-    value for executors without the engine on their path."""
+    warm-pass CPU 4.88 s vs 3.25 s on 4 vCPUs). The batch function and
+    the kernel are self-contained (no references to this module), so
+    they pickle by value for executors without the engine on their
+    path."""
     import numpy as np
 
     ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled").lower() == "true"
@@ -986,33 +1100,15 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
         "cosine instead. SQLSTATE: 22012"
     )
 
-    def np_dot(a, b):
-        # _dot's operation sequence over the last axis, broadcast over
-        # the leading ones: double products, added left to right from 0.0
-        acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
-        for j in range(a.shape[-1]):
-            acc += a[..., j] * b[..., j]
-        return acc
+    by_length, fold, _ = fold_kernel()
 
-    def by_length(vecs):
+    def normed(vecs):
         # ({length: (row indices, rows × length doubles, norms)},
-        # (length, position in its group) per row) of the rows that have a
-        # cosine at all: a non-null list with no null element; -1 elsewhere
-        off = vecs.offsets.to_numpy()
-        bad = vecs.is_null().to_numpy(zero_copy_only=False)
-        vals = vecs.values
-        if vals.null_count:
-            seen = np.concatenate(
-                ([0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False)))
-            )
-            bad = bad | (seen[off[1:]] != seen[off[:-1]])
-        x = vals.to_numpy(zero_copy_only=False).astype(np.float64)
-        lens = np.diff(off)
+        # (length, position in its group) per row; -1 for rows without a
+        # cosine) of a list array
         groups, where = {}, np.full((2, len(vecs)), -1)
-        for n in np.unique(lens[~bad]):
-            rows = np.flatnonzero(~bad & (lens == n))
-            xs = x[off[rows][:, None] + np.arange(n)]
-            groups[int(n)] = (rows, xs, np.sqrt(np_dot(xs, xs)))
+        for n, (rows, xs) in by_length(vecs).items():
+            groups[n] = (rows, xs, np.sqrt(fold(xs, xs)))
             where[0, rows], where[1, rows] = n, np.arange(len(rows))
         return groups, where
 
@@ -1035,10 +1131,10 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
     ctab = tab.filter(is_cent)
     ctab = ctab.take(np.argsort(ctab.column("vec_id").to_numpy(), kind="stable"))
     cids = ctab.column("vec_id").to_numpy()
-    cgroups, _ = by_length(ctab.column("embedding").combine_chunks())
+    cgroups, _ = normed(ctab.column("embedding").combine_chunks())
     qtab = tab.filter(~is_cent)
     qids = qtab.column("vec_id").combine_chunks()
-    qgroups, qwhere = by_length(qtab.column("embedding").combine_chunks())
+    qgroups, qwhere = normed(qtab.column("embedding").combine_chunks())
 
     def ranked(x, xn, group, n):
         # each row's n nearest centroid indices (index order is cid order):
@@ -1057,7 +1153,7 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
 
         for s in range(0, len(crows), block):
             q, ok = divide(
-                np_dot(x[:, None, :], c[None, s : s + block, :]),
+                fold(x[:, None, :], c[None, s : s + block, :]),
                 xn[:, None] * cn[None, s : s + block],
             )
             t = np.where(ok, np.where(np.isnan(q), 2, 1), -1)
@@ -1098,7 +1194,7 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
         if not probed.size:
             return
         for batch in batches:
-            groups, where = by_length(batch.column("embedding"))
+            groups, where = normed(batch.column("embedding"))
             best = np.zeros(batch.num_rows, np.int64)
             for n, (rows, x, xn) in groups.items():
                 if n in cgroups:
@@ -1110,7 +1206,7 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
                     _, qx, qn = qgroups[n]
                     p = np.flatnonzero((where[0, r] == n) & (qwhere[0, qi] == n))
                     a, b = where[1, r[p]], qwhere[1, qi[p]]
-                    sim[p], ok[p] = divide(np_dot(qx[b], x[a]), qn[b] * xn[a])
+                    sim[p], ok[p] = divide(fold(qx[b], x[a]), qn[b] * xn[a])
             out = pa.RecordBatch.from_arrays(
                 [
                     qids.take(qi),
@@ -1264,7 +1360,7 @@ def embedding_ood_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("h")
     )
     scored = (
-        _spread(_vectors(emb, "vec_id", "e"), "vec_id")
+        _vectors(emb, "vec_id", "e")
         .crossJoin(F.broadcast(cb))
         .filter(F.col("vec_id") != F.col("cent_id"))
         .select("vec_id", "cent_id", _pair_cos("e", "c").alias("sim"))

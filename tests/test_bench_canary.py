@@ -81,9 +81,10 @@ def _stage(sid, start_ms, end_ms, run_ms):
 
 
 def _two_runs():
-    # run 0 is the slower (2.0 s), run 1 the reported one (1.5 s)
-    return [(2.0, QueryWindow("q#0", "q", 100.0, 100.5, 102.0)),
-            (1.5, QueryWindow("q#1", "q", 103.0, 103.25, 104.5))]
+    # run 0 is the slower (2.0 s), run 1 the reported one (1.5 s); the
+    # last field is each run's process-tree CPU seconds
+    return [(2.0, QueryWindow("q#0", "q", 100.0, 100.5, 102.0), 7.0),
+            (1.5, QueryWindow("q#1", "q", 103.0, 103.25, 104.5), 5.0)]
 
 
 def test_layers_come_from_the_reported_run_only():
@@ -107,7 +108,8 @@ def test_layers_come_from_the_reported_run_only():
     ]
     secs, lay = bench._fastest_run(_two_runs(), jobs, stages)
     assert secs == 1.5
-    assert set(lay) == set(METRICS)
+    assert set(lay) == set(METRICS) | {"tree_cpu_s"}
+    assert lay["tree_cpu_s"] == 5.0
     assert lay["jobs"] == 2 and lay["stages"] == 2
     assert lay["executor_run_s"] == pytest.approx(0.5)
     assert lay["build_s"] == pytest.approx(0.25)

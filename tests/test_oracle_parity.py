@@ -100,6 +100,72 @@ def test_query_matches_oracle(spark, duck, name):
         )
 
 
+# Every oracled query that folds vectors in Python: through
+# ``similarity.fold_kernel`` in a scalar Arrow UDF, or in the
+# ``ivf_scores`` mapInArrow pass. Their rows must not depend on where
+# Arrow cuts the batches.
+_KERNEL_QUERIES = [
+    "cluster_embeddings_kmeans",
+    "curation_leakage_safe_split",
+    "dedup_cluster_sizes",
+    "dedup_components",
+    "dedup_embedding_cosine",
+    "dedup_embedding_lsh",
+    "dedup_survivors_docs",
+    "embedding_label_drift",
+    "embedding_ood_score",
+    "embedding_prefix_recall",
+    "embedding_random_projection",
+    "embedding_top_pc",
+    "pipeline_semdedup_prune",
+    "semdedup_embeddings",
+    "similarity_ann_ivf",
+    "similarity_ann_ivf_scaled",
+    "similarity_ann_lsh",
+    "similarity_ann_pq",
+    "similarity_ann_rerank",
+    "similarity_bruteforce",
+    "similarity_filtered_topk",
+    "similarity_graph_hubness",
+    "similarity_hard_negatives",
+    "similarity_knn_graph",
+    "similarity_nn_descent",
+]
+
+
+def _digest(rows, cols) -> str:
+    """sha256 of a row multiset, columns taken in name order."""
+    import hashlib
+
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return hashlib.sha256(repr(sorted(_multiset(rows, order).items())).encode()).hexdigest()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_ORACLES else n for n in _KERNEL_QUERIES],
+)
+def test_kernel_query_arrow_batch_size_independent(spark, duck, name):
+    """Arrow batches of 3 rows give the same row multiset as the default
+    batches and as the DuckDB oracle: a kernel batch must not see, or
+    leak state into, its neighbours."""
+    import __spark_entry__ as e
+
+    def run():
+        df = e.queries()[name](spark, SF_SMALL)
+        return _digest(df.collect(), [c.lower() for c in df.columns])
+
+    default = run()
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    try:
+        small = run()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    res = duck.execute(e.oracle_sql()[name])
+    oracle = _digest(res.fetchall(), [d[0].lower() for d in res.description])
+    assert default == small == oracle
+
+
 def test_rows_only_queries_run(spark):
     """Queries without an oracle still must run and return a stable schema."""
     import __spark_entry__ as e

@@ -47,17 +47,17 @@ def test_refine_policy_only_in_pairs_module():
 
 # each Spark-side scoring fragment → the similarity.py functions allowed
 # to write it out; the SQL twins spell these names inside oracle strings,
-# never as these calls. The last entry is the numpy twin of ``_dot``
-# (and any numpy dot product, which BLAS would not keep bit-identical):
-# only the fused IVF kernel computes cosines in Python.
+# never as these calls. The last entry is the running accumulation of a
+# vector fold (and any numpy dot product, which BLAS would not keep
+# bit-identical): only ``fold_kernel`` folds vectors.
 _SCORING_OWNERS = [
     (r"_norm\(F\.col\(", {"_vectors", "cosine"}),
     (r"F\.sqrt\(_dot\(", {"_norm"}),
     (r'\.alias\("sim_e9"\)', {"sim_e9"}),
     (r"posexplode\(lsh_band_hashes\(", {"lsh_band_rows"}),
     (
-        r"\bnp_dot\(|\bnp\.(dot|einsum|inner|matmul|tensordot|vdot)\(",
-        {"ivf_scores"},
+        r"\bacc \+=|\bnp\.(dot|einsum|inner|matmul|tensordot|vdot)\(",
+        {"fold_kernel"},
     ),
 ]
 
@@ -81,8 +81,8 @@ def _top_level_def(tree: ast.Module, line: int) -> str | None:
 )
 def test_exact_cosine_scoring_only_in_its_helper(pattern, owners):
     """One vector side, one norm, one ``sim_e9`` formatter, one band-row
-    projection, one numpy cosine kernel: each fragment appears only
-    inside its function."""
+    projection, one numpy fold kernel: each fragment appears only inside
+    its function."""
     owned, offenders = [], []
     for p in sorted(PKG.rglob("*.py")):
         text = p.read_text()
@@ -98,6 +98,50 @@ def test_exact_cosine_scoring_only_in_its_helper(pattern, owners):
             (owned if in_owner else offenders).append(where)
     assert offenders == []
     assert owned, f"{sorted(owners)} no longer write {pattern}"
+
+
+def _f_call(node, name: str) -> bool:
+    """``node`` is a call of ``F.<name>``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def test_no_interpreted_vector_fold():
+    """The vector families fold vectors through ``fold_kernel`` only: no
+    ``F.aggregate(F.zip_with(...))``, the interpreted per-element fold."""
+    offenders = [
+        f"ops/{mod}.py:{node.lineno}"
+        for mod in ("clustering", "projection", "similarity", "dedup")
+        for node in ast.walk(ast.parse((PKG / "ops" / f"{mod}.py").read_text()))
+        if _f_call(node, "aggregate") and node.args and _f_call(node.args[0], "zip_with")
+    ]
+    assert offenders == []
+
+
+def test_fold_kernel_worker_imports_no_engine_module(spark):
+    """The kernel pickles by value: the Python worker that runs it has no
+    ``map_reduce_lite_spark`` module in ``sys.modules`` (importing the
+    package costs a worker 0.77 s)."""
+    import pyarrow as pa
+
+    from map_reduce_lite_spark.ops.similarity import fold_kernel
+
+    _, _, pairwise = fold_kernel()
+
+    def probe(a):
+        import sys
+
+        pairwise(a, a)
+        loaded = sorted(m for m in sys.modules if m.split(".")[0] == "map_reduce_lite_spark")
+        return pa.array([",".join(loaded)] * len(a))
+
+    df = spark.createDataFrame([([1.0, 2.0],)], "a array<double>")
+    assert df.select(F.arrow_udf(probe, "string")("a")).first()[0] == ""
 
 
 def _buckets(spark):

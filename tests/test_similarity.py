@@ -403,11 +403,11 @@ def test_rerank_funnel_recall_and_exactness(spark):
 
 
 def test_projection_plan_compact_codegen(spark):
-    """The sign matrix must enter the plan as ONE literal: no codegen
-    64KB blowout (which silently drops the stage to interpreted mode).
-    Smoke: the projection runs under a spark.sql.codegen.fallback=false
-    session conf would throw; here assert the plan has a single
-    project over the scan and no Python."""
+    """The sign matrix must not enter the plan at all: it ships with the
+    ``fold_kernel`` UDF (a 2,048-value array literal cost ~0.9 s of
+    driver time per build, and term-by-term literals blew codegen's
+    64 KB limit). The plan is one scan, one Arrow UDF evaluation of all
+    RP_DIM coordinates, and the projection over it."""
     from tests.conftest import SF_SMALL
     from map_reduce_lite_spark.ops.projection import (
         embedding_random_projection,
@@ -421,9 +421,10 @@ def test_projection_plan_compact_codegen(spark):
     with redirect_stdout(buf):
         df.explain("formatted")
     plan = buf.getvalue()
-    assert "PythonUDF" not in plan
     tree = plan.split("\n\n")[0]  # formatted mode: tree, then node details
     assert tree.count("Scan parquet") == 1, tree
+    assert tree.count("ArrowEvalPython") == 1, tree
+    assert "vector_fold" in plan and "array(" not in plan, plan
 
 
 def test_pq_funnel_recall_vs_exact_l2(spark):
@@ -606,3 +607,201 @@ def test_top_pc_divide_by_n_direction_invariant(spark):
     assert max(diffs.values()) <= 2, sorted(
         diffs.items(), key=lambda kv: -kv[1]
     )[:5]
+
+
+# --------------------------------------------------------------------------
+# fold_kernel: edge-case parity with the DuckDB folds and Spark's own
+# per-element arithmetic
+# --------------------------------------------------------------------------
+
+_INF, _NAN = float("inf"), float("nan")
+# (a, b) float-vector pairs; each row's fold runs in the kernel, in the
+# JVM zip_with/aggregate expression the kernel replaced, and in DuckDB
+_DOT_CASES = {
+    "plain": ([1.5, -2.25, 3.0], [0.5, 4.0, -1.0]),
+    "null_vector": (None, [1.0, 2.0]),
+    "null_element": ([1.0, None], [1.0, 2.0]),
+    "length_mismatch": ([1.0, 2.0], [1.0, 2.0, 3.0]),
+    "empty": ([], []),
+    "zero_vector": ([0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),
+    "nan": ([_NAN, 1.0], [1.0, 2.0]),
+    "inf": ([_INF, 1.0], [1.0, 2.0]),
+    "inf_minus_inf": ([_INF, -_INF], [1.0, 1.0]),
+    "signed_zero": ([-0.0, 0.0], [1.0, -1.0]),
+    "negative_zero_sum": ([-0.0], [1.0]),
+    "subnormal": ([1e-40, 1.4e-45, 3.0], [1e-3, 2.0, 1e-39]),
+    "random": tuple(
+        np.random.default_rng(5).standard_normal((2, 64)).astype(np.float32).tolist()
+    ),
+}
+
+
+def _jvm_fold(a, b, sq=False):
+    """The interpreted fold the kernel replaced, kept here as its
+    reference: one lambda call per element, zip_with padding the shorter
+    side with nulls."""
+    if sq:
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        )
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _duck_value(sql, table):
+    """DuckDB's answer for one single-row table, or the error's class."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("t", table)
+    try:
+        (v,) = con.execute(f"SELECT {sql} FROM t").fetchone()
+        return repr(v)
+    except duckdb.Error as e:
+        return type(e).__name__
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("case", sorted(_DOT_CASES))
+def test_fold_kernel_dot_matches_oracles(spark, case):
+    """``_dot`` and ``cosine`` (ANSI off) through the kernel are
+    bit-identical to the JVM fold they replaced on every edge, and to
+    DuckDB's ``_sql_dot`` / ``_sql_cos`` wherever DuckDB answers: it
+    raises on a null element and on a length mismatch, where Spark's
+    fold (and so the kernel) gives null."""
+    import pyarrow as pa
+
+    from map_reduce_lite_spark.ops.similarity import _dot, _sql_cos, _sql_dot, cosine
+
+    a, b = _DOT_CASES[case]
+    df = spark.createDataFrame([(a, b)], "a array<float>, b array<float>")
+    got = df.select(
+        _dot(F.col("a"), F.col("b")).alias("dot"),
+        _jvm_fold(F.col("a"), F.col("b")).alias("ref"),
+    ).first()
+    assert repr(got["dot"]) == repr(got["ref"])
+    table = pa.table(
+        {"a": pa.array([a], pa.list_(pa.float32())), "b": pa.array([b], pa.list_(pa.float32()))}
+    )
+    duck_dot = _duck_value(_sql_dot("a", "b"), table)
+    if case in ("null_element", "length_mismatch"):
+        assert duck_dot == "InvalidInputException" and got["dot"] is None
+    else:
+        assert duck_dot == repr(got["dot"])
+
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        cos = df.select(cosine(F.col("a"), F.col("b")).alias("c")).first()["c"]
+        ref = df.select(
+            (
+                _jvm_fold(F.col("a"), F.col("b"))
+                / (
+                    F.sqrt(_jvm_fold(F.col("a"), F.col("a")))
+                    * F.sqrt(_jvm_fold(F.col("b"), F.col("b")))
+                )
+            ).alias("c")
+        ).first()["c"]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+    assert repr(cos) == repr(ref)
+    if case not in ("null_element", "length_mismatch"):
+        assert _duck_value(_sql_cos("a", "b"), table) == repr(cos)
+
+
+def test_fold_kernel_zero_norm_cosine_raises_under_ansi(spark):
+    """The cosine's division stays in Spark: a zero vector raises
+    DIVIDE_BY_ZERO from the action under ANSI mode (null with ANSI off,
+    as DuckDB gives: see the ``zero_vector`` case above)."""
+    from pyspark.errors import PySparkException
+
+    from map_reduce_lite_spark.ops.similarity import cosine
+
+    a, b = _DOT_CASES["zero_vector"]
+    df = spark.createDataFrame([(a, b)], "a array<float>, b array<float>")
+    with pytest.raises(PySparkException, match="DIVIDE_BY_ZERO"):
+        df.select(cosine(F.col("a"), F.col("b"))).collect()
+
+
+_BIG = 3037000499  # floor(sqrt(2^63 - 1)): the largest square a long holds
+# (a, b) long-vector pairs of EMB_DIM elements (the width the oracle's
+# column-wise _sql_sqdist spells out); None marks a null element
+_SQ_CASES = {
+    "plain": ([3, -7, 1_000_000], [-2, 5, -999_999]),
+    "null_vector": None,
+    "null_element": ([None, 4], [1, 2]),
+    "largest_square": ([_BIG], [0]),
+    "square_overflows": ([_BIG + 1], [0]),
+    "difference_overflows": ([2**63 - 1], [-1]),
+    "sum_at_the_edge": ([_BIG, 76_130], [0, 0]),
+    "sum_overflows": ([_BIG, _BIG], [0, 0]),
+    "null_then_square_overflows": ([None, _BIG + 1], [0, 0]),
+    "null_then_sum_would_overflow": ([None, _BIG, _BIG], [0, 0, 0]),
+}
+_OVERFLOWS = {
+    "square_overflows",
+    "difference_overflows",
+    "sum_overflows",
+    "null_then_square_overflows",
+}
+
+
+def _sq_rows(case):
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+
+    pair = _SQ_CASES[case]
+    if pair is None:
+        return None, [0] * EMB_DIM
+    return tuple(v + [0] * (EMB_DIM - len(v)) for v in pair)
+
+
+@pytest.mark.parametrize("case", sorted(_SQ_CASES))
+def test_fold_kernel_sqdist_matches_oracles(spark, case):
+    """k-means' ``_sqdist`` through the kernel against the JVM long fold
+    it replaced and DuckDB's ``_sql_sqdist``: equal values, and under
+    ANSI mode ARITHMETIC_OVERFLOW exactly where Spark's per-element
+    arithmetic overflows (DuckDB raises there too). A null element stops
+    the running sum, so a sum past it cannot overflow; a square can.
+    With ANSI off, the kernel wraps as the JVM fold does."""
+    import pyarrow as pa
+    from pyspark.errors import PySparkException
+
+    from map_reduce_lite_spark.ops.clustering import _sql_sqdist, _sqdist
+    from map_reduce_lite_spark.ops.similarity import EMB_DIM
+
+    a, b = _sq_rows(case)
+    df = spark.createDataFrame([(a, b)], "a array<long>, b array<long>")
+    cols = {f"q{i + 1}": pa.array([None if a is None else a[i]], pa.int64()) for i in range(EMB_DIM)}
+    cols.update({f"c{i + 1}": pa.array([b[i]], pa.int64()) for i in range(EMB_DIM)})
+    duck = _duck_value(_sql_sqdist("t", "t"), pa.table(cols))
+    kernel = df.select(_sqdist(F.col("a"), F.col("b")))
+    jvm = df.select(_jvm_fold(F.col("a"), F.col("b"), sq=True))
+    if case in _OVERFLOWS:
+        for side in (kernel, jvm):
+            with pytest.raises(PySparkException, match="ARITHMETIC_OVERFLOW"):
+                side.collect()
+        assert duck == "OutOfRangeException"
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            kernel = df.select(_sqdist(F.col("a"), F.col("b")))
+            jvm = df.select(_jvm_fold(F.col("a"), F.col("b"), sq=True))
+            assert kernel.first()[0] == jvm.first()[0]
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", "true")
+    else:
+        assert repr(kernel.first()[0]) == repr(jvm.first()[0]) == duck
+
+
+def test_fold_kernel_sqdist_length_mismatch_is_null(spark):
+    """A length mismatch is a null distance, as zip_with's null padding
+    made it (DuckDB's column-wise twin has no ragged form)."""
+    from map_reduce_lite_spark.ops.clustering import _sqdist
+
+    df = spark.createDataFrame([([1, 2], [1, 2, 3]), ([], [])], "a array<long>, b array<long>")
+    got = df.select(_sqdist(F.col("a"), F.col("b")), _jvm_fold(F.col("a"), F.col("b"), sq=True))
+    assert [tuple(r) for r in got.collect()] == [(None, None), (0, 0)]

@@ -100,8 +100,10 @@ def _quantize(vec):
 def _sqdist(a, b):
     """Exact integer squared L2 distance between quantized vectors
     (``similarity.fold_kernel``); under ANSI mode a long overflow raises
-    ARITHMETIC_OVERFLOW from the action, as Spark's own arithmetic
-    would."""
+    ARITHMETIC_OVERFLOW from the action where Spark's own arithmetic
+    would, with Spark's message but as a ``PythonException`` wrapping a
+    Python ``ArithmeticError``, not a ``SparkArithmeticException``: the
+    error class is not set."""
     return _fold("sqdist", a, b)
 
 

@@ -350,40 +350,37 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.select("vec_id", _quantize(F.col("embedding")).alias("qv"))
-    # 1-row broadcast codebook: the 16 seed vectors ordered by vec_id
-    cb = qv.filter(F.col("vec_id") < K_CODES).agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("vec_id", "qv"))),
-            lambda s: s["qv"],
-        ).alias("cb")
-    )
 
     def _sub(vec, m):
         return F.slice(vec, m * D_SUB + 1, D_SUB)
 
-    # per subspace, the nearest codeword j (ties → the smaller j) among
-    # the size(cb) codes present: a corpus smaller than K_CODES trains a
-    # short codebook, and DuckDB's argmin is bounded by the seed rows
-    # present too. On a full corpus size(cb) == K_CODES.
+    # 1-row broadcast codebook, one column per subspace: cb{m} is the
+    # m-th slice of the 16 seed vectors ordered by vec_id, cut once
+    # here rather than per corpus row
+    seeds = F.sort_array(F.collect_list(F.struct("vec_id", "qv")))
+    cb = qv.filter(F.col("vec_id") < K_CODES).agg(
+        *[
+            F.transform(seeds, lambda s: _sub(s["qv"], m)).alias(f"cb{m}")
+            for m in range(M_SUB)
+        ]
+    )
+
+    # per subspace, the codeword slice j nearest the vector's slice (ties
+    # → the smaller j) among the size(cb) codes present: a corpus smaller
+    # than K_CODES trains a short codebook, and DuckDB's argmin is bounded
+    # by the seed rows present too. On a full corpus size(cb) == K_CODES.
     def _code(m):
-        d = _fold("sqdists", _sub(F.col("qv"), m), F.transform("cb", lambda c: _sub(c, m)))
+        d = _fold("sqdists", _sub(F.col("qv"), m), F.col(f"cb{m}"))
         return F.array_min(
             F.transform(d, lambda x, j: F.struct(x.alias("d"), j.alias("j")))
         )["j"]
 
-    codes = qv.crossJoin(F.broadcast(cb)).select(
-        "vec_id", F.array(*[_code(m) for m in range(M_SUB)]).alias("codes"), "cb"
-    )
     # ADC: the query against the corpus vector's PQ reconstruction (its
     # M_SUB codeword slices end to end). Integer addition is exact and
     # every term is non-negative, so one fold over the reconstruction
     # equals the sum of the per-subspace folds and overflows when it does.
-    recon = F.flatten(
-        F.transform(
-            F.col("codes"), lambda c, m: F.slice(F.col("cb")[c], m * D_SUB + 1, D_SUB)
-        )
-    )
-    codes = codes.select("vec_id", recon.alias("recon"))
+    recon = F.flatten(F.array(*[F.col(f"cb{m}")[_code(m)] for m in range(M_SUB)]))
+    codes = qv.crossJoin(F.broadcast(cb)).select("vec_id", recon.alias("recon"))
     queries = qv.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
     )

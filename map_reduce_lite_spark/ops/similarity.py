@@ -210,8 +210,17 @@ def _fold_udf(kind: str, ansi: bool, const):
         v, ok = pairwise(a, b, kind == "sqdist", ansi)
         return pa.array(v, mask=~ok)
 
-    rtype = {"dot": "double", "sqdist": "bigint", "sqdists": "array<bigint>"}
-    return F.arrow_udf(vector_fold, rtype.get(kind, "array<double>"))
+    rtype = {
+        "dot": "double",
+        "sqdist": "bigint",
+        "sqdists": "array<bigint>",
+        "project": "array<double>",
+    }
+    # nondeterministic only to the optimizer: it then neither pushes a
+    # filter on the fold's result below the projection that computes it
+    # nor copies the fold into an inferred isnotnull filter, either of
+    # which runs the kernel twice per row (two stacked ArrowEvalPython)
+    return F.arrow_udf(vector_fold, rtype[kind]).asNondeterministic()
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -229,13 +238,19 @@ def _spread(df: DataFrame, *cols: str) -> DataFrame:
     post-join stream to ~1 partition by byte-size, and the kernel stage
     would run on one core: 2M exact pairs at sf0.1 took 8.5-10 s wall
     that way against 4.0-4.6 s spread, at equal CPU. The stages scoring
-    a corpus against the small query set do without it: each Python
-    task costs CPU of its own (similarity_ann_pq 11.6-12.2 s of process
-    CPU spread, 7.1-7.8 s not). At 100 TB the same holds: size the
-    scoring stage's partition count to the cluster, never to the
-    candidate table's serialized bytes."""
+    a corpus against the small query set do without it, as each Python
+    task has a fixed cost: spreading all eight of them (brute force,
+    filtered top-k, hard negatives, OOD, rerank, PQ, prefix recall, LSH
+    ANN) raised process CPU in 32 of 32 interleaved sf0.1 pairs on 4
+    vCPUs (PQ 3.6 → 7.3 s median) and wall time in 31. For the same
+    reason the width is the core count, with no floor: the old floor of
+    8 partitions cost more process CPU than 4 on a 4-vCPU host in 28 of
+    33 interleaved pairs over the 11 queries that spread (nn_descent
+    14.2 → 10.9 s median). At 100 TB the same holds: size the scoring
+    stage's partition count to the cluster, never to the candidate
+    table's serialized bytes."""
     sc = df.sparkSession.sparkContext
-    return df.repartition(max(sc.defaultParallelism, 8), *[F.col(c) for c in cols])
+    return df.repartition(sc.defaultParallelism, *[F.col(c) for c in cols])
 
 
 def _norm(a: Column) -> Column:
@@ -244,22 +259,31 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     """Cosine of two vector columns, norms computed in place — for
-    operands that are not ``_vectors`` sides (projected vectors, mean
-    vectors); the same expression tree as ``_pair_cos``."""
+    operands that are not ``_vectors`` sides with norms (projected
+    vectors, mean vectors, the query-set stages); the same expression
+    tree as ``_pair_cos``."""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _vectors(emb: DataFrame, id_name: str, tag: str, *keep: Column) -> DataFrame:
+def _vectors(
+    emb: DataFrame, id_name: str, tag: str, *keep: Column, norm: bool = True
+) -> DataFrame:
     """(``id_name``, ``*keep``, ``{tag}_vec``, ``{tag}_norm``): one side of
     an exact-cosine pair, with the norm computed once per vector, not
     once per pair: folding both norms in the pair stage instead made the
     k-NN family 20-40% dearer in process CPU at sf0.1. ``keep`` carries
-    other columns of ``emb`` along (a label, a hash to order by)."""
+    other columns of ``emb`` along (a label, a hash to order by).
+
+    With ``norm=False`` there is no norm column, for the stages scoring
+    a corpus against the small query set, whose pairs take ``cosine``
+    of the two ``{tag}_vec`` columns: a stage of its own per norm costs
+    more than the norm folds (brute force 1.9 → 1.5 s process CPU at
+    sf0.1, 3 of 3 interleaved pairs)."""
     return emb.select(
         F.col("vec_id").alias(id_name),
         *keep,
         F.col("embedding").alias(f"{tag}_vec"),
-        _norm(F.col("embedding")).alias(f"{tag}_norm"),
+        *([_norm(F.col("embedding")).alias(f"{tag}_norm")] if norm else []),
     )
 
 
@@ -315,11 +339,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
 
     ``queries`` is expected to be small — it is broadcast, making the
     scan embarrassingly parallel with no corpus shuffle."""
+    q = _vectors(queries, "query_id", "q", norm=False)
+    sim = cosine(F.col("q_vec"), F.col("c_vec")).alias("sim")
     scored = (
-        _vectors(corpus, "neighbor_id", "c")
-        .crossJoin(F.broadcast(_vectors(queries, "query_id", "q")))
+        _vectors(corpus, "neighbor_id", "c", norm=False)
+        .crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _pair_cos("q", "c").alias("sim"))
+        .select("query_id", "neighbor_id", sim)
     )
     return top_k_by_sim(scored, "query_id", "neighbor_id", TOP_K)
 
@@ -347,8 +373,9 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "q",
         F.col("label").alias("q_label"),
+        norm=False,
     )
-    c = _vectors(emb, "neg_id", "c", F.col("label").alias("neg_label"))
+    c = _vectors(emb, "neg_id", "c", F.col("label").alias("neg_label"), norm=False)
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neg_label") != F.col("q_label"))
@@ -357,7 +384,7 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             "neg_id",
             "neg_label",
-            _pair_cos("q", "c").alias("sim"),
+            cosine(F.col("q_vec"), F.col("c_vec")).alias("sim"),
         )
     )
     return top_k_by_sim(scored, "query_id", "neg_id", TOP_K)
@@ -1354,16 +1381,17 @@ def embedding_ood_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     h = md5_60bit(F.concat(F.lit("oodcb:"), F.col("vec_id").cast("string")))
     cb = (
-        _vectors(emb, "cent_id", "c", h.alias("h"))
+        _vectors(emb, "cent_id", "c", h.alias("h"), norm=False)
         .orderBy("h", "cent_id")
         .limit(OOD_CODEBOOK_K)
         .drop("h")
     )
+    sim = cosine(F.col("e_vec"), F.col("c_vec")).alias("sim")
     scored = (
-        _vectors(emb, "vec_id", "e")
+        _vectors(emb, "vec_id", "e", norm=False)
         .crossJoin(F.broadcast(cb))
         .filter(F.col("vec_id") != F.col("cent_id"))
-        .select("vec_id", "cent_id", _pair_cos("e", "c").alias("sim"))
+        .select("vec_id", "cent_id", sim)
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cent_id"))
     return (

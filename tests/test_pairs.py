@@ -144,6 +144,28 @@ def test_fold_kernel_worker_imports_no_engine_module(spark):
     assert df.select(F.arrow_udf(probe, "string")("a")).first()[0] == ""
 
 
+def test_fold_runs_once_per_row(spark):
+    """A filter on a fold's result, and the isnotnull filters inferred
+    from a join on it, read the projected value: the plan evaluates each
+    fold once, never the same fold twice (three folds, three
+    ArrowEvalPython nodes)."""
+    from map_reduce_lite_spark.ops.similarity import _dot, _norm
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [3.0, 4.0]), (3, [-1.0, 0.5])], "id long, v array<float>"
+    )
+    side = df.select("id", "v", _norm(F.col("v")).alias("n"))
+    a, b = side.alias("a"), df.alias("b").select(
+        F.col("id").alias("bid"), F.col("v").alias("bv"), _norm(F.col("v")).alias("bn")
+    )
+    cos = _dot(F.col("a.v"), F.col("bv")) / (F.col("a.n") * F.col("bn"))
+    scored = a.join(b, F.col("a.id") < F.col("bid")).select(cos.alias("sim"))
+    out = scored.filter(F.col("sim") > 0.5).select(F.floor(F.col("sim") * 1e9))
+    assert out.count() == 1
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 3, plan
+
+
 def _buckets(spark):
     # bucket 0 holds 5 ids, bucket 1 holds 2
     rows = [(i, 0) for i in range(5)] + [(10, 1), (11, 1)]

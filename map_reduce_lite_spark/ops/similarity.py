@@ -60,12 +60,13 @@ def fold_kernel():
     """``(by_length, fold, pairwise)``: the engine's one vector fold, in
     numpy over Arrow list arrays (``_fold``'s UDFs and ``ivf_scores``).
 
-    ``fold(a, b, sq)`` reduces the last axis (leading axes broadcast):
+    ``fold(a, b, sq)`` reduces the first axis of element-major arrays
+    (``a[j]`` is element j of every vector; the other axes broadcast):
     double products added left to right from 0.0, one rounded multiply
     and add per element in separate ufunc calls (no fused multiply-add,
     no reassociation) — the IEEE sequence of ``_sql_dot``; with ``sq``,
     the wrapping int64 sum of squared differences (``_sql_sqdist``).
-    ``by_length(vecs, dtype)`` is ``{length: (rows, rows × length
+    ``by_length(vecs, dtype)`` is ``{length: (rows, length × rows
     array)}`` of the valid rows: non-null lists with no null element.
     ``pairwise(a, b, sq, ansi)`` folds two list arrays row by row into
     ``(values, valid)``; a length mismatch is invalid, two empty lists
@@ -76,9 +77,8 @@ def fold_kernel():
     import numpy as np
 
     def fold(a, b, sq=False):
-        acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]), a.dtype)
-        # element j of every vector contiguous: one pass per element
-        a, b = (np.ascontiguousarray(np.moveaxis(v, -1, 0)) for v in (a, b))
+        acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]), a.dtype)
+        # one pass per element, over element j of every vector
         for j in range(len(a)):
             if sq:
                 d = a[j] - b[j]
@@ -87,16 +87,17 @@ def fold_kernel():
                 acc += a[j] * b[j]
         return acc
 
-    def gather(x, off, r, n):
-        # rows r, each of length n, as a rows × n array: a view of the
-        # values when r is every row of the array
+    def gather(x, off, r, n, dtype):
+        # rows r, each of length n, element-major (n × len(r)) in dtype:
+        # gathered, widened and transposed in one copy (a narrower
+        # subset of the rows is widened after its gather)
         if len(r) == len(off) - 1:
-            return x[off[0] : off[-1]].reshape(len(r), n)
-        return x[off[r][:, None] + np.arange(n)]
+            return np.array(x[off[0] : off[-1]].reshape(len(r), n).T, dtype, order="C")
+        return x[off[r] + np.arange(n)[:, None]].astype(dtype, copy=False)
 
-    def rows(vecs, dtype):
-        # (lengths, valid, offsets, values): valid rows are non-null
-        # lists with no null element
+    def rows(vecs):
+        # (lengths, valid, offsets, values as stored): valid rows are
+        # non-null lists with no null element
         off = vecs.offsets.to_numpy()
         ok = ~vecs.is_null().to_numpy(zero_copy_only=False)
         vals = vecs.values
@@ -106,14 +107,14 @@ def fold_kernel():
             )
             ok &= seen[off[1:]] == seen[off[:-1]]
             vals = vals.fill_null(0)
-        return np.diff(off), ok, off, vals.to_numpy(zero_copy_only=False).astype(dtype)
+        return np.diff(off), ok, off, vals.to_numpy(zero_copy_only=False)
 
     def by_length(vecs, dtype=np.float64):
-        lens, ok, off, x = rows(vecs, dtype)
+        lens, ok, off, x = rows(vecs)
         groups = {}
         for n in np.unique(lens[ok]):
             r = np.flatnonzero(ok & (lens == n))
-            groups[int(n)] = (r, gather(x, off, r, n))
+            groups[int(n)] = (r, gather(x, off, r, n, dtype))
         return groups
 
     def overflows(a, b):
@@ -131,8 +132,8 @@ def fold_kernel():
 
     def pairwise(a, b, sq=False, ansi=False):
         dtype = np.int64 if sq else np.float64
-        la, oka, offa, xa = rows(a, dtype)
-        lb, okb, offb, xb = rows(b, dtype)
+        la, oka, offa, xa = rows(a)
+        lb, okb, offb, xb = rows(b)
         if sq and ansi and len(a):
             # below this bound no overflow can occur; above it, replay each
             # row's exact arithmetic
@@ -150,7 +151,7 @@ def fold_kernel():
         out = np.zeros(len(a), dtype)
         for n in np.unique(la[ok]):
             r = np.flatnonzero(ok & (la == n))
-            out[r] = fold(gather(xa, offa, r, n), gather(xb, offb, r, n), sq)
+            out[r] = fold(gather(xa, offa, r, n, dtype), gather(xb, offb, r, n, dtype), sq)
         return out, ok
 
     return by_length, fold, pairwise
@@ -185,7 +186,11 @@ def _fold(kind: str, *cols: Column, const=None) -> Column:
 
 
 def _fold_udf(kind: str, ansi: bool, const):
+    import numpy as np
+
     by_length, fold, pairwise = fold_kernel()
+    # the constant matrix element-major, as ``fold`` takes it
+    ct = None if const is None else np.ascontiguousarray(const.T)
 
     def vector_fold(a, b=None):
         import numpy as np
@@ -193,11 +198,11 @@ def _fold_udf(kind: str, ansi: bool, const):
         import pyarrow.compute as pc
 
         if kind == "project":
-            k, n = const.shape
+            n, k = ct.shape
             vals, ok = np.zeros((len(a), k)), np.zeros(len(a), bool)
             if n in (groups := by_length(a)):
                 r, x = groups[n]
-                vals[r], ok[r] = fold(x[:, None, :], const[None]), True
+                vals[r], ok[r] = fold(x[:, :, None], ct[:, None, :]), True
             off = np.arange(len(a) + 1, dtype=np.int32) * k
             return pa.ListArray.from_arrays(off, vals.ravel(), mask=pa.array(~ok))
         if kind == "sqdists":
@@ -1130,7 +1135,7 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
     by_length, fold, _ = fold_kernel()
 
     def normed(vecs):
-        # ({length: (row indices, rows × length doubles, norms)},
+        # ({length: (row indices, length × rows doubles, norms)},
         # (length, position in its group) per row; -1 for rows without a
         # cosine) of a list array
         groups, where = {}, np.full((2, len(vecs)), -1)
@@ -1169,10 +1174,10 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
         # index; null cosines (tier 0) tie, so they fill the slots left
         # with the smallest indices not ranked yet
         crows, c, cn = group
-        k = min(n, len(cids))
-        tier = np.full((len(x), k), -1)
-        val = np.zeros((len(x), k))
-        idx = np.zeros((len(x), k), np.int64)
+        k, nx = min(n, len(cids)), x.shape[1]
+        tier = np.full((nx, k), -1)
+        val = np.zeros((nx, k))
+        idx = np.zeros((nx, k), np.int64)
 
         def keep(t, v, i):
             o = np.lexsort((i, -v, -t), axis=-1)[:, :k]
@@ -1180,7 +1185,7 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
 
         for s in range(0, len(crows), block):
             q, ok = divide(
-                fold(x[:, None, :], c[None, s : s + block, :]),
+                fold(x[:, :, None], c[:, None, s : s + block]),
                 xn[:, None] * cn[None, s : s + block],
             )
             t = np.where(ok, np.where(np.isnan(q), 2, 1), -1)
@@ -1190,7 +1195,7 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
                 np.hstack([idx, np.broadcast_to(crows[s : s + block], t.shape)]),
             )
         m = min(2 * k, len(cids))
-        fill = np.broadcast_to(np.arange(m), (len(x), m))
+        fill = np.broadcast_to(np.arange(m), (nx, m))
         done = np.where(tier >= 0, idx, -1)
         taken = (fill[:, :, None] == done[:, None, :]).any(axis=2)
         return keep(
@@ -1233,7 +1238,7 @@ def ivf_scores(corpus: DataFrame, cent: DataFrame, queries: DataFrame) -> DataFr
                     _, qx, qn = qgroups[n]
                     p = np.flatnonzero((where[0, r] == n) & (qwhere[0, qi] == n))
                     a, b = where[1, r[p]], qwhere[1, qi[p]]
-                    sim[p], ok[p] = divide(fold(qx[b], x[a]), qn[b] * xn[a])
+                    sim[p], ok[p] = divide(fold(qx[:, b], x[:, a]), qn[b] * xn[a])
             out = pa.RecordBatch.from_arrays(
                 [
                     qids.take(qi),

@@ -80,14 +80,18 @@ def test_reliable_checkpoint_matches_local(spark, reliable_checkpoint, module, n
     assert_reliable_written(ckdir)
 
 
-def test_lazy_marks_run_jobs_in_the_lpa_builder(spark):
+def test_lazy_marks_run_jobs_in_the_lpa_builder(spark, monkeypatch):
     """A lazy mark is not free under AQE: building
     ``graph_label_propagation`` (lazy marks only, no action of its own)
     already runs jobs, because each mark executes the shuffle stages
-    below it when it is made (lineage.py)."""
+    below it when it is made (lineage.py). The distributed rounds are
+    forced: the driver branch's pull of the edge set is an action."""
     import uuid
 
     import __spark_entry__ as e
+    from map_reduce_lite_spark.ops import graph
+
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     sc = spark.sparkContext

@@ -43,6 +43,8 @@ def test_cc_no_tempdir_when_barrier_unfired(spark, reliable_checkpoint, monkeypa
 
     from map_reduce_lite_spark.ops import graph
 
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
+
     calls = []
     real = tempfile.mkdtemp
 
@@ -86,10 +88,13 @@ def test_cc_no_tempdir_when_barrier_unfired(spark, reliable_checkpoint, monkeypa
     assert calls == [] and writes == []
 
 
-def test_cc_reliable_mode_chain(spark, reliable_checkpoint):
+def test_cc_reliable_mode_chain(spark, reliable_checkpoint, monkeypatch):
     """A 40-chain in reliable mode: the per-round cuts are reliable
     checkpoints and the result reads back correctly from them."""
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     n = 40
     edges = spark.createDataFrame(

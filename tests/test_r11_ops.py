@@ -54,8 +54,11 @@ def test_triangles_reliable_checkpoint(spark, reliable_checkpoint):
     _assert_reliable(reliable_checkpoint, lambda: triangle_parts(spark, SF_SMALL))
 
 
-def test_label_propagation_reliable_checkpoint(spark, reliable_checkpoint):
+def test_label_propagation_reliable_checkpoint(spark, reliable_checkpoint, monkeypatch):
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import label_propagation_parts
+
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     _assert_reliable(
         reliable_checkpoint, lambda: label_propagation_parts(spark, SF_SMALL)

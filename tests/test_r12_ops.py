@@ -198,13 +198,16 @@ def test_triangle_hub_counts_exact_under_orientation(spark):
     assert all(got[s] == 2 for s in list(got) if 2 <= s <= 10)
 
 
-def test_components_long_path_converges_logarithmically(spark):
+def test_components_long_path_converges_logarithmically(spark, monkeypatch):
     """Path of depth 3000 ≫ any reasonable round budget: pointer
     jumping must reach the single component in ~log2(diameter) rounds,
     NOT diameter rounds (plain min-propagation would need 3000)."""
     import math
 
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     depth = 3000
     pairs = [(i, i + 1) for i in range(depth)]
@@ -345,7 +348,7 @@ def test_read_artifact_unknown_name_lists_available(spark, tmp_path):
         read_artifact(spark, snap, "nope")
 
 
-def test_components_shuffled_id_path_still_logarithmic(spark):
+def test_components_shuffled_id_path_still_logarithmic(spark, monkeypatch):
     """THE r12 falsifier: ids random relative to topology. The old
     pointer-jumping loop needed 474-903 rounds on shuffled 3000-paths
     (O(diameter): regional-min nodes hold self-pointers, so the jump
@@ -356,7 +359,10 @@ def test_components_shuffled_id_path_still_logarithmic(spark):
     import math
     import random
 
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     depth = 3000
     ids = list(range(depth + 1))
@@ -368,12 +374,15 @@ def test_components_shuffled_id_path_still_logarithmic(spark):
     assert connected_components.last_rounds <= math.log2(depth) + 6
 
 
-def test_components_nonconvergence_raises_not_partial(spark):
+def test_components_nonconvergence_raises_not_partial(spark, monkeypatch):
     """max_iter too small must RAISE, never return partial (wrong)
     labels — the silent-cliff fix."""
     import pytest
 
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     pairs = [(i, i + 1) for i in range(200)]
     with pytest.raises(RuntimeError, match="did not converge"):

@@ -203,12 +203,14 @@ def test_cli_submit_and_workloads(tmp_path, books_dir):
     assert ":: " in body and "the" in body.lower()
 
 
-def test_connected_components_reliable_checkpoint(spark, reliable_checkpoint):
+def test_connected_components_reliable_checkpoint(spark, reliable_checkpoint, monkeypatch):
     """A session checkpoint dir switches lineage truncation to reliable
     checkpoint() — survives executor loss on a real cluster."""
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
     from tests.conftest import assert_reliable_written
 
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20)], "src long, dst long"
     )
@@ -316,7 +318,7 @@ def test_cli_zorder(tmp_path, spark):
     assert set(back.columns) == {"a", "b"}
 
 
-def test_connected_components_converges_in_log_rounds(spark):
+def test_connected_components_converges_in_log_rounds(spark, monkeypatch):
     """Pointer jumping must bound rounds at ~log2(diameter), not
     diameter: a 64-chain (diameter 63) converging in <= 8 rounds is the
     difference between 20 rounds and a million on a 10^6-doc
@@ -325,7 +327,10 @@ def test_connected_components_converges_in_log_rounds(spark):
     in 2."""
     from pyspark.sql import functions as F
 
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import connected_components
+
+    monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     chain = spark.range(63).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.registry import Query, dsum, sql_dsum
+from map_reduce_lite_spark.relational.queries import SESSION_GAP_MS
 from map_reduce_lite_spark.relational.tables import load_table
 
 
@@ -461,9 +462,6 @@ SELECT channel, CAST(COUNT(*) AS BIGINT) AS n_purchases,
        CAST(SUM(lag_s) AS BIGINT) AS total_lag_s
 FROM purchases GROUP BY channel
 """
-
-
-SESSION_GAP_MS = 30 * 60 * 1000
 
 
 def sessionize_events_stitched(spark: SparkSession, sf_dir: str) -> DataFrame:

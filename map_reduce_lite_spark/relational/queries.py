@@ -546,7 +546,11 @@ GROUP BY 1, 2
 """
 
 
-def sessionize(events: DataFrame, gap_ms: int = 30 * 60 * 1000) -> DataFrame:
+# inactivity gap that ends a session, for every Spark-side sessionizer
+SESSION_GAP_MS = 30 * 60 * 1000
+
+
+def sessionize(events: DataFrame, gap_ms: int = SESSION_GAP_MS) -> DataFrame:
     """Sessionization (inactivity gap) via gaps-and-islands windows over
     any (user_id, ts, event_id) DataFrame.
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.registry import Query, davg, dsum, sql_davg, sql_dsum
+from map_reduce_lite_spark.relational.queries import SESSION_GAP_MS
 from map_reduce_lite_spark.relational.skew import salted_join, two_stage_agg
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -600,7 +601,7 @@ def funnel_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev_ms = F.lag(F.unix_millis("ts")).over(w)
     new_sess = F.when(
-        prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > 30 * 60 * 1000), 1
+        prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > SESSION_GAP_MS), 1
     ).otherwise(0)
     tagged = e.select(
         "user_id", "ts", "event_id", "event_type"

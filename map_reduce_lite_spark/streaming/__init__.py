@@ -1,7 +1,2 @@
-from map_reduce_lite_spark.streaming.windows import (  # noqa: F401
-    events_stream,
-    hourly_counts_stream,
-    sliding_value_stream,
-    run_stream_to_memory,
-)
-from map_reduce_lite_spark.streaming.sessions import sessionize_stream  # noqa: F401
+"""Structured Streaming: every query reads ``windows.events`` and
+finishes through ``windows.run_drain``."""

@@ -17,17 +17,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from map_reduce_lite_spark.streaming.windows import WATERMARK
 
-def dedup_stream(
-    stream: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
+
+def dedup_stream(stream: DataFrame, keys: list[str]) -> DataFrame:
     """Exact streaming dedup: first arrival of each key wins; duplicates
     arriving within the watermark horizon are dropped, state for keys
     older than the horizon is evicted."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return stream.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
 def enrich_stream(stream: DataFrame, dim: DataFrame, on: list[str]) -> DataFrame:

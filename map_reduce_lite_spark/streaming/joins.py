@@ -20,14 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from map_reduce_lite_spark.streaming.windows import WATERMARK
 
-def purchase_view_join(
-    purchases: DataFrame,
-    views: DataFrame,
-    lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Each purchase joined to the user's views in the ``lag`` window
+LAG = "1 hour"
+
+
+def purchase_view_join(purchases: DataFrame, views: DataFrame) -> DataFrame:
+    """Each purchase joined to the user's views in the ``LAG`` window
     before it (inclusive bounds on both ends).
 
     Works for streaming AND batch inputs — the plan is the same
@@ -44,12 +43,12 @@ def purchase_view_join(
         F.col("ts").alias("v_ts"),
     )
     if purchases.isStreaming:
-        p = p.withWatermark("p_ts", watermark)
+        p = p.withWatermark("p_ts", WATERMARK)
     if views.isStreaming:
-        v = v.withWatermark("v_ts", watermark)
+        v = v.withWatermark("v_ts", WATERMARK)
     cond = (
         (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lag}"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {LAG}"))
         & (F.col("v_ts") <= F.col("p_ts"))
     )
     return p.join(v, cond).select(

@@ -19,7 +19,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-SESSION_GAP_MS = 30 * 60 * 1000
+from map_reduce_lite_spark.relational.queries import SESSION_GAP_MS
+
+# late-data horizon of the session state
+WATERMARK = "1 hour"
 
 _STATE_SCHEMA = "start_ms long, last_ms long, n_events long"
 _OUTPUT_SCHEMA = T.StructType(
@@ -33,11 +36,7 @@ _OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def sessionize_stream(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    timeout: str = "processing",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, timeout: str = "processing") -> DataFrame:
     """Streaming sessionization: one state row per user, sessions emitted
     as they update (closed=True when finalized by gap/timeout).
 
@@ -89,7 +88,7 @@ def sessionize_stream(
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update_sessions,

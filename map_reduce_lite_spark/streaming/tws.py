@@ -26,38 +26,32 @@ batch count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from datetime import timedelta
 
-WATERMARK = "2 hours"
-_TWS_RUN = 0
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def streaming_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time-ordered per-user running totals via
     transformWithStateInPandas (ListState buffer + ValueState sum +
     event-time timers)."""
-    global _TWS_RUN
-    from datetime import timedelta
-
+    # imported here: windows registers this builder at import time
     from map_reduce_lite_spark.streaming.windows import (
-        EVENTS_SCHEMA,
+        WATERMARK,
+        _closed_world_cutoff,
         _stage_events,
-        run_stream_to_memory,
+        drain,
+        events,
     )
 
-    staged = _stage_events(spark, sf_dir)
-    maxts = (
-        spark.read.parquet(staged)
-        .filter(F.col("event_type") == "purchase")
-        .agg(F.max("ts"))
-        .collect()[0][0]
+    purchase = F.col("event_type") == "purchase"
+    cutoff = _closed_world_cutoff(
+        spark.read.parquet(_stage_events(spark, sf_dir)).filter(purchase),
+        timedelta(hours=2, seconds=1),  # watermark 2h + 1s
     )
-    cutoff = maxts - timedelta(hours=2, seconds=1)
-
     stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(staged)
-        .filter(F.col("event_type") == "purchase")
+        events(spark, sf_dir)
+        .filter(purchase)
         .withWatermark("ts", WATERMARK)
         .filter(F.col("ts") <= F.lit(cutoff))
         .select(
@@ -139,10 +133,7 @@ def streaming_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Append",
         timeMode="EventTime",
     )
-    _TWS_RUN += 1
-    name = f"mrl_stream_tws_{_TWS_RUN}"
-    run_stream_to_memory(out, name, output_mode="append")
-    return spark.table(name)
+    return drain(out, output_mode="append")
 
 
 RUNNING_TOTAL_SQL = """

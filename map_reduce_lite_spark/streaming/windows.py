@@ -1,10 +1,16 @@
-"""Structured Streaming event-time windows.
+"""Structured Streaming event-time windows, and the one availableNow
+drain every streaming query runs through.
 
 The reference has no streaming at all (SURVEY.md §2.3) — this is the
 driver-mandated extension surface. Batch twins of these aggregations
 live in relational/queries.py (events_hourly), so correctness is
 checked by equivalence: run the stream with ``availableNow`` over the
 same parquet and compare to the batch plan (tests/test_streaming.py).
+
+Every query reads its input through ``events`` (the only
+``readStream``) and finishes through ``run_drain`` (the only trigger
+and ``awaitTermination``); ``drain`` is ``run_drain`` into a memory
+table.
 
 Scale notes: watermark bounds state; tumbling windows shuffle once on
 (window, key); at 100 TB the state store should be RocksDB
@@ -14,27 +20,42 @@ log (Kafka), not parquet — the plan shape is identical.
 
 from __future__ import annotations
 
+import itertools
+from datetime import datetime, timedelta
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from map_reduce_lite_spark.relational.queries import SESSION_GAP_MS
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
+# late-data horizon of the window, join, dedup and TWS operators
+WATERMARK = "2 hours"
+# state partitions of one drain (see run_drain)
+STATE_PARTITIONS = 8
+# longest any drain may run before its partial result is refused
+DRAIN_TIMEOUT_S = 180
+_DRAIN_IDS = itertools.count(1)
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (stand-in for Kafka/log source)."""
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{sf_dir}/events.parquet")
-    )
+def events(spark: SparkSession, sf_dir: str, max_files: int | None = None) -> DataFrame:
+    """The staged events (``_stage_events``) as a stream — the stand-in
+    for a Kafka/log source. ``max_files`` splits the drain into
+    micro-batches of that many files; unset, the drain is one batch,
+    which the single-batch builders' emission depends on."""
+    reader = spark.readStream.schema(EVENTS_SCHEMA)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    return reader.parquet(_stage_events(spark, sf_dir))
 
 
-def hourly_counts_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_counts_stream(stream: DataFrame) -> DataFrame:
     """Tumbling 1-hour event-time window with late-data watermark."""
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -49,10 +70,10 @@ def hourly_counts_stream(stream: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def sliding_value_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def sliding_value_stream(stream: DataFrame) -> DataFrame:
     """Sliding window (1 hour, sliding every 15 min) mean value per type."""
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -64,136 +85,107 @@ def sliding_value_stream(stream: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def run_stream_to_memory(
-    df: DataFrame, name: str, timeout_sec: int = 120, output_mode: str = "complete"
-) -> None:
-    """Drain a stream with availableNow into an in-memory table ``name``
-    (test/driver harness; complete mode suits the windowed aggregates).
+def drain(df: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Drain a stream through ``run_drain`` into a fresh in-memory table
+    and return that table (complete mode suits the windowed
+    aggregates)."""
+    spark = df.sparkSession
+    name = f"mrl_drain_{next(_DRAIN_IDS)}"
+    run_drain(spark, df.writeStream.format("memory").queryName(name).outputMode(output_mode))
+    return spark.table(name)
+
+
+def run_drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Run ``writer`` as one availableNow drain.
 
     Raises TimeoutError if the drain does not finish inside
-    ``timeout_sec`` — returning the partial memory table would silently
+    ``DRAIN_TIMEOUT_S`` — returning the partial sink would silently
     compare a truncated result against the oracle.
 
-    The drain runs with the state-partition count bounded by
-    ``_drain_shuffle_bound`` — see its docstring for the measured
-    rationale."""
-    spark = df.sparkSession
-    _bound_checkpoint_threads(spark)
-    with _drain_shuffle_bound(spark):
-        try:
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(timeout_sec)
-            q.stop()
-        finally:
-            _unload_state_stores(spark)
-    if not finished:
-        raise TimeoutError(
-            f"stream drain {name!r} did not finish within {timeout_sec}s; "
-            "partial results discarded"
-        )
+    Checkpoint checksums off: Spark 4's ChecksumCheckpointFileManager
+    creates a dedicated thread pool PER state-store provider (one
+    provider per state partition — 200 in a vanilla session), so a
+    single multi-operator drain peaks at THOUSANDS of live
+    `ChecksumCheckpoint` threads (measured 2675 in one in-flight drain)
+    before any cleanup can run, exhausting kernel thread/map budgets
+    for the whole process tree. The checksums detect long-lived
+    checkpoint corruption — worthless for the throwaway temp-dir
+    checkpoints of an availableNow drain, so they stay off for the
+    session. A production always-on stream with a durable checkpoint
+    should leave them enabled and size `spark.sql.shuffle.partitions`
+    to the real cluster instead.
 
-
-def _drain_shuffle_bound(spark, parts: int = 8):
-    """Context manager bounding ``spark.sql.shuffle.partitions`` for the
-    duration of one ephemeral availableNow drain.
-
-    A stateful streaming operator instantiates one state-store provider
-    per shuffle partition, and for a throwaway drain the per-provider
+    State partitions bounded to ``STATE_PARTITIONS``: a stateful
+    streaming operator instantiates one state-store provider per
+    shuffle partition, and for a throwaway drain the per-provider
     checkpoint-file round-trips (delta file create/commit/maintenance
     per partition per micro-batch) dominate wall time, not the data:
     measured on the stream-stream left join at sf0.1, 32 partitions ≈
     5–8 s vs 8 partitions ≈ 2.4 s, identical results. The conf is read
     by the micro-batch thread when it plans the first batch (start() is
-    async), so the restore happens only after the drain finishes — the
-    whole drain must run inside the ``with`` block. A production
-    always-on stream sizes state partitions to the CLUSTER (long-lived
-    state, partition count bounds parallelism — the opposite trade);
-    this bound is strictly the local-harness drain path.
-
+    async), so the restore happens only after the drain finishes. A
+    production always-on stream sizes state partitions to the CLUSTER
+    (long-lived state, partition count bounds parallelism — the
+    opposite trade); this bound is strictly the drain path.
     SINGLE-THREADED ASSUMPTION: the conf rewrite is session-global, so
     any batch query planned CONCURRENTLY in the same session during a
-    drain would silently plan with ``parts`` shuffle partitions. The
-    harness runs queries sequentially; if concurrency is ever added,
-    switch to a per-query option (df.repartition / writeStream option)
-    instead of the session conf."""
-    import contextlib
+    drain would silently plan with the bound. The harness runs queries
+    sequentially; if concurrency is ever added, switch to a per-query
+    option (df.repartition / writeStream option) instead of the session
+    conf.
 
-    @contextlib.contextmanager
-    def _cm():
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev), parts))
-        )
+    State stores unloaded afterwards: each stateful drain leaves its
+    HDFSBackedStateStoreProviders loaded in the executor JVM — ~4
+    maintenance/commit threads per state partition, which at the
+    vanilla 200 shuffle partitions is ~850 threads PER QUERY. A session
+    that drains the whole streaming family accumulates thousands of
+    threads and exhausts kernel/cgroup resources: measured in-session
+    as DuckDB `bad_alloc` on KB-sized blocks and Python `can't start
+    new thread` with >100 GB free RAM (~7000 JVM threads).
+    `StateStore.stop()` unloads providers and stops their threads
+    (measured 2611 -> 205); the registry re-creates everything lazily on
+    the next stateful query, so this is safe between sequential drains —
+    the availableNow checkpoint semantics are unaffected (state is
+    re-read from the checkpoint, not from the unloaded cache).
+    Local-JVM only: on a real cluster each executor bounds its own
+    providers (partitions spread across the fleet) and long-RUNNING
+    queries must NOT unload — this belongs strictly after a finished
+    availableNow drain."""
+    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(min(int(prev), STATE_PARTITIONS)))
+    try:
+        query = writer.trigger(availableNow=True).start()
+        finished = query.awaitTermination(DRAIN_TIMEOUT_S)
+        query.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _cm()
-
-
-def _bound_checkpoint_threads(spark) -> None:
-    """Disable per-file checkpoint checksums for the ephemeral drains.
-
-    Spark 4's ChecksumCheckpointFileManager creates a dedicated thread
-    pool PER state-store provider (one provider per state partition —
-    200 in a vanilla session), so a single multi-operator drain peaks
-    at THOUSANDS of live `ChecksumCheckpoint` threads (measured 2675 in
-    one in-flight drain) before any cleanup can run, exhausting kernel
-    thread/map budgets for the whole process tree. The checksums detect
-    long-lived checkpoint corruption — worthless for the throwaway
-    temp-dir checkpoints of an availableNow drain, so turn them off for
-    the drain session. A production always-on stream with a durable
-    checkpoint should leave them enabled and size
-    `spark.sql.shuffle.partitions` to the real cluster instead.
-    """
-    try:
-        spark.conf.set(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"
+            spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+        except Exception:
+            pass  # cleanup must never fail the query result
+    if not finished:
+        raise TimeoutError(
+            f"stream drain {query.name or query.id} did not finish within "
+            f"{DRAIN_TIMEOUT_S}s; partial results discarded"
         )
-    except Exception:
-        pass  # conf unknown on older Spark — nothing to bound
 
 
-def _unload_state_stores(spark) -> None:
-    """Unload all loaded state-store providers after a finished drain.
-
-    Each stateful drain leaves its HDFSBackedStateStoreProviders loaded
-    in the executor JVM — ~4 maintenance/commit threads per state
-    partition, which at the vanilla 200 shuffle partitions is ~850
-    threads PER QUERY. A session that drains the whole streaming family
-    accumulates thousands of threads and exhausts kernel/cgroup
-    resources: measured in-session as DuckDB `bad_alloc` on KB-sized
-    blocks and Python `can't start new thread` with >100 GB free RAM
-    (~7000 JVM threads). `StateStore.stop()` unloads providers and
-    stops their threads (measured 2611 -> 205); the registry re-creates
-    everything lazily on the next stateful query, so this is safe
-    between sequential drains — the availableNow checkpoint semantics
-    are unaffected (state is re-read from the checkpoint, not from the
-    unloaded cache). Local-JVM only: on a real cluster each executor
-    bounds its own providers (partitions spread across the fleet) and
-    long-RUNNING queries must NOT unload — this belongs strictly after
-    a finished availableNow drain.
-    """
-    try:
-        jvm = spark._jvm
-        jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass  # cleanup must never fail the query result
+def _closed_world_cutoff(frame: DataFrame, horizon: timedelta) -> datetime:
+    """Latest ``ts`` of a static frame minus ``horizon``: the closed-world
+    bound that keeps a static-input drain to rows whose window provably
+    closes. One tiny batch agg — a harness bound for the static-input
+    comparison; a production stream has no end and needs no cutoff. On
+    an empty frame there is no row for the cutoff to filter, so any
+    constant keeps the plan shape identical — epoch, for a well-typed
+    literal."""
+    maxts = frame.agg(F.max("ts")).collect()[0][0]
+    return datetime(1970, 1, 1) if maxts is None else maxts - horizon
 
 
 # --------------------------------------------------------------------------
 # Driver-gate entry: the streaming hourly rollup, oracle-checked
 # --------------------------------------------------------------------------
-
-_STREAM_RUN = 0
-
 
 def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly event rollup computed BY THE STREAMING ENGINE (readStream →
@@ -209,31 +201,7 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (readStream's schema path can't apply the nanos legacy conf);
     at scale the source is a log (Kafka) and this step disappears.
     """
-    global _STREAM_RUN
-    staged = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staged)
-    )
-    windowed = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("hour_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    _STREAM_RUN += 1
-    name = f"mrl_stream_hourly_{_STREAM_RUN}"
-    run_stream_to_memory(windowed, name)
-    return spark.table(name)
+    return drain(hourly_counts_stream(events(spark, sf_dir, max_files=4)))
 
 
 TRENDING_K = 3
@@ -338,18 +306,7 @@ def streaming_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: shares EVENTS_MULTIRES_SQL with the batch twin —
     availableNow over a static source equals the batch aggregation."""
-    global _STREAM_RUN
-    staged = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staged)
-    )
-    rolled = multires_rollup_stream(stream)
-    _STREAM_RUN += 1
-    name = f"mrl_stream_multires_{_STREAM_RUN}"
-    run_stream_to_memory(rolled, name)
-    return spark.table(name)
+    return drain(multires_rollup_stream(events(spark, sf_dir, max_files=4)))
 
 
 def streaming_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,17 +318,7 @@ def streaming_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     explodes each row into its 4 windows and aggregates; this is also
     exactly how Spark's physical plan expands sliding windows (Expand →
     one shuffle), so plan shape and oracle agree."""
-    global _STREAM_RUN
-    staged = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staged)
-    )
-    _STREAM_RUN += 1
-    name = f"mrl_stream_sliding_{_STREAM_RUN}"
-    run_stream_to_memory(sliding_value_stream(stream), name)
-    return spark.table(name)
+    return drain(sliding_value_stream(events(spark, sf_dir, max_files=4)))
 
 
 EVENTS_SLIDING_SQL = """
@@ -448,21 +395,11 @@ def streaming_purchase_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bounded stream-STREAM join run by the streaming engine
     (watermarked both sides, append-mode availableNow drain); the oracle
     is the identical time-range join in plain SQL."""
-    global _STREAM_RUN
     from map_reduce_lite_spark.streaming.joins import purchase_view_join
 
-    staged = _stage_events(spark, sf_dir)
-    p = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged).filter(
-        F.col("event_type") == "purchase"
-    )
-    v = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged).filter(
-        F.col("event_type") == "view"
-    )
-    joined = purchase_view_join(p, v)
-    _STREAM_RUN += 1
-    name = f"mrl_stream_ssj_{_STREAM_RUN}"
-    run_stream_to_memory(joined, name, output_mode="append")
-    return spark.table(name)
+    p = events(spark, sf_dir).filter(F.col("event_type") == "purchase")
+    v = events(spark, sf_dir).filter(F.col("event_type") == "view")
+    return drain(purchase_view_join(p, v), output_mode="append")
 
 
 PURCHASE_VIEW_JOIN_SQL = """
@@ -485,30 +422,17 @@ def streaming_purchase_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     Closed-world bound: outer rows whose join window is still open at
     end-of-stream are (correctly) withheld by the engine, so to compare
     against a batch oracle the purchase side is restricted to rows whose
-    window provably closes: p_ts <= max(ts) - (watermark + lag + 1s).
-    The cutoff is one tiny batch agg over the staged input — a harness
-    bound for the static-input comparison; a production stream has no
-    end and needs no cutoff. Watermarks are applied BEFORE the type
+    window provably closes: p_ts <= max(ts) - (watermark + lag + 1s)
+    (``_closed_world_cutoff``). Watermarks are applied BEFORE the type
     filter so both sides' watermarks track the full event stream and
     advance identically."""
-    global _STREAM_RUN
-    from datetime import timedelta
-
-    staged = _stage_events(spark, sf_dir)
-    maxts = spark.read.parquet(staged).agg(F.max("ts")).collect()[0][0]
-    if maxts is None:
-        # empty staged input (a fresh/empty slice): there is no purchase
-        # row for the cutoff to filter, so any constant keeps the plan
-        # shape identical — epoch, for a well-typed literal
-        from datetime import datetime
-
-        cutoff = datetime(1970, 1, 1)
-    else:
-        cutoff = maxts - timedelta(hours=3, seconds=1)  # watermark 2h + lag 1h + 1s
+    cutoff = _closed_world_cutoff(
+        spark.read.parquet(_stage_events(spark, sf_dir)),
+        timedelta(hours=3, seconds=1),  # watermark 2h + lag 1h + 1s
+    )
     p = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(staged)
-        .withWatermark("ts", "2 hours")
+        events(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
         .filter((F.col("event_type") == "purchase") & (F.col("ts") <= F.lit(cutoff)))
         .select(
             F.col("user_id").alias("p_user"),
@@ -517,9 +441,8 @@ def streaming_purchase_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     v = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(staged)
-        .withWatermark("ts", "2 hours")
+        events(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
@@ -535,10 +458,7 @@ def streaming_purchase_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = p.join(v, cond, "leftOuter").select(
         F.col("p_user").alias("user_id"), "purchase_id", "p_ts", "view_id", "v_ts"
     )
-    _STREAM_RUN += 1
-    name = f"mrl_stream_ssjl_{_STREAM_RUN}"
-    run_stream_to_memory(joined, name, output_mode="append")
-    return spark.table(name)
+    return drain(joined, output_mode="append")
 
 
 PURCHASE_VIEW_LEFT_SQL = """
@@ -567,17 +487,10 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full DuckDB hash oracle. Tie order within a timestamp doesn't
     affect session membership (ties have gap 0), so the ms-granularity
     result is engine-order independent."""
-    global _STREAM_RUN
     from map_reduce_lite_spark.streaming.sessions import sessionize_stream
 
-    staged = _stage_events(spark, sf_dir)
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
-    _STREAM_RUN += 1
-    name = f"mrl_stream_sess_{_STREAM_RUN}"
-    run_stream_to_memory(
-        sessionize_stream(stream, timeout="none"), name, output_mode="append"
-    )
-    return spark.table(name).select(
+    sessions = sessionize_stream(events(spark, sf_dir), timeout="none")
+    return drain(sessions, output_mode="append").select(
         "user_id", "start_ms", "end_ms", "n_events", "closed"
     )
 
@@ -622,39 +535,17 @@ def streaming_serving_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation as streaming_rollup_multires; the serving read prunes
     to one row per key with a window rank, which a real lakehouse table
     replaces with MERGE (no read-side rank at all)."""
-    global _STREAM_RUN
     import tempfile
 
     from pyspark.sql import Window
 
-    staged = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staged)
-    )
     serving_dir = tempfile.mkdtemp(prefix="mrl_serving_upsert_")
 
     def upsert(bdf: DataFrame, batch_id: int) -> None:
         bdf.withColumn("_v", F.lit(batch_id)).write.mode("append").parquet(serving_dir)
 
-    _STREAM_RUN += 1
-    _bound_checkpoint_threads(spark)
-    with _drain_shuffle_bound(spark):
-        try:
-            q = (
-                multires_rollup_stream(stream)
-                .writeStream.outputMode("update")
-                .foreachBatch(upsert)
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(180)
-            q.stop()
-        finally:
-            _unload_state_stores(spark)
-    if not finished:
-        raise TimeoutError("serving upsert drain did not finish within 180s")
+    rollup = multires_rollup_stream(events(spark, sf_dir, max_files=4))
+    run_drain(spark, rollup.writeStream.outputMode("update").foreachBatch(upsert))
     w = Window.partitionBy("resolution", "bucket_start", "event_type").orderBy(
         F.desc("_v")
     )
@@ -664,10 +555,6 @@ def streaming_serving_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .select("resolution", "bucket_start", "event_type", "n_events", "sum_value")
     )
-
-
-SESSION_GAP = "30 minutes"
-SESSION_GAP_MS = 30 * 60 * 1000
 
 
 def streaming_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,16 +570,12 @@ def streaming_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the last-event timestamp, making the output exactly the batch
     gaps-and-islands session set (same oracle family as the custom op,
     minus its open/closed flag — complete-mode drain finalizes all)."""
-    global _STREAM_RUN
-    staged = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staged)
-    )
     sessions = (
-        stream.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
+        events(spark, sf_dir, max_files=4)
+        .withWatermark("ts", WATERMARK)
+        .groupBy(
+            F.session_window("ts", f"{SESSION_GAP_MS} milliseconds").alias("w"), "user_id"
+        )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -703,10 +586,7 @@ def streaming_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _STREAM_RUN += 1
-    name = f"mrl_stream_sess_native_{_STREAM_RUN}"
-    run_stream_to_memory(sessions, name)
-    return spark.table(name)
+    return drain(sessions)
 
 
 SESSIONIZE_NATIVE_SQL = """
@@ -741,18 +621,11 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-batch race is not deterministic, but the surviving key set
     is — and it is exactly SELECT DISTINCT, giving the stateful operator
     a hash oracle."""
-    global _STREAM_RUN
     from map_reduce_lite_spark.streaming.dedup import dedup_stream
 
-    staged = _stage_events(spark, sf_dir)
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged)
-    kept = dedup_stream(stream, ["user_id", "event_type"]).select(
-        "user_id", "event_type"
-    )
-    _STREAM_RUN += 1
-    name = f"mrl_stream_dedup_{_STREAM_RUN}"
-    run_stream_to_memory(kept, name, output_mode="append")
-    return spark.table(name)
+    keys = ["user_id", "event_type"]
+    kept = dedup_stream(events(spark, sf_dir), keys).select(*keys)
+    return drain(kept, output_mode="append")
 
 
 STREAMING_DEDUP_SQL = """
@@ -765,24 +638,17 @@ def streaming_enrich_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch against the (broadcast) customer dimension — zero
     stream-side state; events.user_id ⊆ customer.c_custkey in the test
     data so the oracle is a plain join."""
-    global _STREAM_RUN
     from map_reduce_lite_spark.relational.tables import load_table
     from map_reduce_lite_spark.streaming.dedup import enrich_stream
 
-    staged = _stage_events(spark, sf_dir)
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(staged).filter(
-        F.col("event_type") == "purchase"
-    )
+    stream = events(spark, sf_dir).filter(F.col("event_type") == "purchase")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_name", "c_mktsegment"
     )
     enriched = enrich_stream(stream, dim, ["user_id"]).select(
         "event_id", "user_id", "c_name", "c_mktsegment", "value"
     )
-    _STREAM_RUN += 1
-    name = f"mrl_stream_enrich_{_STREAM_RUN}"
-    run_stream_to_memory(enriched, name, output_mode="append")
-    return spark.table(name)
+    return drain(enriched, output_mode="append")
 
 
 STREAMING_ENRICH_SQL = """
@@ -815,25 +681,15 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch regression past max(3·rsd relative, ±HLL_ABS_TOL absolute —
     register quantization dominates tiny windows) hash-fails the
     driver compare (same contract as sketch_distinct_tokens)."""
-    global _STREAM_RUN
-    staged = _stage_events(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staged)
-    )
-    windowed = (
-        stream.withWatermark("ts", "2 hours")
+    streamed = drain(
+        events(spark, sf_dir, max_files=4)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"))
         .agg(F.approx_count_distinct("user_id", rsd=HLL_RSD).alias("approx_users"))
         .select(F.col("win.start").alias("hour_start"), "approx_users")
     )
-    _STREAM_RUN += 1
-    name = f"mrl_stream_hll_{_STREAM_RUN}"
-    run_stream_to_memory(windowed, name)
-    streamed = spark.table(name)
     exact = (
-        spark.read.parquet(staged)
+        spark.read.parquet(_stage_events(spark, sf_dir))
         .groupBy(F.date_trunc("hour", "ts").alias("hour_start"))
         .agg(
             F.countDistinct("user_id").alias("exact_users"),

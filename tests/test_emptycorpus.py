@@ -138,6 +138,26 @@ def test_embedding_lsh_empty_corpus(spark, empty_dir):
     assert ids.count() == 0
 
 
+def test_running_total_empty_corpus(spark, empty_dir):
+    """The TWS running total's closed-world cutoff over zero purchases is
+    the epoch literal, not a ``None - timedelta`` crash: with protobuf
+    the drain returns no rows; without it the drain stops at the blocker
+    test_tws_blocked_exactly_at_protobuf pins, past the cutoff."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from map_reduce_lite_spark.streaming.tws import streaming_running_total
+    from tests.test_tws import _has_protobuf
+
+    if _has_protobuf():
+        assert streaming_running_total(spark, empty_dir).collect() == []
+        return
+    with pytest.raises(StreamingQueryException) as exc:
+        streaming_running_total(spark, empty_dir)
+    msg = str(exc.value)
+    assert "TransformWithStateInPySpark" in msg, msg[:2000]
+    assert "exited unexpectedly" in msg, msg[:2000]
+
+
 def test_rollup_family_empty_table_divergence(spark, empty_duck, empty_dir):
     """The PINNED engine-semantics divergence (see module doc): Spark
     emits zero rows for the rollup family over an empty relation,

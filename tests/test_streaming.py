@@ -8,41 +8,38 @@ relational/queries.py.
 
 from __future__ import annotations
 
+import ast
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from map_reduce_lite_spark.relational.tables import load_table
+from map_reduce_lite_spark.streaming.sessions import sessionize_stream
 from map_reduce_lite_spark.streaming.windows import (
+    EVENTS_SCHEMA,
+    _stage_events,
+    drain,
+    events,
     hourly_counts_stream,
-    run_stream_to_memory,
+    run_drain,
 )
 from tests.conftest import SF_SMALL
+from tests.test_pairs import PKG, _top_level_def
 
 
 @pytest.fixture(scope="module")
-def events_parquet(spark, tmp_path_factory):
-    """Re-write events as µs-timestamp parquet (the nanos original needs
-    the legacy conf that readStream's schema path doesn't apply)."""
-    out = str(tmp_path_factory.mktemp("events_stream") / "events")
-    load_table(spark, SF_SMALL, "events").write.mode("overwrite").parquet(out)
-    return out
+def events_parquet(spark):
+    """The µs-timestamp parquet that ``events`` streams (the nanos
+    original needs the legacy conf that readStream's schema path
+    doesn't apply), for the batch side of each comparison."""
+    return _stage_events(spark, SF_SMALL)
 
 
 def test_hourly_stream_equals_batch(spark, events_parquet):
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_parquet)
-    )
-    windowed = hourly_counts_stream(stream)
-    run_stream_to_memory(windowed, "hourly_test")
+    drained = drain(hourly_counts_stream(events(spark, SF_SMALL)))
     got = Counter(
         (r["hour_start"], r["event_type"], r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM hourly_test").collect()
+        for r in drained.collect()
     )
 
     batch = (
@@ -61,30 +58,14 @@ def test_hourly_stream_equals_batch(spark, events_parquet):
     assert got == want
 
 
-@pytest.mark.slow
 def test_sessionize_stream_runs(spark, events_parquet):
     """Stateful sessionization: drains, emits per-user sessions, event
-    totals reconcile with the input."""
-    from map_reduce_lite_spark.streaming.sessions import sessionize_stream
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_parquet)
-    )
-    sessions = sessionize_stream(stream)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    out = spark.sql("SELECT * FROM sessions_test").collect()
+    totals reconcile with the input. The drain runs without eviction:
+    under ProcessingTimeTimeout an availableNow drain spins until the
+    30-minute timer fires (test_sessionize_stream_timeout_mode pins that
+    mode's plan)."""
+    sessions = sessionize_stream(events(spark, SF_SMALL), timeout="none")
+    out = drain(sessions, output_mode="append").collect()
     assert out
     n_input = spark.read.parquet(events_parquet).count()
     # open (non-closed) sessions carry the residual counts; totals of the
@@ -102,34 +83,33 @@ def test_sessionize_stream_runs(spark, events_parquet):
     assert total == n_input, (total, n_input)
 
 
-def test_dedup_stream_equals_batch(spark, events_parquet):
+@pytest.mark.parametrize(
+    "timeout,conf,other",
+    [("processing", "ProcessingTimeTimeout", "NoTimeout"),
+     ("none", "NoTimeout", "ProcessingTimeTimeout")],
+)
+def test_sessionize_stream_timeout_mode(spark, timeout, conf, other):
+    """``timeout="processing"`` is the eviction an unbounded stream needs;
+    ``"none"`` is the finite drain's. Each names its GroupStateTimeout in
+    the logical plan."""
+    stream = sessionize_stream(events(spark, SF_SMALL), timeout=timeout)
+    plan = stream._jdf.queryExecution().logical().toString()
+    assert conf in plan and other not in plan, plan[:2000]
+
+
+def test_dedup_stream_equals_batch(spark, events_parquet, tmp_path):
     """Streaming dedup must keep exactly one row per key (batch twin:
     dropDuplicates), with duplicate input synthesized by a double read."""
     from map_reduce_lite_spark.streaming.dedup import dedup_stream
 
     base = spark.read.parquet(events_parquet).limit(200)
     doubled = base.unionByName(base)
-    dup_dir = events_parquet + "_doubled"
+    dup_dir = str(tmp_path / "doubled")
     doubled.write.mode("overwrite").parquet(dup_dir)
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(dup_dir)
-    )
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(dup_dir)
     deduped = dedup_stream(stream, ["event_id"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    got = spark.sql("SELECT event_id FROM dedup_test").collect()
+    got = drain(deduped, output_mode="append").select("event_id").collect()
     ids = [r["event_id"] for r in got]
     assert len(ids) == len(set(ids)) == base.count()
 
@@ -138,27 +118,10 @@ def test_stream_stream_join_equals_batch(spark, events_parquet):
     """Time-bounded stream-stream join drains to exactly the batch join."""
     from map_reduce_lite_spark.streaming.joins import purchase_view_join
 
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    p_stream = spark.readStream.schema(schema).parquet(events_parquet).filter(
-        F.col("event_type") == "purchase"
-    )
-    v_stream = spark.readStream.schema(schema).parquet(events_parquet).filter(
-        F.col("event_type") == "view"
-    )
+    p_stream = events(spark, SF_SMALL).filter(F.col("event_type") == "purchase")
+    v_stream = events(spark, SF_SMALL).filter(F.col("event_type") == "view")
     joined = purchase_view_join(p_stream, v_stream)
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    got = Counter(tuple(r) for r in spark.sql("SELECT * FROM ssj_test").collect())
+    got = Counter(tuple(r) for r in drain(joined, output_mode="append").collect())
 
     batch = spark.read.parquet(events_parquet)
     want = Counter(
@@ -179,24 +142,8 @@ def test_enrich_stream_static_join(spark, events_parquet):
         [(t, i) for i, t in enumerate(["view", "click", "purchase", "signup", "error"])],
         "event_type string, type_code int",
     )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(events_parquet)
-    )
-    enriched = enrich_stream(stream, dim, on=["event_type"])
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("enrich_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    out = spark.sql("SELECT * FROM enrich_test").collect()
+    enriched = enrich_stream(events(spark, SF_SMALL), dim, on=["event_type"])
+    out = drain(enriched, output_mode="append").collect()
     assert len(out) == spark.read.parquet(events_parquet).count()
     assert all(r["type_code"] is not None for r in out)
 
@@ -210,32 +157,18 @@ def test_multires_foreachbatch_upsert_serving(spark, tmp_path):
     from pyspark.sql import Window
 
     from map_reduce_lite_spark.relational.queries3 import events_rollup_multires
-    from map_reduce_lite_spark.streaming.windows import (
-        EVENTS_SCHEMA,
-        _stage_events,
-        multires_rollup_stream,
-    )
+    from map_reduce_lite_spark.streaming.windows import multires_rollup_stream
 
-    staged = _stage_events(spark, SF_SMALL)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(staged)
-    )
+    stream = events(spark, SF_SMALL, max_files=2)
     serving_dir = str(tmp_path / "serving")
 
     def upsert(bdf, batch_id):
         bdf.withColumn("_v", F.lit(batch_id)).write.mode("append").parquet(serving_dir)
 
-    q = (
-        multires_rollup_stream(stream)
-        .writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    # raises TimeoutError unless the upsert drain finishes
+    run_drain(
+        spark, multires_rollup_stream(stream).writeStream.outputMode("update").foreachBatch(upsert)
     )
-    assert q.awaitTermination(180), "upsert drain must finish"
-    q.stop()
 
     w = Window.partitionBy("resolution", "bucket_start", "event_type").orderBy(
         F.desc("_v")
@@ -395,27 +328,18 @@ def test_availablenow_checkpoint_no_reprocess(spark, events_parquet, tmp_path):
     files) and append zero new rows to the sink. This is the property
     a production ingestion job restarts on — the ephemeral drains
     elsewhere use temp checkpoints by design, so pin it explicitly."""
-    from map_reduce_lite_spark.streaming.windows import (
-        EVENTS_SCHEMA,
-        hourly_counts_stream,
-    )
-
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
 
-    def run_once():
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_parquet)
-        q = (
-            hourly_counts_stream(stream)
+    def run_once():  # raises TimeoutError unless the drain finishes
+        run_drain(
+            spark,
+            hourly_counts_stream(events(spark, SF_SMALL))
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
         )
-        assert q.awaitTermination(120)
-        q.stop()
 
     run_once()
     first = spark.read.parquet(sink).count()
@@ -423,3 +347,21 @@ def test_availablenow_checkpoint_no_reprocess(spark, events_parquet, tmp_path):
     run_once()
     second = spark.read.parquet(sink).count()
     assert second == first, (first, second)
+
+
+def test_one_source_one_drain():
+    """Only ``run_drain`` sets a trigger or awaits a query, and only
+    ``events`` opens a ``readStream``, anywhere in the package."""
+    owners = {"trigger": "run_drain", "awaitTermination": "run_drain", "readStream": "events"}
+    owned, offenders = set(), []
+    for p in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in owners:
+                owner = _top_level_def(tree, node.lineno)
+                if p == PKG / "streaming" / "windows.py" and owner == owners[node.attr]:
+                    owned.add(node.attr)
+                else:
+                    offenders.append(f"{p.relative_to(PKG.parent)}:{node.lineno} {node.attr}")
+    assert offenders == []
+    assert owned == set(owners)

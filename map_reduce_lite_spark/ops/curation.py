@@ -32,7 +32,18 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.dedup import shingles
-from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
+from map_reduce_lite_spark.registry import (
+    Query,
+    md5_60bit,
+    mrl_lower,
+    sql_md5_60bit,
+    sql_token_rows,
+    sql_ws_count,
+    sql_ws_split,
+    token_rows,
+    ws_count,
+    ws_tokens,
+)
 from map_reduce_lite_spark.relational.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -167,8 +178,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAMINATION_SQL = rf"""
 WITH toks AS (
   SELECT doc_id AS doc, token, pos FROM (
-    SELECT doc_id, unnest(string_split_regex(trim(text, ' '), '\s+')) AS token,
-           unnest(generate_series(1, len(string_split_regex(trim(text, ' '), '\s+')))) AS pos
+    SELECT doc_id, unnest({sql_ws_split('text')}) AS token,
+           unnest(generate_series(1, len({sql_ws_split('text')}))) AS pos
     FROM documents
   ) WHERE token <> ''
 ), sh AS (
@@ -245,8 +256,8 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 REPETITION_SQL = rf"""
 WITH toks AS (
   SELECT doc_id AS doc, token, pos FROM (
-    SELECT doc_id, unnest(string_split_regex(trim(text, ' '), '\s+')) AS token,
-           unnest(generate_series(1, len(string_split_regex(trim(text, ' '), '\s+')))) AS pos
+    SELECT doc_id, unnest({sql_ws_split('text')}) AS token,
+           unnest(generate_series(1, len({sql_ws_split('text')}))) AS pos
     FROM documents
   ) WHERE token <> ''
 ), bg AS (
@@ -297,7 +308,7 @@ def train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(bucket < TRAIN_PCT + VAL_PCT, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     return (
         d.select(split.alias("split"), "source", n_tokens.alias("n_tokens"))
         .groupBy("split")
@@ -317,7 +328,7 @@ WITH routed AS (
            ELSE 'test'
          END AS split,
          source,
-         CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tokens
+         {sql_ws_count('text')} AS n_tokens
   FROM documents
 )
 SELECT split, COUNT(*) AS n_docs,
@@ -352,7 +363,7 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tokens); the rebalance math runs on the #sources-row table
     against two 1-row broadcast scalar totals."""
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     per_src = d.select("source", n_tokens.alias("t")).groupBy("source").agg(
         F.sum("t").alias("n_tokens")
     )
@@ -384,10 +395,10 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MIXTURE_TEMP_SQL = r"""
+MIXTURE_TEMP_SQL = rf"""
 WITH per_src AS (
   SELECT source,
-         CAST(SUM(len(string_split_regex(trim(text, ' '), '\s+'))) AS BIGINT)
+         CAST(SUM(len({sql_ws_split('text')})) AS BIGINT)
            AS n_tokens
   FROM documents GROUP BY source
 ), scaled AS (
@@ -428,7 +439,7 @@ def mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_num = F.substring("source", 4, 10).try_cast("long")
     rate = F.when(src_num % 2 == 0, F.lit(MIX_RATE_HI)).otherwise(F.lit(MIX_RATE_LO))
     keep = (md5_60bit(F.col("doc_id").cast("string")) % 100) < rate
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     return (
         d.select(
             "source",
@@ -456,7 +467,7 @@ WITH flagged AS (
               CASE WHEN TRY_CAST(substr(source, 4) AS BIGINT) % 2 = 0
                    THEN {MIX_RATE_HI} ELSE {MIX_RATE_LO} END
               THEN 1 ELSE 0 END AS kept,
-         CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tokens
+         {sql_ws_count('text')} AS n_tokens
   FROM documents
 )
 SELECT source, CAST(rate_pct AS BIGINT) AS rate_pct, COUNT(*) AS n_total,
@@ -486,7 +497,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit — a global order would serialize the corpus through one
     partition), integer-only math, no iteration, no Python."""
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     w = Window.partitionBy("source").orderBy("doc_id")
     staged = d.select("source", "doc_id", n_tokens.alias("n_tokens")).withColumn(
         "cum", F.sum("n_tokens").over(w)
@@ -504,8 +515,8 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEQUENCE_PACKING_SQL = rf"""
 WITH staged AS (
   SELECT source, doc_id,
-         CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tokens,
-         SUM(CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT))
+         {sql_ws_count('text')} AS n_tokens,
+         SUM({sql_ws_count('text')})
            OVER (PARTITION BY source ORDER BY doc_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
   FROM documents
@@ -758,7 +769,7 @@ def quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_lite_spark.ops.text import STOPWORDS, _stopword_hits
 
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     n_stop = _stopword_hits(F.col("text"), STOPWORDS["en"])
     score = F.floor((n_stop / n_tokens) * 1e6).cast("long")
     scored = d.select("doc_id", "source", score.alias("score_e6"))
@@ -780,7 +791,7 @@ def _quality_quantile_sql() -> str:
     from map_reduce_lite_spark.ops.text import STOPWORDS, _sql_stopword_hits
 
     hits = _sql_stopword_hits("text", STOPWORDS["en"])
-    ntok = r"CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT)"
+    ntok = sql_ws_count("text")
     return f"""
 WITH scored AS (
   SELECT doc_id, source,
@@ -829,7 +840,7 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_lite_spark.ops.text import STOPWORDS, _stopword_hits
 
     d = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     n_stop = _stopword_hits(F.col("text"), STOPWORDS["en"])
     score = F.floor((n_stop / n_tokens) * 1e6).cast("long")
     scored = d.select(
@@ -873,7 +884,7 @@ def _token_budget_sql() -> str:
     from map_reduce_lite_spark.ops.text import STOPWORDS, _sql_stopword_hits
 
     hits = _sql_stopword_hits("text", STOPWORDS["en"])
-    ntok = r"CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT)"
+    ntok = sql_ws_count("text")
     return f"""
 WITH scored AS (
   SELECT doc_id, source,
@@ -938,9 +949,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-exact integer logweight_e6."""
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
-    arr = F.filter(
-        F.split(F.trim(mrl_lower("text")), r"\s+"), lambda t: F.length(t) > 0
-    )
+    arr = ws_tokens(mrl_lower("text"))
     docs = d.repartition(fanout, "doc_id").select(
         "doc_id",
         F.col("source").isin(*DSIR_TARGET_SOURCES).cast("long").alias("is_t"),
@@ -1010,7 +1019,7 @@ def _dsir_sql() -> str:
 WITH tok_lists AS (
   SELECT doc_id,
          CASE WHEN source IN ({targets}) THEN 1 ELSE 0 END AS is_t,
-         string_split_regex(trim(lower(text), ' '), '\s+') AS l
+         {sql_ws_split('lower(text)')} AS l
   FROM documents
 ), toks AS (
   SELECT doc_id, is_t, term, pos FROM (
@@ -1078,13 +1087,7 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
     toks = materialize(
-        d.repartition(fanout, "doc_id")
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("term"),
-        )
-        .filter(F.length("term") > 0),
+        token_rows(d.repartition(fanout, "doc_id"), "term", "doc_id", "lang"),
         # two consumers: the vocabulary agg and the scoring join
         eager=False,
     )
@@ -1137,12 +1140,9 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CCNET_BUCKETS_SQL = r"""
+CCNET_BUCKETS_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, lang, t.term AS term
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS t(term)
-  WHERE t.term <> ''
+  {sql_token_rows('term', 'doc_id', 'lang')}
 ), cnt AS (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY 1
 ), n AS (

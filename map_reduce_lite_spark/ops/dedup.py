@@ -43,7 +43,14 @@ from map_reduce_lite_spark.ops.pairs import (
     split_hot_buckets,
     star_only_ids,
 )
-from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
+from map_reduce_lite_spark.registry import (
+    Query,
+    md5_60bit,
+    sql_md5_60bit,
+    sql_ws_split,
+    ws_split,
+    ws_tokens,
+)
 from map_reduce_lite_spark.relational.tables import load_table
 
 # MinHash parameters (bands × rows-per-band = num hashes). The module
@@ -94,7 +101,7 @@ def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         df.repartition(fanout, F.col(id_col))
         .select(
             F.col(id_col).alias("doc"),
-            F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("pos", "token"),
+            F.posexplode(ws_split(text_col)).alias("pos", "token"),
         )
         .filter(F.length("token") > 0)
     )
@@ -195,9 +202,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(d)
 
 
-_SHINGLES_CTE = r"""
+_SHINGLES_CTE = rf"""
 WITH tok_lists AS (
-  SELECT doc_id AS doc, string_split_regex(trim(text, ' '), '\s+') AS toks
+  SELECT doc_id AS doc, {sql_ws_split('text')} AS toks
   FROM documents
 ), toks AS (
   SELECT doc, token, pos FROM (
@@ -524,9 +531,7 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     for the measured wins of this form.)"""
     spark = docs.sparkSession
     fanout = max(spark.sparkContext.defaultParallelism, 8)
-    toks = F.filter(
-        F.split(F.trim(F.col("text")), r"\s+"), lambda t: F.length(t) > 0
-    )
+    toks = ws_tokens("text")
     hashed = docs.repartition(fanout, F.col("doc_id")).select(
         F.col("doc_id").alias("doc"),
         F.transform(F.array_distinct(toks), lambda t: md5_60bit(t)).alias("hs"),
@@ -623,7 +628,7 @@ def _simhash_sql(cap: int = SIMHASH_BUCKET_CAP) -> str:
 WITH toks AS (
   SELECT DISTINCT doc_id AS doc, t.tok AS token
   FROM documents,
-       LATERAL unnest(string_split_regex(trim(text, ' '), '\s+')) AS t(tok)
+       LATERAL unnest({sql_ws_split('text')}) AS t(tok)
   WHERE t.tok <> ''
 ), hashed AS (
   SELECT doc, {sql_md5_60bit('token')} AS h FROM toks

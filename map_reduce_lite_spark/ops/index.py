@@ -23,13 +23,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from map_reduce_lite_spark.registry import Query, mrl_lower
+from map_reduce_lite_spark.registry import (
+    Query,
+    mrl_lower,
+    sql_token_rows,
+    sql_ws_split,
+    sql_ws_tokens,
+    token_rows,
+    ws_split,
+)
 from map_reduce_lite_spark.relational.tables import load_table
 
 POSTINGS_CAP = 8   # ids materialized per token (head block)
 MIN_DF = 2         # drop hapax tokens from the index
 
-_SQL_TOKS = r"list_filter(string_split_regex(trim(lower(text), ' '), '\s+'), x -> x <> '')"
+_SQL_TOKS = sql_ws_tokens("lower(text)")
 
 
 def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,7 +49,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     toks = F.array_distinct(
-        F.filter(F.split(F.trim(mrl_lower("text")), r"\s+"), lambda x: x != "")
+        F.filter(ws_split(mrl_lower("text")), lambda x: x != "")
     )
     pairs = d.select("doc_id", F.explode(toks).alias("token"))
     rn = F.row_number().over(Window.partitionBy("token").orderBy("doc_id"))
@@ -97,10 +105,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation. Integer basis points, exact in both
     engines."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source",
-        F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("token"),
-    ).filter(F.length("token") > 0)
+    toks = token_rows(d, "token", "source")
     vocab = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -128,7 +133,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 OOV_RATE_SQL = f"""
 WITH toks AS (
-  SELECT source, unnest(string_split_regex(trim(lower(text), ' '), '\\s+')) AS token
+  SELECT source, unnest({sql_ws_split('lower(text)')}) AS token
   FROM documents
 ),
 t2 AS (SELECT * FROM toks WHERE length(token) > 0),
@@ -207,14 +212,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries: dict[int, list[int]] = {}
     for _q, _t in BM25_QUERY_SET:
         queries.setdefault(_q, []).append(uterms.index(_t))
-    toks = (
-        d.repartition(fanout, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("term"),
-        )
-        .filter(F.length("term") > 0)
-    )
+    toks = token_rows(d.repartition(fanout, "doc_id"), "term", "doc_id")
     per_doc = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
         *[
@@ -294,10 +292,7 @@ _BM25_VALUES = ", ".join(f"({q}, '{t}')" for q, t in BM25_QUERY_SET)
 
 BM25_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, t.term AS term
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS t(term)
-  WHERE t.term <> ''
+  {sql_token_rows('term', 'doc_id')}
 ), tf AS (
   SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2
 ), dl AS (

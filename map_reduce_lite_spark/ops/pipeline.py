@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.dedup import SHINGLE_DF_CAP, ngram_jaccard_pairs
 from map_reduce_lite_spark.ops.text import STOPWORDS, _sql_stopword_hits, _stopword_hits
-from map_reduce_lite_spark.registry import Query
+from map_reduce_lite_spark.registry import Query, sql_md5_60bit, sql_ws_count, sql_ws_split, ws_count
 from map_reduce_lite_spark.relational.tables import load_table
 
 # Stage-1 quality gate: enough tokens to be trainable text, mean token
@@ -54,7 +54,7 @@ def quality_lang_flags(d: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     the upstream subtree: a DataFrame consumed twice is planned twice)
     carry it through instead."""
     n_chars = F.length("text").cast("long")
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     mean_tok_len = (n_chars - n_tokens + 1) / n_tokens
     hits = {lang: _stopword_hits(F.col("text"), ws) for lang, ws in STOPWORDS.items()}
     flagged = d.select(
@@ -130,7 +130,7 @@ def _curation_sql() -> str:
     return rf"""
 WITH feats AS (
   SELECT doc_id, source, text,
-         CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tokens,
+         {sql_ws_count('text')} AS n_tokens,
          CAST(length(text) AS BIGINT) AS n_chars,
          {hit_cols}
   FROM documents
@@ -143,7 +143,7 @@ WITH feats AS (
 ), cur AS (
   SELECT doc_id, source, text, n_tokens FROM flagged WHERE q_ok AND pred = 'en'
 ), tok_lists AS (
-  SELECT doc_id AS doc, string_split_regex(trim(text, ' '), '\s+') AS toks FROM cur
+  SELECT doc_id AS doc, {sql_ws_split('text')} AS toks FROM cur
 ), toks AS (
   SELECT doc, token, pos FROM (
     SELECT doc, unnest(toks) AS token,
@@ -244,7 +244,6 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_refresh_sql() -> str:
-    from map_reduce_lite_spark.registry import sql_md5_60bit
 
     langs = list(STOPWORDS)
     hit_cols = ",\n         ".join(
@@ -280,7 +279,7 @@ WITH prev AS (
   WHERE dk.status IN ('added', 'changed')
 ), feats AS (
   SELECT doc_id, source, status,
-         CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tokens,
+         {sql_ws_count('text')} AS n_tokens,
          CAST(length(text) AS BIGINT) AS n_chars,
          {hit_cols}
   FROM delta
@@ -383,7 +382,6 @@ def pipeline_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _full_refresh_sql() -> str:
     from map_reduce_lite_spark.ops.snapshot import _band_sig_cte
-    from map_reduce_lite_spark.registry import sql_md5_60bit
 
     langs = list(STOPWORDS)
     hit_cols = ",\n         ".join(
@@ -419,7 +417,7 @@ WITH prev AS (
   WHERE dk.status IN ('added', 'changed')
 ), feats AS (
   SELECT doc_id, source, status, text,
-         CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tokens,
+         {sql_ws_count('text')} AS n_tokens,
          CAST(length(text) AS BIGINT) AS n_chars,
          {hit_cols}
   FROM delta

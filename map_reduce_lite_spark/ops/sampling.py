@@ -26,12 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from map_reduce_lite_spark.registry import (
-    Query,
-    md5_60bit,
-    mrl_lower,
-    sql_md5_60bit,
-)
+from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit, sql_ws_split, token_rows
 from map_reduce_lite_spark.relational.tables import load_table
 
 # basis points out of 10_000 — integer rate math keeps both engines exact
@@ -145,9 +140,7 @@ def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded key space the same shape runs on the hashed token with a
     count-min refinement — here the exact form IS the scale path."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("token")
-    ).filter(F.length("token") > 0)
+    toks = token_rows(d, "token")
     return (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -159,7 +152,7 @@ def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 HEAVY_HITTERS_SQL = f"""
 SELECT token, COUNT(*) AS n
 FROM (
-  SELECT unnest(string_split_regex(trim(lower(text), ' '), '\\s+')) AS token
+  SELECT unnest({sql_ws_split('lower(text)')}) AS token
   FROM documents
 )
 WHERE length(token) > 0

@@ -44,7 +44,7 @@ from map_reduce_lite_spark.ops.pairs import (
     band_self_join,
     split_hot_buckets,
 )
-from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
+from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit, sql_ws_count, ws_count
 from map_reduce_lite_spark.relational.tables import load_table
 
 N_QUERY_VECS = 8  # vec_id < 8 form the query set in the oracle-checked demo
@@ -412,7 +412,7 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
+    n_tokens = ws_count("text")
     quality_ids = docs.select(
         F.col("doc_id").alias("vec_id"), n_tokens.alias("n_tokens")
     ).filter(F.col("n_tokens") >= MIN_TOKENS)
@@ -428,7 +428,7 @@ def _filtered_topk_sql() -> str:
 WITH quality AS (
   SELECT doc_id AS vec_id
   FROM documents
-  WHERE CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) >= {MIN_TOKENS}
+  WHERE {sql_ws_count('text')} >= {MIN_TOKENS}
 ), corpus AS (
   SELECT e.vec_id, e.embedding FROM embeddings e JOIN quality USING (vec_id)
 ), scored AS (

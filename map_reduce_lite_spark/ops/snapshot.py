@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit
+from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit, sql_ws_split, ws_count
 from map_reduce_lite_spark.relational.tables import load_table
 
 
@@ -203,7 +203,7 @@ def _band_sig_cte(src: str, p: str) -> str:
         for b in range(MINHASH_BANDS)
     )
     return rf"""{p}tok_lists AS (
-  SELECT doc_id AS doc, string_split_regex(trim(text, ' '), '\s+') AS toks FROM {src}
+  SELECT doc_id AS doc, {sql_ws_split('text')} AS toks FROM {src}
 ), {p}toks AS (
   SELECT doc, token, pos FROM (
     SELECT doc, unnest(toks) AS token,
@@ -283,12 +283,11 @@ def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance, plus consistent (always true)."""
     d = load_table(spark, sf_dir, "documents")
     prev, cur = _derived_snapshots(d)
-    ntok = lambda c: F.size(F.split(F.trim(c), r"\s+")).cast("long")  # noqa: E731
     delta = snapshot_diff(prev, cur, carry_cols=("source",)).filter(
         F.col("status") != "unchanged"
     )
-    pv = prev.select("doc_id", ntok(F.col("text")).alias("prev_toks"))
-    cv = cur.select("doc_id", ntok(F.col("text")).alias("cur_toks"))
+    pv = prev.select("doc_id", ws_count("text").alias("prev_toks"))
+    cv = cur.select("doc_id", ws_count("text").alias("cur_toks"))
     signed = (
         delta.join(pv, "doc_id", "left")
         .join(cv, "doc_id", "left")
@@ -308,7 +307,7 @@ def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("d_docs").alias("d_docs"), F.sum("d_toks").alias("d_toks"))
     )
     standing = prev.groupBy("source").agg(
-        F.count(F.lit(1)).alias("p_docs"), F.sum(ntok(F.col("text"))).alias("p_toks")
+        F.count(F.lit(1)).alias("p_docs"), F.sum(ws_count("text")).alias("p_toks")
     )
     maintained = standing.join(signed, "source", "left").select(
         "source",
@@ -321,7 +320,7 @@ def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     direct = cur.groupBy("source").agg(
         F.count(F.lit(1)).alias("docs_direct"),
-        F.sum(ntok(F.col("text"))).alias("toks_direct"),
+        F.sum(ws_count("text")).alias("toks_direct"),
     )
     return direct.join(maintained, "source").select(
         "source",
@@ -362,8 +361,8 @@ WITH prev AS (
          CAST(SUM(CASE d.status WHEN 'added' THEN 1
                                 WHEN 'removed' THEN -1 ELSE 0 END) AS BIGINT)
            AS d_docs,
-         CAST(SUM(COALESCE(len(string_split_regex(trim(cv.text, ' '), '\s+')), 0)
-                - COALESCE(len(string_split_regex(trim(pv.text, ' '), '\s+')), 0))
+         CAST(SUM(COALESCE(len({sql_ws_split('cv.text')}), 0)
+                - COALESCE(len({sql_ws_split('pv.text')}), 0))
               AS BIGINT) AS d_toks
   FROM delta d
   LEFT JOIN prev pv ON pv.doc_id = d.doc_id
@@ -372,7 +371,7 @@ WITH prev AS (
   GROUP BY d.source
 ), standing AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS p_docs,
-         CAST(SUM(len(string_split_regex(trim(text, ' '), '\s+'))) AS BIGINT) AS p_toks
+         CAST(SUM(len({sql_ws_split('text')})) AS BIGINT) AS p_toks
   FROM prev GROUP BY source
 ), maintained AS (
   SELECT st.source,
@@ -381,7 +380,7 @@ WITH prev AS (
   FROM standing st LEFT JOIN signed s ON s.source = st.source
 ), direct AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS docs_direct,
-         CAST(SUM(len(string_split_regex(trim(text, ' '), '\s+'))) AS BIGINT)
+         CAST(SUM(len({sql_ws_split('text')})) AS BIGINT)
            AS toks_direct
   FROM cur GROUP BY source
 )

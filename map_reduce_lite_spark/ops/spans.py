@@ -33,7 +33,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
+from map_reduce_lite_spark.registry import (
+    Query,
+    md5_60bit,
+    mrl_lower,
+    sql_md5_60bit,
+    sql_ws_tokens,
+    ws_tokens,
+)
 from map_reduce_lite_spark.relational.tables import load_table
 
 SPAN_TOKENS = 8   # window length in tokens (Lee et al. use 50; corpus docs here are ~60 tokens)
@@ -44,13 +51,6 @@ CHUNK_CHARS = 160   # chunk length in characters
 CHUNK_STRIDE = 120  # overlap = CHUNK_CHARS - CHUNK_STRIDE = 40 chars
 
 
-def _tok_array(text_col):
-    """Lowercased whitespace tokens with empties dropped (matches the
-    tokenization used across ops/text.py and ops/dedup.py)."""
-    toks = F.split(F.trim(mrl_lower(text_col)), r"\s+")
-    return F.filter(toks, lambda t: F.length(t) > 0)
-
-
 def _tokens_col(d: DataFrame) -> DataFrame:
     """Materialize the token array as a column attribute BEFORE any
     higher-order span construction. Subexpressions inside transform()
@@ -59,10 +59,10 @@ def _tokens_col(d: DataFrame) -> DataFrame:
     O(n_tokens²) work per document (measured 7× slower at sf0.1). A
     projected column is evaluated once per row and referenced by
     attribute from the lambda."""
-    return d.select("doc_id", _tok_array(F.col("text")).alias("toks"))
+    return d.select("doc_id", ws_tokens(mrl_lower("text")).alias("toks"))
 
 
-_SQL_TOKS = r"list_filter(string_split_regex(trim(lower(text), ' '), '\s+'), x -> x <> '')"
+_SQL_TOKS = sql_ws_tokens("lower(text)")
 
 
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -376,9 +376,7 @@ def vocab_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
     )
-    toks = F.filter(
-        F.split(F.trim(mrl_lower("text")), r"\s+"), lambda t: F.length(t) > 0
-    )
+    toks = ws_tokens(mrl_lower("text"))
     body = F.concat(F.lit("\n"), F.array_join(toks, "\n\n"), F.lit("\n"))
     applied = body
     # a merge slot can be NULL on a corpus with < M distinct pairs;

@@ -16,7 +16,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
-from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
+from map_reduce_lite_spark.registry import (
+    WS_CHARS,
+    WS_RUN,
+    Query,
+    md5_60bit,
+    mrl_lower,
+    sql_md5_60bit,
+    sql_token_rows,
+    sql_ws_count,
+    sql_ws_split,
+    token_rows,
+    ws_count,
+    ws_split,
+)
 from map_reduce_lite_spark.relational.tables import load_table
 
 # Small fixed stopword lists (public, common words). Order of the dict is
@@ -29,7 +42,7 @@ STOPWORDS: dict[str, list[str]] = {
 }
 
 # BPE-ish token regex: letter runs, digit runs, or single non-space symbols
-BPE_TOKEN_RE = r"\p{L}+|\p{N}+|[^\p{L}\p{N}\s]"
+BPE_TOKEN_RE = rf"\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}{WS_CHARS}]"
 
 
 def _stopword_hits(text_col: Column, words: list[str]) -> Column:
@@ -88,8 +101,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bit-identical division both engines)."""
     d = load_table(spark, sf_dir, "documents")
     n_chars = F.length("text").cast("long")
-    tokens = F.split(F.trim("text"), r"\s+")
-    n_tokens = F.size(tokens).cast("long")
+    n_tokens = ws_count("text")
     n_stop = _stopword_hits(F.col("text"), STOPWORDS["en"])
     mean_tok_len = (n_chars - n_tokens + 1) / n_tokens  # chars net of single spaces
     return d.select(
@@ -105,12 +117,12 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUALITY_SQL = rf"""
 SELECT doc_id,
        CAST(length(text) AS BIGINT) AS n_chars,
-       CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS n_tokens,
+       {sql_ws_count('text')} AS n_tokens,
        {_sql_stopword_hits('text', STOPWORDS['en'])} AS n_stopwords,
        {_sql_stopword_hits('text', STOPWORDS['en'])}
-         / CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS stopword_ratio,
-       (CAST(length(text) AS BIGINT) - len(string_split_regex(trim(text, ' '), '\s+')) + 1)
-         / CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS mean_token_len
+         / {sql_ws_count('text')} AS stopword_ratio,
+       (CAST(length(text) AS BIGINT) - len({sql_ws_split('text')}) + 1)
+         / {sql_ws_count('text')} AS mean_token_len
 FROM documents
 """
 
@@ -118,9 +130,8 @@ FROM documents
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace vs BPE-ish regex token counts per source."""
     d = load_table(spark, sf_dir, "documents")
-    ws_tokens = F.size(F.split(F.trim("text"), r"\s+")).cast("long")
     bpe_tokens = F.size(F.regexp_extract_all("text", F.lit(BPE_TOKEN_RE), F.lit(0))).cast("long")
-    per_doc = d.select("source", ws_tokens.alias("ws_toks"), bpe_tokens.alias("bpe_toks"))
+    per_doc = d.select("source", ws_count("text").alias("ws_toks"), bpe_tokens.alias("bpe_toks"))
     return per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("ws_toks").alias("total_ws_tokens"),
@@ -131,9 +142,9 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TOKEN_STATS_SQL = rf"""
 SELECT source, COUNT(*) AS n_docs,
-       CAST(SUM(len(string_split_regex(trim(text, ' '), '\s+'))) AS BIGINT) AS total_ws_tokens,
-       CAST(SUM(len(regexp_extract_all(text, '\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}\s]'))) AS BIGINT) AS total_bpe_tokens,
-       CAST(MAX(len(regexp_extract_all(text, '\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}\s]'))) AS BIGINT) AS max_bpe_tokens
+       CAST(SUM(len({sql_ws_split('text')})) AS BIGINT) AS total_ws_tokens,
+       CAST(SUM(len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))) AS BIGINT) AS total_bpe_tokens,
+       CAST(MAX(len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))) AS BIGINT) AS max_bpe_tokens
 FROM documents
 GROUP BY source
 """
@@ -143,7 +154,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints: md5 hex of whitespace-normalized text plus the
     portable 60-bit integer form (shuffle-friendly dedup key)."""
     d = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(mrl_lower(F.trim("text")), r"\s+", " ")
+    norm = F.regexp_replace(mrl_lower(F.trim("text")), WS_RUN, " ")
     return d.select(
         "doc_id",
         F.md5(norm).alias("fp_md5"),
@@ -151,7 +162,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NORM_EXPR = r"regexp_replace(lower(trim(text, ' ')), '\s+', ' ', 'g')"
+_NORM_EXPR = f"regexp_replace(lower(trim(text, ' ')), '{WS_RUN}', ' ', 'g')"
 FINGERPRINT_SQL = f"""
 SELECT doc_id,
        md5({_NORM_EXPR}) AS fp_md5,
@@ -174,14 +185,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver-side N, no unpartitioned windows."""
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
-    toks = (
-        d.repartition(fanout, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("term"),
-        )
-        .filter(F.length("term") > 0)
-    )
+    toks = token_rows(d.repartition(fanout, "doc_id"), "term", "doc_id")
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -210,10 +214,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TFIDF_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, t.term AS term
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS t(term)
-  WHERE t.term <> ''
+  {sql_token_rows('term', 'doc_id')}
 ), tf AS (
   SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2
 ), dfreq AS (
@@ -278,10 +279,7 @@ def sketch_distinct_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate behind sketch_distinct_tokens, exposed for the accuracy
     property test (tests/test_sketch.py)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source",
-        F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("token"),
-    ).filter(F.length("token") > 0)
+    toks = token_rows(d, "token", "source")
     return toks.groupBy("source").agg(
         F.approx_count_distinct("token", rsd=SKETCH_RSD).alias("approx_distinct"),
         F.countDistinct("token").alias("exact_distinct"),
@@ -314,14 +312,14 @@ def sketch_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SKETCH_DISTINCT_SQL = """
+SKETCH_DISTINCT_SQL = f"""
 SELECT source,
        COUNT(DISTINCT token) AS exact_distinct,
        COUNT(*) AS n_tokens,
        TRUE AS within_tolerance
 FROM (
   SELECT source,
-         unnest(string_split_regex(trim(lower(text), ' '), '\\s+')) AS token
+         unnest({sql_ws_split('lower(text)')}) AS token
   FROM documents
 )
 WHERE length(token) > 0
@@ -410,14 +408,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output is floor-scaled to e6."""
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
-    toks = (
-        d.repartition(fanout, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("term"),
-        )
-        .filter(F.length("term") > 0)
-    )
+    toks = token_rows(d.repartition(fanout, "doc_id"), "term", "doc_id")
     cnt = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     n = toks.agg(F.count(F.lit(1)).alias("nn"))
     nll = -F.log(F.col("c").cast("double") / F.col("nn").cast("double"))
@@ -440,12 +431,9 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-UNIGRAM_LOGPROB_SQL = r"""
+UNIGRAM_LOGPROB_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, t.term AS term
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS t(term)
-  WHERE t.term <> ''
+  {sql_token_rows('term', 'doc_id')}
 ), cnt AS (
   SELECT term, COUNT(*) AS c FROM toks GROUP BY 1
 ), n AS (
@@ -489,9 +477,7 @@ def sketch_cms_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast cell table with one (r, b)-melted join and take the
     min."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("token")
-    ).filter(F.length("token") > 0)
+    toks = token_rows(d, "token")
     cells = (
         toks.select(
             F.explode(
@@ -573,7 +559,7 @@ def _cms_sql() -> str:
     return rf"""
 WITH toks AS (
   SELECT token FROM (
-    SELECT unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS token
+    SELECT unnest({sql_ws_split('lower(text)')}) AS token
     FROM documents
   ) WHERE length(token) > 0
 ), cells AS (
@@ -613,10 +599,7 @@ def sketch_cms_merge_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; the min over rows is taken after merging). Fully
     value-oracled: every cell is portable md5 arithmetic."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source",
-        F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("token"),
-    ).filter(F.length("token") > 0)
+    toks = token_rows(d, "token", "source")
     rb = F.explode(
         F.array(
             *[
@@ -702,7 +685,7 @@ def _cms_merge_sql() -> str:
 WITH toks AS (
   SELECT source, token FROM (
     SELECT source,
-           unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS token
+           unnest({sql_ws_split('lower(text)')}) AS token
     FROM documents
   ) WHERE length(token) > 0
 ), shard_cells AS (
@@ -763,14 +746,7 @@ def collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same thing as a within-doc self-join, equivalent because the
     array is the doc's distinct present-token set."""
     d = load_table(spark, sf_dir, "documents")
-    toks = (
-        d.select(
-            "doc_id",
-            F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-        .distinct()
-    )
+    toks = token_rows(d, "token", "doc_id").distinct()
     # The M-row vocabulary slice used to be consumed three times
     # (presence filter + both lift margins), and every consumer re-ran
     # the whole tokenize+distinct+agg pipeline: 4 corpus tokenize
@@ -833,7 +809,7 @@ COLLOCATION_SQL = rf"""
 WITH toks AS (
   SELECT DISTINCT doc_id, t.term AS token
   FROM documents,
-       LATERAL unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS t(term)
+       LATERAL unnest({sql_ws_split('lower(text)')}) AS t(term)
   WHERE t.term <> ''
 ), topm AS (
   SELECT token, COUNT(*) AS df FROM toks GROUP BY 1
@@ -894,7 +870,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.repartition(fanout, "doc_id")
         .select(
             "doc_id",
-            F.posexplode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias(
+            F.posexplode(ws_split(mrl_lower("text"))).alias(
                 "pos", "term"
             ),
         )
@@ -950,7 +926,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BIGRAM_LOGPROB_SQL = rf"""
 WITH tok_lists AS (
-  SELECT doc_id, string_split_regex(trim(lower(text), ' '), '\s+') AS l
+  SELECT doc_id, {sql_ws_split('lower(text)')} AS l
   FROM documents
 ), toks AS (
   SELECT doc_id, term, pos FROM (
@@ -1111,14 +1087,7 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     (slope undefined)."""
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
-    toks = (
-        d.repartition(fanout, "doc_id")
-        .select(
-            "source",
-            F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("term"),
-        )
-        .filter(F.length("term") > 0)
-    )
+    toks = token_rows(d.repartition(fanout, "doc_id"), "term", "source")
     cnt = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("source").orderBy(F.desc("c"), F.asc("term"))
     ranked = (
@@ -1156,10 +1125,7 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ZIPF_SLOPE_SQL = rf"""
 WITH toks AS (
-  SELECT source, t.term AS term
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS t(term)
-  WHERE t.term <> ''
+  {sql_token_rows('term', 'source')}
 ), cnt AS (
   SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c
   FROM toks GROUP BY 1, 2
@@ -1209,14 +1175,7 @@ def _jsd_source_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     which hides it from the final query's explain output."""
     d = load_table(spark, sf_dir, "documents")
     fanout = max(spark.sparkContext.defaultParallelism, 8)
-    toks = (
-        d.repartition(fanout, "doc_id")
-        .select(
-            "source",
-            F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("term"),
-        )
-        .filter(F.length("term") > 0)
-    )
+    toks = token_rows(d.repartition(fanout, "doc_id"), "term", "source")
     corpus = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     # two-stage top-K: partial per-partition heaps → one K-row merge;
     # the broadcast side is exactly K rows regardless of vocabulary size
@@ -1316,10 +1275,7 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 JSD_SQL = rf"""
 WITH toks AS (
-  SELECT source, t.term AS term
-  FROM documents,
-       LATERAL unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS t(term)
-  WHERE t.term <> ''
+  {sql_token_rows('term', 'source')}
 ), corpus AS (
   SELECT term, CAST(COUNT(*) AS BIGINT) AS c FROM toks GROUP BY term
 ), vocab AS (
@@ -1388,9 +1344,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over those 500 rows; the corpus total is a 1-row
     broadcast. Integer division (DIV) end-to-end — no float path."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(F.split(F.trim(mrl_lower("text")), r"\s+")).alias("token")
-    ).filter(F.length("token") > 0)
+    toks = token_rows(d, "token")
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     total = counts.agg(F.sum("n").alias("total_tokens"))
     kmax = max(COVERAGE_KS)
@@ -1445,7 +1399,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 VOCAB_COVERAGE_SQL = rf"""
 WITH counts AS (
   SELECT token, COUNT(*) AS n
-  FROM (SELECT unnest(string_split_regex(trim(lower(text), ' '), '\s+')) AS token
+  FROM (SELECT unnest({sql_ws_split('lower(text)')}) AS token
         FROM documents)
   WHERE length(token) > 0
   GROUP BY token
@@ -1489,7 +1443,7 @@ def fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         for lang, ws in STOPWORDS.items()
     }
     scored = d.select(
-        F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("ws_toks"),
+        ws_count("text").alias("ws_toks"),
         F.size(F.regexp_extract_all("text", F.lit(BPE_TOKEN_RE), F.lit(0)))
         .cast("long")
         .alias("bpe_toks"),
@@ -1544,9 +1498,9 @@ def _fertility_sql() -> str:
     )
     return rf"""
 WITH scored AS (
-  SELECT CAST(len(string_split_regex(trim(text, ' '), '\s+')) AS BIGINT) AS ws_toks,
+  SELECT {sql_ws_count('text')} AS ws_toks,
          CAST(len(regexp_extract_all(text,
-              '\p{{L}}+|\p{{N}}+|[^\p{{L}}\p{{N}}\s]')) AS BIGINT) AS bpe_toks,
+              '{BPE_TOKEN_RE}')) AS BIGINT) AS bpe_toks,
          CAST(length(text) AS BIGINT) AS n_chars,
          {hit_cols}
   FROM documents

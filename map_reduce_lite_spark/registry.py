@@ -80,3 +80,53 @@ def mrl_lower(col: Column | str) -> Column:
     plain lower() (the pre-translate is a no-op under utf8proc)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lower(F.translate(c, "İΣ", "iσ"))
+
+
+# The one whitespace class every tokenizer and normalizer splits on
+# (module doc): the class body, and the run pattern split on.
+WS_CHARS = r"\s"
+WS_RUN = WS_CHARS + "+"
+
+
+def ws_split(col: Column | str) -> Column:
+    """Whitespace tokens (matches sql_ws_split): trim spaces, split on
+    runs of WS_CHARS. Empty tokens stay — one on an empty or space-only
+    text, a leading one before leading non-space whitespace."""
+    return F.split(F.trim(col), WS_RUN)
+
+
+def sql_ws_split(expr: str) -> str:
+    return f"string_split_regex(trim({expr}, ' '), '{WS_RUN}')"
+
+
+def ws_count(col: Column | str) -> Column:
+    """Raw whitespace-token count, empties included (matches sql_ws_count)."""
+    return F.size(ws_split(col)).cast("long")
+
+
+def sql_ws_count(expr: str) -> str:
+    return f"CAST(len({sql_ws_split(expr)}) AS BIGINT)"
+
+
+def ws_tokens(col: Column | str) -> Column:
+    """The non-empty whitespace tokens as an array (matches sql_ws_tokens)."""
+    return F.filter(ws_split(col), lambda t: F.length(t) > 0)
+
+
+def sql_ws_tokens(expr: str) -> str:
+    return f"list_filter({sql_ws_split(expr)}, x -> x <> '')"
+
+
+def token_rows(df: DataFrame, name: str, *keep: str) -> DataFrame:
+    """The lowered, non-empty whitespace-token stream of ``df.text``: one
+    row per token, as column ``name``, beside the ``keep`` columns."""
+    toks = F.explode(ws_split(mrl_lower("text"))).alias(name)
+    return df.select(*keep, toks).filter(F.length(name) > 0)
+
+
+def sql_token_rows(name: str, *keep: str) -> str:
+    """token_rows over ``documents`` as the body of a SELECT."""
+    return f"""SELECT {', '.join(keep)}, t.{name} AS {name}
+  FROM documents,
+       LATERAL unnest({sql_ws_split('lower(text)')}) AS t({name})
+  WHERE t.{name} <> ''"""

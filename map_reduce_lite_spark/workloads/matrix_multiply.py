@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from map_reduce_lite_spark.registry import ws_split
+
 
 def matrix_multiply(cells: DataFrame) -> DataFrame:
     """C = A @ B from a cells DataFrame (row, col, value, matrix).
@@ -65,7 +67,7 @@ def parse_triples(spark, input_glob: str) -> DataFrame:
     (matrix_multiply.rs:19-28)."""
     parts = (
         spark.read.text(input_glob)
-        .select(F.split(F.trim("value"), r"\s+").alias("p"))
+        .select(ws_split("value").alias("p"))
         .filter(F.size("p") == 4)
     )
     return parts.select(

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from map_reduce_lite_spark.registry import ws_split
+
 
 def vertex_degree(df: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """(vertex, degree) from an edge-list DataFrame."""
@@ -30,7 +32,7 @@ def vertex_degree_lines(spark, input_glob: str) -> DataFrame:
     """File-facing parity form: whitespace-separated ``src dst`` text lines."""
     edges = (
         spark.read.text(input_glob)
-        .select(F.split(F.trim("value"), r"\s+").alias("parts"))
+        .select(ws_split("value").alias("parts"))
         .filter(F.size("parts") >= 2)
         .select(
             F.col("parts")[0].cast("long").alias("src"),

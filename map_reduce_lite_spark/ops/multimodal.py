@@ -27,7 +27,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from map_reduce_lite_spark.registry import Query, md5_60bit, mrl_lower, sql_md5_60bit
+from map_reduce_lite_spark.registry import WS_RUN, Query, md5_60bit, mrl_lower, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
 MEDIA_SCHEMA = T.StructType(
@@ -1031,17 +1031,11 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     work), one 8-byte-key groupBy with map-side combine, output
     bounded by the number of distinct GROUPS.
 
-    The whitespace class is spelled out explicitly ([ \\t\\n\\r\\f\\x0B])
-    rather than \\s because Java regex (Spark) includes vertical tab in
-    \\s while RE2 (DuckDB) does not — a payload containing \\x0B would
-    hash differently across engines under \\s."""
+    Whitespace runs collapse on the registry's one class (WS_RUN), so a
+    payload containing a vertical tab hashes the same in both engines."""
     d = load_table(spark, sf_dir, "documents")
     media = synthesize_media(d)
-    norm = F.trim(
-        F.regexp_replace(
-            mrl_lower(F.decode(F.col("payload"), "UTF-8")), "[ \t\n\r\f\x0B]+", " "
-        )
-    )
+    norm = F.trim(F.regexp_replace(mrl_lower(F.decode(F.col("payload"), "UTF-8")), WS_RUN, " "))
     return (
         media.select("media_id", md5_60bit(norm).alias("phash"))
         .groupBy("phash")
@@ -1054,8 +1048,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # synthesize_media's payload is encode(text, 'utf-8'), so decoding it
 # back is exactly `text` — the oracle normalizes the text directly.
-# explicit class, not \s: RE2's \s excludes \x0B, Java's includes it
-_SQL_NORM = r"trim(regexp_replace(lower(text), '[ \t\n\r\f\x0B]+', ' ', 'g'), ' ')"
+_SQL_NORM = f"trim(regexp_replace(lower(text), '{WS_RUN}', ' ', 'g'), ' ')"
 PHASH_DEDUP_SQL = f"""
 WITH hashed AS (
   SELECT doc_id AS media_id,

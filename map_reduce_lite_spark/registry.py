@@ -17,7 +17,13 @@ values, so floating-point aggregation order must not matter):
   identical operands;
 - MIN/MAX on doubles are exact (no arithmetic);
 - portable 60-bit hashes: first 15 hex chars of md5 → BIGINT
-  (Spark: conv(substr(md5(x),1,15),16,10); DuckDB: ('0x'||...)::BIGINT).
+  (Spark: conv(substr(md5(x),1,15),16,10); DuckDB: ('0x'||...)::BIGINT);
+- one whitespace class, WS_CHARS = [ \\t\\n\\r\\f\\x0B], spelled out
+  because Java's \\s (Spark) includes vertical tab and RE2's \\s (DuckDB)
+  does not; the explicit class is exactly Java's \\s, so Spark output is
+  the same either way. Every whitespace tokenizer (trim spaces, split
+  on runs: ws_split, ws_count, ws_tokens, token_rows and their sql_
+  twins) and whitespace normalizer reads it from here.
 """
 
 from __future__ import annotations
@@ -84,8 +90,8 @@ def mrl_lower(col: Column | str) -> Column:
 
 # The one whitespace class every tokenizer and normalizer splits on
 # (module doc): the class body, and the run pattern split on.
-WS_CHARS = r"\s"
-WS_RUN = WS_CHARS + "+"
+WS_CHARS = r" \t\n\r\f\x0B"
+WS_RUN = f"[{WS_CHARS}]+"
 
 
 def ws_split(col: Column | str) -> Column:

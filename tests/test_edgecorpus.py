@@ -20,10 +20,14 @@ compared with the same multiset protocol as test_oracle_parity.
 
 from __future__ import annotations
 
+import ast
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from tests.test_oracle_parity import _multiset
+from tests.test_pairs import PKG
 
 # Corpus design (see pair-count math in each test):
 # - docs 1, 2: empty and whitespace-only (token-less)
@@ -53,35 +57,44 @@ _DOCS = (
 )
 
 
-@pytest.fixture(scope="module")
-def edge_dir(tmp_path_factory):
+def _write_documents(d, docs) -> str:
+    """``docs`` as (doc_id, text, source) rows of a documents table in
+    ``d``; every doc is lang 'en'."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = tmp_path_factory.mktemp("edgecorpus")
     tbl = pa.table(
         {
-            "doc_id": pa.array([r[0] for r in _DOCS], pa.int64()),
-            "text": pa.array([r[1] for r in _DOCS], pa.string()),
-            "lang": pa.array(["en"] * len(_DOCS), pa.string()),
-            "source": pa.array([r[2] for r in _DOCS], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in _DOCS], pa.int64()),
+            "doc_id": pa.array([r[0] for r in docs], pa.int64()),
+            "text": pa.array([r[1] for r in docs], pa.string()),
+            "lang": pa.array(["en"] * len(docs), pa.string()),
+            "source": pa.array([r[2] for r in docs], pa.string()),
+            "n_chars": pa.array([len(r[1]) for r in docs], pa.int64()),
         }
     )
     pq.write_table(tbl, str(d / "documents.parquet"))
     return str(d)
 
 
-@pytest.fixture(scope="module")
-def edge_duck(edge_dir):
+def _documents_duck(sf_dir):
     import duckdb
 
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{edge_dir}/documents.parquet')"
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
     )
     return con
+
+
+@pytest.fixture(scope="module")
+def edge_dir(tmp_path_factory):
+    return _write_documents(tmp_path_factory.mktemp("edgecorpus"), _DOCS)
+
+
+@pytest.fixture(scope="module")
+def edge_duck(edge_dir):
+    return _documents_duck(edge_dir)
 
 
 _EDGE_QUERIES = [
@@ -134,10 +147,6 @@ def test_phash_vertical_tab_cross_engine(spark, tmp_path):
     so a payload containing \\x0B must (a) hash identically in both
     engines and (b) collide with its space-separated twin — this corpus
     has three \\x0B-bearing variants of one doc plus a control."""
-    import duckdb
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     import __spark_entry__ as e
 
     docs = [
@@ -147,20 +156,7 @@ def test_phash_vertical_tab_cross_engine(spark, tmp_path):
         (4, "\x0bhello world\x0b", "a"),
         (5, "different text", "b"),
     ]
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in docs], pa.int64()),
-            "text": pa.array([r[1] for r in docs], pa.string()),
-            "lang": pa.array(["en"] * len(docs), pa.string()),
-            "source": pa.array([r[2] for r in docs], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in docs], pa.int64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
-    )
+    con = _documents_duck(_write_documents(tmp_path, docs))
     sdf = e.queries()["multimodal_phash_dedup"](spark, str(tmp_path))
     spark_rows = sorted(tuple(r) for r in sdf.collect())
     duck_rows = sorted(
@@ -171,6 +167,123 @@ def test_phash_vertical_tab_cross_engine(spark, tmp_path):
     # of 4 keeping media_id 1, plus the control singleton
     by_keep = {r[2]: r[1] for r in spark_rows}
     assert by_keep == {1: 4, 5: 1}, spark_rows
+
+
+# Vertical tab (\x0B) inside, between and around tokens. Java's \s
+# (Spark) includes it and RE2's \s (DuckDB) does not, so every
+# whitespace tokenizer splits on the registry's explicit class; with \s
+# these docs tokenized differently in the two engines.
+_VT_BASE = (
+    "the quick brown fox jumps over the lazy dog and the cat is in the "
+    "garden of the house with a red door"
+)
+_VT_DOCS = [
+    (1, _VT_BASE, "src0"),
+    (2, _VT_BASE.replace(" ", "\x0b", 1), "src0"),
+    (3, _VT_BASE.replace(" lazy ", " \x0b lazy \x0b "), "src0"),
+    (4, "\x0b" + _VT_BASE + "\x0b", "src1"),
+    (5, _VT_BASE.replace(" ", "\x0b"), "src1"),
+    (6, "a b c d e f g h i j", "src2"),
+    (7, "a\x0bb c\x0bd e f g h i j", "src2"),
+    (8, "\x0b", "src2"),
+    (9, "hello\x0b\x0bworld", "src3"),
+]
+
+# documents-only tokenizing queries, at least one per module that
+# tokenizes (ops/similarity's only one also reads embeddings)
+_VT_QUERIES = [
+    "text_quality_score",
+    "text_token_stats",
+    "text_doc_fingerprint",
+    "text_tfidf_top_terms",
+    "sketch_cms_token_freq",
+    "curation_train_split",
+    "curation_sequence_packing",
+    "curation_ccnet_buckets",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "text_inverted_index",
+    "text_oov_rate",
+    "dedup_substring_spans",
+    "vocab_bpe_apply",
+    "heavy_hitters_tokens",
+    "pipeline_pretrain_curation",
+    "pipeline_incremental_stats",
+]
+
+
+@pytest.fixture(scope="module")
+def vt_dir(tmp_path_factory):
+    return _write_documents(tmp_path_factory.mktemp("vtcorpus"), _VT_DOCS)
+
+
+@pytest.mark.parametrize("name", _VT_QUERIES)
+def test_vertical_tab_tokenizes_alike(spark, vt_dir, name):
+    spark_cols, spark_rows, duck_cols, duck_rows = _run_both(
+        spark, _documents_duck(vt_dir), vt_dir, name
+    )
+    assert spark_rows, f"{name}: vacuous on the vertical-tab corpus"
+    s_order = sorted(range(len(spark_cols)), key=lambda i: spark_cols[i])
+    d_order = sorted(range(len(duck_cols)), key=lambda i: duck_cols[i])
+    assert sorted(spark_cols) == sorted(duck_cols), name
+    assert _multiset(spark_rows, s_order) == _multiset(duck_rows, d_order), name
+
+
+# the letter tokenizer of the reference's wc (wordcount.TOKEN_SPLIT_RE)
+# is the one other split policy; its DuckDB spelling lives in parity.py
+_LETTER_SPLIT = re.compile(r"string_split_regex\([^']*'\[\^\\p\{L\}\]\+'\)")
+
+
+def _whitespace_offenders(tree: ast.Module) -> list[tuple[int, str]]:
+    """(line, what) for each whitespace regex, SQL split or whitespace
+    ``F.split`` in ``tree``; docstrings are prose and do not count."""
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    found = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs:
+            v = n.value
+            if "\\s" in v or "\\x0b" in v.lower() or "\x0b" in v:
+                found.append((n.lineno, "whitespace regex"))
+            if "string_split_regex(" in _LETTER_SPLIT.sub("", v):
+                found.append((n.lineno, "string_split_regex"))
+        if (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "split"
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "F"
+            and not (
+                len(n.args) > 1
+                and (
+                    isinstance(n.args[1], ast.Name) and n.args[1].id == "TOKEN_SPLIT_RE"
+                    or isinstance(n.args[1], ast.Constant) and n.args[1].value == ""
+                )
+            )
+        ):
+            found.append((n.lineno, "F.split"))
+    return found
+
+
+def test_one_whitespace_tokenizer():
+    """The whitespace class and every whitespace split live in
+    registry.py; no other module spells a \\s regex, a SQL
+    string_split_regex or a whitespace F.split of its own."""
+    offenders = [
+        f"{p.relative_to(PKG.parent)}:{line} {what}"
+        for p in sorted(PKG.rglob("*.py"))
+        if p != PKG / "registry.py"
+        for line, what in _whitespace_offenders(ast.parse(p.read_text()))
+    ]
+    assert offenders == []
+    registry = _whitespace_offenders(ast.parse((PKG / "registry.py").read_text()))
+    assert {what for _, what in registry} == {"whitespace regex", "string_split_regex", "F.split"}
 
 
 @pytest.mark.parametrize("name", _EDGE_QUERIES)

@@ -1,5 +1,12 @@
 """Lineage truncation: the one place the engine materializes a frame.
 
+Four sites keep the lineage on purpose and ``cache``/``persist``
+instead: the shingle table that two consumers read in
+``ops/dedup.py`` (``_shingle_overlap`` and ``shingle_novelty``), and
+the ``costs`` and ``revenue`` aggregates in
+``relational/queries3.py``, which must stay recomputable after an
+executor loss (a ``localCheckpoint`` is not).
+
 The reference hand-builds fault recovery (its coordinator re-runs
 failed tasks and deletes partial outputs, mrl-coordinator/src/
 job_queue.rs:83-88,128-153). Here that is Spark's job: lineage replays

@@ -20,12 +20,20 @@ log (Kafka), not parquet — the plan shape is identical.
 
 from __future__ import annotations
 
+import glob
 import itertools
+import os
+import re
+import shutil
+import tempfile
+import time
+import uuid
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.relational.queries import SESSION_GAP_MS
 
 EVENTS_SCHEMA = (
@@ -39,6 +47,10 @@ STATE_PARTITIONS = 8
 # longest any drain may run before its partial result is refused
 DRAIN_TIMEOUT_S = 180
 _DRAIN_IDS = itertools.count(1)
+# where _stage_events keeps its staged copies, and the age past which a
+# superseded copy or a leaked tmp dir is evicted
+STAGE_PREFIX = "/tmp/mrl_stream_events_"
+STAGE_MAX_AGE_S = 3600
 
 
 def events(spark: SparkSession, sf_dir: str, max_files: int | None = None) -> DataFrame:
@@ -337,44 +349,58 @@ GROUP BY 1, 2
 """
 
 
-def _stage_events(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the nanos-timestamp events as µs parquet, once per source
-    CONTENT: the cache key includes a fingerprint of the source file
-    sizes+mtimes, so regenerated data under the same path re-stages, and
-    the write goes to a unique temp dir atomically renamed into place so
-    concurrent runs can't interleave partial output."""
-    import os
-    import re
-    import shutil
-    import uuid
-
-    from map_reduce_lite_spark.relational.tables import load_table
-
-    src = os.path.join(sf_dir, "events.parquet")
+def _fingerprint(src: str) -> str:
+    """Size+mtime fingerprint of the events parquet at ``src``; raises
+    OSError once ``src`` is gone."""
     stats = []
     if os.path.isdir(src):
         for root, _, files in os.walk(src):
             stats += [os.stat(os.path.join(root, f)) for f in sorted(files)]
     else:
         stats = [os.stat(src)]
-    fp = f"{sum(s.st_size for s in stats)}_{max(s.st_mtime_ns for s in stats)}"
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
-    staged = f"/tmp/mrl_stream_events_{tag}_{fp}"
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        # Sweep tmp dirs leaked by crashed prior runs. Age-gated so a
-        # LIVE concurrent writer's tmp dir is never pulled out from
-        # under it mid-write.
-        import glob
-        import time
+    return f"{sum(s.st_size for s in stats)}_{max(s.st_mtime_ns for s in stats)}"
 
-        for stale in glob.glob(f"{staged}.tmp.*"):
+
+def _superseded(copy: str) -> bool:
+    """A staged copy is superseded once the source recorded in its
+    ``_SOURCE`` file is gone or has another fingerprint (a copy with no
+    record counts as superseded)."""
+    try:
+        with open(os.path.join(copy, "_SOURCE")) as f:
+            return not copy.endswith("_" + _fingerprint(f.read()))
+    except OSError:
+        return True
+
+
+def _stage_events(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the nanos-timestamp events as µs parquet, once per source
+    CONTENT: the cache key includes a fingerprint of the source file
+    sizes+mtimes, so regenerated data under the same path re-stages, and
+    the write goes to a unique temp dir atomically renamed into place so
+    concurrent runs can't interleave partial output. Each copy records
+    its source path in ``_SOURCE`` (Spark skips ``_``-files)."""
+    from map_reduce_lite_spark.relational.tables import load_table
+
+    src = os.path.join(sf_dir, "events.parquet")
+    tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
+    staged = f"{STAGE_PREFIX}{tag}_{_fingerprint(src)}"
+    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
+        # Evict tmp dirs leaked by crashed runs and copies whose source
+        # is gone or changed. Age-gated so a LIVE concurrent writer's
+        # tmp dir, or a copy a running query still reads, is never
+        # pulled out from under it.
+        for old in glob.glob(f"{STAGE_PREFIX}*"):
             try:
-                if time.time() - os.path.getmtime(stale) > 3600:
-                    shutil.rmtree(stale, ignore_errors=True)
+                if time.time() - os.path.getmtime(old) > STAGE_MAX_AGE_S and (
+                    ".tmp." in old or _superseded(old)
+                ):
+                    shutil.rmtree(old, ignore_errors=True)
             except OSError:
                 pass
         tmp = f"{staged}.tmp.{uuid.uuid4().hex[:8]}"
         load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(tmp)
+        with open(os.path.join(tmp, "_SOURCE"), "w") as f:
+            f.write(src)
         try:
             os.rename(tmp, staged)
         except OSError:
@@ -383,10 +409,8 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
             # failed (EXDEV, permissions, ...). Only discard our fresh
             # data once the winner is PROVEN complete; otherwise
             # swallowing the error would return a nonexistent path.
-            if os.path.exists(os.path.join(staged, "_SUCCESS")):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.exists(os.path.join(staged, "_SUCCESS")):
                 raise
     return staged
 
@@ -535,26 +559,28 @@ def streaming_serving_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation as streaming_rollup_multires; the serving read prunes
     to one row per key with a window rank, which a real lakehouse table
     replaces with MERGE (no read-side rank at all)."""
-    import tempfile
-
     from pyspark.sql import Window
-
-    serving_dir = tempfile.mkdtemp(prefix="mrl_serving_upsert_")
 
     def upsert(bdf: DataFrame, batch_id: int) -> None:
         bdf.withColumn("_v", F.lit(batch_id)).write.mode("append").parquet(serving_dir)
 
-    rollup = multires_rollup_stream(events(spark, sf_dir, max_files=4))
-    run_drain(spark, rollup.writeStream.outputMode("update").foreachBatch(upsert))
     w = Window.partitionBy("resolution", "bucket_start", "event_type").orderBy(
         F.desc("_v")
     )
-    return (
-        spark.read.parquet(serving_dir)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("resolution", "bucket_start", "event_type", "n_events", "sum_value")
-    )
+    # the served view is materialized before the serving table goes
+    serving_dir = tempfile.mkdtemp(prefix="mrl_serving_upsert_")
+    try:
+        rollup = multires_rollup_stream(events(spark, sf_dir, max_files=4))
+        run_drain(spark, rollup.writeStream.outputMode("update").foreachBatch(upsert))
+        served = (
+            spark.read.parquet(serving_dir)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("resolution", "bucket_start", "event_type", "n_events", "sum_value")
+        )
+        return materialize(served, eager=True)
+    finally:
+        shutil.rmtree(serving_dir, ignore_errors=True)
 
 
 def streaming_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:

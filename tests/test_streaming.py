@@ -251,6 +251,76 @@ def test_stage_events_lost_race_uses_winner(spark, monkeypatch):
     assert not glob.glob(f"{staged}.tmp.*"), "tmp dirs must be cleaned up"
 
 
+def test_serving_upsert_removes_its_serving_dir(spark, duck):
+    """The served view is materialized and its serving table removed
+    before the builder returns: one call leaves no
+    ``mrl_serving_upsert_*`` directory behind, and the rows still match
+    the oracle."""
+    import glob
+    import tempfile
+
+    import __spark_entry__ as e
+    from tests.test_oracle_parity import _multiset
+
+    def serving_dirs():
+        return set(glob.glob(f"{tempfile.gettempdir()}/mrl_serving_upsert_*"))
+
+    before = serving_dirs()
+    sdf = e.queries()["streaming_serving_upsert"](spark, SF_SMALL)
+    assert serving_dirs() == before
+    got = [tuple(r) for r in sdf.collect()]
+    res = duck.execute(e.oracle_sql()["streaming_serving_upsert"])
+    want = res.fetchall()
+    s_cols, d_cols = [c.lower() for c in sdf.columns], [d[0].lower() for d in res.description]
+    assert sorted(s_cols) == sorted(d_cols)
+    s_order = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
+    d_order = sorted(range(len(d_cols)), key=lambda i: d_cols[i])
+    assert got and _multiset(got, s_order) == _multiset(want, d_order)
+
+
+def test_stage_events_evicts_superseded_copies(spark, monkeypatch, tmp_path):
+    """Staging evicts copies older than STAGE_MAX_AGE_S whose recorded
+    source is gone or has another fingerprint, and leaked tmp dirs of
+    the same age; a live copy, a young copy and the new copy stay."""
+    import os
+    import time
+
+    from map_reduce_lite_spark.streaming import windows as W
+
+    prefix = str(tmp_path / "staged_")
+    monkeypatch.setattr(W, "STAGE_PREFIX", prefix)
+    live_src = tmp_path / "live" / "events.parquet"
+    live_src.parent.mkdir()
+    live_src.write_bytes(b"x" * 10)
+
+    def copy(name, source, age_s):
+        d = f"{prefix}{name}"
+        os.makedirs(d)
+        if source is not None:
+            with open(os.path.join(d, "_SOURCE"), "w") as f:
+                f.write(str(source))
+        then = time.time() - age_s
+        os.utime(d, (then, then))
+        return d
+
+    old = 2 * W.STAGE_MAX_AGE_S
+    live = copy(f"live_{W._fingerprint(str(live_src))}", live_src, old)
+    changed = copy("live_10_1", live_src, old)
+    gone = copy("gone_10_1", tmp_path / "missing" / "events.parquet", old)
+    unrecorded = copy("legacy_10_1", None, old)
+    young = copy("young_10_1", tmp_path / "missing" / "events.parquet", 0)
+    leaked = copy("live_10_1.tmp.abcd1234", None, old)
+
+    staged = W._stage_events(spark, SF_SMALL)
+    assert staged.startswith(prefix)
+    assert os.path.exists(os.path.join(staged, "_SUCCESS"))
+    with open(os.path.join(staged, "_SOURCE")) as f:
+        assert f.read() == os.path.join(SF_SMALL, "events.parquet")
+    left = {p for p in (live, changed, gone, unrecorded, young, leaked) if os.path.exists(p)}
+    assert left == {live, young}
+    assert spark.read.parquet(staged).count() > 0  # _SOURCE is not read as data
+
+
 def test_left_outer_stream_join_emits_null_rows(spark):
     """The LEFT OUTER stream-stream join must emit BOTH matched pairs and
     watermark-evicted null-padded rows (the semantics the inner join

@@ -103,11 +103,15 @@ def _run_topologies(kinds: list[str], sizes: list[int]) -> None:
     """Time the graph family on planted worst-case topologies and fit
     per-(op, topology) scaling exponents. Operators take the edge list
     directly (edges= injection), so this measures the ITERATION /
-    JOIN machinery, not the lineitem edge build."""
+    JOIN machinery, not the lineitem edge build. Every planted graph is
+    below ``graph.LOCAL_GRAPH_EDGES``, so the gate is set to 0 for the
+    run: the operators take their distributed rounds, not the numpy
+    driver tail."""
     import math
     import time as _time
 
     from map_reduce_lite_spark.lineage import materialize
+    from map_reduce_lite_spark.ops import graph
     from map_reduce_lite_spark.ops.graph import (
         connected_components,
         kcore_parts,
@@ -124,29 +128,34 @@ def _run_topologies(kinds: list[str], sizes: list[int]) -> None:
         "lpa": lambda e: label_propagation_parts(spark, sf_dir="", edges=e),
     }
     out: dict = {"sizes": sizes, "topologies": {}}
-    for kind in kinds:
-        rows: dict = {}
-        for n in sizes:
-            edges = materialize(_topology_edges(spark, kind, n), eager=True)
-            for op_name, fn in ops.items():
-                fn(edges).count()  # warm
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
-                t0 = _time.perf_counter()
-                res = fn(edges).count()
-                sec = round(_time.perf_counter() - t0, 3)
-                rows.setdefault(op_name, {})[n] = {"sec": sec, "rows": res}
-                if op_name == "components":
-                    rows[op_name][n]["rounds"] = connected_components.last_rounds
-        exps = {}
-        for op_name, per_n in rows.items():
-            t0, t1 = per_n[sizes[0]]["sec"], per_n[sizes[-1]]["sec"]
-            exps[op_name] = round(
-                math.log(max(t1, 1e-3) / max(t0, 1e-3))
-                / math.log(sizes[-1] / sizes[0]),
-                2,
-            )
-        out["topologies"][kind] = {"times": rows, "exponents": exps}
+    local_gate = graph.LOCAL_GRAPH_EDGES
+    graph.LOCAL_GRAPH_EDGES = 0  # distributed rounds at every size
+    try:
+        for kind in kinds:
+            rows: dict = {}
+            for n in sizes:
+                edges = materialize(_topology_edges(spark, kind, n), eager=True)
+                for op_name, fn in ops.items():
+                    fn(edges).count()  # warm
+                    gc.collect()
+                    spark.sparkContext._jvm.System.gc()
+                    t0 = _time.perf_counter()
+                    res = fn(edges).count()
+                    sec = round(_time.perf_counter() - t0, 3)
+                    rows.setdefault(op_name, {})[n] = {"sec": sec, "rows": res}
+                    if op_name == "components":
+                        rows[op_name][n]["rounds"] = connected_components.last_rounds
+            exps = {}
+            for op_name, per_n in rows.items():
+                t0, t1 = per_n[sizes[0]]["sec"], per_n[sizes[-1]]["sec"]
+                exps[op_name] = round(
+                    math.log(max(t1, 1e-3) / max(t0, 1e-3))
+                    / math.log(sizes[-1] / sizes[0]),
+                    2,
+                )
+            out["topologies"][kind] = {"times": rows, "exponents": exps}
+    finally:
+        graph.LOCAL_GRAPH_EDGES = local_gate
     print(json.dumps(out, indent=1))
     spark.stop()
 

@@ -561,23 +561,24 @@ def streaming_serving_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces with MERGE (no read-side rank at all)."""
     from pyspark.sql import Window
 
+    serving_dir = tempfile.mkdtemp(prefix="mrl_serving_upsert_")
+
     def upsert(bdf: DataFrame, batch_id: int) -> None:
         bdf.withColumn("_v", F.lit(batch_id)).write.mode("append").parquet(serving_dir)
 
-    w = Window.partitionBy("resolution", "bucket_start", "event_type").orderBy(
-        F.desc("_v")
-    )
-    # the served view is materialized before the serving table goes
-    serving_dir = tempfile.mkdtemp(prefix="mrl_serving_upsert_")
     try:
         rollup = multires_rollup_stream(events(spark, sf_dir, max_files=4))
         run_drain(spark, rollup.writeStream.outputMode("update").foreachBatch(upsert))
+        w = Window.partitionBy("resolution", "bucket_start", "event_type").orderBy(
+            F.desc("_v")
+        )
         served = (
             spark.read.parquet(serving_dir)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("resolution", "bucket_start", "event_type", "n_events", "sum_value")
         )
+        # materialized, so the view outlives the serving table below
         return materialize(served, eager=True)
     finally:
         shutil.rmtree(serving_dir, ignore_errors=True)

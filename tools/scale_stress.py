@@ -228,6 +228,7 @@ def main() -> None:
     from map_reduce_lite_spark.ops import clustering
     from map_reduce_lite_spark.ops.dedup import SHINGLE_DF_CAP, shingles
     from map_reduce_lite_spark.ops.index import MIN_DF, POSTINGS_CAP
+    from map_reduce_lite_spark.registry import mrl_lower, ws_tokens
     from map_reduce_lite_spark.relational.tables import load_table
 
     emb = load_table(spark, big, "embeddings")
@@ -259,12 +260,7 @@ def main() -> None:
     n_dropped = shingle_df.filter(F.col("df") > SHINGLE_DF_CAP).count()
 
     toks = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.trim(F.lower("text")), r"\s+"), lambda x: x != "")
-            )
-        ).alias("token"),
+        "doc_id", F.explode(F.array_distinct(ws_tokens(mrl_lower("text")))).alias("token")
     )
     tok_df = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_tokens = tok_df.filter(F.col("df") >= MIN_DF).count()

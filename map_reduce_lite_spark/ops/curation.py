@@ -15,7 +15,7 @@ Scale shapes, per operator:
   corpus-side shingle stream never shuffles for the join; the per-doc
   hit count is a map-side-combined groupBy on doc id.
 - repetition_filter: per-doc bigram counts — one shuffle keyed by doc
-  (pre-aligned by _tokens' repartition), then a window-free two-level
+  (pre-aligned by token_positions' repartition), then a window-free two-level
   agg. No corpus self-join anywhere.
 - train_split / mixture_plan: stateless per-row hash routing (portable
   md5 — identical on any engine, any cluster size, any partitioning,
@@ -31,15 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
-from map_reduce_lite_spark.ops.dedup import shingles
+from map_reduce_lite_spark.ops.dedup import shingles, sql_shingles
 from map_reduce_lite_spark.registry import (
     Query,
     md5_60bit,
     mrl_lower,
     sql_md5_60bit,
+    sql_token_positions,
     sql_token_rows,
     sql_ws_count,
-    sql_ws_split,
+    token_positions,
     token_rows,
     ws_count,
     ws_tokens,
@@ -175,18 +176,8 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CONTAMINATION_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id AS doc, token, pos FROM (
-    SELECT doc_id, unnest({sql_ws_split('text')}) AS token,
-           unnest(generate_series(1, len({sql_ws_split('text')}))) AS pos
-    FROM documents
-  ) WHERE token <> ''
-), sh AS (
-  SELECT DISTINCT doc,
-         token || ' ' || lead(token, 1) OVER w || ' ' || lead(token, 2) OVER w AS shingle
-  FROM toks WINDOW w AS (PARTITION BY doc ORDER BY pos)
-  QUALIFY lead(token, 2) OVER w IS NOT NULL
+CONTAMINATION_SQL = f"""
+WITH sh AS ({sql_shingles('documents')}
 ), bench AS (
   SELECT DISTINCT shingle FROM sh WHERE doc % {HOLDOUT_MOD} = 0
 ), train AS (
@@ -222,12 +213,10 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc shares, immune to float summation order.
 
     Scale: bigram multiplicities need one shuffle keyed by doc (already
-    aligned by _tokens' repartition); both aggregation levels map-side
+    aligned by token_positions' repartition); both aggregation levels map-side
     combine. Nothing is quadratic; no text leaves the scan."""
-    from map_reduce_lite_spark.ops.dedup import _tokens
-
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens(d, "doc_id", "text")
+    toks = token_positions(d)
     w = Window.partitionBy("doc").orderBy("pos")
     bg = (
         toks.select("doc", F.concat_ws(" ", F.col("token"), F.lead("token", 1).over(w)).alias("g"),
@@ -254,12 +243,7 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 REPETITION_SQL = rf"""
-WITH toks AS (
-  SELECT doc_id AS doc, token, pos FROM (
-    SELECT doc_id, unnest({sql_ws_split('text')}) AS token,
-           unnest(generate_series(1, len({sql_ws_split('text')}))) AS pos
-    FROM documents
-  ) WHERE token <> ''
+WITH toks AS ({sql_token_positions('documents', 'text', 'doc_id AS doc')}
 ), bg AS (
   SELECT doc, token || ' ' || lead(token, 1) OVER w AS g
   FROM toks WINDOW w AS (PARTITION BY doc ORDER BY pos)
@@ -398,8 +382,7 @@ def mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIXTURE_TEMP_SQL = rf"""
 WITH per_src AS (
   SELECT source,
-         CAST(SUM(len({sql_ws_split('text')})) AS BIGINT)
-           AS n_tokens
+         CAST(SUM({sql_ws_count('text')}) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
 ), scaled AS (
   SELECT source, n_tokens,
@@ -1014,27 +997,18 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dsir_sql() -> str:
     targets = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
+    is_t = f"CASE WHEN source IN ({targets}) THEN 1 ELSE 0 END AS is_t"
     b = DSIR_BUCKETS
     return rf"""
-WITH tok_lists AS (
-  SELECT doc_id,
-         CASE WHEN source IN ({targets}) THEN 1 ELSE 0 END AS is_t,
-         {sql_ws_split('lower(text)')} AS l
-  FROM documents
-), toks AS (
-  SELECT doc_id, is_t, term, pos FROM (
-    SELECT doc_id, is_t, unnest(l) AS term,
-           unnest(generate_series(1, len(l))) AS pos
-    FROM tok_lists
-  ) WHERE term <> ''
+WITH toks AS ({sql_token_positions('documents', 'lower(text)', 'doc_id', is_t)}
 ), uni AS (
-  SELECT doc_id, is_t, 'u|' || term AS feat FROM toks
+  SELECT doc_id, is_t, 'u|' || token AS feat FROM toks
 ), big AS (
   SELECT doc_id, is_t, 'b' || '|' || prev || '|' || cur AS feat FROM (
-    SELECT doc_id, is_t, lag(term, 1) OVER w AS prev, term AS cur
+    SELECT doc_id, is_t, lag(token, 1) OVER w AS prev, token AS cur
     FROM toks
     WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-    QUALIFY lag(term, 1) OVER w IS NOT NULL
+    QUALIFY lag(token, 1) OVER w IS NOT NULL
   )
 ), feats AS (
   SELECT doc_id, is_t, ({sql_md5_60bit("feat")} % {b}) AS bucket

@@ -47,8 +47,9 @@ from map_reduce_lite_spark.registry import (
     Query,
     md5_60bit,
     sql_md5_60bit,
+    sql_token_positions,
     sql_ws_split,
-    ws_split,
+    token_positions,
     ws_tokens,
 )
 from map_reduce_lite_spark.relational.tables import load_table
@@ -88,36 +89,17 @@ SHINGLE_DF_CAP = 50
 # Tokenize / shingle (shared)
 # --------------------------------------------------------------------------
 
-def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, pos, token) — whitespace tokens with positions.
-
-    Repartitioning by doc BEFORE the explode spreads the CPU-heavy
-    tokenize across cores when the source is one parquet split, and
-    pre-aligns the partitioning every downstream per-doc window/groupBy
-    needs — one shuffle of small rows instead of one of exploded rows."""
-    spark = df.sparkSession
-    fanout = max(spark.sparkContext.defaultParallelism, 8)
-    return (
-        df.repartition(fanout, F.col(id_col))
-        .select(
-            F.col(id_col).alias("doc"),
-            F.posexplode(ws_split(text_col)).alias("pos", "token"),
-        )
-        .filter(F.length("token") > 0)
-    )
-
-
 def shingles(df: DataFrame) -> DataFrame:
     """(doc, shingle) — distinct word SHINGLE_SIZE-shingles of
-    ``(doc_id, text)`` rows via lead() windows.
+    ``(doc_id, text)`` rows via lead() windows (matches sql_shingles).
 
     Cost shape: the only shuffle of full rows is the doc repartition in
-    ``_tokens`` (small pre-explode rows); the lead() window then sorts
-    WITHIN those partitions — no second corpus-wide shuffle. Measured
+    ``token_positions`` (small pre-explode rows); the lead() window then
+    sorts WITHIN those partitions — no second corpus-wide shuffle. Measured
     3× faster than the explode-free transform/element_at array
     formulation (element_at per shingle is slower than codegen'd lead
     over pipelined tokens)."""
-    toks = _tokens(df, "doc_id", "text")
+    toks = token_positions(df)
     w = Window.partitionBy("doc").orderBy("pos")
     nxt = range(1, SHINGLE_SIZE)
     parts = [F.col("token")] + [F.lead("token", i).over(w) for i in nxt]
@@ -125,6 +107,16 @@ def shingles(df: DataFrame) -> DataFrame:
                      *[F.lead("token", i).over(w).alias(f"_t{i}") for i in nxt])
     sh = sh.filter(F.col(f"_t{SHINGLE_SIZE - 1}").isNotNull()).select("doc", "shingle")
     return sh.distinct()
+
+
+def sql_shingles(src: str) -> str:
+    """shingles over relation ``src`` (doc_id, text) as the body of a
+    SELECT."""
+    leads = [f"lead(token, {i}) OVER w" for i in range(1, SHINGLE_SIZE)]
+    return f"""SELECT DISTINCT doc, {" || ' ' || ".join(["token", *leads])} AS shingle
+  FROM ({sql_token_positions(src, 'text', 'doc_id AS doc')})
+  WINDOW w AS (PARTITION BY doc ORDER BY pos)
+  QUALIFY {leads[-1]} IS NOT NULL"""
 
 
 # --------------------------------------------------------------------------
@@ -158,7 +150,8 @@ def _shingle_overlap(docs: DataFrame) -> DataFrame:
     sharing a shingle: |∩| from the DF-capped inverted-index self-join
     (shuffle by shingle, integer pair counts), n1/n2 the FULL shingle
     set sizes. Shingles in more than SHINGLE_DF_CAP documents (read at
-    call time) are dropped from the index before the self-join."""
+    call time) are dropped from the index before the self-join. Matches
+    sql_shingle_overlap."""
     sh = shingles(docs).cache()
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
     # posting-list bound: the self-join only ever sees shingles whose
@@ -181,10 +174,29 @@ def _shingle_overlap(docs: DataFrame) -> DataFrame:
     return inter.join(sz1, "doc1").join(sz2, "doc2")
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """Near-dup pairs with word-3-shingle Jaccard ≥ ``threshold``.
+def sql_shingle_overlap(src: str) -> str:
+    """_shingle_overlap over relation ``src`` (doc_id, text) as the body
+    of a SELECT."""
+    return f"""WITH sh AS ({sql_shingles(src)}
+  ), sizes AS (
+    SELECT doc, COUNT(*) AS n FROM sh GROUP BY doc
+  ), capped AS (
+    SELECT sh.doc, sh.shingle FROM sh
+    JOIN (SELECT shingle FROM sh GROUP BY shingle
+          HAVING COUNT(*) <= {SHINGLE_DF_CAP}) keep
+      ON keep.shingle = sh.shingle
+  ), inter AS (
+    SELECT a.doc AS doc1, b.doc AS doc2, COUNT(*) AS n_inter
+    FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc < b.doc
+    GROUP BY 1, 2
+  )
+  SELECT doc1, doc2, n_inter, s1.n AS n1, s2.n AS n2
+  FROM inter JOIN sizes s1 ON s1.doc = doc1 JOIN sizes s2 ON s2.doc = doc2"""
+
+
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs with word-3-shingle Jaccard ≥ JACCARD_THRESHOLD
+    (read at call time; matches sql_ngram_jaccard_pairs).
 
     jaccard = |∩| / (|A| + |B| - |∩|) over ``_shingle_overlap``'s
     DF-capped counts. Division of identical ints → bit-identical
@@ -193,8 +205,16 @@ def ngram_jaccard_pairs(
     return (
         _shingle_overlap(docs)
         .select("doc1", "doc2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
+
+
+def sql_ngram_jaccard_pairs(src: str) -> str:
+    """ngram_jaccard_pairs over relation ``src`` (doc_id, text) as the
+    body of a SELECT."""
+    return f"""SELECT doc1, doc2, n_inter / (n1 + n2 - n_inter) AS jaccard
+  FROM ({sql_shingle_overlap(src)})
+  WHERE n_inter / (n1 + n2 - n_inter) >= {JACCARD_THRESHOLD}"""
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,45 +222,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(d)
 
 
-_SHINGLES_CTE = rf"""
-WITH tok_lists AS (
-  SELECT doc_id AS doc, {sql_ws_split('text')} AS toks
-  FROM documents
-), toks AS (
-  SELECT doc, token, pos FROM (
-    SELECT doc, unnest(toks) AS token,
-           unnest(generate_series(1, len(toks))) AS pos
-    FROM tok_lists
-  ) WHERE token <> ''
-), sh AS (
-  SELECT DISTINCT doc,
-         token || ' ' || lead(token, 1) OVER w || ' ' || lead(token, 2) OVER w AS shingle
-  FROM toks
-  WINDOW w AS (PARTITION BY doc ORDER BY pos)
-  QUALIFY lead(token, 2) OVER w IS NOT NULL
-)
-"""
-
-DEDUP_NGRAM_SQL = _SHINGLES_CTE + f"""
-, sizes AS (
-  SELECT doc, COUNT(*) AS n_shingles FROM sh GROUP BY doc
-), capped AS (
-  SELECT sh.doc, sh.shingle FROM sh
-  JOIN (SELECT shingle FROM sh GROUP BY shingle
-        HAVING COUNT(*) <= {SHINGLE_DF_CAP}) keep
-    ON keep.shingle = sh.shingle
-), inter AS (
-  SELECT a.doc AS doc1, b.doc AS doc2, COUNT(*) AS n_inter
-  FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc < b.doc
-  GROUP BY 1, 2
-)
-SELECT doc1, doc2,
-       n_inter / (s1.n_shingles + s2.n_shingles - n_inter) AS jaccard
-FROM inter
-JOIN sizes s1 ON s1.doc = doc1
-JOIN sizes s2 ON s2.doc = doc2
-WHERE n_inter / (s1.n_shingles + s2.n_shingles - n_inter) >= 0.5
-"""
+DEDUP_NGRAM_SQL = sql_ngram_jaccard_pairs("documents")
 
 
 # --------------------------------------------------------------------------
@@ -291,23 +273,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_CONTAINMENT_SQL = _SHINGLES_CTE + f"""
-, sizes AS (
-  SELECT doc, COUNT(*) AS n_shingles FROM sh GROUP BY doc
-), capped AS (
-  SELECT sh.doc, sh.shingle FROM sh
-  JOIN (SELECT shingle FROM sh GROUP BY shingle
-        HAVING COUNT(*) <= {SHINGLE_DF_CAP}) keep
-    ON keep.shingle = sh.shingle
-), inter AS (
-  SELECT a.doc AS doc1, b.doc AS doc2, COUNT(*) AS n_inter
-  FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc < b.doc
-  GROUP BY 1, 2
-), both_sized AS (
-  SELECT doc1, doc2, n_inter, s1.n_shingles AS n1, s2.n_shingles AS n2
-  FROM inter
-  JOIN sizes s1 ON s1.doc = doc1
-  JOIN sizes s2 ON s2.doc = doc2
+DEDUP_CONTAINMENT_SQL = f"""
+WITH both_sized AS ({sql_shingle_overlap('documents')}
 ), directed AS (
   SELECT doc1 AS contained_doc, doc2 AS container_doc,
          n_inter / n1 AS containment
@@ -369,8 +336,8 @@ def minhash_band_sigs(
 
     This is the MERGEABLE index artifact: at scale it is computed once
     per ingested batch and stored; an incremental refresh band-joins
-    the delta's signatures against it instead of re-scanning the
-    corpus (see ops/snapshot.py::dedup_incremental_minhash)."""
+    the delta's signatures against it (band_collisions) instead of
+    re-scanning the corpus. Matches sql_minhash_bands."""
     sigs = minhash_signatures(shingles(docs), bands * rows)
     band_structs = F.array(
         *[
@@ -386,6 +353,53 @@ def minhash_band_sigs(
     return sigs.select("doc", F.explode(band_structs).alias("bs")).select(
         "doc", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
     )
+
+
+def sql_minhash_bands(
+    src: str, bands: int = MINHASH_BANDS, rows: int = MINHASH_ROWS
+) -> str:
+    """minhash_band_sigs over relation ``src`` (doc_id, text) as the
+    body of a SELECT."""
+    ca, cb = _coeffs(bands * rows)
+    mins = ",\n           ".join(
+        f"MIN((h * {ca[i]} + {cb[i]}) % {MINHASH_P}) AS m{i}"
+        for i in range(bands * rows)
+    )
+    sigs = ",\n    ".join(
+        " || ',' || ".join(f"CAST(m{b * rows + r} AS VARCHAR)" for r in range(rows))
+        for b in range(bands)
+    )
+    return f"""SELECT doc, unnest(range({bands})) AS band, unnest([
+    {sigs}]) AS sig
+  FROM (
+    SELECT doc,
+           {mins}
+    FROM (SELECT doc, {sql_md5_60bit('shingle')} % {MINHASH_P} AS h
+          FROM ({sql_shingles(src)}))
+    GROUP BY doc
+  )"""
+
+
+def band_collisions(delta: DataFrame, standing: DataFrame) -> DataFrame:
+    """(delta_doc, standing_doc): one row per band in which a delta doc's
+    MinHash band signature equals a DIFFERENT standing doc's (matches
+    sql_band_collisions). A changed doc colliding with its own standing
+    version is expected, not a dedup signal, so equal ids never pair."""
+    d, s = delta.alias("d"), standing.alias("s")
+    return d.join(
+        s,
+        (F.col("d.band") == F.col("s.band"))
+        & (F.col("d.sig") == F.col("s.sig"))
+        & (F.col("d.doc") != F.col("s.doc")),
+    ).select(F.col("d.doc").alias("delta_doc"), F.col("s.doc").alias("standing_doc"))
+
+
+def sql_band_collisions(delta: str, standing: str) -> str:
+    """band_collisions of two (doc, band, sig) relations as the body of
+    a SELECT."""
+    return f"""SELECT d.doc AS delta_doc, s.doc AS standing_doc
+  FROM {delta} d JOIN {standing} s
+    ON d.band = s.band AND d.sig = s.sig AND d.doc <> s.doc"""
 
 
 def minhash_lsh_pairs(
@@ -435,37 +449,13 @@ def dedup_minhash_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sql(bands: int = MINHASH_BANDS, rows: int = MINHASH_ROWS) -> str:
-    h60 = sql_md5_60bit("shingle")
-    ca, cb = _coeffs(bands * rows)
-    min_cols = ",\n         ".join(
-        f"MIN((h * {ca[i]} + {cb[i]}) % {MINHASH_P}) AS m{i}"
-        for i in range(bands * rows)
-    )
-    band_selects = "\n  UNION ALL\n".join(
-        f"  SELECT doc, {b} AS band, "
-        + " || ',' || ".join(
-            f"CAST(m{b * rows + r} AS VARCHAR)" for r in range(rows)
-        )
-        + " AS sig FROM sigs"
-        for b in range(bands)
-    )
-    return (
-        _SHINGLES_CTE
-        + f"""
-, hashed AS (
-  SELECT doc, {h60} % {MINHASH_P} AS h FROM sh
-), sigs AS (
-  SELECT doc,
-         {min_cols}
-  FROM hashed GROUP BY doc
-), bands AS (
-{band_selects}
+    return f"""
+WITH bands AS ({sql_minhash_bands('documents', bands, rows)}
 )
 SELECT DISTINCT a.doc AS doc1, b.doc AS doc2
 FROM bands a JOIN bands b
   ON a.band = b.band AND a.sig = b.sig AND a.doc < b.doc
 """
-    )
 
 
 DEDUP_MINHASH_SQL = _minhash_sql()
@@ -1040,8 +1030,9 @@ def text_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SHINGLE_NOVELTY_SQL = _SHINGLES_CTE + """
-, first AS (
+SHINGLE_NOVELTY_SQL = f"""
+WITH sh AS ({sql_shingles('documents')}
+), first AS (
   SELECT shingle, MIN(doc) AS first_doc FROM sh GROUP BY shingle
 )
 SELECT sh.doc AS doc_id,
@@ -1097,24 +1088,8 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_RATE_BY_SOURCE_SQL = _SHINGLES_CTE + f"""
-, sizes AS (
-  SELECT doc, COUNT(*) AS n_shingles FROM sh GROUP BY doc
-), capped AS (
-  SELECT sh.doc, sh.shingle FROM sh
-  JOIN (SELECT shingle FROM sh GROUP BY shingle
-        HAVING COUNT(*) <= {SHINGLE_DF_CAP}) keep
-    ON keep.shingle = sh.shingle
-), inter AS (
-  SELECT a.doc AS doc1, b.doc AS doc2, COUNT(*) AS n_inter
-  FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc < b.doc
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT doc1, doc2
-  FROM inter
-  JOIN sizes s1 ON s1.doc = doc1
-  JOIN sizes s2 ON s2.doc = doc2
-  WHERE n_inter / (s1.n_shingles + s2.n_shingles - n_inter) >= 0.5
+DEDUP_RATE_BY_SOURCE_SQL = f"""
+WITH pairs AS ({sql_ngram_jaccard_pairs('documents')}
 ), flagged AS (
   SELECT DISTINCT doc_id FROM (
     SELECT doc1 AS doc_id FROM pairs UNION ALL SELECT doc2 FROM pairs

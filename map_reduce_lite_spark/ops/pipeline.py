@@ -27,9 +27,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
-from map_reduce_lite_spark.ops.dedup import SHINGLE_DF_CAP, ngram_jaccard_pairs
-from map_reduce_lite_spark.ops.text import STOPWORDS, _sql_stopword_hits, _stopword_hits
-from map_reduce_lite_spark.registry import Query, sql_md5_60bit, sql_ws_count, sql_ws_split, ws_count
+from map_reduce_lite_spark.ops.dedup import (
+    band_collisions,
+    minhash_band_sigs,
+    ngram_jaccard_pairs,
+    sql_band_collisions,
+    sql_minhash_bands,
+    sql_ngram_jaccard_pairs,
+)
+from map_reduce_lite_spark.ops.snapshot import _derived_snapshots, snapshot_diff, sql_snapshot_delta
+from map_reduce_lite_spark.ops.text import (
+    STOPWORDS,
+    lang_argmax,
+    lang_hits,
+    sql_lang_argmax,
+    sql_lang_hits,
+)
+from map_reduce_lite_spark.registry import Query, sql_ws_count, ws_count
 from map_reduce_lite_spark.relational.tables import load_table
 
 # Stage-1 quality gate: enough tokens to be trainable text, mean token
@@ -38,25 +52,21 @@ from map_reduce_lite_spark.relational.tables import load_table
 MIN_TOKENS = 20
 MAX_MEAN_TOKEN_LEN = 8.0
 
-# Stage-3 near-dup gate (matches ops/dedup.py defaults)
-PIPELINE_JACCARD = 0.5
-
 
 def quality_lang_flags(d: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Stage 1+2 of the curation pipeline as one codegen'd projection:
     (doc_id, source, text, n_tokens, q_ok, l_ok) — q_ok is the
     token-count / mean-token-length gate, l_ok additionally requires the
     stopword-argmax language to be 'en' (ties break in STOPWORDS order,
-    no hits → 'und'). No shuffle; reused by pretrain_curation and
-    pipeline_incremental_refresh. ``carry`` names extra input columns
-    to pass through unchanged — consumers that used to re-join their
-    own upstream just to re-attach a column they already had (doubling
-    the upstream subtree: a DataFrame consumed twice is planned twice)
-    carry it through instead."""
+    no hits → 'und'). No shuffle; reused by pretrain_curation and both
+    refresh pipelines; matches sql_quality_lang_flags. ``carry`` names
+    extra input columns to pass through unchanged — consumers that used
+    to re-join their own upstream just to re-attach a column they
+    already had (doubling the upstream subtree: a DataFrame consumed
+    twice is planned twice) carry it through instead."""
     n_chars = F.length("text").cast("long")
     n_tokens = ws_count("text")
     mean_tok_len = (n_chars - n_tokens + 1) / n_tokens
-    hits = {lang: _stopword_hits(F.col("text"), ws) for lang, ws in STOPWORDS.items()}
     flagged = d.select(
         "doc_id",
         "source",
@@ -64,15 +74,28 @@ def quality_lang_flags(d: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
         *carry,
         n_tokens.alias("n_tokens"),
         ((n_tokens >= MIN_TOKENS) & (mean_tok_len <= MAX_MEAN_TOKEN_LEN)).alias("q_ok"),
-        *[h.alias(f"hits_{l}") for l, h in hits.items()],
+        *lang_hits(),
     )
-    best = F.greatest(*[F.col(f"hits_{l}") for l in STOPWORDS])
-    pred = F.when(best == 0, F.lit("und"))
-    for l in STOPWORDS:
-        pred = pred.when(F.col(f"hits_{l}") == best, F.lit(l))
-    return flagged.withColumn("l_ok", F.col("q_ok") & (pred == "en")).drop(
+    return flagged.withColumn("l_ok", F.col("q_ok") & (lang_argmax() == "en")).drop(
         *[f"hits_{l}" for l in STOPWORDS]
     )
+
+
+def sql_quality_lang_flags(src: str, carry: tuple[str, ...] = ()) -> str:
+    """quality_lang_flags over relation ``src`` as the body of a SELECT."""
+    cols = ", ".join(["doc_id", "source", "text", *carry])
+    q_ok = (
+        f"(n_tokens >= {MIN_TOKENS}"
+        f" AND (n_chars - n_tokens + 1) / n_tokens <= {MAX_MEAN_TOKEN_LEN})"
+    )
+    return f"""SELECT {cols}, n_tokens, {q_ok} AS q_ok,
+         {q_ok} AND {sql_lang_argmax()} = 'en' AS l_ok
+  FROM (
+    SELECT {cols}, {sql_ws_count('text')} AS n_tokens,
+           CAST(length(text) AS BIGINT) AS n_chars,
+           {sql_lang_hits()}
+    FROM {src}
+  )"""
 
 
 def pretrain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,7 +116,7 @@ def pretrain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = quality_lang_flags(d)
 
     survivors = flagged.filter("l_ok").select("doc_id", "source", "text", "n_tokens")
-    pairs = ngram_jaccard_pairs(survivors, threshold=PIPELINE_JACCARD)
+    pairs = ngram_jaccard_pairs(survivors)
     drops = pairs.select(F.col("doc2").alias("doc_id")).distinct()
     kept = survivors.join(drops, "doc_id", "left_anti")
 
@@ -116,63 +139,11 @@ def pretrain_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _curation_sql() -> str:
-    langs = list(STOPWORDS)
-    hit_cols = ",\n         ".join(
-        f"{_sql_stopword_hits('text', ws)} AS hits_{l}" for l, ws in STOPWORDS.items()
-    )
-    best = "greatest(" + ", ".join(f"hits_{l}" for l in langs) + ")"
-    pred = (
-        "CASE WHEN " + best + " = 0 THEN 'und' "
-        + " ".join(f"WHEN hits_{l} = {best} THEN '{l}'" for l in langs)
-        + " END"
-    )
-    return rf"""
-WITH feats AS (
-  SELECT doc_id, source, text,
-         {sql_ws_count('text')} AS n_tokens,
-         CAST(length(text) AS BIGINT) AS n_chars,
-         {hit_cols}
-  FROM documents
-), flagged AS (
-  SELECT doc_id, source, text, n_tokens,
-         (n_tokens >= {MIN_TOKENS}
-          AND (n_chars - n_tokens + 1) / n_tokens <= {MAX_MEAN_TOKEN_LEN}) AS q_ok,
-         {pred} AS pred
-  FROM feats
+PRETRAIN_CURATION_SQL = f"""
+WITH flagged AS ({sql_quality_lang_flags('documents')}
 ), cur AS (
-  SELECT doc_id, source, text, n_tokens FROM flagged WHERE q_ok AND pred = 'en'
-), tok_lists AS (
-  SELECT doc_id AS doc, {sql_ws_split('text')} AS toks FROM cur
-), toks AS (
-  SELECT doc, token, pos FROM (
-    SELECT doc, unnest(toks) AS token,
-           unnest(generate_series(1, len(toks))) AS pos
-    FROM tok_lists
-  ) WHERE token <> ''
-), sh AS (
-  SELECT DISTINCT doc,
-         token || ' ' || lead(token, 1) OVER w || ' ' || lead(token, 2) OVER w AS shingle
-  FROM toks
-  WINDOW w AS (PARTITION BY doc ORDER BY pos)
-  QUALIFY lead(token, 2) OVER w IS NOT NULL
-), sizes AS (
-  SELECT doc, COUNT(*) AS n_shingles FROM sh GROUP BY doc
-), capped AS (
-  SELECT sh.doc, sh.shingle FROM sh
-  JOIN (SELECT shingle FROM sh GROUP BY shingle
-        HAVING COUNT(*) <= {SHINGLE_DF_CAP}) keep
-    ON keep.shingle = sh.shingle
-), inter AS (
-  SELECT a.doc AS doc1, b.doc AS doc2, COUNT(*) AS n_inter
-  FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc < b.doc
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT doc1, doc2
-  FROM inter
-  JOIN sizes s1 ON s1.doc = doc1
-  JOIN sizes s2 ON s2.doc = doc2
-  WHERE n_inter / (s1.n_shingles + s2.n_shingles - n_inter) >= {PIPELINE_JACCARD}
+  SELECT doc_id, source, text, n_tokens FROM flagged WHERE l_ok
+), pairs AS ({sql_ngram_jaccard_pairs('cur')}
 ), drops AS (
   SELECT DISTINCT doc2 AS doc_id FROM pairs
 ), kept AS (
@@ -182,8 +153,7 @@ WITH feats AS (
 ), funnel AS (
   SELECT source, COUNT(*) AS n_total,
          CAST(SUM(CASE WHEN q_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-         CAST(SUM(CASE WHEN q_ok AND pred = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_lang
+         CAST(SUM(CASE WHEN l_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_lang
   FROM flagged GROUP BY source
 ), kept_stats AS (
   SELECT source, COUNT(*) AS n_kept, SUM(n_tokens) AS kept_tokens
@@ -194,9 +164,6 @@ SELECT f.source, f.n_total, f.n_quality, f.n_lang,
        CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens
 FROM funnel f LEFT JOIN kept_stats k ON k.source = f.source
 """
-
-
-PRETRAIN_CURATION_SQL = _curation_sql()
 
 
 def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,8 +182,6 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing side is a precomputed signature table, not a re-scan) —
     the gate composition here is the oracle-checkable core of that
     loop."""
-    from map_reduce_lite_spark.ops.snapshot import _derived_snapshots, snapshot_diff
-
     d = load_table(spark, sf_dir, "documents")
     prev, cur = _derived_snapshots(d)
     delta_keys = snapshot_diff(prev, cur).filter(
@@ -243,63 +208,19 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _incremental_refresh_sql() -> str:
-
-    langs = list(STOPWORDS)
-    hit_cols = ",\n         ".join(
-        f"{_sql_stopword_hits('text', ws)} AS hits_{l}" for l, ws in STOPWORDS.items()
-    )
-    best = "greatest(" + ", ".join(f"hits_{l}" for l in langs) + ")"
-    pred = (
-        "CASE WHEN " + best + " = 0 THEN 'und' "
-        + " ".join(f"WHEN hits_{l} = {best} THEN '{l}'" for l in langs)
-        + " END"
-    )
-    return rf"""
-WITH prev AS (
-  SELECT doc_id, source,
-         CASE WHEN doc_id % 13 = 0 THEN text || ' [stale]' ELSE text END AS text
-  FROM documents WHERE doc_id % 17 <> 3
-), cur AS (
-  SELECT doc_id, source, text FROM documents WHERE doc_id % 19 <> 7
-), p AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_prev FROM prev
-), c AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_cur FROM cur
-), delta_keys AS (
-  SELECT COALESCE(p.k, c.k) AS doc_id,
-         CASE WHEN p.k IS NULL THEN 'added'
-              WHEN c.k IS NULL THEN 'removed'
-              WHEN p.h_prev <> c.h_cur THEN 'changed'
-              ELSE 'unchanged' END AS status
-  FROM p FULL OUTER JOIN c ON p.k = c.k
-), delta AS (
-  SELECT cur.doc_id, cur.source, cur.text, dk.status
-  FROM delta_keys dk JOIN cur ON cur.doc_id = dk.doc_id
-  WHERE dk.status IN ('added', 'changed')
-), feats AS (
-  SELECT doc_id, source, status,
-         {sql_ws_count('text')} AS n_tokens,
-         CAST(length(text) AS BIGINT) AS n_chars,
-         {hit_cols}
-  FROM delta
-), flagged AS (
-  SELECT source, status, n_tokens,
-         (n_tokens >= {MIN_TOKENS}
-          AND (n_chars - n_tokens + 1) / n_tokens <= {MAX_MEAN_TOKEN_LEN}) AS q_ok,
-         {pred} AS pred
-  FROM feats
+INCREMENTAL_REFRESH_SQL = f"""
+WITH {sql_snapshot_delta()}, delta AS (
+  SELECT cur.doc_id, cur.source, cur.text, diff.status
+  FROM diff JOIN cur ON cur.doc_id = diff.doc_id
+  WHERE diff.status IN ('added', 'changed')
+), flagged AS ({sql_quality_lang_flags('delta', ('status',))}
 )
 SELECT source, status, COUNT(*) AS n_delta,
        CAST(SUM(CASE WHEN q_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-       CAST(SUM(CASE WHEN q_ok AND pred = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_lang,
+       CAST(SUM(CASE WHEN l_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_lang,
        CAST(SUM(n_tokens) AS BIGINT) AS delta_tokens
 FROM flagged GROUP BY source, status
 """
-
-
-INCREMENTAL_REFRESH_SQL = _incremental_refresh_sql()
 
 
 def pipeline_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,9 +244,6 @@ def pipeline_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality+lang), n_dup (gated but colliding with standing), n_survive
     (gated, no collision), survive_tokens (tokens the survivors add).
     """
-    from map_reduce_lite_spark.ops.dedup import minhash_band_sigs
-    from map_reduce_lite_spark.ops.snapshot import _derived_snapshots, snapshot_diff
-
     d = load_table(spark, sf_dir, "documents")
     prev, cur = _derived_snapshots(d)
     # flagged is consumed twice (signature stage + survival report) and
@@ -347,14 +265,8 @@ def pipeline_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     standing = minhash_band_sigs(prev)  # production: a stored index table
     dsigs = minhash_band_sigs(gated)
     dups = (
-        dsigs.alias("d")
-        .join(
-            standing.alias("s"),
-            (F.col("d.band") == F.col("s.band"))
-            & (F.col("d.sig") == F.col("s.sig"))
-            & (F.col("d.doc") != F.col("s.doc")),
-        )
-        .select(F.col("d.doc").alias("doc_id"))
+        band_collisions(dsigs, standing)
+        .select(F.col("delta_doc").alias("doc_id"))
         .distinct()
         .withColumn("is_dup", F.lit(True))
     )
@@ -380,61 +292,19 @@ def pipeline_full_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _full_refresh_sql() -> str:
-    from map_reduce_lite_spark.ops.snapshot import _band_sig_cte
-
-    langs = list(STOPWORDS)
-    hit_cols = ",\n         ".join(
-        f"{_sql_stopword_hits('text', ws)} AS hits_{l}" for l, ws in STOPWORDS.items()
-    )
-    best = "greatest(" + ", ".join(f"hits_{l}" for l in langs) + ")"
-    pred = (
-        "CASE WHEN " + best + " = 0 THEN 'und' "
-        + " ".join(f"WHEN hits_{l} = {best} THEN '{l}'" for l in langs)
-        + " END"
-    )
-    return rf"""
-WITH prev AS (
-  SELECT doc_id, source,
-         CASE WHEN doc_id % 13 = 0 THEN text || ' [stale]' ELSE text END AS text
-  FROM documents WHERE doc_id % 17 <> 3
-), cur AS (
-  SELECT doc_id, source, text FROM documents WHERE doc_id % 19 <> 7
-), p AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_prev FROM prev
-), c AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_cur FROM cur
-), delta_keys AS (
-  SELECT COALESCE(p.k, c.k) AS doc_id,
-         CASE WHEN p.k IS NULL THEN 'added'
-              WHEN c.k IS NULL THEN 'removed'
-              WHEN p.h_prev <> c.h_cur THEN 'changed'
-              ELSE 'unchanged' END AS status
-  FROM p FULL OUTER JOIN c ON p.k = c.k
-), delta AS (
-  SELECT cur.doc_id, cur.source, cur.text, dk.status
-  FROM delta_keys dk JOIN cur ON cur.doc_id = dk.doc_id
-  WHERE dk.status IN ('added', 'changed')
-), feats AS (
-  SELECT doc_id, source, status, text,
-         {sql_ws_count('text')} AS n_tokens,
-         CAST(length(text) AS BIGINT) AS n_chars,
-         {hit_cols}
-  FROM delta
-), flagged AS (
-  SELECT doc_id, source, status, text, n_tokens,
-         (n_tokens >= {MIN_TOKENS}
-          AND (n_chars - n_tokens + 1) / n_tokens <= {MAX_MEAN_TOKEN_LEN}
-          AND {pred} = 'en') AS l_ok
-  FROM feats
+FULL_REFRESH_SQL = f"""
+WITH {sql_snapshot_delta()}, delta AS (
+  SELECT cur.doc_id, cur.source, cur.text, diff.status
+  FROM diff JOIN cur ON cur.doc_id = diff.doc_id
+  WHERE diff.status IN ('added', 'changed')
+), flagged AS ({sql_quality_lang_flags('delta', ('status',))}
 ), gated AS (
   SELECT doc_id, text FROM flagged WHERE l_ok
-), {_band_sig_cte('prev', 'st_')},
-{_band_sig_cte('gated', 'dl_')},
-dups AS (
-  SELECT DISTINCT d.doc AS doc_id
-  FROM dl_bands d JOIN st_bands s
-    ON d.band = s.band AND d.sig = s.sig AND d.doc <> s.doc
+), standing AS ({sql_minhash_bands('prev')}
+), dsigs AS ({sql_minhash_bands('gated')}
+), dups AS (
+  SELECT DISTINCT delta_doc AS doc_id
+  FROM ({sql_band_collisions('dsigs', 'standing')})
 )
 SELECT source, status, COUNT(*) AS n_delta,
        CAST(SUM(CASE WHEN l_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_gates,
@@ -447,9 +317,6 @@ SELECT source, status, COUNT(*) AS n_delta,
 FROM flagged f LEFT JOIN dups du ON du.doc_id = f.doc_id
 GROUP BY source, status
 """
-
-
-FULL_REFRESH_SQL = _full_refresh_sql()
 
 
 PIPELINE_QUERIES: dict[str, Query] = {

@@ -270,6 +270,30 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _sql_dot(a: str, b: str) -> str:
+    """DuckDB dot product, bit-identical to ``fold_kernel``'s
+    left-to-right fold (``_dot``).
+
+    Uses native ``list_dot_product`` (a sequential C loop — verified
+    element-order-identical to the ``list_sum . list_transform .
+    list_zip`` fold across every consecutive pair at sf0.1) rather than
+    the zip/transform construction: the zip form materializes a struct
+    list PER ROW, and on a 32-thread DuckDB the per-thread allocator
+    churn from the pair-join cosine oracles fragments glibc into tens
+    of thousands of memory mappings — measured 65k maps ( ==
+    vm.max_map_count) during pipeline_semdedup_prune's oracle, after
+    which EVERY allocation in the process fails ("Failed to allocate
+    block of 16384 bytes" with >100 GB free). The native function does
+    zero intermediate allocation. Inputs are cast to DOUBLE[] so the
+    accumulation is double-precision even for FLOAT[] embeddings."""
+    return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
+
+
+def _sql_cos(a: str, b: str) -> str:
+    """DuckDB cosine matching ``cosine()`` bit-for-bit (same fold order)."""
+    return f"{_sql_dot(a, b)} / (sqrt({_sql_dot(a, a)}) * sqrt({_sql_dot(b, b)}))"
+
+
 def _vectors(
     emb: DataFrame, id_name: str, tag: str, *keep: Column, norm: bool = True
 ) -> DataFrame:
@@ -433,9 +457,7 @@ WITH quality AS (
   SELECT e.vec_id, e.embedding FROM embeddings e JOIN quality USING (vec_id)
 ), scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-          * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))) AS sim
+         {_sql_cos('q.embedding', 'c.embedding')} AS sim
   FROM embeddings q JOIN corpus c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERY_VECS}
 ), ranked AS (
@@ -454,9 +476,7 @@ SIMILARITY_HARD_NEG_SQL = f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, q.label AS q_label,
          c.vec_id AS neg_id, c.label AS neg_label,
-         list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-          * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))) AS sim
+         {_sql_cos('q.embedding', 'c.embedding')} AS sim
   FROM embeddings q JOIN embeddings c ON c.label <> q.label
   WHERE q.vec_id < {N_QUERY_VECS}
 ), ranked AS (
@@ -474,9 +494,7 @@ FROM ranked WHERE rank <= {TOP_K}
 SIMILARITY_BRUTE_SQL = f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))
-          * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))) AS sim
+         {_sql_cos('q.embedding', 'c.embedding')} AS sim
   FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERY_VECS}
 ), ranked AS (
@@ -1036,30 +1054,6 @@ WHERE rank <= {TOP_K}
 
 CENTROID_STRIDE = 32  # every stride-th corpus vector is a coarse centroid
 N_PROBE = 4  # centroid lists each query probes
-
-
-def _sql_dot(a: str, b: str) -> str:
-    """DuckDB dot product, bit-identical to ``fold_kernel``'s
-    left-to-right fold (``_dot``).
-
-    Uses native ``list_dot_product`` (a sequential C loop — verified
-    element-order-identical to the ``list_sum . list_transform .
-    list_zip`` fold across every consecutive pair at sf0.1) rather than
-    the zip/transform construction: the zip form materializes a struct
-    list PER ROW, and on a 32-thread DuckDB the per-thread allocator
-    churn from the pair-join cosine oracles fragments glibc into tens
-    of thousands of memory mappings — measured 65k maps ( ==
-    vm.max_map_count) during pipeline_semdedup_prune's oracle, after
-    which EVERY allocation in the process fails ("Failed to allocate
-    block of 16384 bytes" with >100 GB free). The native function does
-    zero intermediate allocation. Inputs are cast to DOUBLE[] so the
-    accumulation is double-precision even for FLOAT[] embeddings."""
-    return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
-
-def _sql_cos(a: str, b: str) -> str:
-    """DuckDB cosine matching ``cosine()`` bit-for-bit (same fold order)."""
-    return f"{_sql_dot(a, b)} / (sqrt({_sql_dot(a, a)}) * sqrt({_sql_dot(b, b)}))"
 
 
 def _sql_array_lit(vals: list[float]) -> str:

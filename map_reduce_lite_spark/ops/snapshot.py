@@ -34,7 +34,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit, sql_ws_split, ws_count
+from map_reduce_lite_spark.ops.dedup import (
+    band_collisions,
+    minhash_band_sigs,
+    sql_band_collisions,
+    sql_minhash_bands,
+)
+from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit, sql_ws_count, ws_count
 from map_reduce_lite_spark.relational.tables import load_table
 
 
@@ -95,33 +101,6 @@ def snapshot_diff_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SNAPSHOT_DIFF_SQL = f"""
-WITH prev AS (
-  SELECT doc_id, source,
-         CASE WHEN doc_id % 13 = 0 THEN text || ' [stale]' ELSE text END AS text
-  FROM documents WHERE doc_id % 17 <> 3
-), cur AS (
-  SELECT doc_id, source, text FROM documents WHERE doc_id % 19 <> 7
-), p AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_prev, source AS prev_source
-  FROM prev
-), c AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_cur, source AS cur_source
-  FROM cur
-), delta AS (
-  SELECT COALESCE(p.k, c.k) AS doc_id,
-         CASE WHEN p.k IS NULL THEN 'added'
-              WHEN c.k IS NULL THEN 'removed'
-              WHEN p.h_prev <> c.h_cur THEN 'changed'
-              ELSE 'unchanged' END AS status,
-         COALESCE(c.cur_source, p.prev_source) AS source
-  FROM p FULL OUTER JOIN c ON p.k = c.k
-)
-SELECT source, status, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
-FROM delta GROUP BY source, status
-"""
-
-
 def _derived_snapshots(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The module's deterministic (previous, current) snapshot pair."""
     prev = d.filter(F.col("doc_id") % 17 != 3).select(
@@ -135,6 +114,40 @@ def _derived_snapshots(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     cur = d.filter(F.col("doc_id") % 19 != 7).select("doc_id", "source", "text")
     return prev, cur
+
+
+def sql_snapshot_delta(carry: tuple[str, ...] = ()) -> str:
+    """_derived_snapshots of ``documents`` and their snapshot_diff as
+    WITH-clause CTEs: ``prev`` and ``cur`` (doc_id, source, text), and
+    ``diff`` (doc_id, status, *carry)."""
+    pc = "".join(f", {c_} AS prev_{c_}" for c_ in carry)
+    cc = "".join(f", {c_} AS cur_{c_}" for c_ in carry)
+    dc = "".join(f",\n         COALESCE(c.cur_{c_}, p.prev_{c_}) AS {c_}" for c_ in carry)
+    return f"""prev AS (
+  SELECT doc_id, source,
+         CASE WHEN doc_id % 13 = 0 THEN text || ' [stale]' ELSE text END AS text
+  FROM documents WHERE doc_id % 17 <> 3
+), cur AS (
+  SELECT doc_id, source, text FROM documents WHERE doc_id % 19 <> 7
+), p AS (
+  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_prev{pc} FROM prev
+), c AS (
+  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_cur{cc} FROM cur
+), diff AS (
+  SELECT COALESCE(p.k, c.k) AS doc_id,
+         CASE WHEN p.k IS NULL THEN 'added'
+              WHEN c.k IS NULL THEN 'removed'
+              WHEN p.h_prev <> c.h_cur THEN 'changed'
+              ELSE 'unchanged' END AS status{dc}
+  FROM p FULL OUTER JOIN c ON p.k = c.k
+)"""
+
+
+SNAPSHOT_DIFF_SQL = f"""
+WITH {sql_snapshot_delta(("source",))}
+SELECT source, status, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
+FROM diff GROUP BY source, status
+"""
 
 
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,8 +165,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected, not a dedup signal. Here both signature tables are
     derived in-query so DuckDB replays the identical math end-to-end;
     production reads the standing side from storage."""
-    from map_reduce_lite_spark.ops.dedup import minhash_band_sigs
-
     d = load_table(spark, sf_dir, "documents")
     prev, cur = _derived_snapshots(d)
     delta_keys = snapshot_diff(prev, cur).filter(
@@ -162,103 +173,20 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_docs = delta_keys.join(cur, "doc_id").select("doc_id", "text")
     standing = minhash_band_sigs(prev)  # production: a stored index table
     delta = minhash_band_sigs(delta_docs)
-    dside, sside = delta.alias("d"), standing.alias("s")
-    return (
-        dside.join(
-            sside,
-            (F.col("d.band") == F.col("s.band"))
-            & (F.col("d.sig") == F.col("s.sig"))
-            & (F.col("d.doc") != F.col("s.doc")),
-        )
-        .select(
-            F.col("d.doc").alias("delta_doc"), F.col("s.doc").alias("standing_doc")
-        )
-        .distinct()
-    )
+    return band_collisions(delta, standing).distinct()
 
 
-def _band_sig_cte(src: str, p: str) -> str:
-    """CTE chain computing (doc, band, sig) MinHash band signatures for
-    relation ``src`` (which must expose doc_id, text), all CTE names
-    prefixed with ``p`` — the SQL twin of dedup.minhash_band_sigs at
-    the demo banding."""
-    from map_reduce_lite_spark.ops.dedup import (
-        MINHASH_BANDS,
-        MINHASH_P,
-        MINHASH_ROWS,
-        _coeffs,
-    )
-
-    ca, cb = _coeffs(MINHASH_BANDS * MINHASH_ROWS)
-    min_cols = ",\n         ".join(
-        f"MIN((h * {ca[i]} + {cb[i]}) % {MINHASH_P}) AS m{i}"
-        for i in range(MINHASH_BANDS * MINHASH_ROWS)
-    )
-    band_selects = "\n  UNION ALL\n".join(
-        f"  SELECT doc, {b} AS band, "
-        + " || ',' || ".join(
-            f"CAST(m{b * MINHASH_ROWS + r} AS VARCHAR)" for r in range(MINHASH_ROWS)
-        )
-        + f" AS sig FROM {p}sigs"
-        for b in range(MINHASH_BANDS)
-    )
-    return rf"""{p}tok_lists AS (
-  SELECT doc_id AS doc, {sql_ws_split('text')} AS toks FROM {src}
-), {p}toks AS (
-  SELECT doc, token, pos FROM (
-    SELECT doc, unnest(toks) AS token,
-           unnest(generate_series(1, len(toks))) AS pos
-    FROM {p}tok_lists
-  ) WHERE token <> ''
-), {p}sh AS (
-  SELECT DISTINCT doc,
-         token || ' ' || lead(token, 1) OVER w || ' ' || lead(token, 2) OVER w AS shingle
-  FROM {p}toks
-  WINDOW w AS (PARTITION BY doc ORDER BY pos)
-  QUALIFY lead(token, 2) OVER w IS NOT NULL
-), {p}hashed AS (
-  SELECT doc, {sql_md5_60bit('shingle')} % {MINHASH_P} AS h FROM {p}sh
-), {p}sigs AS (
-  SELECT doc,
-         {min_cols}
-  FROM {p}hashed GROUP BY doc
-), {p}bands AS (
-{band_selects}
-)"""
-
-
-def _incremental_minhash_sql() -> str:
-    return rf"""
-WITH prev AS (
-  SELECT doc_id, source,
-         CASE WHEN doc_id % 13 = 0 THEN text || ' [stale]' ELSE text END AS text
-  FROM documents WHERE doc_id % 17 <> 3
-), cur AS (
-  SELECT doc_id, source, text FROM documents WHERE doc_id % 19 <> 7
-), p AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_prev FROM prev
-), c AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_cur FROM cur
-), delta_keys AS (
-  SELECT COALESCE(p.k, c.k) AS doc_id,
-         CASE WHEN p.k IS NULL THEN 'added'
-              WHEN c.k IS NULL THEN 'removed'
-              WHEN p.h_prev <> c.h_cur THEN 'changed'
-              ELSE 'unchanged' END AS status
-  FROM p FULL OUTER JOIN c ON p.k = c.k
-), delta_docs AS (
+DEDUP_INCREMENTAL_SQL = f"""
+WITH {sql_snapshot_delta()}, delta_docs AS (
   SELECT cur.doc_id, cur.text
-  FROM delta_keys dk JOIN cur ON cur.doc_id = dk.doc_id
-  WHERE dk.status IN ('added', 'changed')
-), {_band_sig_cte('prev', 'st_')},
-{_band_sig_cte('delta_docs', 'dl_')}
-SELECT DISTINCT d.doc AS delta_doc, s.doc AS standing_doc
-FROM dl_bands d JOIN st_bands s
-  ON d.band = s.band AND d.sig = s.sig AND d.doc <> s.doc
+  FROM diff JOIN cur ON cur.doc_id = diff.doc_id
+  WHERE diff.status IN ('added', 'changed')
+), standing AS ({sql_minhash_bands('prev')}
+), delta AS ({sql_minhash_bands('delta_docs')}
+)
+SELECT DISTINCT delta_doc, standing_doc
+FROM ({sql_band_collisions('delta', 'standing')})
 """
-
-
-DEDUP_INCREMENTAL_SQL = _incremental_minhash_sql()
 
 
 def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,43 +263,23 @@ def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INCREMENTAL_STATS_SQL = rf"""
-WITH prev AS (
-  SELECT doc_id, source,
-         CASE WHEN doc_id % 13 = 0 THEN text || ' [stale]' ELSE text END AS text
-  FROM documents WHERE doc_id % 17 <> 3
-), cur AS (
-  SELECT doc_id, source, text FROM documents WHERE doc_id % 19 <> 7
-), p AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_prev, source AS prev_source
-  FROM prev
-), c AS (
-  SELECT doc_id AS k, {sql_md5_60bit('text')} AS h_cur, source AS cur_source
-  FROM cur
-), delta AS (
-  SELECT COALESCE(p.k, c.k) AS doc_id,
-         CASE WHEN p.k IS NULL THEN 'added'
-              WHEN c.k IS NULL THEN 'removed'
-              WHEN p.h_prev <> c.h_cur THEN 'changed'
-              ELSE 'unchanged' END AS status,
-         COALESCE(c.cur_source, p.prev_source) AS source
-  FROM p FULL OUTER JOIN c ON p.k = c.k
-), signed AS (
+INCREMENTAL_STATS_SQL = f"""
+WITH {sql_snapshot_delta(("source",))}, signed AS (
   SELECT d.source,
          CAST(SUM(CASE d.status WHEN 'added' THEN 1
                                 WHEN 'removed' THEN -1 ELSE 0 END) AS BIGINT)
            AS d_docs,
-         CAST(SUM(COALESCE(len({sql_ws_split('cv.text')}), 0)
-                - COALESCE(len({sql_ws_split('pv.text')}), 0))
+         CAST(SUM(COALESCE({sql_ws_count('cv.text')}, 0)
+                - COALESCE({sql_ws_count('pv.text')}, 0))
               AS BIGINT) AS d_toks
-  FROM delta d
+  FROM diff d
   LEFT JOIN prev pv ON pv.doc_id = d.doc_id
   LEFT JOIN cur cv ON cv.doc_id = d.doc_id
   WHERE d.status <> 'unchanged'
   GROUP BY d.source
 ), standing AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS p_docs,
-         CAST(SUM(len({sql_ws_split('text')})) AS BIGINT) AS p_toks
+         CAST(SUM({sql_ws_count('text')}) AS BIGINT) AS p_toks
   FROM prev GROUP BY source
 ), maintained AS (
   SELECT st.source,
@@ -380,8 +288,7 @@ WITH prev AS (
   FROM standing st LEFT JOIN signed s ON s.source = st.source
 ), direct AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS docs_direct,
-         CAST(SUM(len({sql_ws_split('text')})) AS BIGINT)
-           AS toks_direct
+         CAST(SUM({sql_ws_count('text')}) AS BIGINT) AS toks_direct
   FROM cur GROUP BY source
 )
 SELECT di.source, di.docs_direct, m.docs_maintained,

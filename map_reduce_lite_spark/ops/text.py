@@ -23,6 +23,7 @@ from map_reduce_lite_spark.registry import (
     md5_60bit,
     mrl_lower,
     sql_md5_60bit,
+    sql_token_positions,
     sql_token_rows,
     sql_ws_count,
     sql_ws_split,
@@ -57,41 +58,58 @@ def _sql_stopword_hits(expr: str, words: list[str]) -> str:
     return f"CAST(len(regexp_extract_all(lower({expr}), '{pattern}')) AS BIGINT)"
 
 
+def lang_hits() -> list[Column]:
+    """One ``hits_<lang>`` stopword count of ``text`` per STOPWORDS
+    language (matches sql_lang_hits)."""
+    return [
+        _stopword_hits(F.col("text"), ws).alias(f"hits_{l}") for l, ws in STOPWORDS.items()
+    ]
+
+
+def sql_lang_hits() -> str:
+    return ",\n         ".join(
+        f"{_sql_stopword_hits('text', ws)} AS hits_{l}" for l, ws in STOPWORDS.items()
+    )
+
+
+def lang_argmax() -> Column:
+    """The stopword language ID over the ``hits_<lang>`` columns
+    (matches sql_lang_argmax): no hits gives 'und', and a tie goes to
+    the first language in STOPWORDS order."""
+    best = F.greatest(*[F.col(f"hits_{l}") for l in STOPWORDS])
+    pred = F.when(best == 0, F.lit("und"))
+    for l in STOPWORDS:
+        pred = pred.when(F.col(f"hits_{l}") == best, F.lit(l))
+    return pred
+
+
+def sql_lang_argmax() -> str:
+    best = "greatest(" + ", ".join(f"hits_{l}" for l in STOPWORDS) + ")"
+    whens = " ".join(f"WHEN hits_{l} = {best} THEN '{l}'" for l in STOPWORDS)
+    return f"CASE WHEN {best} = 0 THEN 'und' {whens} END"
+
+
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predict language by max stopword hits (ties → fixed language order,
     no hits → 'und')."""
     d = load_table(spark, sf_dir, "documents")
-    hits = {lang: _stopword_hits(F.col("text"), ws) for lang, ws in STOPWORDS.items()}
-    d = d.select("doc_id", "lang", *[h.alias(f"hits_{l}") for l, h in hits.items()])
-    best = F.greatest(*[F.col(f"hits_{l}") for l in STOPWORDS])
-    pred = F.when(best == 0, F.lit("und"))
-    for l in STOPWORDS:  # first language reaching the max wins (dict order)
-        pred = pred.when(F.col(f"hits_{l}") == best, F.lit(l))
+    d = d.select("doc_id", "lang", *lang_hits())
     return d.select(
         "doc_id",
         F.col("lang").alias("actual_lang"),
-        pred.alias("pred_lang"),
+        lang_argmax().alias("pred_lang"),
         *[F.col(f"hits_{l}") for l in STOPWORDS],
     )
 
 
-def _lang_id_sql() -> str:
-    hit_cols = ",\n       ".join(
-        f"{_sql_stopword_hits('text', ws)} AS hits_{l}" for l, ws in STOPWORDS.items()
-    )
-    langs = list(STOPWORDS)
-    best = "greatest(" + ", ".join(f"hits_{l}" for l in langs) + ")"
-    case = "CASE WHEN " + best + " = 0 THEN 'und' " + " ".join(
-        f"WHEN hits_{l} = {best} THEN '{l}'" for l in langs
-    ) + " END"
-    return f"""
+LANG_ID_SQL = f"""
 WITH scored AS (
   SELECT doc_id, lang AS actual_lang,
-       {hit_cols}
+         {sql_lang_hits()}
   FROM documents
 )
-SELECT doc_id, actual_lang, {case} AS pred_lang,
-       {', '.join(f'hits_{l}' for l in langs)}
+SELECT doc_id, actual_lang, {sql_lang_argmax()} AS pred_lang,
+       {', '.join(f'hits_{l}' for l in STOPWORDS)}
 FROM scored
 """
 
@@ -121,7 +139,7 @@ SELECT doc_id,
        {_sql_stopword_hits('text', STOPWORDS['en'])} AS n_stopwords,
        {_sql_stopword_hits('text', STOPWORDS['en'])}
          / {sql_ws_count('text')} AS stopword_ratio,
-       (CAST(length(text) AS BIGINT) - len({sql_ws_split('text')}) + 1)
+       (CAST(length(text) AS BIGINT) - {sql_ws_count('text')} + 1)
          / {sql_ws_count('text')} AS mean_token_len
 FROM documents
 """
@@ -142,7 +160,7 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TOKEN_STATS_SQL = rf"""
 SELECT source, COUNT(*) AS n_docs,
-       CAST(SUM(len({sql_ws_split('text')})) AS BIGINT) AS total_ws_tokens,
+       CAST(SUM({sql_ws_count('text')}) AS BIGINT) AS total_ws_tokens,
        CAST(SUM(len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))) AS BIGINT) AS total_bpe_tokens,
        CAST(MAX(len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))) AS BIGINT) AS max_bpe_tokens
 FROM documents
@@ -925,20 +943,12 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BIGRAM_LOGPROB_SQL = rf"""
-WITH tok_lists AS (
-  SELECT doc_id, {sql_ws_split('lower(text)')} AS l
-  FROM documents
-), toks AS (
-  SELECT doc_id, term, pos FROM (
-    SELECT doc_id, unnest(l) AS term,
-           unnest(generate_series(1, len(l))) AS pos
-    FROM tok_lists
-  ) WHERE term <> ''
+WITH toks AS ({sql_token_positions('documents', 'lower(text)', 'doc_id')}
 ), trans AS (
-  SELECT doc_id, lag(term, 1) OVER w AS prev, term AS cur
+  SELECT doc_id, lag(token, 1) OVER w AS prev, token AS cur
   FROM toks
   WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-  QUALIFY lag(term, 1) OVER w IS NOT NULL
+  QUALIFY lag(token, 1) OVER w IS NOT NULL
 ), train_trans AS (
   SELECT * FROM trans WHERE doc_id % 2 = 0
 ), big AS (
@@ -950,11 +960,11 @@ WITH tok_lists AS (
 ), train_toks AS (
   SELECT * FROM toks WHERE doc_id % 2 = 0
 ), uni AS (
-  SELECT term AS cur, CAST(COUNT(*) AS BIGINT) AS c_uni
+  SELECT token AS cur, CAST(COUNT(*) AS BIGINT) AS c_uni
   FROM train_toks GROUP BY 1
 ), stats AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_train,
-         CAST(COUNT(DISTINCT term) AS BIGINT) AS v_train
+         CAST(COUNT(DISTINCT token) AS BIGINT) AS v_train
   FROM train_toks
 ), scored AS (
   SELECT t.doc_id,
@@ -1438,24 +1448,16 @@ def fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (≤5-value) language key. Ratios in integer basis points via
     exact DIV — no float path, hash-deterministic at any scale."""
     d = load_table(spark, sf_dir, "documents")
-    hit_cols = {
-        lang: _stopword_hits(F.col("text"), ws).alias(f"hits_{lang}")
-        for lang, ws in STOPWORDS.items()
-    }
     scored = d.select(
         ws_count("text").alias("ws_toks"),
         F.size(F.regexp_extract_all("text", F.lit(BPE_TOKEN_RE), F.lit(0)))
         .cast("long")
         .alias("bpe_toks"),
         F.length("text").cast("long").alias("n_chars"),
-        *hit_cols.values(),
+        *lang_hits(),
     )
-    best = F.greatest(*[F.col(f"hits_{l}") for l in STOPWORDS])
-    pred = F.when(best == 0, F.lit("und"))
-    for l in STOPWORDS:  # first language reaching the max wins (dict order)
-        pred = pred.when(F.col(f"hits_{l}") == best, F.lit(l))
     return (
-        scored.select(pred.alias("pred_lang"), "ws_toks", "bpe_toks", "n_chars")
+        scored.select(lang_argmax().alias("pred_lang"), "ws_toks", "bpe_toks", "n_chars")
         .groupBy("pred_lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1484,28 +1486,16 @@ def fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fertility_sql() -> str:
-    hit_cols = ",\n         ".join(
-        f"{_sql_stopword_hits('text', ws)} AS hits_{l}"
-        for l, ws in STOPWORDS.items()
-    )
-    langs = list(STOPWORDS)
-    best = "greatest(" + ", ".join(f"hits_{l}" for l in langs) + ")"
-    case = (
-        "CASE WHEN " + best + " = 0 THEN 'und' "
-        + " ".join(f"WHEN hits_{l} = {best} THEN '{l}'" for l in langs)
-        + " END"
-    )
-    return rf"""
+FERTILITY_SQL = rf"""
 WITH scored AS (
   SELECT {sql_ws_count('text')} AS ws_toks,
          CAST(len(regexp_extract_all(text,
               '{BPE_TOKEN_RE}')) AS BIGINT) AS bpe_toks,
          CAST(length(text) AS BIGINT) AS n_chars,
-         {hit_cols}
+         {sql_lang_hits()}
   FROM documents
 ), labeled AS (
-  SELECT {case} AS pred_lang, ws_toks, bpe_toks, n_chars FROM scored
+  SELECT {sql_lang_argmax()} AS pred_lang, ws_toks, bpe_toks, n_chars FROM scored
 )
 SELECT pred_lang,
        COUNT(*) AS n_docs,
@@ -1519,9 +1509,6 @@ SELECT pred_lang,
 FROM labeled
 GROUP BY pred_lang
 """
-
-
-FERTILITY_SQL = _fertility_sql()
 
 
 TEXT_QUERIES: dict[str, Query] = {
@@ -1539,7 +1526,7 @@ TEXT_QUERIES: dict[str, Query] = {
             COLLOCATION_SQL,
             "top-M token co-occurrence lift (integer-exact PMI ratio)",
         ),
-        Query("text_lang_id", lang_id, _lang_id_sql(), "stopword language ID"),
+        Query("text_lang_id", lang_id, LANG_ID_SQL, "stopword language ID"),
         Query(
             "text_char_entropy",
             char_entropy,

@@ -22,8 +22,8 @@ values, so floating-point aggregation order must not matter):
   because Java's \\s (Spark) includes vertical tab and RE2's \\s (DuckDB)
   does not; the explicit class is exactly Java's \\s, so Spark output is
   the same either way. Every whitespace tokenizer (trim spaces, split
-  on runs: ws_split, ws_count, ws_tokens, token_rows and their sql_
-  twins) and whitespace normalizer reads it from here.
+  on runs: ws_split, ws_count, ws_tokens, token_rows, token_positions
+  and their sql_ twins) and whitespace normalizer reads it from here.
 """
 
 from __future__ import annotations
@@ -136,3 +136,34 @@ def sql_token_rows(name: str, *keep: str) -> str:
   FROM documents,
        LATERAL unnest({sql_ws_split('lower(text)')}) AS t({name})
   WHERE t.{name} <> ''"""
+
+
+def token_positions(df: DataFrame) -> DataFrame:
+    """(doc, pos, token): the non-empty whitespace tokens of ``df``'s
+    (doc_id, text) rows with their positions (matches
+    sql_token_positions; only the order of pos is shared).
+
+    Repartitioning by doc BEFORE the explode spreads the CPU-heavy
+    tokenize across cores when the source is one parquet split, and
+    pre-aligns the partitioning every downstream per-doc window/groupBy
+    needs — one shuffle of small rows instead of one of exploded rows."""
+    fanout = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    return (
+        df.repartition(fanout, F.col("doc_id"))
+        .select(
+            F.col("doc_id").alias("doc"),
+            F.posexplode(ws_split("text")).alias("pos", "token"),
+        )
+        .filter(F.length("token") > 0)
+    )
+
+
+def sql_token_positions(src: str, text: str, *keep: str) -> str:
+    """The positional token stream of relation ``src`` as the body of a
+    SELECT: the ``keep`` expressions, then (pos, token) for every
+    non-empty whitespace token of ``text``."""
+    return f"""SELECT * FROM (
+    SELECT * EXCLUDE (toks), unnest(generate_series(1, len(toks))) AS pos,
+           unnest(toks) AS token
+    FROM (SELECT {', '.join(keep)}, {sql_ws_split(text)} AS toks FROM {src})
+  ) WHERE token <> ''"""

@@ -208,7 +208,8 @@ def test_ngram_df_cap_bounds_stop_shingle_blowup(spark, monkeypatch):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     monkeypatch.setattr(dedup, "SHINGLE_DF_CAP", 5)
-    capped = ngram_jaccard_pairs(docs, threshold=0.3)
+    monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.3)
+    capped = ngram_jaccard_pairs(docs)
     got = {(r["doc1"], r["doc2"]) for r in capped.collect()}
     assert (100, 101) in got, got  # rare-shingle near-dup survives
     # no pair among the 40 boilerplate-only docs (40*39/2 = 780 would

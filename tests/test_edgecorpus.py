@@ -39,6 +39,7 @@ from tests.test_pairs import PKG
 # - doc 81: "x a x a" — adjacent repeats of merge #1
 # - docs 90, 91: share the 8-token span "s1 .. s8" (doc 90 holds the
 #   global-first occurrence; doc 91 loses 8 tokens)
+# - doc 95: one token
 _DOCS = (
     [(1, "", "bulk"), (2, "   ", "bulk")]
     + [(2 + i, "x a", "bulk") for i in range(1, 11)]
@@ -53,6 +54,7 @@ _DOCS = (
         (81, "x a x a", "rep"),
         (90, "s1 s2 s3 s4 s5 s6 s7 s8 taila", "span"),
         (91, "pre s1 s2 s3 s4 s5 s6 s7 s8", "span"),
+        (95, "solo", "one"),
     ]
 )
 
@@ -234,10 +236,9 @@ def test_vertical_tab_tokenizes_alike(spark, vt_dir, name):
 _LETTER_SPLIT = re.compile(r"string_split_regex\([^']*'\[\^\\p\{L\}\]\+'\)")
 
 
-def _whitespace_offenders(tree: ast.Module) -> list[tuple[int, str]]:
-    """(line, what) for each whitespace regex, SQL split or whitespace
-    ``F.split`` in ``tree``; docstrings are prose and do not count."""
-    docs = {
+def _docstrings(tree: ast.Module) -> set[int]:
+    """ids of the docstring nodes in ``tree``: prose, not code."""
+    return {
         id(n.body[0].value)
         for n in ast.walk(tree)
         if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
@@ -245,6 +246,12 @@ def _whitespace_offenders(tree: ast.Module) -> list[tuple[int, str]]:
         and isinstance(n.body[0], ast.Expr)
         and isinstance(n.body[0].value, ast.Constant)
     }
+
+
+def _whitespace_offenders(tree: ast.Module) -> list[tuple[int, str]]:
+    """(line, what) for each whitespace regex, SQL split or whitespace
+    ``F.split`` in ``tree``; docstrings do not count."""
+    docs = _docstrings(tree)
     found = []
     for n in ast.walk(tree):
         if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs:
@@ -284,6 +291,136 @@ def test_one_whitespace_tokenizer():
     assert offenders == []
     registry = _whitespace_offenders(ast.parse((PKG / "registry.py").read_text()))
     assert {what for _, what in registry} == {"whitespace regex", "string_split_regex", "F.split"}
+
+
+def _positions(rows):
+    """doc -> its tokens in position order (the engines number
+    positions from different bases; only their order is shared)."""
+    out = {}
+    for doc, _, tok in sorted(rows):
+        out.setdefault(doc, []).append(tok)
+    return out
+
+
+def _twins():
+    """name -> (Spark half over a documents frame, SQL half over the
+    ``documents`` view, row normalizer) for each shared pipeline stage."""
+    from map_reduce_lite_spark.ops import dedup, pipeline, snapshot, text
+    from map_reduce_lite_spark.registry import sql_token_positions, token_positions
+
+    def collisions(d):
+        bands = dedup.minhash_band_sigs(d)
+        return dedup.band_collisions(bands.filter(F.col("doc") % 2 == 0), bands)
+
+    def delta(carry):
+        def run(d):
+            return snapshot.snapshot_diff(*snapshot._derived_snapshots(d), carry_cols=carry)
+
+        sql = f"WITH {snapshot.sql_snapshot_delta(carry)} SELECT * FROM diff"
+        return run, sql, sorted
+
+    flags = ("doc_id", "source", "n_tokens", "q_ok", "l_ok")
+    return {
+        "token_positions": (
+            lambda d: token_positions(d).select("doc", "pos", "token"),
+            "SELECT doc, pos, token FROM "
+            f"({sql_token_positions('documents', 'text', 'doc_id AS doc')})",
+            _positions,
+        ),
+        "shingles": (dedup.shingles, dedup.sql_shingles("documents"), sorted),
+        "shingle_overlap": (
+            lambda d: dedup._shingle_overlap(d).select("doc1", "doc2", "n_inter", "n1", "n2"),
+            dedup.sql_shingle_overlap("documents"),
+            sorted,
+        ),
+        "ngram_jaccard_pairs": (
+            dedup.ngram_jaccard_pairs,
+            dedup.sql_ngram_jaccard_pairs("documents"),
+            sorted,
+        ),
+        "minhash_bands": (dedup.minhash_band_sigs, dedup.sql_minhash_bands("documents"), sorted),
+        "band_collisions": (
+            collisions,
+            f"WITH b AS ({dedup.sql_minhash_bands('documents')}), "
+            "dl AS (SELECT * FROM b WHERE doc % 2 = 0) "
+            + dedup.sql_band_collisions("dl", "b"),
+            sorted,
+        ),
+        "snapshot_delta": delta(()),
+        "snapshot_delta_carry": delta(("source",)),
+        "lang_argmax": (
+            lambda d: d.select("doc_id", *text.lang_hits()).select("doc_id", text.lang_argmax()),
+            f"SELECT doc_id, {text.sql_lang_argmax()} FROM "
+            f"(SELECT doc_id, {text.sql_lang_hits()} FROM documents)",
+            sorted,
+        ),
+        "quality_lang_flags": (
+            lambda d: pipeline.quality_lang_flags(d).select(*flags),
+            f"SELECT {', '.join(flags)} FROM ({pipeline.sql_quality_lang_flags('documents')})",
+            sorted,
+        ),
+    }
+
+
+@pytest.mark.parametrize("corpus", ["edge", "vt"])
+@pytest.mark.parametrize("twin", sorted(_twins()))
+def test_stage_twin_parity(spark, edge_dir, vt_dir, corpus, twin):
+    """Each shared document-pipeline stage gives the same rows in its
+    Spark half and its SQL half, on the edge corpus (empty,
+    whitespace-only, one- and two-token docs) and the vertical-tab
+    corpus."""
+    sf_dir = {"edge": edge_dir, "vt": vt_dir}[corpus]
+    run, sql, norm = _twins()[twin]
+    spark_rows = [tuple(r) for r in run(spark.read.parquet(f"{sf_dir}/documents.parquet")).collect()]
+    duck_rows = _documents_duck(sf_dir).execute(sql).fetchall()
+    assert spark_rows, f"{twin}: vacuous on the {corpus} corpus"
+    assert norm(spark_rows) == norm(duck_rows)
+
+
+# Each shared stage's SQL spelling and the module whose twin emits it:
+# no other module may spell it.
+_STAGE_SPELLINGS = {
+    "generate_series(1, len(": "registry.py",
+    "lead(token, 2) OVER": "ops/dedup.py",
+    "HAVING COUNT(*) <=": "ops/dedup.py",
+    "% 17 <> 3": "ops/snapshot.py",
+    "THEN 'und'": "ops/text.py",
+}
+
+
+def _sql_strings(tree: ast.Module) -> list[str]:
+    """Non-docstring string constants of ``tree``, f-string parts included."""
+    docs = _docstrings(tree)
+    return [
+        n.value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs
+    ]
+
+
+def test_one_twin_per_stage():
+    """Token positions, shingles, the DF-capped shingle overlap, the
+    snapshot delta and the stopword argmax each have one SQL spelling:
+    the twin's home module is the only one that writes it, and the twin
+    emits it (the shingle windows are generated from SHINGLE_SIZE)."""
+    from map_reduce_lite_spark.ops import dedup, snapshot, text
+    from map_reduce_lite_spark.registry import sql_token_positions
+
+    emitted = {
+        "generate_series(1, len(": sql_token_positions("documents", "text", "doc_id"),
+        "lead(token, 2) OVER": dedup.sql_shingles("documents"),
+        "HAVING COUNT(*) <=": dedup.sql_shingle_overlap("documents"),
+        "% 17 <> 3": snapshot.sql_snapshot_delta(),
+        "THEN 'und'": text.sql_lang_argmax(),
+    }
+    strings = {
+        str(p.relative_to(PKG)): _sql_strings(ast.parse(p.read_text()))
+        for p in sorted(PKG.rglob("*.py"))
+    }
+    for spelling, home in _STAGE_SPELLINGS.items():
+        spellers = {m for m, vs in strings.items() if any(spelling in v for v in vs)}
+        assert spellers <= {home}, (spelling, sorted(spellers))
+        assert spelling in emitted[spelling], spelling
 
 
 @pytest.mark.parametrize("name", _EDGE_QUERIES)

@@ -33,10 +33,11 @@ jobs when the mark is made, inside the builder, and only the rest waits
 for the action (measured at sf0.001 on 4 cores: with a mark on each
 round's label table the ``graph_label_propagation`` builder ran 17 of
 the query's 19 jobs with AQE on, 2 of 3 with it off; with its one
-remaining mark, on the edge list, it runs 3 of 13 with AQE on;
-tests/test_lineage.py pins that the builder runs jobs). So a lazy
-mark over a shuffle saves a job only where AQE is off, and each call
-site picks eager or lazy by measurement on the session it runs on.
+remaining mark, on the forward edge list, and the tables' schemas read
+from their footers, it runs 3 of 14 with AQE on; tests/test_lineage.py
+pins that the builder runs jobs). So a lazy mark over a shuffle saves
+a job only where AQE is off, and each call site picks eager or lazy by
+measurement on the session it runs on.
 """
 
 from __future__ import annotations

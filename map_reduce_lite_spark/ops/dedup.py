@@ -52,7 +52,7 @@ from map_reduce_lite_spark.registry import (
     token_positions,
     ws_tokens,
 )
-from map_reduce_lite_spark.relational.tables import load_table
+from map_reduce_lite_spark.relational.tables import load_table, read_parquet
 
 # MinHash parameters (bands × rows-per-band = num hashes). The module
 # defaults are the DEMO configuration pinned by the DuckDB oracle —
@@ -827,7 +827,7 @@ def build_near_dup_pairs(
     since a salt's dropped pairs would become silent cross-split
     leakage in every downstream consumer of the artifact)."""
     embedding_near_dup_pairs(corpus, method=method).write.mode("overwrite").parquet(path)
-    return corpus.sparkSession.read.parquet(path)
+    return read_parquet(corpus.sparkSession, path)
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,17 +31,19 @@ from map_reduce_lite_spark.lineage import materialize
 # Truncation cadence of pagerank (see its docstring for the measurements).
 PR_CHECKPOINT_EVERY = 20
 
-# Edge sets of at most this many rows finish on the driver in numpy
-# (``_local_edges``): label propagation runs all of its rounds there, and
-# connected components its tail. Sized from driver memory per edge: the
-# driver JVM holds the collected Arrow batches (two 8-byte ids per edge)
-# and the Python driver the table plus at most ~8 int64 working arrays
-# of edge length (index pairs, gathered labels, sort order, run keys),
-# so ~128 B per edge: 2^20 edges is ~16 MB in the JVM and ~128 MB in
-# Python. Every graph this repo runs is far below it (2,452-3,853
-# co-purchase edges at sf0.001-sf0.1, a few hundred near-dup pairs);
-# a larger graph keeps the distributed rounds, the only branch that
-# runs on graphs larger than driver memory.
+# Edge sets of at most this many undirected edges finish on the driver
+# in numpy (``_local_edges``): label propagation runs all of its rounds
+# there, and connected components its tail. Both pull each edge once
+# and symmetrize it on the driver. Sized from driver memory per edge:
+# the driver JVM holds the collected Arrow batches (two 8-byte ids per
+# edge) and the Python driver the table plus at most ~8 int64 working
+# arrays over both directions of every edge (index pairs, gathered
+# labels, sort order, run keys), so ~256 B per edge: 2^20 edges is
+# ~16 MB in the JVM and ~256 MB in Python. Every graph this repo runs
+# is far below it (2,452-3,853 co-purchase edges at sf0.001-sf0.1, a
+# few hundred near-dup pairs); a larger graph keeps the distributed
+# rounds, the only branch that runs on graphs larger than driver
+# memory.
 LOCAL_GRAPH_EDGES = 1 << 20
 
 
@@ -513,8 +515,10 @@ def build_copurchase_edges(
     ``kcore_parts`` — reads the artifact, and a parquet file survives
     executor loss. Staged-vs-inline parity for all three consumers is
     pinned in tests/test_r11_ops.py."""
+    from map_reduce_lite_spark.relational.tables import read_parquet
+
     copurchase_edges(li, min_support).write.mode("overwrite").parquet(path)
-    return li.sparkSession.read.parquet(path)
+    return read_parquet(li.sparkSession, path)
 
 
 def orient_edges(und: DataFrame) -> DataFrame:
@@ -668,10 +672,10 @@ def label_propagation_parts(
     edge list, which every round reads, is materialized. The per-node
     argmax is an aggregate (max over (cnt, -lbl) structs — r13), so
     no window at any degree distribution. An edge list of at most
-    LOCAL_GRAPH_EDGES rows (every co-purchase graph at sf0.001-sf0.1)
+    LOCAL_GRAPH_EDGES edges (every co-purchase graph at sf0.001-sf0.1)
     runs its rounds on the driver instead (``_lpa_local``): the
     distributed rounds cost 14 jobs at sf0.001, the driver branch's
-    whole query 6."""
+    whole query 5."""
     from map_reduce_lite_spark.relational.tables import load_table
 
     if edges is None:
@@ -679,16 +683,15 @@ def label_propagation_parts(
             "l_orderkey", "l_partkey"
         )
         edges = copurchase_edges(li)
-    fwd = edges.select("u", "v")
     # the one lineage cut: every round reads the edge list. Lazy, but
     # under AQE its shuffle stages run as jobs in the builder
-    # (lineage.py; pinned in tests/test_lineage.py).
-    e = materialize(
-        fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        eager=False,
-    )
-    if (t := _local_edges(e)) is not None:
-        return _lpa_local(e, t)
+    # (lineage.py; pinned in tests/test_lineage.py). The mark is on the
+    # forward edges, so the driver branch pulls each edge once and the
+    # distributed one still builds them once for both directions.
+    fwd = materialize(edges.select("u", "v"), eager=False)
+    if (t := _local_edges(fwd)) is not None:
+        return _lpa_local(fwd, t)
+    e = fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
     labels = e.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -737,13 +740,15 @@ def _heads(*keys: np.ndarray) -> np.ndarray:
     return head
 
 
-def _lpa_local(e: DataFrame, t) -> DataFrame:
+def _lpa_local(fwd: DataFrame, t) -> DataFrame:
     """``label_propagation_parts`` on the driver: the same LPA_ROUNDS
-    synchronous rounds over the symmetric edge list ``e``, pulled as
-    the Arrow table ``t``, with the same count argmax and tie rule
-    (most neighbors, then the smallest label), output names and types."""
-    u, v = (t.column(c).to_numpy() for c in ("u", "v"))
-    node = np.unique(u)  # e is symmetric: every node is some edge's u
+    synchronous rounds over the forward edge list ``fwd``, pulled as
+    the Arrow table ``t`` and made symmetric here, with the same count
+    argmax and tie rule (most neighbors, then the smallest label),
+    output names and types."""
+    a, b = (t.column(c).to_numpy() for c in ("u", "v"))
+    u, v = np.r_[a, b], np.r_[b, a]
+    node = np.unique(u)  # u, v is symmetric: every node is some edge's u
     iu, iv = np.searchsorted(node, u), np.searchsorted(node, v)
     lbl = node
     for _ in range(LPA_ROUNDS):
@@ -759,14 +764,14 @@ def _lpa_local(e: DataFrame, t) -> DataFrame:
         lbl = rl[o[_heads(ru[o])]]
     # nodes are in id order, so a label's first node is its min_part
     community, first, members = np.unique(lbl, return_index=True, return_counts=True)
-    ids = e.schema["u"].dataType
+    ids = fwd.schema["u"].dataType
     schema = (
         StructType()
         .add("community", ids)
         .add("n_members", LongType())
         .add("min_part", ids)
     )
-    return _local_frame(e.sparkSession, schema, community, members, node[first])
+    return _local_frame(fwd.sparkSession, schema, community, members, node[first])
 
 
 def _lpa_sql() -> str:

@@ -30,24 +30,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from map_reduce_lite_spark.registry import WS_RUN, Query, md5_60bit, mrl_lower, sql_md5_60bit
 from map_reduce_lite_spark.relational.tables import load_table
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

@@ -45,7 +45,7 @@ from map_reduce_lite_spark.ops.pairs import (
     split_hot_buckets,
 )
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit, sql_ws_count, ws_count
-from map_reduce_lite_spark.relational.tables import load_table
+from map_reduce_lite_spark.relational.tables import load_table, read_parquet
 
 N_QUERY_VECS = 8  # vec_id < 8 form the query set in the oracle-checked demo
 TOP_K = 5
@@ -656,7 +656,7 @@ def build_knn_edges(emb: DataFrame, path: str) -> DataFrame:
     independent (spark, sf_dir) calls); parity between the staged and
     inline forms is pinned by test_knn_staged_edges_parity."""
     knn_topk_edges(emb).write.mode("overwrite").parquet(path)
-    return emb.sparkSession.read.parquet(path)
+    return read_parquet(emb.sparkSession, path)
 
 
 def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

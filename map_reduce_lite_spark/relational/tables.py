@@ -1,14 +1,26 @@
 """Parquet table loading for the TPC-H-ish synthetic schema.
 
-At 100 TB these reads are the dominant cost; everything here is a bare
-``spark.read.parquet`` so Catalyst's column pruning and predicate pushdown
-reach the scan (check ``.explain``: ReadSchema / PushedFilters). Never
-cache or materialize here — operators decide what to persist.
+At 100 TB these reads are the dominant cost. Every batch parquet read
+in the engine goes through ``read_parquet`` here, which declares the
+schema it read from the parquet footer on the driver
+(``spark.read.schema(s).parquet``). Spark's own inference would run a
+Spark job per read just to open that footer; the reference's workers
+read their input with no such pre-pass either. Catalyst's column
+pruning and predicate pushdown still reach the scan (check
+``.explain``: ReadSchema / PushedFilters). Never cache or materialize
+here — operators decide what to persist.
 """
 
 from __future__ import annotations
 
+import json
+from urllib.parse import urlparse
+
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -22,6 +34,41 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
+
+
+# the footer key under which Spark writes a file's Spark schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _schema(path: str) -> StructType:
+    """The schema Spark infers for the parquet file or directory at
+    ``path``, read from its footer on the driver instead of by a job."""
+    arrow = ds.dataset(path, format="parquet").schema
+    spark_json = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        # A Spark-written footer carries its Spark schema, and inference
+        # takes it as is. Arrow would read its INT96 timestamps as ns.
+        return StructType.fromJson(json.loads(spark_json))
+    # TIMESTAMP(NANOS) reads as bigint under nanosAsLong (see load_table)
+    arrow = pa.schema(
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        else f
+        for f in arrow
+    )
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet file or directory at ``path``, read under its footer
+    schema. Spark makes every declared column nullable, as inference
+    does, so the frame's schema is the inferred one."""
+    if urlparse(path).scheme not in ("", "file"):
+        # pyarrow has no s3a:// filesystem, and a store's credentials
+        # live in the Hadoop conf: Spark's inference is the one read
+        # that works there.
+        return spark.read.parquet(path)
+    return spark.read.schema(_schema(path)).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -48,7 +95,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # reader rejects; read nanos as long and convert with exact
         # integer division (float division is lossy at int64 magnitudes).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if dict(df.dtypes).get("ts") == "timestamp_ntz":
@@ -57,7 +104,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # UTC, so the cast is value-preserving and epoch_ms oracles match.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:

@@ -36,6 +36,7 @@ def streaming_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     transformWithStateInPandas (ListState buffer + ValueState sum +
     event-time timers)."""
     # imported here: windows registers this builder at import time
+    from map_reduce_lite_spark.relational.tables import read_parquet
     from map_reduce_lite_spark.streaming.windows import (
         WATERMARK,
         _closed_world_cutoff,
@@ -46,7 +47,7 @@ def streaming_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     purchase = F.col("event_type") == "purchase"
     cutoff = _closed_world_cutoff(
-        spark.read.parquet(_stage_events(spark, sf_dir)).filter(purchase),
+        read_parquet(spark, _stage_events(spark, sf_dir)).filter(purchase),
         timedelta(hours=2, seconds=1),  # watermark 2h + 1s
     )
     stream = (

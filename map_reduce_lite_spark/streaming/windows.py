@@ -35,6 +35,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.relational.queries import SESSION_GAP_MS
+from map_reduce_lite_spark.relational.tables import load_table, read_parquet
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -379,8 +380,6 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
     the write goes to a unique temp dir atomically renamed into place so
     concurrent runs can't interleave partial output. Each copy records
     its source path in ``_SOURCE`` (Spark skips ``_``-files)."""
-    from map_reduce_lite_spark.relational.tables import load_table
-
     src = os.path.join(sf_dir, "events.parquet")
     tag = re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
     staged = f"{STAGE_PREFIX}{tag}_{_fingerprint(src)}"
@@ -451,7 +450,7 @@ def streaming_purchase_view_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter so both sides' watermarks track the full event stream and
     advance identically."""
     cutoff = _closed_world_cutoff(
-        spark.read.parquet(_stage_events(spark, sf_dir)),
+        read_parquet(spark, _stage_events(spark, sf_dir)),
         timedelta(hours=3, seconds=1),  # watermark 2h + lag 1h + 1s
     )
     p = (
@@ -573,7 +572,7 @@ def streaming_serving_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.desc("_v")
         )
         served = (
-            spark.read.parquet(serving_dir)
+            read_parquet(spark, serving_dir)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("resolution", "bucket_start", "event_type", "n_events", "sum_value")
@@ -665,7 +664,6 @@ def streaming_enrich_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch against the (broadcast) customer dimension — zero
     stream-side state; events.user_id ⊆ customer.c_custkey in the test
     data so the oracle is a plain join."""
-    from map_reduce_lite_spark.relational.tables import load_table
     from map_reduce_lite_spark.streaming.dedup import enrich_stream
 
     stream = events(spark, sf_dir).filter(F.col("event_type") == "purchase")
@@ -716,7 +714,7 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("win.start").alias("hour_start"), "approx_users")
     )
     exact = (
-        spark.read.parquet(_stage_events(spark, sf_dir))
+        read_parquet(spark, _stage_events(spark, sf_dir))
         .groupBy(F.date_trunc("hour", "ts").alias("hour_start"))
         .agg(
             F.countDistinct("user_id").alias("exact_users"),

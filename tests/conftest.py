@@ -23,6 +23,22 @@ def spark():
     spark.stop()
 
 
+def count_jobs(spark, run):
+    """(result of ``run()``, number of Spark jobs it ran), counted by a
+    job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted by a test")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _unset_ckdir(sc) -> None:
     # SparkContext has no public unset; assign None to the Scala var
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))

@@ -10,14 +10,13 @@ keep its job count down: that is what it is for.
 from __future__ import annotations
 
 import random
-import uuid
 from collections import Counter
 from itertools import combinations
 
 import pytest
 
 from map_reduce_lite_spark.ops import graph
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, count_jobs
 
 # A gate every edge set is above (-1, not 0: an empty edge set has at
 # most 0 rows) and one every edge set here is below (a limit is an int).
@@ -46,19 +45,6 @@ def _shuffled_path(n, seed=7):
 def _random_graph(seed, nodes, edges):
     rng = random.Random(seed)
     return [(rng.randrange(nodes), rng.randrange(nodes)) for _ in range(edges)]
-
-
-def _jobs(spark, run):
-    """(result of ``run()``, number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"graph-local-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "graph driver branch")
-    try:
-        out = run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # --------------------------------------------------------------------------
@@ -102,16 +88,16 @@ def test_lpa_branches_agree_on_the_registered_query(spark, monkeypatch):
     assert _assert_same(monkeypatch, lambda: graph.label_propagation_parts(spark, SF_SMALL))
 
 
-def test_lpa_query_runs_at_most_six_jobs(spark):
+def test_lpa_query_runs_at_most_five_jobs(spark):
     """Build plus count of ``graph_label_propagation`` at SF_SMALL: the
-    schema inference, the co-purchase edge build, one pull of the edge
-    set and the count. Its distributed rounds ran 14."""
+    co-purchase edge build, one pull of its forward edges and the
+    count. Its distributed rounds ran 14."""
     import __spark_entry__ as e
 
     build = e.queries()["graph_label_propagation"]
-    n, jobs = _jobs(spark, lambda: build(spark, SF_SMALL).count())
+    n, jobs = count_jobs(spark, lambda: build(spark, SF_SMALL).count())
     assert n > 0
-    assert jobs <= 6, jobs
+    assert jobs <= 5, jobs
 
 
 # --------------------------------------------------------------------------
@@ -195,7 +181,7 @@ def test_cc_consumer_loop_runs_at_most_two_jobs(spark, monkeypatch, name):
     real = graph._cc_loop
 
     def counted(edges, max_iter):
-        comp, jobs = _jobs(spark, lambda: real(edges, max_iter))
+        comp, jobs = count_jobs(spark, lambda: real(edges, max_iter))
         loops.append(jobs)
         return comp
 

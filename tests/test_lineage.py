@@ -12,7 +12,7 @@ from pathlib import Path
 
 import pytest
 
-from tests.conftest import SF_SMALL, assert_reliable_written
+from tests.conftest import SF_SMALL, assert_reliable_written, count_jobs
 
 PKG = Path(__file__).resolve().parent.parent / "map_reduce_lite_spark"
 
@@ -86,20 +86,11 @@ def test_lazy_marks_run_jobs_in_the_lpa_builder(spark, monkeypatch):
     already runs jobs, because each mark executes the shuffle stages
     below it when it is made (lineage.py). The distributed rounds are
     forced: the driver branch's pull of the edge set is an action."""
-    import uuid
-
     import __spark_entry__ as e
     from map_reduce_lite_spark.ops import graph
 
     monkeypatch.setattr(graph, "LOCAL_GRAPH_EDGES", 0)  # distributed rounds
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    sc = spark.sparkContext
-    group = f"lpa-build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "graph_label_propagation builder")
-    try:
-        e.queries()["graph_label_propagation"](spark, SF_SMALL)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+    _, jobs = count_jobs(spark, lambda: e.queries()["graph_label_propagation"](spark, SF_SMALL))
+    assert jobs >= 1

@@ -187,6 +187,7 @@ def main() -> None:
     assert len(dirs) >= 2, "need >= 2 scale dirs"
     from pyspark.sql import functions as F
 
+    from map_reduce_lite_spark.relational.tables import load_table
     from map_reduce_lite_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
@@ -195,7 +196,7 @@ def main() -> None:
     sizes: dict[str, int] = {}
     times: dict[str, dict[str, float]] = {q: {} for q in queries}
     for d in dirs:
-        sizes[d] = spark.read.parquet(f"{d}/{size_table}.parquet").count()
+        sizes[d] = load_table(spark, d, size_table).count()
         for name in queries:  # warm pass per scale
             qs[name](spark, d).count()
         for name in queries:

@@ -17,7 +17,6 @@ import json
 from urllib.parse import urlparse
 
 import pyarrow as pa
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
@@ -43,6 +42,10 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 def _schema(path: str) -> StructType:
     """The schema Spark infers for the parquet file or directory at
     ``path``, read from its footer on the driver instead of by a job."""
+    # imported here: the import takes ~0.3 s, which every process that
+    # imports the engine would pay otherwise
+    import pyarrow.dataset as ds
+
     arrow = ds.dataset(path, format="parquet").schema
     spark_json = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
     if spark_json is not None:

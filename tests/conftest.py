@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -26,8 +27,6 @@ def spark():
 def count_jobs(spark, run):
     """(result of ``run()``, number of Spark jobs it ran), counted by a
     job group of its own."""
-    import uuid
-
     sc = spark.sparkContext
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "counted by a test")

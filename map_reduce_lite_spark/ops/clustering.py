@@ -60,7 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
-from map_reduce_lite_spark.ops.pairs import salted_split
+from map_reduce_lite_spark.ops.pairs import salted_split, sql_salted_split
 from map_reduce_lite_spark.ops.similarity import (
     EMB_DIM,
     _fold,
@@ -68,7 +68,7 @@ from map_reduce_lite_spark.ops.similarity import (
     cosine_verify,
     sim_e9,
 )
-from map_reduce_lite_spark.registry import Query, sql_md5_60bit
+from map_reduce_lite_spark.registry import Query
 from map_reduce_lite_spark.relational.tables import load_table
 
 QUANT = 1_000_000.0  # fixed-point scale: q = floor(x * 1e6)
@@ -359,16 +359,9 @@ def _semdedup_pairs(emb: DataFrame, assign: DataFrame) -> DataFrame:
 
 
 def _sql_subsplit(cap: int) -> str:
-    """CTE fragments replaying _semdedup_pairs' salted split: sizes →
-    subbed."""
-    return f"""sizes AS (
-  SELECT cluster, (COUNT(*) + {cap - 1}) // {cap} AS n_sub
-  FROM final GROUP BY cluster
-), subbed AS (
-  SELECT f.vec_id, f.cluster,
-         ({sql_md5_60bit('CAST(f.vec_id AS VARCHAR)')} % s.n_sub) AS sub
-  FROM final f JOIN sizes s ON s.cluster = f.cluster
-)"""
+    """The CTE ``subbed``, replaying _semdedup_pairs' salted split."""
+    salt = "CAST(vec_id AS VARCHAR)"
+    return f"subbed AS ({sql_salted_split('final', ['cluster'], cap, salt)}\n)"
 
 
 def _semdedup_sql(cap: int = SEMDEDUP_CLUSTER_CAP) -> str:

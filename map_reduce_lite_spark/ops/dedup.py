@@ -36,11 +36,14 @@ from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.pairs import (
     BAND_KEYS,
     band_salt,
-    band_self_join,
     bucket_over_cap,
+    cooccur,
     refine_sizes,
     refined_pairs,
     split_hot_buckets,
+    sql_band_salt,
+    sql_cooccur,
+    sql_salted_split,
     star_only_ids,
 )
 from map_reduce_lite_spark.registry import (
@@ -148,26 +151,15 @@ GROUP BY 1
 def _shingle_overlap(docs: DataFrame) -> DataFrame:
     """(doc1, doc2, n_inter, n1, n2) for every doc pair doc1 < doc2
     sharing a shingle: |∩| from the DF-capped inverted-index self-join
-    (shuffle by shingle, integer pair counts), n1/n2 the FULL shingle
-    set sizes. Shingles in more than SHINGLE_DF_CAP documents (read at
-    call time) are dropped from the index before the self-join. Matches
-    sql_shingle_overlap."""
+    (``pairs.cooccur`` keyed by shingle: shuffle by shingle, integer
+    pair counts), n1/n2 the FULL shingle set sizes. Shingles in more
+    than SHINGLE_DF_CAP documents (read at call time, the join's
+    ``key_cap``) are dropped from the index before the self-join.
+    Matches sql_shingle_overlap."""
     sh = shingles(docs).cache()
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-    # posting-list bound: the self-join only ever sees shingles whose
-    # document frequency is ≤ the cap
-    capped = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= SHINGLE_DF_CAP)
-        .select("shingle")
-        .join(sh, "shingle")
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc1"), F.col("b.doc").alias("doc2"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    inter = cooccur(sh, "shingle", "doc", key_cap=SHINGLE_DF_CAP).select(
+        F.col("m1").alias("doc1"), F.col("m2").alias("doc2"), F.col("n_shared").alias("n_inter")
     )
     sz1 = sizes.select(F.col("doc").alias("doc1"), F.col("n_shingles").alias("n1"))
     sz2 = sizes.select(F.col("doc").alias("doc2"), F.col("n_shingles").alias("n2"))
@@ -180,15 +172,9 @@ def sql_shingle_overlap(src: str) -> str:
     return f"""WITH sh AS ({sql_shingles(src)}
   ), sizes AS (
     SELECT doc, COUNT(*) AS n FROM sh GROUP BY doc
-  ), capped AS (
-    SELECT sh.doc, sh.shingle FROM sh
-    JOIN (SELECT shingle FROM sh GROUP BY shingle
-          HAVING COUNT(*) <= {SHINGLE_DF_CAP}) keep
-      ON keep.shingle = sh.shingle
   ), inter AS (
-    SELECT a.doc AS doc1, b.doc AS doc2, COUNT(*) AS n_inter
-    FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc < b.doc
-    GROUP BY 1, 2
+    SELECT m1 AS doc1, m2 AS doc2, n_shared AS n_inter
+    FROM ({sql_cooccur("sh", "shingle", "doc", key_cap=SHINGLE_DF_CAP)})
   )
   SELECT doc1, doc2, n_inter, s1.n AS n1, s2.n AS n2
   FROM inter JOIN sizes s1 ON s1.doc = doc1 JOIN sizes s2 ON s2.doc = doc2"""
@@ -421,9 +407,9 @@ def minhash_lsh_pairs(
     # aggregation above is the dominant cost, and Spark plans each join
     # side independently (no ReusedExchange here) — without this the
     # whole signature pipeline runs twice (measured ~2x cold, ~15% warm)
-    banded = materialize(banded.withColumnRenamed("doc", "vec_id"), eager=True)
-    return band_self_join(banded, ["band", "sig"]).select(
-        F.col("keep_id").alias("doc1"), F.col("dup_id").alias("doc2")
+    banded = materialize(banded, eager=True)
+    return cooccur(banded, ["band", "sig"], "doc").select(
+        F.col("m1").alias("doc1"), F.col("m2").alias("doc2")
     )
 
 
@@ -452,9 +438,7 @@ def _minhash_sql(bands: int = MINHASH_BANDS, rows: int = MINHASH_ROWS) -> str:
     return f"""
 WITH bands AS ({sql_minhash_bands('documents', bands, rows)}
 )
-SELECT DISTINCT a.doc AS doc1, b.doc AS doc2
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.sig = b.sig AND a.doc < b.doc
+SELECT m1 AS doc1, m2 AS doc2 FROM ({sql_cooccur("bands", ["band", "sig"], "doc")})
 """
 
 
@@ -582,27 +566,18 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     sp, _ = split_hot_buckets(
         bands, ["band", "chunk"], SIMHASH_BUCKET_CAP, band_salt("shb", "band", "doc")
     )
-    a, b = sp.alias("a"), sp.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.sub") == F.col("b.sub"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+    # each doc has one simhash, so grouping on (doc1, doc2, s1, s2) is
+    # the multi-band dedup; the Hamming filter reads only group keys and
+    # is pushed below the aggregate, into the join
+    return (
+        cooccur(sp, ["band", "chunk", "sub"], "doc", payload=("simhash",))
         .select(
-            F.col("a.doc").alias("doc1"),
-            F.col("b.doc").alias("doc2"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").cast("int").alias("hamming"),
+            F.col("m1").alias("doc1"),
+            F.col("m2").alias("doc2"),
+            F.expr("bit_count(simhash_1 ^ simhash_2)").cast("int").alias("hamming"),
         )
-        # hamming BEFORE distinct: the multi-band dedup then runs over
-        # near-dup rows only, not every band-collision candidate (the
-        # filter trivially commutes with DISTINCT on these columns)
         .filter(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
     )
-    return cands
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -611,9 +586,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_sql(cap: int = SIMHASH_BUCKET_CAP) -> str:
-    salt = sql_md5_60bit(
-        "'shb|' || CAST(b.band AS VARCHAR) || '|' || CAST(b.doc AS VARCHAR)"
-    )
+    salt = sql_band_salt("shb", "band", "doc")
     return rf"""
 WITH toks AS (
   SELECT DISTINCT doc_id AS doc, t.tok AS token
@@ -634,20 +607,12 @@ WITH toks AS (
   SELECT doc, simhash, band.k AS band,
          (simhash >> (band.k * {SIMHASH_BAND_BITS})) & {SIMHASH_BAND_MASK} AS chunk
   FROM fps, LATERAL unnest(generate_series(0, {SIMHASH_BANDS - 1})) AS band(k)
-), sizes AS (
-  SELECT band, chunk, (COUNT(*) + {cap - 1}) // {cap} AS n_sub
-  FROM bands GROUP BY 1, 2
-), sp AS (
-  SELECT b.doc, b.simhash, b.band, b.chunk,
-         ({salt} % s.n_sub) AS sub
-  FROM bands b JOIN sizes s ON s.band = b.band AND s.chunk = b.chunk
+), sp AS ({sql_salted_split("bands", ["band", "chunk"], cap, salt)}
 )
 SELECT doc1, doc2, hamming FROM (
-  SELECT DISTINCT a.doc AS doc1, b.doc AS doc2,
-         CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-  FROM sp a JOIN sp b
-    ON a.band = b.band AND a.chunk = b.chunk AND a.sub = b.sub
-   AND a.doc < b.doc
+  SELECT m1 AS doc1, m2 AS doc2,
+         CAST(bit_count(xor(simhash_1, simhash_2)) AS INT) AS hamming
+  FROM ({sql_cooccur("sp", ["band", "chunk", "sub"], "doc", payload=("simhash",))})
 )
 WHERE hamming <= {HAMMING_MAX}
 """
@@ -795,7 +760,9 @@ def embedding_near_dup_pairs(
         if hot and method == "lsh_refine":
             ids = refined_pairs(_refine_sizes(corpus, bands, cap), cap)
         else:
-            ids = band_self_join(sp, [*BAND_KEYS, "sub"])
+            ids = cooccur(sp, [*BAND_KEYS, "sub"], "vec_id").select(
+                F.col("m1").alias("keep_id"), F.col("m2").alias("dup_id")
+            )
         scored = cosine_verify(ids, corpus, "keep_id", "dup_id")
     else:
         raise ValueError(f"unknown method {method!r}")
@@ -876,11 +843,8 @@ def _embedding_lsh_sql() -> str:
     return f"""
 WITH {sql_capped_bands_chain(planes, LSH_N_BANDS, EMB_BUCKET_CAP, "emb")}
 , pairs AS (
-  SELECT DISTINCT a.vec_id AS keep_id, b.vec_id AS dup_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.sub = b.sub
-  WHERE a.vec_id < b.vec_id
+  SELECT m1 AS keep_id, m2 AS dup_id
+  FROM ({sql_cooccur("bands", [*BAND_KEYS, "sub"], "vec_id")})
 ), scored AS (
   SELECT p.keep_id, p.dup_id,
          {_sql_cos('ea.embedding', 'eb.embedding')} AS sim
@@ -931,11 +895,8 @@ def _components_reach_cte() -> str:
     return f"""
 WITH RECURSIVE {sql_capped_bands_chain(planes, LSH_N_BANDS, EMB_BUCKET_CAP, "emb")}
 , cands AS (
-  SELECT DISTINCT a.vec_id AS keep_id, b.vec_id AS dup_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.sub = b.sub
-  WHERE a.vec_id < b.vec_id
+  SELECT m1 AS keep_id, m2 AS dup_id
+  FROM ({sql_cooccur("bands", [*BAND_KEYS, "sub"], "vec_id")})
 ), scored AS (
   SELECT c.keep_id, c.dup_id,
          {_sql_cos('ea.embedding', 'eb.embedding')} AS sim

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType, StructType
 
 from map_reduce_lite_spark.lineage import materialize
+from map_reduce_lite_spark.ops.pairs import cooccur, sql_cooccur
 
 # Truncation cadence of pagerank (see its docstring for the measurements).
 PR_CHECKPOINT_EVERY = 20
@@ -476,28 +477,17 @@ def copurchase_edges(
     quadratic in the table) + one support-counting groupBy. The shared
     substrate of the whole co-purchase graph family — triangles, label
     propagation, k-core."""
-    a, b = li.alias("a"), li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= min_support)
-        .select("u", "v")
+    return cooccur(li, "l_orderkey", "l_partkey", min_count=min_support).select(
+        F.col("m1").alias("u"), F.col("m2").alias("v")
     )
 
 
 # The SQL twin of ``copurchase_edges``: the body of the forward edge CTE
 # that every co-purchase graph oracle opens with.
 COPURCHASE_EDGES_SQL = f"""
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
+  SELECT m1 AS u, m2 AS v FROM ({sql_cooccur(
+      "lineitem", "l_orderkey", "l_partkey", min_count=TRIANGLE_MIN_SUPPORT
+  )})
 """
 
 

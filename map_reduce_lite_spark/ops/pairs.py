@@ -1,26 +1,30 @@
-"""Candidate-pair blocking: the one Spark-side implementation of the
-bucketed pair generators' shared steps.
+"""Candidate-pair blocking: the one implementation, Spark and SQL, of
+the pair generators' shared steps.
 
-Every bucketed near-dup / k-NN family here is the same postings join
-(V-SMART-Join, VLDB 2012): rows keyed by a bucket (a simhash band
-chunk, an LSH band hash, a k-means cluster) self-join within their
-bucket to form candidate pairs, and a separate stage verifies each
-pair. A hot bucket makes that join quadratic in the bucket size, so
-an oversized bucket is split into ceil(size / cap) sub-buckets by a
-portable salted hash and pairs form only within a sub-bucket: work per
-bucket is bounded by cap², at the price of dropping the pairs that
-straddle two sub-buckets (property-pinned against the DuckDB twins,
-which replay the same split in SQL, in tests/test_capcorpus.py).
+Every pair generator here is the same postings join (V-SMART-Join,
+VLDB 2012). Its joining phase is ``cooccur`` (SQL twin
+``sql_cooccur``): rows keyed by a shared element (a shingle, an order,
+a document, a simhash band chunk, an LSH band hash) self-join within
+their key into id-ordered member pairs, counted per pair. The
+similarity phase stays with each caller: a Jaccard or containment
+ratio, a support threshold, a Hamming or cosine verify. A hot key
+makes the join quadratic in the key's size. ``key_cap`` drops such a
+key outright (a stop list); the salted split below instead cuts an
+oversized bucket into ceil(size / cap) sub-buckets by a portable
+salted hash, and pairs form only within a sub-bucket: work per bucket
+is bounded by cap², at the price of dropping the pairs that straddle
+two sub-buckets (property-pinned against the DuckDB twins, which
+replay the same split in SQL, in tests/test_capcorpus.py).
 
+- ``cooccur`` / ``sql_cooccur``: the joining phase.
 - ``bucket_over_cap``: the sizing probe, one scalar job.
-- ``salted_split``: the split itself, unconditional.
+- ``salted_split`` / ``sql_salted_split``: the split itself,
+  unconditional.
 - ``split_hot_buckets``: probe, then split or ``sub ≡ 0``.
-- ``band_self_join``: distinct id-ordered (keep_id, dup_id) pairs of a
-  bucketed id table.
 
-Each caller keeps its own salt string (``band_salt``) so the Spark and
-SQL splits stay bit-identical; the cosine verify lives next to the dot
-product in ops/similarity.py.
+Each caller keeps its own salt string (``band_salt`` /
+``sql_band_salt``) so the Spark and SQL splits stay bit-identical; the
+cosine verify lives next to the dot product in ops/similarity.py.
 
 The salted split is the throughput policy. The other, ADAPTIVE
 RE-BANDING, is for consumers that must not silently drop a detectable
@@ -64,13 +68,16 @@ ops/similarity.py, row-for-row pinned in tests/test_capcorpus.py.
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from map_reduce_lite_spark.registry import md5_60bit
+from map_reduce_lite_spark.registry import md5_60bit, sql_md5_60bit
 
 BAND_KEYS = ["band_id", "band_hash"]  # the bucket of an LSH band table
+_ENDS = (("a", 1), ("b", 2))  # the two sides of a pair: alias, column suffix
 
 
 def band_salt(prefix: str, band: str, member: str) -> Column:
@@ -79,6 +86,11 @@ def band_salt(prefix: str, band: str, member: str) -> Column:
     return F.concat_ws(
         "|", F.lit(prefix), F.col(band).cast("string"), F.col(member).cast("string")
     )
+
+
+def sql_band_salt(prefix: str, band: str, member: str) -> str:
+    """``band_salt`` as a SQL expression."""
+    return f"'{prefix}|' || CAST({band} AS VARCHAR) || '|' || CAST({member} AS VARCHAR)"
 
 
 def bucket_over_cap(rows: DataFrame, keys: list[str], cap: int) -> bool:
@@ -103,6 +115,15 @@ def salted_split(rows: DataFrame, keys: list[str], cap: int, salt: Column) -> Da
     )
 
 
+def sql_salted_split(src: str, keys: list[str], cap: int, salt: str) -> str:
+    """``salted_split`` of relation ``src`` as the body of a SELECT;
+    ``salt`` is a SQL expression over ``src``'s columns."""
+    on = ", ".join(keys)
+    return f"""SELECT *, ({sql_md5_60bit(salt)} % n_sub) AS sub
+  FROM {src} JOIN (SELECT {on}, (COUNT(*) + {cap - 1}) // {cap} AS n_sub
+                   FROM {src} GROUP BY {on}) USING ({on})"""
+
+
 def split_hot_buckets(
     rows: DataFrame, keys: list[str], cap: int, salt: Column
 ) -> tuple[DataFrame, bool]:
@@ -115,18 +136,74 @@ def split_hot_buckets(
     return rows.withColumn("sub", F.lit(0).cast("long")), False
 
 
-def band_self_join(rows: DataFrame, on: list[str]) -> DataFrame:
-    """Triangular self-join of a (vec_id, *on) table on its bucket
-    columns → distinct (keep_id, dup_id) with keep_id < dup_id. IDs only
-    on the shuffle (8-byte keys); vectors join back after the pair
-    dedup, in the verify stage."""
-    return (
-        rows.select(F.col("vec_id").alias("keep_id"), *on)
-        .join(rows.select(F.col("vec_id").alias("dup_id"), *on), on)
-        .filter(F.col("keep_id") < F.col("dup_id"))
-        .dropDuplicates(["keep_id", "dup_id"])
-        .select("keep_id", "dup_id")
+def cooccur(
+    rows: DataFrame,
+    key: str | list[str],
+    member: str,
+    *,
+    payload: tuple[str, ...] = (),
+    min_count: int = 1,
+    key_cap: int | None = None,
+) -> DataFrame:
+    """The joining phase: (m1, m2, n_shared, <payload>_1, <payload>_2)
+    for every pair of ``member`` values m1 < m2 whose rows share a
+    ``key`` (a column or a list of columns). ``n_shared`` counts the
+    joined row pairs, multiplicity kept; pairs with fewer than
+    ``min_count`` are dropped. Each ``payload`` column rides along from
+    both sides and is part of the pair's group, so it must be a
+    function of the member. ``key_cap`` drops every key holding more
+    than ``key_cap`` rows before the join. A caller that reads only
+    (m1, m2) gets the distinct pairs: Spark prunes the unused count.
+    Both join sides recompute ``rows`` (Spark does not share their
+    subtrees), so a caller materializes an expensive ``rows`` first."""
+    keys = [key] if isinstance(key, str) else list(key)
+    if key_cap is not None:
+        rows = (
+            rows.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") <= key_cap)
+            .select(*keys)
+            .join(rows, keys)
+        )
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{member}") < F.col(f"b.{member}"))
+    groups = [F.col(f"a.{member}").alias("m1"), F.col(f"b.{member}").alias("m2")]
+    groups += [F.col(f"{s}.{p}").alias(f"{p}_{i}") for s, i in _ENDS for p in payload]
+    carried = [f"{p}_{i}" for _, i in _ENDS for p in payload]
+    pairs = (
+        rows.alias("a")
+        .join(rows.alias("b"), functools.reduce(operator.and_, on))
+        .groupBy(*groups)
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .select("m1", "m2", "n_shared", *carried)
     )
+    return pairs.filter(F.col("n_shared") >= min_count) if min_count > 1 else pairs
+
+
+def sql_cooccur(
+    src: str,
+    key: str | list[str],
+    member: str,
+    *,
+    payload: tuple[str, ...] = (),
+    min_count: int = 1,
+    key_cap: int | None = None,
+) -> str:
+    """``cooccur`` of relation ``src`` as the body of a SELECT, with the
+    same output columns."""
+    keys = [key] if isinstance(key, str) else list(key)
+    if key_cap is not None:
+        on = ", ".join(keys)
+        src = f"""(SELECT * FROM {src} JOIN (
+    SELECT {on} FROM {src} GROUP BY {on} HAVING COUNT(*) <= {key_cap}
+  ) USING ({on}))"""
+    cond = " AND ".join([f"a.{k} = b.{k}" for k in keys] + [f"a.{member} < b.{member}"])
+    groups = [f"a.{member}", f"b.{member}"] + [f"{s}.{p}" for s, _ in _ENDS for p in payload]
+    carried = "".join(f", {s}.{p} AS {p}_{i}" for s, i in _ENDS for p in payload)
+    having = f"\n  HAVING COUNT(*) >= {min_count}" if min_count > 1 else ""
+    return f"""SELECT a.{member} AS m1, b.{member} AS m2, COUNT(*) AS n_shared{carried}
+  FROM {src} a JOIN {src} b ON {cond}
+  GROUP BY {", ".join(groups)}{having}"""
 
 
 def refine_sizes(
@@ -167,9 +244,15 @@ def refined_pairs(sized: DataFrame, cap: int) -> DataFrame:
     """Distinct (keep_id, dup_id) candidates of a ``refine_sizes``
     table: the four branches of the module docstring, in order."""
     sub_keys = [*BAND_KEYS, "rh"]
+    exact = [
+        cooccur(sized.filter(F.col(size) <= cap), keys, "vec_id").select(
+            F.col("m1").alias("keep_id"), F.col("m2").alias("dup_id")
+        )
+        for size, keys in (("n", BAND_KEYS), ("m", sub_keys))
+    ]
     return (
-        band_self_join(sized.filter(F.col("n") <= cap), BAND_KEYS)
-        .unionByName(band_self_join(sized.filter(F.col("m") <= cap), sub_keys))
+        exact[0]
+        .unionByName(exact[1])
         .unionByName(_star(sized.filter(F.col("m") > cap), sub_keys))
         .unionByName(_star(sized.filter(F.col("n") > cap), BAND_KEYS))
         .dropDuplicates(["keep_id", "dup_id"])

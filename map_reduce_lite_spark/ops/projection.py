@@ -44,6 +44,7 @@ from map_reduce_lite_spark.ops.similarity import (
     _dot,
     _fold,
     _sql_cos,
+    _sql_dot,
     cosine,
     top_k_by_sim,
 )
@@ -593,9 +594,7 @@ def embedding_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _prefix_recall_sql() -> str:
     dcols = ",\n         ".join(
-        f"list_dot_product(CAST(q.qv[1:{m}] AS DOUBLE[]), "
-        f"CAST(c.cv[1:{m}] AS DOUBLE[])) AS d{m}"
-        for m in PREFIX_DIMS
+        f"{_sql_dot(f'q.qv[1:{m}]', f'c.cv[1:{m}]')} AS d{m}" for m in PREFIX_DIMS
     )
     unions = "\n  UNION ALL\n".join(
         f"  SELECT query_id, neighbor_id, {m} AS m, d{m} AS dot FROM dots"
@@ -843,7 +842,7 @@ def _label_drift_sql() -> str:
     """Column-wise unrolled twin (the kmeans/top_pc allocator lesson):
     per-label decimal sums, corpus sums as sums-of-sums (exact), means
     as single double divisions in the same operand order, cosine via
-    ``list_dot_product`` over the mean lists (== the Spark fold)."""
+    ``_sql_cos`` over the mean lists (== the Spark fold)."""
     d = EMB_DIM
     ssums = ", ".join(
         f"SUM(CAST(CAST(embedding[{i}] AS DOUBLE) AS DECIMAL(27,12))) AS s{i}"
@@ -866,10 +865,7 @@ WITH lab AS (
   SELECT [{mc}] AS mc FROM corp
 )
 SELECT CAST(label AS INT) AS label, CAST(n AS BIGINT) AS n_vecs,
-       CAST(floor((list_dot_product(ml, mc)
-                   / (sqrt(list_dot_product(ml, ml))
-                      * sqrt(list_dot_product(mc, mc)))) * 1e9)
-            AS BIGINT) AS cos_to_corpus_e9
+       CAST(floor(({_sql_cos('ml', 'mc')}) * 1e9) AS BIGINT) AS cos_to_corpus_e9
 FROM labm CROSS JOIN corpm
 """
 

@@ -41,8 +41,11 @@ from map_reduce_lite_spark.lineage import materialize
 from map_reduce_lite_spark.ops.pairs import (
     BAND_KEYS,
     band_salt,
-    band_self_join,
+    cooccur,
     split_hot_buckets,
+    sql_band_salt,
+    sql_cooccur,
+    sql_salted_split,
 )
 from map_reduce_lite_spark.registry import Query, md5_60bit, sql_md5_60bit, sql_ws_count, ws_count
 from map_reduce_lite_spark.relational.tables import load_table, read_parquet
@@ -697,7 +700,9 @@ def _knn_scored_edges(emb: DataFrame) -> DataFrame:
     # commutative, the fold order over i is unchanged, and so is
     # a_norm·b_norm), so every directed row carries exactly the value
     # the old plan computed for it.
-    cand = band_self_join(sp, [*BAND_KEYS, "sub"])
+    cand = cooccur(sp, [*BAND_KEYS, "sub"], "vec_id").select(
+        F.col("m1").alias("keep_id"), F.col("m2").alias("dup_id")
+    )
     half = cosine_verify(cand, emb, "keep_id", "dup_id")
     return half.select(
         F.explode(
@@ -771,12 +776,12 @@ def _knn_edges_cte(cap: int = EMB_BUCKET_CAP) -> str:
     plain branch bit-for-bit."""
     planes = _hyperplanes(EMB_DIM, LSH_PLANES)
     return f"""
-WITH {sql_capped_bands_chain(planes, LSH_N_BANDS, cap, "knb")}, cand AS (
-  SELECT DISTINCT a.vec_id AS src_id, b.vec_id AS dst_id
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-   AND a.sub = b.sub
-  WHERE a.vec_id <> b.vec_id
+WITH {sql_capped_bands_chain(planes, LSH_N_BANDS, cap, "knb")}, half AS (
+  {sql_cooccur("bands", [*BAND_KEYS, "sub"], "vec_id")}
+), cand AS (
+  SELECT m1 AS src_id, m2 AS dst_id FROM half
+  UNION ALL
+  SELECT m2, m1 FROM half
 ), scored AS (
   SELECT cand.src_id, cand.dst_id,
          {_sql_cos('ea.embedding', 'eb.embedding')} AS sim
@@ -900,24 +905,16 @@ def sql_capped_bands_chain(
     planes: list[list[float]], n_bands: int, cap: int, salt_prefix: str
 ) -> str:
     """CTE chain (to place right after WITH) ending in ``bands`` with
-    columns (vec_id, band_id, band_hash, sub) — the hot-bucket-capped
-    band table. The salted split is replayed UNCONDITIONALLY: when no
+    columns (vec_id, band_id, band_hash, n_sub, sub) — the
+    hot-bucket-capped band table (``pairs.sql_salted_split``). The
+    salted split is replayed UNCONDITIONALLY: when no
     bucket exceeds ``cap``, n_sub = 1 and sub ≡ 0, an identity matching
     the Spark side's probe-skipped plain branch bit-for-bit. Consumers
-    must add ``a.sub = b.sub`` to their self-join condition."""
-    salt = sql_md5_60bit(
-        f"'{salt_prefix}|' || CAST(b.band_id AS VARCHAR) || '|' "
-        "|| CAST(b.vec_id AS VARCHAR)"
-    )
+    must add ``sub`` to their co-occurrence key."""
+    salt = sql_band_salt(salt_prefix, "band_id", "vec_id")
     return f"""rawbands AS (
 {sql_bands_cte(planes, n_bands)}
-), bsizes AS (
-  SELECT band_id, band_hash, (COUNT(*) + {cap - 1}) // {cap} AS n_sub
-  FROM rawbands GROUP BY 1, 2
-), bands AS (
-  SELECT b.vec_id, b.band_id, b.band_hash, ({salt} % s.n_sub) AS sub
-  FROM rawbands b JOIN bsizes s
-    ON s.band_id = b.band_id AND s.band_hash = b.band_hash
+), bands AS ({sql_salted_split("rawbands", BAND_KEYS, cap, salt)}
 )"""
 
 
@@ -953,19 +950,15 @@ def sql_refined_cands_chain(
 ), subsizes AS (
   SELECT band_id, band_hash, rh, COUNT(*) AS m
   FROM rb WHERE n > {cap} GROUP BY 1, 2, 3
+), small AS (
+  SELECT * FROM rb WHERE n <= {cap}
+), fine AS (
+  SELECT rb.* FROM rb JOIN subsizes s USING (band_id, band_hash, rh)
+  WHERE s.m <= {cap}
 ), cands AS (
-  SELECT a.vec_id AS keep_id, b.vec_id AS dup_id
-  FROM rb a JOIN rb b
-    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-  WHERE a.n <= {cap} AND a.vec_id < b.vec_id
+  SELECT m1 AS keep_id, m2 AS dup_id FROM ({sql_cooccur("small", BAND_KEYS, "vec_id")})
   UNION
-  SELECT a.vec_id AS keep_id, b.vec_id AS dup_id
-  FROM rb a
-  JOIN rb b ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-           AND a.rh = b.rh
-  JOIN subsizes s ON s.band_id = a.band_id AND s.band_hash = a.band_hash
-                 AND s.rh = a.rh
-  WHERE a.n > {cap} AND s.m <= {cap} AND a.vec_id < b.vec_id
+  SELECT m1, m2 FROM ({sql_cooccur("fine", [*BAND_KEYS, "rh"], "vec_id")})
   UNION
   SELECT r.rep AS keep_id, m.vec_id AS dup_id
   FROM rb m
@@ -1064,10 +1057,7 @@ def _sql_plane_bit(vec_expr: str, plane: list[float]) -> str:
     """SQL twin of one ``lsh_band_hashes`` sign bit: the same plane
     doubles (repr round-trips them exactly), the same fold order →
     identical sign bit."""
-    dot = (
-        f"list_dot_product(CAST({vec_expr} AS DOUBLE[]), {_sql_array_lit(plane)})"
-    )
-    return f"(CASE WHEN {dot} > 0 THEN 1 ELSE 0 END)"
+    return f"(CASE WHEN {_sql_dot(vec_expr, _sql_array_lit(plane))} > 0 THEN 1 ELSE 0 END)"
 
 
 def sql_band_hashes(vec_expr: str, planes: list[list[float]], n_bands: int) -> list[str]:

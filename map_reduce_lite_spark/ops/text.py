@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
+from map_reduce_lite_spark.ops.pairs import sql_cooccur
 from map_reduce_lite_spark.registry import (
     WS_CHARS,
     WS_RUN,
@@ -834,12 +835,9 @@ WITH toks AS (
   ORDER BY df DESC, token ASC LIMIT {COLLOC_TOP_M}
 ), present AS (
   SELECT toks.doc_id, toks.token FROM toks JOIN topm USING (token)
-), pairs AS (
-  SELECT a.token AS tok_a, b.token AS tok_b
-  FROM present a JOIN present b
-    ON a.doc_id = b.doc_id AND a.token < b.token
 ), co AS (
-  SELECT tok_a, tok_b, COUNT(*) AS n_ab FROM pairs GROUP BY 1, 2
+  SELECT m1 AS tok_a, m2 AS tok_b, n_shared AS n_ab
+  FROM ({sql_cooccur("present", "doc_id", "token")})
 ), n AS (SELECT COUNT(*) AS n_docs FROM documents)
 SELECT tok_a, tok_b, ta.df AS n_a, tb.df AS n_b, n_ab,
        ({COLLOC_SCALE} * n.n_docs * n_ab) // (ta.df * tb.df) AS lift_e6

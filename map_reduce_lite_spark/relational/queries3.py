@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from map_reduce_lite_spark.lineage import materialize
+from map_reduce_lite_spark.ops.pairs import cooccur, sql_cooccur
 from map_reduce_lite_spark.registry import Query, dsum, sql_dsum
 from map_reduce_lite_spark.relational.tables import load_table
 
@@ -738,19 +739,9 @@ def assoc_rules_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Lazy kept.
         eager=False,
     )
-    a, b = baskets.alias("a"), baskets.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.p_brand") < F.col("b.p_brand")),
-        )
-        .groupBy(
-            F.col("a.p_brand").alias("x"), F.col("b.p_brand").alias("y")
-        )
-        .agg(F.count(F.lit(1)).alias("n_xy"))
-        .filter(F.col("n_xy") >= ASSOC_MIN_SUPPORT)
-    )
+    pairs = cooccur(
+        baskets, "l_orderkey", "p_brand", min_count=ASSOC_MIN_SUPPORT
+    ).select(F.col("m1").alias("x"), F.col("m2").alias("y"), F.col("n_shared").alias("n_xy"))
     margins = baskets.groupBy("p_brand").agg(F.count(F.lit(1)).alias("n"))
     total = baskets.select("l_orderkey").distinct().agg(
         F.count(F.lit(1)).alias("n_baskets")
@@ -802,11 +793,8 @@ WITH baskets AS (
   SELECT DISTINCT li.l_orderkey, p.p_brand
   FROM lineitem li JOIN part p ON li.l_partkey = p.p_partkey
 ), pairs AS (
-  SELECT a.p_brand AS x, b.p_brand AS y, CAST(COUNT(*) AS BIGINT) AS n_xy
-  FROM baskets a JOIN baskets b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {ASSOC_MIN_SUPPORT}
+  SELECT m1 AS x, m2 AS y, n_shared AS n_xy
+  FROM ({sql_cooccur("baskets", "l_orderkey", "p_brand", min_count=ASSOC_MIN_SUPPORT)})
 ), directed AS (
   SELECT x AS antecedent, y AS consequent, n_xy FROM pairs
   UNION ALL

@@ -27,7 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.test_oracle_parity import _multiset
-from tests.test_pairs import PKG
+from tests.test_pairs import PKG, _f_call
 
 # Corpus design (see pair-count math in each test):
 # - docs 1, 2: empty and whitespace-only (token-less)
@@ -382,7 +382,7 @@ def test_stage_twin_parity(spark, edge_dir, vt_dir, corpus, twin):
 _STAGE_SPELLINGS = {
     "generate_series(1, len(": "registry.py",
     "lead(token, 2) OVER": "ops/dedup.py",
-    "HAVING COUNT(*) <=": "ops/dedup.py",
+    "HAVING COUNT(*) <=": "ops/pairs.py",
     "% 17 <> 3": "ops/snapshot.py",
     "THEN 'und'": "ops/text.py",
 }
@@ -421,6 +421,95 @@ def test_one_twin_per_stage():
         spellers = {m for m, vs in strings.items() if any(spelling in v for v in vs)}
         assert spellers <= {home}, (spelling, sorted(spellers))
         assert spelling in emitted[spelling], spelling
+
+
+# The triangular self-join, rows of one relation paired with one member
+# strictly below the other, is written once: ``pairs.cooccur`` and
+# ``pairs.sql_cooccur``. These writers keep their own, on purpose.
+_SEMDEDUP = (
+    "each member has exactly one (cluster, sub), so no pair repeats; "
+    "cooccur's per-pair aggregate would add an exchange the join does not need"
+)
+_EXACT = "the exact O(n²) recall oracle: a theta join, not a shared-key join"
+_TRIANGLE_EXEMPT = {
+    "ops/clustering.py:_semdedup_pairs": _SEMDEDUP,
+    "ops/clustering.py:_semdedup_sql": _SEMDEDUP,
+    "ops/clustering.py:_semdedup_prune_sql": _SEMDEDUP,
+    "ops/dedup.py:embedding_near_dup_pairs": _EXACT,
+    "ops/dedup.py:_embedding_cosine_sql": _EXACT,
+}
+# SQL: ``x.<m> < y.<m>`` over two aliases; an f-string field reads "{}"
+_SQL_TRIANGLE = re.compile(r"\b(\w+)\.(\w+|\{\})\s*<\s*(\w+)\.\2(?![\w{])")
+
+
+def _text(node) -> str | None:
+    """A string constant, or an f-string with each field read as "{}"."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(v.value if isinstance(v, ast.Constant) else "{}" for v in node.values)
+    return None
+
+
+def _col_name(node) -> str | None:
+    """The name in ``F.col(<name>)``."""
+    return _text(node.args[0]) if _f_call(node, "col") and len(node.args) == 1 else None
+
+
+def _triangle_lines(tree: ast.Module) -> list[int]:
+    """Lines of ``tree`` that spell the triangular self-join: in Spark,
+    ``F.col("x.<m>") < F.col("y.<m>")`` or the id-pair form
+    ``F.col("keep_id") < F.col("dup_id")``; in SQL, ``x.<m> < y.<m>``.
+    Docstrings do not count."""
+    docs = _docstrings(tree)
+    found = []
+    for n in ast.walk(tree):
+        text = None if id(n) in docs else _text(n)
+        if text and any(m[1] != m[3] for m in _SQL_TRIANGLE.finditer(text)):
+            found.append(n.lineno)
+        if isinstance(n, ast.Compare) and [type(o) for o in n.ops] == [ast.Lt]:
+            lo, hi = _col_name(n.left), _col_name(n.comparators[0])
+            if lo is None or hi is None:
+                continue
+            (la, _, lm), (ha, _, hm) = lo.rpartition("."), hi.rpartition(".")
+            if (la and ha and la != ha and lm == hm) or (lo, hi) == ("keep_id", "dup_id"):
+                found.append(n.lineno)
+    return found
+
+
+def _owner(tree: ast.Module, line: int) -> str | None:
+    """The module-level function or assignment whose span holds ``line``."""
+    return next(
+        (
+            n.name if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            else ",".join(t.id for t in n.targets if isinstance(t, ast.Name))
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Assign))
+            and n.lineno <= line <= n.end_lineno
+        ),
+        None,
+    )
+
+
+def triangle_writers(pkg) -> set[str]:
+    """``<module>:<owner>`` of every triangular self-join under ``pkg``."""
+    writers = set()
+    for p in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        for line in _triangle_lines(tree):
+            writers.add(f"{p.relative_to(pkg)}:{_owner(tree, line)}")
+    return writers
+
+
+def test_one_triangular_self_join():
+    """Every pair generator forms its pairs through ``pairs.cooccur`` or
+    ``pairs.sql_cooccur``, which are the only writers of the triangular
+    self-join outside the named exemptions; each exemption still writes
+    one (a stale entry fails)."""
+    writers = triangle_writers(PKG)
+    home = {"ops/pairs.py:cooccur", "ops/pairs.py:sql_cooccur"}
+    assert writers - home - set(_TRIANGLE_EXEMPT) == set()
+    assert home | set(_TRIANGLE_EXEMPT) <= writers
 
 
 @pytest.mark.parametrize("name", _EDGE_QUERIES)

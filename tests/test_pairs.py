@@ -1,8 +1,9 @@
 """The candidate-pair blocking kernel (map_reduce_lite_spark/ops/pairs.py):
-one sizing probe, one salted hot-bucket split and one id-pair self-join
-shared by the simhash, embedding-LSH, k-NN and SemDeDup pair
-generators — and the one exact-cosine scoring path
-(map_reduce_lite_spark/ops/similarity.py) they all verify through."""
+one co-occurrence join (``cooccur`` and its SQL twin ``sql_cooccur``)
+behind every pair generator, one sizing probe and one salted hot-bucket
+split (Spark and SQL) — and the one exact-cosine scoring path
+(map_reduce_lite_spark/ops/similarity.py) the vector families verify
+through."""
 
 from __future__ import annotations
 
@@ -55,6 +56,7 @@ _SCORING_OWNERS = [
     (r"F\.sqrt\(_dot\(", {"_norm"}),
     (r'\.alias\("sim_e9"\)', {"sim_e9"}),
     (r"posexplode\(lsh_band_hashes\(", {"lsh_band_rows"}),
+    (r"list_dot_product\(", {"_sql_dot"}),
     (
         r"\bacc \+=|\bnp\.(dot|einsum|inner|matmul|tensordot|vdot)\(",
         {"fold_kernel"},
@@ -206,13 +208,103 @@ def test_probe_and_split_sizes(spark):
     )
 
 
-def test_band_self_join_distinct_ordered_pairs(spark):
-    from map_reduce_lite_spark.ops.pairs import band_self_join
+# (g, k, m, p): key k (g is a constant second key column), member m,
+# payload p = 10·m. Key 1 holds 4 rows with member 2 twice, key 2 holds
+# 2 rows, key 3 holds 3 rows.
+_COOCCUR_ROWS = [
+    (0, 1, 1, 10), (0, 1, 2, 20), (0, 1, 2, 20), (0, 1, 3, 30),
+    (0, 2, 1, 10), (0, 2, 2, 20),
+    (0, 3, 4, 40), (0, 3, 5, 50), (0, 3, 6, 60),
+]
+_COOCCUR_SCHEMA = "g long, k long, m long, p long"
+# (m1, m2) -> n_shared: member 2's two rows in key 1 each pair with 1 and 3
+_COOCCUR_ALL = {(1, 2): 3, (1, 3): 1, (2, 3): 2, (4, 5): 1, (4, 6): 1, (5, 6): 1}
 
-    # ids 1, 2 collide in two bands; 3 only with 1 in band 1
-    rows = spark.createDataFrame(
-        [(1, 0, 7), (2, 0, 7), (1, 1, 8), (2, 1, 8), (3, 1, 8), (4, 1, 9)],
-        "vec_id long, band_id int, band_hash long",
+# (kwargs, expected (m1, m2, n_shared) rows)
+_COOCCUR_CASES = {
+    "plain": ({}, _COOCCUR_ALL),
+    "min_count_2": ({"min_count": 2}, {(1, 2): 3, (2, 3): 2}),
+    "min_count_3": ({"min_count": 3}, {(1, 2): 3}),
+    # key 3 holds exactly 3 rows and stays; key 1 holds 4 and goes
+    "key_cap_3": ({"key_cap": 3}, {(1, 2): 1, (4, 5): 1, (4, 6): 1, (5, 6): 1}),
+    "key_cap_2": ({"key_cap": 2}, {(1, 2): 1}),
+}
+
+
+def _cooccur_rows(spark):
+    return spark.createDataFrame(_COOCCUR_ROWS, _COOCCUR_SCHEMA)
+
+
+@pytest.mark.parametrize("case", sorted(_COOCCUR_CASES))
+def test_cooccur_counts_ordered_distinct_pairs(spark, case):
+    """Distinct id-ordered pairs, each counted with multiplicity; the
+    count and key-size bounds are inclusive; a composite key gives the
+    same pairs when its extra column is constant."""
+    from map_reduce_lite_spark.ops.pairs import cooccur
+
+    kwargs, expected = _COOCCUR_CASES[case]
+    rows = _cooccur_rows(spark)
+    for key in ("k", ["g", "k"]):
+        out = cooccur(rows, key, "m", **kwargs)
+        assert out.columns == ["m1", "m2", "n_shared"]
+        got = [tuple(r) for r in out.collect()]
+        assert len(got) == len({(m1, m2) for m1, m2, _ in got})
+        assert all(m1 < m2 for m1, m2, _ in got)
+        assert {(m1, m2): n for m1, m2, n in got} == expected
+
+
+def test_cooccur_payload_and_empty_frame(spark):
+    """Each payload column rides along from both sides; an empty frame
+    gives no pairs, with the same columns."""
+    from map_reduce_lite_spark.ops.pairs import cooccur
+
+    rows = _cooccur_rows(spark)
+    out = cooccur(rows, "k", "m", payload=("p",))
+    assert out.columns == ["m1", "m2", "n_shared", "p_1", "p_2"]
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        (m1, m2, n, 10 * m1, 10 * m2) for (m1, m2), n in _COOCCUR_ALL.items()
     )
-    pairs = band_self_join(rows, ["band_id", "band_hash"])
-    assert sorted(tuple(r) for r in pairs.collect()) == [(1, 2), (1, 3), (2, 3)]
+    empty = cooccur(rows.limit(0), "k", "m", payload=("p",), min_count=2, key_cap=3)
+    assert empty.columns == out.columns
+    assert empty.collect() == []
+
+
+@pytest.mark.parametrize("case", sorted(_COOCCUR_CASES))
+def test_cooccur_sql_twin_parity(spark, case):
+    """``sql_cooccur`` gives ``cooccur``'s rows, payload included."""
+    import duckdb
+    import pandas as pd
+
+    from map_reduce_lite_spark.ops.pairs import cooccur, sql_cooccur
+
+    kwargs, _ = _COOCCUR_CASES[case]
+    kwargs = {**kwargs, "payload": ("p",)}
+    rows = _cooccur_rows(spark)
+    spark_rows = sorted(tuple(r) for r in cooccur(rows, ["g", "k"], "m", **kwargs).collect())
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(_COOCCUR_ROWS, columns=["g", "k", "m", "p"]))
+    res = con.execute(sql_cooccur("t", ["g", "k"], "m", **kwargs))
+    assert [d[0] for d in res.description] == ["m1", "m2", "n_shared", "p_1", "p_2"]
+    assert sorted(res.fetchall()) == spark_rows
+
+
+def test_salted_split_sql_twin_parity(spark):
+    """``sql_salted_split`` gives ``salted_split``'s ``n_sub`` and ``sub``
+    for every row, under the band salt of both engines."""
+    import duckdb
+    import pandas as pd
+
+    from map_reduce_lite_spark.ops.pairs import band_salt, salted_split, sql_band_salt, sql_salted_split
+
+    rows = _buckets(spark)
+    spark_rows = sorted(
+        tuple(r)
+        for r in salted_split(rows, ["b"], 2, band_salt("t", "b", "vec_id"))
+        .select("vec_id", "b", "n_sub", "sub")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.register("r", rows.toPandas())
+    sql = sql_salted_split("r", ["b"], 2, sql_band_salt("t", "b", "vec_id"))
+    assert sorted(con.execute(f"SELECT vec_id, b, n_sub, sub FROM ({sql})").fetchall()) == spark_rows
+    assert {n for _, _, n, _ in spark_rows} == {1, 3}

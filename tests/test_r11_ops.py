@@ -261,7 +261,7 @@ def test_refined_candidates_structural_properties(spark):
     import numpy as np
 
     from map_reduce_lite_spark.ops.dedup import _refine_sizes, lsh_band_table
-    from map_reduce_lite_spark.ops.pairs import BAND_KEYS, band_self_join, refined_pairs
+    from map_reduce_lite_spark.ops.pairs import BAND_KEYS, cooccur, refined_pairs
     from map_reduce_lite_spark.ops.similarity import (
         EMB_DIM,
         LSH_N_BANDS,
@@ -277,7 +277,9 @@ def test_refined_candidates_structural_properties(spark):
     refined = {
         tuple(r) for r in refined_pairs(_refine_sizes(emb, bands, cap), cap).collect()
     }
-    uncapped = {tuple(r) for r in band_self_join(bands, BAND_KEYS).collect()}
+    uncapped = {
+        tuple(r) for r in cooccur(bands, BAND_KEYS, "vec_id").select("m1", "m2").collect()
+    }
     assert refined and refined <= uncapped  # (1)
 
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
